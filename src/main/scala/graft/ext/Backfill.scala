@@ -34,9 +34,9 @@ import org.apache.spark.sql.functions._
   * partition-level diff treats ANY artifact rows for a source as "that
   * partition is covered", so a crash that published a partition's rows
   * partially leaves it incomplete-but-covered. A writer closes this
-  * with the staging-directory + atomic-rename publish discipline
-  * ([[graft.ext.Dedup.deleteApply]]'s `rewriteStore`), or by retracting
-  * the suspect partition's rows first (which makes it "missing" again).
+  * by publishing through the one store protocol ([[graft.ops.Publish]]:
+  * a version commits whole or not at all), or by retracting the
+  * suspect partition's rows first (which makes it "missing" again).
   * Symmetrically, backfill only ADDS: an artifact carrying rows for
   * partitions the corpus no longer has keeps them (the union preserves
   * stored rows) — deletions flow through the delete path, not the
@@ -120,8 +120,8 @@ object Backfill {
     scratchArtifacts.getOrElseUpdate(dir, {
       val p = java.nio.file.Files.createTempDirectory("feature_artifact")
         .resolve("features").toString
-      featureDf(Tables.documents(spark, dir)
-        .filter(!col("source").isin("src9", "src19"))).write.parquet(p)
+      graft.ops.Publish.publish(spark, p, featureDf(Tables.documents(spark, dir)
+        .filter(!col("source").isin("src9", "src19"))))
       p
     })
 
@@ -138,7 +138,7 @@ object Backfill {
     */
   def qBackfill(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val staged = spark.read.parquet(ensureFeatureArtifact(spark, dir))
+    val staged = graft.ops.Publish.readLive(spark, ensureFeatureArtifact(spark, dir))
     val delta = backfillDelta(docs, staged).localCheckpoint()
     val full = staged.unionByName(delta)
     full.groupBy(col("source"))
@@ -160,7 +160,7 @@ object Backfill {
     scratchFull.getOrElseUpdate(dir, {
       val p = java.nio.file.Files.createTempDirectory("feature_artifact_full")
         .resolve("features").toString
-      featureDf(Tables.documents(spark, dir)).write.parquet(p)
+      graft.ops.Publish.publish(spark, p, featureDf(Tables.documents(spark, dir)))
       p
     })
 
@@ -215,7 +215,7 @@ object Backfill {
 
   def qBackfillAudit(spark: SparkSession, dir: String): DataFrame =
     featureAuditDf(Tables.documents(spark, dir),
-      spark.read.parquet(ensureFeatureArtifactFull(spark, dir)))
+      graft.ops.Publish.readLive(spark, ensureFeatureArtifactFull(spark, dir)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_backfill" -> (qBackfill _),

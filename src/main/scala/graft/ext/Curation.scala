@@ -1007,7 +1007,7 @@ object Curation {
   def qDeleteImpact(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     deleteImpactDf(docs,
-      spark.read.parquet(Packing.ensureManifest(spark, dir)),
+      graft.ops.Publish.readLive(spark, Packing.ensureManifest(spark, dir)),
       docs.filter(col("source") === "src7").select("doc_id"),
       Dedup.verifiedPairs(spark, dir).select("doc_a", "doc_b"))
   }

@@ -143,11 +143,13 @@ object Dedup {
   // --- incremental MinHash index --------------------------------------------
 
   /** Initializes a persistent near-dup index from a document batch: the
-    * band table and shingle sets land as parquet under `indexPath`.
+    * band table and shingle sets are published as the two stores under
+    * `indexPath`.
     */
   def indexInit(docs: DataFrame, indexPath: String): Unit = {
-    bandTable(docs).write.mode("overwrite").parquet(s"$indexPath/bands")
-    shingleTable(docs).write.mode("overwrite").parquet(s"$indexPath/shingles")
+    val spark = docs.sparkSession
+    graft.ops.Publish.publish(spark, s"$indexPath/bands", bandTable(docs))
+    graft.ops.Publish.publish(spark, s"$indexPath/shingles", shingleTable(docs))
   }
 
   /** Incremental near-dup detection — the daily-cadence shape at 100 TB:
@@ -170,7 +172,7 @@ object Dedup {
     val pairs = probeFrom(newBands, newShingles, indexPath, threshold).localCheckpoint()
 
     // delta-directory appends (graft.ops.StoreIO): never into the live
-    // dirs a maintenance swap may be rewriting — an append racing a
+    // version a maintenance publish may be replacing — an append racing a
     // repair/delete/compaction survives in the delta and stays visible.
     // `appendToken` is the replay idempotence key: a redelivered batch
     // passing its batch id overwrites its own child instead of
@@ -181,7 +183,7 @@ object Dedup {
     // after a LATER call's fold retired the child is a no-op via
     // StoreIO's retired-token registry, and a crash INSIDE a fold
     // (between its publish and its child retirement) is settled by
-    // StoreIO.recoverFolds — the promoted sidecar names exactly the
+    // StoreIO.recoverFolds — the committed sidecar names exactly the
     // children to retire, so the fold can never persist rows twice.
     maybeCompact(spark, indexPath, compactTrigger)
     if (!newBands.isEmpty) {
@@ -230,7 +232,7 @@ object Dedup {
   /** Daily appends accrete one small file per task per batch; past the
     * trigger the FILE COUNT, not the data volume, dominates listing and
     * scan startup, so the index dirs are rewritten through
-    * [[graft.ops.Scale.compact]] (write-audit-publish, atomic rename).
+    * a [[graft.ops.StoreIO]] fold (one pointer-committed publish).
     */
   val CompactTriggerFiles = 64
 
@@ -317,15 +319,15 @@ object Dedup {
     * is spec'd against). `path` is the parquet directory itself.
     */
   def pairsArtifactInit(docs: DataFrame, path: String): Unit =
-    minhashPairsDf(docs).write.mode("overwrite").parquet(path)
+    graft.ops.Publish.publish(docs.sparkSession, path, minhashPairsDf(docs))
 
   /** Appends a probe delta (e.g. [[indexIncremental]]'s output for an
     * arriving batch) to the artifact, with the same file-count
     * compaction hygiene as the sketch index: daily appends accrete one
     * small file per task per batch, and past the trigger listing cost
     * dominates the (pair-sized) data. The append lands in the delta
-    * directory ([[graft.ops.StoreIO]]), never the live dir a
-    * maintenance swap may be rewriting; `token` is the replay
+    * directory ([[graft.ops.StoreIO]]), never the live version a
+    * maintenance publish may be replacing; `token` is the replay
     * idempotence key (pass the batch id from an at-least-once runner).
     */
   def pairsArtifactAppend(pairs: DataFrame, path: String,
@@ -480,10 +482,9 @@ object Dedup {
     scratchHashStores.getOrElseUpdate(dir, {
       val p = java.nio.file.Files.createTempDirectory("hash_store")
         .resolve("hashes").toString
-      Tables.documents(spark, dir)
+      graft.ops.Publish.publish(spark, p, Tables.documents(spark, dir)
         .select(md5(col("text").cast("binary")).as("h"), col("doc_id"),
-          (col("doc_id") % 3).as("batch"))
-        .write.partitionBy("batch").parquet(p)
+          (col("doc_id") % 3).as("batch")), partitionBy = Seq("batch"))
       p
     })
 
@@ -492,7 +493,7 @@ object Dedup {
 
   def qHashStoreAudit(spark: SparkSession, dir: String): DataFrame =
     hashStoreAuditDf(Tables.documents(spark, dir),
-      spark.read.parquet(ensureHashStore(spark, dir)))
+      graft.ops.Publish.readLive(spark, ensureHashStore(spark, dir)))
 
   /** SKETCH-INDEX AUDIT — the oldest maintained store in the engine
     * ([[indexInit]] bootstraps it, [[indexIncremental]] and the
@@ -632,8 +633,8 @@ object Dedup {
 
   def qStoreConsistency(spark: SparkSession, dir: String): DataFrame =
     storeConsistencyDf(
-      spark.read.parquet(ensureHashStore(spark, dir)),
-      spark.read.parquet(graft.ext.Packing.ensureManifest(spark, dir)),
+      graft.ops.Publish.readLive(spark, ensureHashStore(spark, dir)),
+      graft.ops.Publish.readLive(spark, graft.ext.Packing.ensureManifest(spark, dir)),
       verifiedPairs(spark, dir))
 
   // --- store REPAIR -----------------------------------------------------------
@@ -741,9 +742,9 @@ object Dedup {
     (h2, m2, p2)
   }
 
-  /** WRITER form: repairs the three on-disk stores in place (the
-    * recoverable [[graft.ops.Publish]] swap per store, hive layout
-    * preserved for the batch-keyed hash store) and returns
+  /** WRITER form: repairs the three on-disk stores in place (one
+    * [[graft.ops.StoreIO]] fold per store, hive layout preserved for
+    * the batch-keyed hash store) and returns
     * the [[storeRepairDf]] report computed over the PRE-repair state.
     * Idempotent: a second run rewrites nothing semantically and reports
     * all-zero removals.
@@ -754,7 +755,7 @@ object Dedup {
 
   /** [[storeRepair]] with the interleave test seam ([[deleteApplyImpl]]
     * discipline): `interleave` runs after the snapshots are pinned and
-    * materialized, before the first swap.
+    * materialized, before the first publish.
     */
   private[graft] def storeRepairImpl(spark: SparkSession, hashesRoot: String,
       manifestPath: String, pairsPath: String,
@@ -767,26 +768,26 @@ object Dedup {
         Seq(hashesRoot, manifestPath, pairsPath)) {
       import graft.ops.StoreIO
       val hashSnap = StoreIO.snapshot(spark, hashesRoot, Some(HashStoreDdl))
-      val manifest = graft.ops.Publish.readLive(spark, manifestPath)
+      val manifestSnap = StoreIO.snapshot(spark, manifestPath)
       val pairsSnap = StoreIO.snapshot(spark, pairsPath, Some(PairsDdl))
-      val report = storeRepairDf(hashSnap.frame, manifest, pairsSnap.frame)
-        .localCheckpoint()
-      val (h2, m2, p2) =
-        storeRepairFrames(hashSnap.frame, manifest, pairsSnap.frame)
+      val report = storeRepairDf(hashSnap.frame, manifestSnap.frame,
+        pairsSnap.frame).localCheckpoint()
+      val (h2, m2, p2) = storeRepairFrames(hashSnap.frame,
+        manifestSnap.frame, pairsSnap.frame)
       val (h2c, m2c, p2c) = (h2.localCheckpoint(), m2.localCheckpoint(),
         p2.localCheckpoint())
       interleave()
       StoreIO.publishMerged(spark, hashesRoot, h2c, hashSnap,
         partitionBy = Seq("batch"))
-      publishStore(spark, manifestPath, m2c)
+      StoreIO.publishMerged(spark, manifestPath, m2c, manifestSnap)
       StoreIO.publishMerged(spark, pairsPath, p2c, pairsSnap)
       report
     }
 
   def qStoreRepair(spark: SparkSession, dir: String): DataFrame =
     storeRepairDf(
-      spark.read.parquet(ensureHashStore(spark, dir)),
-      spark.read.parquet(graft.ext.Packing.ensureManifest(spark, dir)),
+      graft.ops.Publish.readLive(spark, ensureHashStore(spark, dir)),
+      graft.ops.Publish.readLive(spark, graft.ext.Packing.ensureManifest(spark, dir)),
       verifiedPairs(spark, dir))
 
   // --- maintenance PLAN -------------------------------------------------------
@@ -909,10 +910,10 @@ object Dedup {
     * repair-first would let delete-dominance eat the missing docs'
     * healthy-store rows), other stores take their single re-derivation
     * remedy; a leftover class falls to the next round.
-    * Remedies, all through the recoverable rename-aside publish
-    * ([[graft.ops.Publish]] — crashed swaps are settled by a recovery
-    * pre-pass, vanished stores read as empty and route to rebuild),
-    * with reingest ORDERED BEFORE repair inside a round (a coverage gap
+    * Remedies, all snapshot folds through the one store protocol
+    * ([[graft.ops.Publish]] — crashed publishes are settled by a
+    * recovery pre-pass, vanished stores read as empty and route to
+    * rebuild), with reingest ORDERED BEFORE repair inside a round (a coverage gap
     * looks like an interrupted takedown to the cross-store check;
     * restoring coverage first keeps delete-dominance repair from
     * deleting the healthy stores' rows for the doc being restored):
@@ -941,6 +942,7 @@ object Dedup {
       indexPath: String, ivfpqPath: String, packedPath: String,
       featuresPath: String, maxRounds: Int = 3): DataFrame = {
     val spark = docs.sparkSession
+    import graft.ops.StoreIO
     val allStores = Seq(hashesRoot, manifestPath, pairsPath, layoutPath,
       codesPath, s"$indexPath/bands", s"$indexPath/shingles", ivfpqPath,
       packedPath, featuresPath)
@@ -948,46 +950,48 @@ object Dedup {
     // loop holds every store's lease — a second loop (or any stray
     // rewriter) fails loudly instead of silently losing updates
     graft.ops.Lease.withLeases(spark, allStores) {
-    // RECOVERY pre-pass: a publish that crashed mid-swap leaves
-    // rename-aside state ([[graft.ops.Publish]]'s crash matrix); settle
-    // it before auditing so a half-promoted store reads as its settled
-    // self, and a store the crash genuinely lost reads as EMPTY below —
-    // the audits then see a total coverage gap and the plan routes a
-    // from-scratch reingest/rebuild instead of throwing on the path.
-    allStores
-      .foreach { p =>
-        graft.ops.Publish.recoverAuto(spark, p)
-        // a fold that crashed between its promote and its delta-child
-        // retirement left its rows in BOTH live and the children — the
-        // promoted sidecar names the children; retire them before the
-        // audits read live ∪ delta, or healthy stores audit as
-        // replay-duplicated
-        graft.ops.StoreIO.recoverFolds(spark, p)
-      }
-    // hashes, pairs, and the sketch index are APPENDED-TO stores: read
-    // live ∪ delta (graft.ops.StoreIO) so in-flight appends are audited
-    def hashesView() =
-      graft.ops.StoreIO.read(spark, hashesRoot, Some(HashStoreDdl))
+    // RECOVERY pre-pass: settle every crashed publish (drop unreferenced
+    // versions) and every fold that crashed between its commit and its
+    // delta-child retirement (its rows sit in BOTH live and the
+    // children — the committed sidecar names the children) before the
+    // audits read live ∪ delta, or healthy stores audit as
+    // replay-duplicated. A store with no committed version reads as
+    // EMPTY below — the audits see a total coverage gap and the plan
+    // routes a from-scratch reingest/rebuild instead of throwing.
+    allStores.foreach { p =>
+      graft.ops.Publish.recover(spark, p)
+      StoreIO.recoverFolds(spark, p)
+    }
+    // every store is read live ∪ delta under its pinned schema, so
+    // in-flight appends are audited and a missing store reads as empty
+    def read(path: String, ddl: String): DataFrame =
+      StoreIO.read(spark, path, Some(ddl))
     def plan(): DataFrame = maintenancePlanDf(
       artifactAuditDf(docs, pairsArtifactRead(spark, pairsPath)),
-      hashStoreAuditDf(docs, hashesView()),
+      hashStoreAuditDf(docs, read(hashesRoot, HashStoreDdl)),
       graft.ext.Packing.manifestAuditDf(docs,
-        readStoreOr(spark, manifestPath, ManifestDdl)),
-      storeConsistencyDf(hashesView(),
-        readStoreOr(spark, manifestPath, ManifestDdl),
+        read(manifestPath, ManifestDdl)),
+      storeConsistencyDf(read(hashesRoot, HashStoreDdl),
+        read(manifestPath, ManifestDdl),
         pairsArtifactRead(spark, pairsPath)),
-      Ivf.ivfLayoutAuditDf(emb, readStoreOr(spark, layoutPath, LayoutDdl), cents),
-      Pq.codesAuditDf(emb, readStoreOr(spark, codesPath, CodesDdl), codebooks),
-      indexAuditDf(docs,
-        graft.ops.StoreIO.read(spark, s"$indexPath/bands", Some(BandsDdl)),
-        graft.ops.StoreIO.read(spark, s"$indexPath/shingles", Some(ShinglesDdl))),
-      Pq.ivfPqLayoutAuditDf(emb, readStoreOr(spark, ivfpqPath, IvfPqDdl),
+      Ivf.ivfLayoutAuditDf(emb, read(layoutPath, LayoutDdl), cents),
+      Pq.codesAuditDf(emb, read(codesPath, CodesDdl), codebooks),
+      indexAuditDf(docs, read(s"$indexPath/bands", BandsDdl),
+        read(s"$indexPath/shingles", ShinglesDdl)),
+      Pq.ivfPqLayoutAuditDf(emb, read(ivfpqPath, IvfPqDdl),
         cents, codebooks),
       graft.ext.Packing.packedAuditDf(docs,
-        readStoreOr(spark, packedPath, PackedDdl)),
+        read(packedPath, PackedDdl)),
       graft.ext.Backfill.featureAuditDf(docs,
-        readStoreOr(spark, featuresPath, FeaturesDdl)))
+        read(featuresPath, FeaturesDdl)))
       .localCheckpoint()
+    // every remedy is a snapshot fold (StoreIO.rewrite, reentrant under
+    // the loop's lease): a re-derivation from the corpus SUBSUMES the
+    // pinned delta children, so they retire with the publish, and
+    // appends racing the remedy survive
+    def remedy(path: String, ddl: String, partitionBy: Seq[String] = Nil)(
+        f: DataFrame => DataFrame): Unit =
+      StoreIO.rewrite(spark, path, f, Some(ddl), partitionBy)
     var current = plan()
     var round = 0
     while (round < maxRounds &&
@@ -1012,64 +1016,54 @@ object Dedup {
         // into duplicate rewritten rows — the leg is safe regardless of
         // which action the routing scheduled alongside. A VANISHED
         // store carries no batches, so every row lands in the backfill
-        // batch — the from-scratch rebuild. Snapshot discipline: the
-        // publish retires only the delta children this rewrite folded.
-        {
-          val snap = graft.ops.StoreIO.snapshot(spark, hashesRoot,
-            Some(HashStoreDdl))
-          graft.ops.StoreIO.publishMerged(spark, hashesRoot,
-            docs.join(snap.frame.select(col("doc_id"), col("batch"))
-                .groupBy(col("doc_id")).agg(min(col("batch")).as("batch")),
-                Seq("doc_id"), "left")
-              .select(md5(col("text").cast("binary")).as("h"), col("doc_id"),
-                coalesce(col("batch"), lit(-1L)).as("batch")),
-            snap, partitionBy = Seq("batch"))
+        // batch — the from-scratch rebuild.
+        remedy(hashesRoot, HashStoreDdl, Seq("batch")) { cur =>
+          docs.join(cur.select(col("doc_id"), col("batch"))
+              .groupBy(col("doc_id")).agg(min(col("batch")).as("batch")),
+              Seq("doc_id"), "left")
+            .select(md5(col("text").cast("binary")).as("h"), col("doc_id"),
+              coalesce(col("batch"), lit(-1L)).as("batch"))
         }
       if (act("manifest") == "reingest")
         // the manifest is fully derived from (doc_id, text): re-pack
         // the corpus — token counts and offsets come back re-derived
-        publishStore(spark, manifestPath,
+        remedy(manifestPath, ManifestDdl)(_ =>
           graft.ext.Packing.packSequences(docs))
       if (act("hashes") == "repair" || act("manifest") == "repair" ||
           act("xstore") == "repair")
         storeRepair(spark, hashesRoot, manifestPath, pairsPath)
-      if (act("pairs") == "rebuild") {
-        // ONE definition of the artifact: the pairsArtifactInit frame,
-        // published through the staged swap; the rebuild SUBSUMES any
-        // pinned delta children (exactly-once emission means their
-        // pairs are a subset of the full recompute), so they retire
-        val snap = graft.ops.StoreIO.snapshot(spark, pairsPath, Some(PairsDdl))
-        graft.ops.StoreIO.publishMerged(spark, pairsPath,
-          minhashPairsDf(docs), snap)
-      }
+      if (act("pairs") == "rebuild")
+        // ONE definition of the artifact: the pairsArtifactInit frame
+        // (exactly-once emission means the pinned children's pairs are
+        // a subset of the full recompute)
+        remedy(pairsPath, PairsDdl)(_ => minhashPairsDf(docs))
       if (act("layout") == "rebuild")
-        publishStore(spark, layoutPath, Ivf.layoutFrame(emb, cents),
-          partitionBy = Seq("list_id"))
+        remedy(layoutPath, LayoutDdl, Seq("list_id"))(_ =>
+          Ivf.layoutFrame(emb, cents))
       if (act("codes") == "reencode")
-        publishStore(spark, codesPath, Pq.encodeCorpus(emb, codebooks))
+        remedy(codesPath, CodesDdl)(_ => Pq.encodeCorpus(emb, codebooks))
       if (act("index") == "rebuild") {
         // the sketch index is re-derived from the corpus under the one
-        // band/shingle rule; BOTH snapshots pin before the first swap
+        // band/shingle rule; BOTH snapshots pin before the first publish
         // (the deleteApplyImpl discipline) so an append racing the
         // rebuild keeps its band AND shingle children symmetric —
         // snapshotting shingles after the bands publish could retire a
         // racer's shingle child while its band child survives
-        val bSnap = graft.ops.StoreIO.snapshot(spark, s"$indexPath/bands",
+        val bSnap = StoreIO.snapshot(spark, s"$indexPath/bands",
           Some(BandsDdl))
-        val sSnap = graft.ops.StoreIO.snapshot(spark, s"$indexPath/shingles",
+        val sSnap = StoreIO.snapshot(spark, s"$indexPath/shingles",
           Some(ShinglesDdl))
-        graft.ops.StoreIO.publishMerged(spark, s"$indexPath/bands",
+        StoreIO.publishMerged(spark, s"$indexPath/bands",
           bandTable(docs), bSnap)
-        graft.ops.StoreIO.publishMerged(spark, s"$indexPath/shingles",
+        StoreIO.publishMerged(spark, s"$indexPath/shingles",
           shingleTable(docs), sSnap)
       }
       if (act("ivfpq") == "reencode")
-        publishStore(spark, ivfpqPath,
-          Pq.ivfPqLayoutFrame(emb, cents, codebooks),
-          partitionBy = Seq("list_id"))
+        remedy(ivfpqPath, IvfPqDdl, Seq("list_id"))(_ =>
+          Pq.ivfPqLayoutFrame(emb, cents, codebooks))
       if (act("packed") == "repack")
-        publishStore(spark, packedPath, graft.ext.Packing.packedFrame(docs),
-          partitionBy = Seq("shard"))
+        remedy(packedPath, PackedDdl, Seq("shard"))(_ =>
+          graft.ext.Packing.packedFrame(docs))
       if (act("features") == "backfill")
         // the ROW-granular delta (Backfill.backfillDeltaRows): the
         // audit that scheduled this counts missing ROWS, and a torn
@@ -1077,11 +1071,10 @@ object Dedup {
         // listing diff — scheduling that form would no-op and the loop
         // would re-plan `backfill` every round until maxRounds; the
         // row form stays partition-pruned (only gap partitions scan)
-        publishStore(spark, featuresPath,
-          graft.ext.Backfill.backfillApplyRows(docs,
-            readStoreOr(spark, featuresPath, FeaturesDdl)))
+        remedy(featuresPath, FeaturesDdl)(cur =>
+          graft.ext.Backfill.backfillApplyRows(docs, cur))
       if (act("features") == "rebuild")
-        publishStore(spark, featuresPath,
+        remedy(featuresPath, FeaturesDdl)(_ =>
           graft.ext.Backfill.featureDf(docs))
       current = plan()
       round += 1
@@ -1108,26 +1101,12 @@ object Dedup {
     "doc_id BIGINT, source STRING, n_tok BIGINT, n_chars BIGINT, " +
       "alpha_permille BIGINT"
 
-  /** Reads a maintained store, or — when the directory does not exist
-    * (a crash the [[graft.ops.Publish.recover]] matrix classifies as
-    * `missing`, or operator damage) — an EMPTY frame under the store's
-    * pinned schema, so audits report the loss rather than throwing.
-    */
-  private[graft] def readStoreOr(spark: SparkSession, path: String,
-      ddl: String): DataFrame =
-    graft.ops.Publish.resolveLive(spark, path) match {
-      case Some(live) => spark.read.parquet(live)
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    }
-
   def qMaintenancePlan(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val emb = Tables.embeddings(spark, dir)
     val pairs = verifiedPairs(spark, dir)
-    val hashes = spark.read.parquet(ensureHashStore(spark, dir))
-    val manifest = spark.read.parquet(graft.ext.Packing.ensureManifest(spark, dir))
+    val hashes = graft.ops.Publish.readLive(spark, ensureHashStore(spark, dir))
+    val manifest = graft.ops.Publish.readLive(spark, graft.ext.Packing.ensureManifest(spark, dir))
     val idx = ensureFullIndex(spark, dir)
     maintenancePlanDf(
       artifactAuditDf(docs, pairs),
@@ -1135,21 +1114,21 @@ object Dedup {
       graft.ext.Packing.manifestAuditDf(docs, manifest),
       storeConsistencyDf(hashes, manifest, pairs),
       Ivf.ivfLayoutAuditDf(emb,
-        spark.read.parquet(Ivf.ensureLayout(spark, dir)),
+        graft.ops.Publish.readLive(spark, Ivf.ensureLayout(spark, dir)),
         Ivf.ensureModel(spark, dir)),
       Pq.codesAuditDf(emb,
-        spark.read.parquet(Pq.ensureCodes(spark, dir)),
+        graft.ops.Publish.readLive(spark, Pq.ensureCodes(spark, dir)),
         Pq.ensureModel(spark, dir)),
       indexAuditDf(docs,
         graft.ops.StoreIO.read(spark, s"$idx/bands", Some(BandsDdl)),
         graft.ops.StoreIO.read(spark, s"$idx/shingles", Some(ShinglesDdl))),
       Pq.ivfPqLayoutAuditDf(emb,
-        spark.read.parquet(Pq.ensureIvfPqLayout(spark, dir)),
+        graft.ops.Publish.readLive(spark, Pq.ensureIvfPqLayout(spark, dir)),
         Ivf.ensureModel(spark, dir), Pq.ensureModel(spark, dir)),
       graft.ext.Packing.packedAuditDf(docs,
-        spark.read.parquet(graft.ext.Packing.ensurePackedStore(spark, dir))),
+        graft.ops.Publish.readLive(spark, graft.ext.Packing.ensurePackedStore(spark, dir))),
       graft.ext.Backfill.featureAuditDf(docs,
-        spark.read.parquet(
+        graft.ops.Publish.readLive(spark,
           graft.ext.Backfill.ensureFeatureArtifactFull(spark, dir))))
   }
 
@@ -1167,38 +1146,6 @@ object Dedup {
   // on its own endpoints, so FILTERING equals a from-scratch rebuild on
   // the surviving corpus — the stream==batch discipline, asserted
   // row-for-row by ExtSpec.
-
-  /** Rewrites a parquet store through the shared RECOVERABLE publish
-    * ([[graft.ops.Publish]]: stage, rename-aside, promote — a reader
-    * never observes a half-written store, and a crash at any step
-    * leaves a mechanically recoverable state, never a vanished store).
-    */
-  private def rewriteStore(spark: SparkSession, path: String,
-      f: DataFrame => DataFrame, partitionBy: Seq[String] = Nil): Unit =
-    publishStore(spark, path, f(graft.ops.Publish.readLive(spark, path)),
-      partitionBy)
-
-  /** Publishes a prepared frame to `path` through the one shared
-    * recoverable swap ([[graft.ops.Publish.publish]]) — the
-    * [[rewriteStore]] discipline WITHOUT reading the existing store,
-    * for callers that replace rather than transform (a legitimately
-    * empty pairs artifact has no part files, so a bare
-    * `spark.read.parquet` of it fails schema inference — the rebuild
-    * must not read what it is about to discard). Hive-partitioned
-    * stores must pass `partitionBy`: a flat rewrite would leave later
-    * batch-keyed appends (batch=N subdirs) mixed with root-level files
-    * — a layout Spark refuses.
-    */
-  private def publishStore(spark: SparkSession, path: String,
-      frame: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
-    // the same publish-seam fence as StoreIO.publishMerged: a leased
-    // span usurped after its TTL aborts loudly instead of overwriting
-    // (fast fail — Publish re-checks inside, after staging and at the
-    // promote); publishAuto routes by graft.publish.mode, so pointer
-    // mode covers the maintenance remedies too
-    graft.ops.Lease.checkHeld(spark, path)
-    graft.ops.Publish.publishAuto(spark, path, frame, partitionBy)
-  }
 
   /** Applies a delete set to the persistent near-dup state and returns
     * the RE-ELECTION DELTA: one row per surviving previously-clustered
@@ -1232,7 +1179,7 @@ object Dedup {
       manifestPath, () => ())
 
   /** [[deleteApply]] with the interleave test seam: `interleave` runs
-    * after every store snapshot is pinned and before the first swap —
+    * after every store snapshot is pinned and before the first publish —
     * where a concurrent ingest append would land. The StreamingSpec
     * drill appends there and asserts nothing is lost (post-state ≡ the
     * serial order "delete apply, then the append").
@@ -1256,7 +1203,7 @@ object Dedup {
     // pin every store's snapshot (live + the delta children present
     // NOW) before any store mutates: appends that arrive from here on
     // land in delta children these snapshots never listed, so every
-    // swap below leaves them intact — the StoreIO serialization
+    // publish below leaves them intact — the StoreIO serialization
     // contract between ingest and maintenance
     val bandsSnap = step("da:snapB")(
       StoreIO.snapshot(spark, s"$indexPath/bands", Some(BandsDdl)))
@@ -1275,6 +1222,9 @@ object Dedup {
       }
       StoreIO.snapshot(spark, root, Some(HashStoreDdl))
     }
+    // the manifest has no pinned schema here: its snapshot reads the
+    // live version as written (pack offsets are re-derived from it)
+    val manifestSnap = manifestPath.map(StoreIO.snapshot(spark, _))
     val pairsSnap = step("da:snapP")(
       StoreIO.snapshot(spark, pairsPath, Some(PairsDdl)))
     val before = step("da:before")(pairsSnap.frame.localCheckpoint())
@@ -1289,15 +1239,13 @@ object Dedup {
     // pack manifest: offsets re-derived from the SURVIVING rows' own
     // token counts — no corpus access (Packing.repackManifest); the
     // re-emitted span is priced by q_repack_delta
-    val manifestLive = manifestPath.map(mp =>
-      graft.ops.Publish.readLive(spark, mp))
     val thunks: Seq[() => DataFrame] =
       Seq(
         () => step("da:cBands")(survivors(bandsSnap.frame).localCheckpoint()),
         () => step("da:cShingles")(
           survivors(shinglesSnap.frame).localCheckpoint())) ++
-      manifestLive.map(live => () => step("da:cManifest")(
-        Packing.repackManifest(survivors(live)).localCheckpoint())) ++
+      manifestSnap.map(snap => () => step("da:cManifest")(
+        Packing.repackManifest(survivors(snap.frame)).localCheckpoint())) ++
       hashSnap.map(snap => () => step("da:cHashes")(survivors(snap.frame)
         .select(col("h"), col("doc_id"), col("batch")).localCheckpoint())) :+
       (() => step("da:after")(before
@@ -1319,8 +1267,9 @@ object Dedup {
       nextFrame(), bandsSnap))
     step("da:pubShingles")(StoreIO.publishMerged(spark, s"$indexPath/shingles",
       nextFrame(), shinglesSnap))
-    manifestPath.foreach { mp =>
-      step("da:pubManifest")(publishStore(spark, mp, nextFrame()))
+    manifestSnap.foreach { snap =>
+      step("da:pubManifest")(StoreIO.publishMerged(spark, manifestPath.get,
+        nextFrame(), snap))
     }
     hashSnap.foreach { snap =>
       step("da:pubHashes")(StoreIO.publishMerged(spark, hashesRoot.get,
@@ -1374,10 +1323,12 @@ object Dedup {
         .toString
       indexInit(docs, s"$root/index")
       pairsArtifactInit(docs, s"$root/pairs")
-      docs.filter(col("doc_id") % 100 =!= 0)
-        .select(md5(col("text").cast("binary")).as("h"), col("doc_id"))
-        .write.parquet(s"$root/hashes/batch=0")
-      Packing.packSequences(docs).write.parquet(s"$root/manifest")
+      graft.ops.Publish.publish(spark, s"$root/hashes",
+        docs.filter(col("doc_id") % 100 =!= 0)
+          .select(md5(col("text").cast("binary")).as("h"), col("doc_id"),
+            lit(0L).as("batch")), partitionBy = Seq("batch"))
+      graft.ops.Publish.publish(spark, s"$root/manifest",
+        Packing.packSequences(docs))
       root
     })
 

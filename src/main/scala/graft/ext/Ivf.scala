@@ -84,15 +84,13 @@ object Ivf {
 
   /** Persists a trained coarse quantizer as a k-row parquet table
     * (list_id, cent float array — exact bit round-trip), through the
-    * shared recoverable swap — a retrain that crashes mid-write must
-    * not leave the serving process with no model at all.
+    * one store protocol — a retrain that crashes mid-write must not
+    * leave the serving process with no model at all.
     */
   def modelArtifactWrite(spark: SparkSession, cents: Seq[Seq[Float]],
       path: String): Unit = {
     import spark.implicits._
-    // publishAuto: the model artifact is exactly the kind of serving
-    // state the pointer-commit mode exists for on an object store
-    graft.ops.Publish.publishAuto(spark, path,
+    graft.ops.Publish.publish(spark, path,
       cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("list_id", "cent")
         .coalesce(1))
   }
@@ -166,18 +164,18 @@ object Ivf {
         VectorFns.l2norm(col("embedding")).as("nrm"), col("list_id"))
 
   def writeIvfPartitioned(emb: DataFrame, centroids: Seq[Seq[Float]], path: String): Unit =
-    layoutFrame(emb, centroids)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("list_id").parquet(path)
+    graft.ops.Publish.publish(emb.sparkSession, path,
+      layoutFrame(emb, centroids), partitionBy = Seq("list_id"))
 
   /** Incremental layout maintenance — the daily-cadence form: an
     * arriving embedding batch is assigned under the LIVE model (one
-    * compiled map) and appended into the hive directories, so the
-    * serving layout is maintained at ingest instead of rebuilt per
-    * batch. Already-present vec_ids are filtered out first (one
-    * anti-join against the layout's id column), which makes batch
-    * REPLAY idempotent — the same at-least-once discipline as the
-    * incremental near-dup index and the pack-manifest `packDelta`.
+    * compiled map) and appended as a [[graft.ops.StoreIO]] delta child
+    * (list_id carried as a data column), so the serving layout is
+    * maintained at ingest instead of rebuilt per batch. Already-present
+    * vec_ids (live ∪ delta) are filtered out first (one anti-join
+    * against the layout's id column), which makes batch REPLAY
+    * idempotent — the same at-least-once discipline as the incremental
+    * near-dup index and the pack-manifest `packDelta`.
     * Union over appended batches equals the from-scratch
     * [[writeIvfPartitioned]] (assignment is per-row under a frozen
     * model — spec-pinned), and [[ivfLayoutAuditDf]] gates the result;
@@ -187,16 +185,16 @@ object Ivf {
   def layoutAppend(embBatch: DataFrame, centroids: Seq[Seq[Float]],
       path: String): Unit = {
     val spark = embBatch.sparkSession
-    val existing = spark.read.parquet(path).select(col("vec_id"))
-    layoutFrame(embBatch.join(existing, Seq("vec_id"), "left_anti"), centroids)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("list_id").parquet(path)
+    val existing = graft.ops.StoreIO.read(spark, path).select(col("vec_id"))
+    graft.ops.StoreIO.append(layoutFrame(
+      embBatch.join(existing, Seq("vec_id"), "left_anti"), centroids), path)
   }
 
-  /** Probe + exact re-rank against the [[writeIvfPartitioned]] layout.
-    * The probe list ids (nProbe ints per query — query metadata, not
-    * corpus data) are collected driver-side and become a STATIC partition
-    * filter, so the scan's PartitionFilters prune the read to the probed
+  /** Probe + exact re-rank against the [[writeIvfPartitioned]] layout
+    * (live ∪ the [[layoutAppend]] delta children). The probe list ids
+    * (nProbe ints per query — query metadata, not corpus data) are
+    * collected driver-side and become a STATIC partition filter, so the
+    * live scan's PartitionFilters prune the read to the probed
     * inverted-list directories at file-listing time (asserted in
     * ExtSpec) — the same point-lookup shape as
     * [[Similarity.annLshSearchPartitioned]].
@@ -213,8 +211,8 @@ object Ivf {
     // `served` wraps the pruned scan (e.g. the tombstone anti-join of
     // [[servedMinus]]) — applied AFTER the static partition filter, so
     // PartitionFilters pruning is untouched
-    val corpus = served(
-      spark.read.parquet(path).filter(col("list_id").isin(probeKeys: _*)))
+    val corpus = served(graft.ops.StoreIO.read(spark, path)
+      .filter(col("list_id").isin(probeKeys: _*)))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("vec_id"))
     corpus.join(broadcast(probes), Seq("list_id"))
@@ -415,7 +413,7 @@ object Ivf {
 
   def annLayoutAudit(spark: SparkSession, dir: String): DataFrame =
     ivfLayoutAuditDf(Tables.embeddings(spark, dir),
-      spark.read.parquet(ensureLayout(spark, dir)), ensureModel(spark, dir))
+      graft.ops.Publish.readLive(spark, ensureLayout(spark, dir)), ensureModel(spark, dir))
 
   /** nProbe grid for [[annProbeCurve]] — doubling from "cheapest possible"
     * to half the centroid count; the candidate sets nest, so recall is
@@ -701,17 +699,17 @@ object Ivf {
   // [[annIvfDrift]] says WHEN retraining pays, [[annRetrainDelta]] what
   // it COSTS; this EXECUTES it against the serving state: the model
   // artifact is replaced and the hive-partitioned inverted-list layout
-  // ([[writeIvfPartitioned]]) is rewritten under the new quantizer
-  // through the shared recoverable publish ([[graft.ops.Publish]] —
-  // stage, rename-aside, promote; a crash at any step is settled by
-  // the recovery rule, and a fresh read never observes a half-moved
-  // layout on a filesystem with atomic directory rename). The report is
+  // ([[writeIvfPartitioned]]) is rewritten under the new quantizer as
+  // one [[graft.ops.StoreIO]] fold (live ∪ the appended delta children,
+  // published as a new pointer-committed version — a crash at any step
+  // leaves the old layout serving, and a reader never observes a
+  // half-moved layout). The report is
   // the PHYSICAL data movement the apply performed — per inverted list,
   // rows before, rows moved out/in, rows after — i.e. the I/O bill of
   // the retrain, complementing the delta report's distortion economics.
   //
-  // 100 TB shape: two passes over the layout (report, rewrite), each a
-  // compiled nearest-centroid map over one scan — no shuffle beyond the
+  // 100 TB shape: two passes over one pinned snapshot of the layout
+  // (report, rewrite), each a compiled nearest-centroid map over one scan — no shuffle beyond the
   // partitioned write; the quantizers are broadcast-sized (k·dim
   // floats). [[NearestCentroids]] is deterministic, so the two passes
   // agree. Applying the same quantizer twice moves nothing (ExtSpec
@@ -726,12 +724,15 @@ object Ivf {
   def retrainApply(spark: SparkSession, layoutPath: String,
       modelPath: String, newCents: Seq[Seq[Float]]): DataFrame = {
     require(newCents.nonEmpty, "retrainApply: empty quantizer")
-    def assigned() = graft.ops.Publish.readLive(spark, layoutPath)
+    // the delta children appended under the OLD model are re-assigned
+    // and folded too — left behind, they would serve from stale lists
+    val snap = graft.ops.StoreIO.snapshot(spark, layoutPath)
+    val assigned = snap.frame
       .select(col("vec_id"), col("embedding"), col("nrm"),
         col("list_id").cast("int").as("old_list"),
         element_at(NearestCentroids(col("embedding"), newCents, 1), 1)
           .as("new_list"))
-    val mv = assigned().select(col("old_list"), col("new_list"))
+    val mv = assigned.select(col("old_list"), col("new_list"))
     val outAgg = mv.groupBy(col("old_list").as("list_id"))
       .agg(count(lit(1)).as("n_before"),
         sum(when(col("new_list") =!= col("old_list"), 1L).otherwise(0L))
@@ -756,15 +757,12 @@ object Ivf {
         coalesce(col("n_after"), lit(0L)).as("n_after"))
       .orderBy("list_id")
       .localCheckpoint() // k rows, pinned before the stores mutate
-    // ONE shared publish discipline for every store swap in the engine
-    // (graft.ops.Publish.publishAuto: the rename-aside protocol, or the
-    // pointer commit under graft.publish.mode=pointer — recoverable at
-    // every step; the staged frame reads the live layout, which stays
-    // intact until the staging write completes)
-    graft.ops.Publish.publishAuto(spark, layoutPath,
-      assigned().select(col("vec_id"), col("embedding"), col("nrm"),
+    // the staged version reads the live one, which stays committed
+    // until the new pointer lands
+    graft.ops.StoreIO.publishMerged(spark, layoutPath,
+      assigned.select(col("vec_id"), col("embedding"), col("nrm"),
         col("new_list").as("list_id")),
-      partitionBy = Seq("list_id"))
+      snap, partitionBy = Seq("list_id"))
     modelArtifactWrite(spark, newCents, modelPath)
     report
   }
@@ -774,7 +772,7 @@ object Ivf {
     * model artifact + full-corpus layout — staged ONCE. At 100 TB this
     * is the ingest pipeline's existing state, so staging it inside the
     * timed entry charged ingest (Lloyd's + a corpus layout write +
-    * staged publish) to the operator under test every invocation — the
+    * publish) to the operator under test every invocation — the
     * r15 weak mark. Bench/ScaleBench pre-build this untimed.
     */
   def ensureRetrainFixture(spark: SparkSession, dir: String): String =

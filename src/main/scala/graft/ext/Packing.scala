@@ -255,7 +255,7 @@ object Packing {
     val tombs = docs
       .filter(col("source") === "src7" && col("doc_id") >= cutoff)
       .select(col("doc_id"))
-    manifestServed(spark.read.parquet(ensureManifest(spark, dir)), tombs)
+    manifestServed(graft.ops.Publish.readLive(spark, ensureManifest(spark, dir)), tombs)
       .orderBy("doc_id")
   }
 
@@ -270,37 +270,32 @@ object Packing {
 
   /** Streaming face of the manifest maintenance: a checkpointed file
     * stream watches the document drop directory and every micro-batch
-    * appends its [[packDelta]] to the stored manifest — arrival-to-
-    * packed latency is one batch-sized pack, and the checkpoint makes
-    * re-runs process only new files. Unlike the additive aggregate view
-    * (`IncrAgg.maintainStream`, which needs a batch-id ledger), replay
-    * here is idempotent WITHOUT extra state: a redelivered batch's
-    * doc_ids are ≤ the stored max, so its delta is empty by
-    * construction. The remaining crash window is a micro-batch whose
-    * multi-file append only partially published — the plain-parquet
-    * caveat every sink in this repo shares (closing it needs a
-    * transaction log).
+    * appends its [[packDelta]] to the stored manifest as a
+    * [[graft.ops.StoreIO]] delta child (live ∪ delta is the manifest) —
+    * arrival-to-packed latency is one batch-sized pack, and the
+    * checkpoint makes re-runs process only new files. Unlike the
+    * additive aggregate view (`IncrAgg.maintainStream`, which needs a
+    * batch-id ledger), replay here is idempotent WITHOUT extra state: a
+    * redelivered batch's doc_ids are ≤ the stored max, so its delta is
+    * empty by construction; each child is written whole, so a crashed
+    * micro-batch leaves no partial rows behind.
     *
     * Precondition: drop files carry ascending doc_id ranges in
     * file-arrival order (the append-only packing stream contract).
     */
   def packStream(spark: SparkSession, inputGlob: String, manifestPath: String,
       checkpoint: String, seqLen: Long = 512L, buckets: Int = 64): Unit = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.streaming.Trigger
-    val fs = new Path(manifestPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def manifestExists: Boolean =
-      fs.exists(new Path(manifestPath)) &&
-        fs.listStatus(new Path(manifestPath)).exists(_.getPath.getName.startsWith("part-"))
+    import graft.ops.StoreIO
     val stream = spark.readStream.schema(docsSchema)
       .option("maxFilesPerTrigger", 1).parquet(inputGlob)
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val delta =
-          if (manifestExists) packDelta(spark.read.parquet(manifestPath), batch, seqLen, buckets)
-          else packSequences(batch, seqLen, buckets)
-        if (!delta.isEmpty) delta.write.mode("append").parquet(manifestPath)
+        // a missing manifest reads as empty: the first delta packs from 0
+        val delta = packDelta(
+          StoreIO.read(spark, manifestPath, Some(Dedup.ManifestDdl)),
+          batch, seqLen, buckets)
+        if (!delta.isEmpty) StoreIO.append(delta, manifestPath)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
@@ -364,10 +359,11 @@ object Packing {
 
   def writePacked(docs: DataFrame, path: String, seqLen: Long = 512L,
       buckets: Int = 64, shardSeqs: Long = 1000L): Unit =
-    packedFrame(docs, seqLen, buckets, shardSeqs)
-      .repartitionByRange(col("shard"), col("t_off"))
-      .sortWithinPartitions("shard", "t_off")
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
+    graft.ops.Publish.publish(docs.sparkSession, path,
+      packedFrame(docs, seqLen, buckets, shardSeqs)
+        .repartitionByRange(col("shard"), col("t_off"))
+        .sortWithinPartitions("shard", "t_off"),
+      partitionBy = Seq("shard"))
 
   /** Grouped packing — one independent token stream per group (the
     * per-language training-shard layout: each language packs into its
@@ -414,7 +410,7 @@ object Packing {
     scratchManifests.getOrElseUpdate(dir, {
       val p = java.nio.file.Files.createTempDirectory("pack_manifest")
         .resolve("manifest").toString
-      packSequences(Tables.documents(spark, dir)).write.parquet(p)
+      graft.ops.Publish.publish(spark, p, packSequences(Tables.documents(spark, dir)))
       p
     })
 
@@ -529,7 +525,7 @@ object Packing {
   /** Driver entry: audit the staged (healthy) manifest artifact. */
   def qManifestAudit(spark: SparkSession, dir: String): DataFrame =
     manifestAuditDf(Tables.documents(spark, dir),
-      spark.read.parquet(ensureManifest(spark, dir)))
+      graft.ops.Publish.readLive(spark, ensureManifest(spark, dir)))
 
   /** Per-(JVM, corpus) staged PHYSICAL pack layout ([[writePacked]]) —
     * the shard-partitioned store a trainer reads; built once at ingest
@@ -603,7 +599,7 @@ object Packing {
 
   def qPackedAudit(spark: SparkSession, dir: String): DataFrame =
     packedAuditDf(Tables.documents(spark, dir),
-      spark.read.parquet(ensurePackedStore(spark, dir)))
+      graft.ops.Publish.readLive(spark, ensurePackedStore(spark, dir)))
 
   def qPackSequences(spark: SparkSession, dir: String): DataFrame =
     packSequences(Tables.documents(spark, dir))

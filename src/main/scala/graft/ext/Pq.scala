@@ -96,11 +96,9 @@ object Pq {
   def modelArtifactWrite(spark: SparkSession, codebooks: Seq[Seq[Seq[Float]]],
       path: String): Unit = {
     import spark.implicits._
-    // through the shared recoverable swap (graft.ops.Publish.publishAuto
-    // — rename-aside, or the pointer commit under
-    // graft.publish.mode=pointer): a crash mid-write must not leave
+    // through the one store protocol: a crash mid-write must not leave
     // serving with no codebooks at all
-    graft.ops.Publish.publishAuto(spark, path,
+    graft.ops.Publish.publish(spark, path,
       codebooks.zipWithIndex.flatMap { case (cb, s) =>
         cb.zipWithIndex.map { case (cent, k) => (s, k, cent) }
       }.toDF("s", "code", "cvec").coalesce(1))
@@ -144,17 +142,18 @@ object Pq {
 
   /** Incremental code-table maintenance — the [[graft.ext.Ivf.layoutAppend]]
     * twin: an arriving batch is encoded under the live codebooks and
-    * appended, already-present vec_ids filtered first so batch replay
-    * is idempotent. Union over batches equals the from-scratch
+    * appended as a [[graft.ops.StoreIO]] delta child, already-present
+    * vec_ids (live ∪ delta) filtered first so batch replay is
+    * idempotent. Union over batches equals the from-scratch
     * [[encodeCorpus]] (encoding is per-row under a frozen model);
     * [[codesAuditDf]] gates the result.
     */
   def codesAppend(embBatch: DataFrame, codebooks: Seq[Seq[Seq[Float]]],
       path: String): Unit = {
     val spark = embBatch.sparkSession
-    val existing = spark.read.parquet(path).select(col("vec_id"))
-    encodeCorpus(embBatch.join(existing, Seq("vec_id"), "left_anti"), codebooks)
-      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
+    val existing = graft.ops.StoreIO.read(spark, path).select(col("vec_id"))
+    graft.ops.StoreIO.append(encodeCorpus(
+      embBatch.join(existing, Seq("vec_id"), "left_anti"), codebooks), path)
   }
 
   /** ADC search: per-query lookup tables (flat m·ksub doubles,
@@ -226,8 +225,8 @@ object Pq {
     scratchCodes.getOrElseUpdate(dir, {
       val p = java.nio.file.Files.createTempDirectory("pq_codes")
         .resolve("codes").toString
-      encodeCorpus(Tables.embeddings(spark, dir), ensureModel(spark, dir))
-        .write.parquet(p)
+      graft.ops.Publish.publish(spark, p,
+        encodeCorpus(Tables.embeddings(spark, dir), ensureModel(spark, dir)))
       p
     })
 
@@ -242,7 +241,7 @@ object Pq {
   def annPqSearchServed(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val codebooks = ensureModel(spark, dir)
-    val corpus = spark.read.parquet(ensureCodes(spark, dir))
+    val corpus = graft.ops.Publish.readLive(spark, ensureCodes(spark, dir))
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_emb"))
     search(corpus, queries, codebooks, k = 5)
@@ -301,7 +300,7 @@ object Pq {
 
   def annCodesAudit(spark: SparkSession, dir: String): DataFrame =
     codesAuditDf(Tables.embeddings(spark, dir),
-      spark.read.parquet(ensureCodes(spark, dir)), ensureModel(spark, dir))
+      graft.ops.Publish.readLive(spark, ensureCodes(spark, dir)), ensureModel(spark, dir))
 
   /** IVFPQ-LAYOUT AUDIT — [[codesAuditDf]] covers the FLAT code table;
     * this audits the hive-partitioned serving layout
@@ -357,7 +356,7 @@ object Pq {
 
   def annIvfPqLayoutAudit(spark: SparkSession, dir: String): DataFrame =
     ivfPqLayoutAuditDf(Tables.embeddings(spark, dir),
-      spark.read.parquet(ensureIvfPqLayout(spark, dir)),
+      graft.ops.Publish.readLive(spark, ensureIvfPqLayout(spark, dir)),
       Ivf.ensureModel(spark, dir), ensureModel(spark, dir))
 
   /** IVF+PQ (IVFADC, Jégou et al. §IV) — the composition that serves
@@ -468,10 +467,10 @@ object Pq {
     scratchIvfPqLayouts.getOrElseUpdate(dir, {
       val p = java.nio.file.Files.createTempDirectory("ivfpq_layout")
         .resolve("codes").toString
-      ivfPqLayoutFrame(Tables.embeddings(spark, dir),
-          Ivf.ensureModel(spark, dir), ensureModel(spark, dir))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("list_id").parquet(p)
+      graft.ops.Publish.publish(spark, p,
+        ivfPqLayoutFrame(Tables.embeddings(spark, dir),
+          Ivf.ensureModel(spark, dir), ensureModel(spark, dir)),
+        partitionBy = Seq("list_id"))
       p
     })
 
@@ -496,7 +495,7 @@ object Pq {
     val qArr = queries.collect()
       .map(r => r.getLong(0) -> normalize(r.getSeq[Float](1).toArray))
     val probeKeys = driverProbes(qArr, cents, Ivf.NProbe).map(_._2).distinct
-    val corpus = spark.read.parquet(ensureIvfPqLayout(spark, dir))
+    val corpus = graft.ops.Publish.readLive(spark, ensureIvfPqLayout(spark, dir))
       .filter(col("list_id").isin(probeKeys: _*))
       .select(col("vec_id"), col("list_id"), col("codes"))
     ivfPqSearch(corpus, queries, cents, codebooks, k = 5)

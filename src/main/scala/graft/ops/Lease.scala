@@ -47,9 +47,9 @@ import org.apache.spark.sql.SparkSession
   *     renewal can extend a hold but never re-rank it (mutating the
   *     claim's own mtime would demote the holder behind a contender
   *     that arrived mid-renewal). Spans expected to outlive their TTL
-  *     (a 100 TB rewrite) renew at checkpoints; [[Publish]] /
-  *     [[PointerStore]] renew once before their staging write, so a
-  *     span is freshest exactly when it starts its longest step;
+  *     (a 100 TB rewrite) renew at checkpoints; [[Publish]] renews
+  *     once before its staging write, so a span is freshest exactly
+  *     when it starts its longest step;
   *   - a loser deletes its own claim and throws; release deletes only
   *     the caller's own uniquely-named claim, so a usurped or raced
   *     span can never unlock someone else's;
@@ -58,14 +58,13 @@ import org.apache.spark.sql.SparkSession
   *     heartbeat together — by later acquirers; safe, names are never
   *     reused). A live holder that outlives its TTL without renewing
   *     can still be usurped, but the publish seam FENCES the outcome —
-  *     [[checkHeld]] runs at span entry (fast fail), and [[Publish]] /
-  *     [[PointerStore]] re-check INSIDE the publish after staging
-  *     completes and immediately before the promote/commit, with the
-  *     claim id riding the staged marker so crash recovery refuses to
-  *     roll a usurped staging forward ([[Publish.recover]]). The
-  *     residual window is a break landing between the final check and
-  *     the rename/PUT itself — milliseconds, closable only by a
-  *     compare-and-swap primitive plain filesystems lack;
+  *     [[checkHeld]] runs at span entry (fast fail), and [[Publish]]
+  *     re-checks INSIDE the publish after staging completes and
+  *     immediately before the pointer commit, so a usurped span leaves
+  *     only an unreferenced version that recovery drops. The residual
+  *     window is a break landing between the final check and the
+  *     pointer create itself — milliseconds, closable only by a
+  *     conditional-create primitive plain filesystems lack;
   *   - REENTRANT PER THREAD: a composed operator (runMaintenance →
   *     storeRepair → fold) re-enters the leases it already holds, so
   *     spans nest without self-deadlock; a different thread — same JVM
@@ -218,24 +217,15 @@ object Lease {
   }
 
   /** The claim name this thread holds on `path`, if any — the token
-    * the publish seams embed in their staged marker so crash recovery
-    * can refuse to roll a usurped staging forward.
+    * [[Publish]] records in its staging marker and pointer file.
     */
   private[ops] def heldClaim(path: String): Option[String] =
     held.get().get(leaseDirOf(path)).map(_._2)
 
-  /** Whether `claim` (a name from [[heldClaim]], possibly read back
-    * from a staged marker by recovery) still exists in `path`'s lease
-    * directory.
-    */
-  private[ops] def claimExists(spark: SparkSession, path: String,
-      claim: String): Boolean =
-    fsOf(spark, path).exists(new Path(leaseDirOf(path), claim))
-
   /** FENCE check, called at the store-publish seams
     * ([[StoreIO.publishMerged]], the maintenance publishers, and
-    * INSIDE [[Publish.publishImpl]] / [[PointerStore.publishImpl]]
-    * after staging and immediately before the promote/commit): throws
+    * INSIDE [[Publish.publishImpl]] after staging and immediately
+    * before the pointer commit): throws
     * [[ConcurrentWriter]] when this thread's span was usurped — its
     * claim file is gone, which only a TTL break can cause (release
     * deletes a claim strictly after the hold count reaches zero, and

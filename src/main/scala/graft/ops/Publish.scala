@@ -1,201 +1,103 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** RECOVERABLE store publish — the one swap discipline every maintained
-  * parquet store in the engine rewrites through (pair artifact, hash
-  * registry, pack manifest, IVF/PQ serving layouts, model artifacts,
-  * compaction).
+/** The engine's ONE store-publish protocol — every maintained parquet
+  * store (pair artifact, hash registry, sketch index, pack manifest,
+  * IVF/PQ serving layouts, model artifacts, compaction) is born and
+  * replaced through [[publish]], and read through [[resolveLive]] /
+  * [[readLive]]. Every step is a single-object operation, so the
+  * protocol is atomic on HDFS, local filesystems AND S3-style object
+  * stores (where a directory rename is a copy plus a delete, and so
+  * never atomic):
   *
-  * The naive rewrite (`delete(live); rename(staging, live)`) has a
-  * crash window in which NO live store exists at all — strictly worse
-  * than the partial-apply drift the audits detect, because a vanished
-  * store cannot be audited or repaired, only rebuilt. This publish
-  * closes the window with a rename-aside protocol in which every
-  * intermediate state is mechanically recoverable:
+  *   0. stage the prepared frame to an immutable VERSION directory
+  *      `root/_v-<N>` — Spark's job commit, then any sidecar, then the
+  *      [[StagedMarker]] (a version without the marker is torn);
+  *   1. COMMIT with one pointer-file create: `root/_ptr-<N>` naming the
+  *      version (a single PUT);
+  *   2. GC everything but the newest committed version and its pointer.
   *
-  *   0. write the prepared frame to `path__staged` (live untouched;
-  *      Spark's job commit marks completion with `_SUCCESS`);
-  *   1. rename the live store aside: `live` → `path__prev`;
-  *   2. promote: `path__staged` → `live`;
-  *   3. delete `path__prev`.
+  * Version dirs and pointers are UNDERSCORE-prefixed, so Spark's file
+  * listing skips them: a plain `spark.read.parquet(root)` sees no data,
+  * and every reader resolves the committed version instead. Readers
+  * resolve the highest pointer whose version is COMPLETE ([[current]])
+  * — before the commit PUT the old version, after it the new one; a
+  * torn pointer (a crash inside the create on a filesystem, where
+  * create+write is not atomic) names no complete version and is
+  * skipped. A reader therefore never observes a torn store.
   *
-  * Crash matrix, settled by [[recover]] (run automatically at the start
-  * of every publish, and by `Dedup.runMaintenance` before planning):
+  * Crash matrix, settled by [[recover]] (run at the start of every
+  * publish, by every [[StoreIO.snapshot]] and by
+  * `Dedup.runMaintenance`'s pre-pass): an unreferenced staged version
+  * (crash before the commit) is dropped — the publish never happened;
+  * a superseded version or pointer (crash before GC) is dropped — the
+  * publish stands; a torn pointer is dropped. The pointer IS the
+  * store: the newest committed pointer wins, always.
   *
-  *   - crash in/after step 0 (live present): the publish never touched
-  *     the live store — discard leftovers, report `cleared`;
-  *   - crash after step 1 (live missing, staged COMPLETE — the `StagedMarker`
-  *     present, which step 1 running at all implies): roll FORWARD —
-  *     promote staged, drop prev, report `rolled_forward`;
-  *   - torn staging with live missing (no `StagedMarker`, prev present —
-  *     reachable only by manual damage, since step 1 follows a
-  *     successful step 0): roll BACK — restore prev, report
-  *     `rolled_back`;
-  *   - crash after step 2: live is the new store — drop prev, `cleared`;
-  *   - nothing on disk: report `missing` (the store is genuinely gone;
-  *     the caller plans a rebuild — never this function's job).
-  *
-  * Durability assumptions, stated rather than implied: directory rename
-  * is atomic on HDFS and local filesystems, NOT on S3-style object
-  * stores (rename = copy+delete there). At 100 TB on an object store
-  * the equivalent discipline is a version directory per publish plus a
-  * pointer-file commit (write `path/v=N+1`, then atomically swap a
-  * one-line pointer object); the protocol here is the filesystem form
-  * of the same two-phase shape. Single writer assumed: concurrent
-  * APPENDS must go through the delta-directory discipline
-  * (`StoreIO`), never into the live directory a publish is about to
-  * swap.
+  * Caveats, stated: single writer per store (the [[Lease]] makes that
+  * mechanical, and the publish re-checks the lease right before the
+  * commit); retention is the newest committed version only, so a
+  * reader holding an OLD resolved path across a publish can lose files
+  * mid-read. Appends never go into a version directory — they use the
+  * delta-directory discipline ([[StoreIO]]).
   */
 object Publish {
 
-  private[graft] def stagedOf(path: String): String =
-    path.stripSuffix("/") + "__staged"
-  private[graft] def prevOf(path: String): String =
-    path.stripSuffix("/") + "__prev"
+  private def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Publish-mode switch (`graft.publish.mode` Spark conf): "rename"
-    * (default — the rename-aside protocol below, atomic on HDFS/local
-    * filesystems) or "pointer" (the [[PointerStore]] version-dir +
-    * pointer-commit protocol, the S3-shaped form whose every step is a
-    * single-object operation).
-    */
-  def mode(spark: SparkSession): String =
-    spark.conf.get("graft.publish.mode", "rename")
-
-  /** Snapshot-isolation knob for pointer mode (`graft.publish
-    * .keepVersions` Spark conf, default 1): how many committed
-    * versions every pointer-mode publish/recover retains. Plumbed
-    * through [[publishAuto]] and [[StoreIO]] so a deployment that
-    * keeps a read history does not lose it to a maintenance
-    * snapshot's recovery pre-pass.
-    */
-  private[graft] def keepVersionsConf(spark: SparkSession): Int =
-    math.max(1, spark.conf.get("graft.publish.keepVersions", "1").toInt)
-
-  /** MODE-DISPATCHING publish — the one entry every maintained-store
-    * publisher calls (StoreIO folds dispatch internally; the direct
-    * publishers — model artifacts, serving layouts, maintenance
-    * remedies, compaction — call this). Under the default rename mode
-    * it is [[publish]]; under pointer mode it is
-    * [[PointerStore.publish]] with the configured version history, so
-    * flipping `graft.publish.mode` covers EVERY maintained artifact,
-    * not just the StoreIO-managed ones.
-    */
-  def publishAuto(spark: SparkSession, path: String, frame: DataFrame,
-      partitionBy: Seq[String] = Nil,
-      sidecar: Option[(String, String)] = None): Unit =
-    if (mode(spark) == "pointer")
-      PointerStore.publish(spark, path, frame, partitionBy, sidecar,
-        keepVersions = keepVersionsConf(spark))
-    else publish(spark, path, frame, partitionBy, sidecar)
-
-  /** The READABLE live directory of a store under the current publish
-    * mode, or None when it has never been written. Both modes carry a
-    * MIGRATION READ for stores written under the other one, so a mode
-    * flip never makes an existing store read as empty: pointer mode —
-    * the committed version dir, else the plain path when it holds
-    * pre-pointer data ([[PointerStore.resolve]]); rename mode — the
-    * plain path when it holds plain data, else the committed pointer
-    * version for a store that was pointer-published before the mode
-    * flipped back (the bare root of such a store holds only
-    * `_`-prefixed protocol entries, which a plain read silently
-    * ignores — exactly the zero-rows hazard the migration reads
-    * close).
-    */
-  def resolveLive(spark: SparkSession, path: String): Option[String] =
-    if (mode(spark) == "pointer") PointerStore.resolve(spark, path)
-    else {
-      val fs = new Path(path).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new Path(path))) None
-      else if (PointerStore.legacyData(spark, path)) Some(path)
-      else PointerStore.resolve(spark, path)
-    }
-
-  /** Mode-aware store read: the live directory under
-    * [[resolveLive]], or the plain path when nothing resolves (so a
-    * genuinely missing store still fails with Spark's own path error,
-    * as a plain read would).
-    */
-  def readLive(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(resolveLive(spark, path).getOrElse(path))
-
-  /** Mode-dispatching crash recovery: [[recover]] under rename mode;
-    * under pointer mode [[PointerStore.recover]] with the configured
-    * version history, plus — for a store with no pointer commit yet —
-    * the rename recovery, so pre-migration crash leftovers
-    * (`__staged`/`__prev`) are settled before the migration read
-    * serves the plain root.
-    */
-  def recoverAuto(spark: SparkSession, path: String): String =
-    if (mode(spark) == "pointer") {
-      val r = PointerStore.recover(spark, path, keepVersionsConf(spark))
-      if (PointerStore.current(spark, path).isEmpty)
-        recover(spark, path)
-      else r
-    } else recover(spark, path)
-
-  /** Crash points for the kill-interleave specs: the publish throws
-    * immediately AFTER completing the numbered step. [[AfterSpark]]
-    * splits step 0 in two: Spark's job commit has landed (`_SUCCESS`)
-    * but the sidecar + staging marker have not — recovery must treat
-    * that staging as TORN (rolling it forward would promote a store
-    * whose fold bookkeeping never made it to disk).
-    */
-  private[graft] val AfterSpark = 0
-  private[graft] val AfterStage = 1
-  private[graft] val AfterAside = 2
-  private[graft] val AfterPromote = 3
+  private val PtrPrefix = "_ptr-"
+  private val VersionPrefix = "_v-"
+  private[graft] def versionName(n: Long): String = f"$VersionPrefix$n%08d"
+  private def ptrName(n: Long): String = f"$PtrPrefix$n%08d"
+  private def ptrNumber(name: String): Option[Long] =
+    if (!name.startsWith(PtrPrefix)) None
+    else scala.util.Try(name.stripPrefix(PtrPrefix).toLong).toOption
 
   /** Staging-complete marker, written as the LAST staging step — after
-    * Spark's `_SUCCESS` and after any [[publish]] `sidecar`. Recovery
-    * rolls a staging forward only when this marker exists: `_SUCCESS`
+    * Spark's `_SUCCESS` and after any [[publish]] `sidecar`. `_SUCCESS`
     * alone proves the data landed, not the sidecar a
-    * [[graft.ops.StoreIO.publishMerged]] fold needs to retire its delta
-    * children after the promote. Its CONTENTS are the publishing
-    * span's lease claim id (empty for unleased publishes): the fence
-    * token [[recover]] re-reads before rolling a staging forward, so a
-    * staging whose span was TTL-usurped is rolled back — never
-    * promoted over the usurper's work — even when the crash landed
-    * inside the publish itself.
+    * [[StoreIO.publishMerged]] fold needs to retire its delta children.
+    * Its contents are the publishing span's lease claim id (empty for
+    * unleased publishes), kept for forensics.
     */
   private[graft] val StagedMarker = "_graft_staged"
 
+  /** Crash points for the kill-interleave drills: the publish throws
+    * immediately AFTER the numbered step. [[AfterSpark]] crashes
+    * between Spark's job commit and the staging marker (the version
+    * must read as torn).
+    */
+  private[graft] val AfterSpark = 0
+  private[graft] val AfterStage = 1
+  private[graft] val AfterCommit = 2
+
   private final class InjectedCrash(step: Int)
-    extends RuntimeException(s"injected crash after step $step")
+    extends RuntimeException(s"injected crash after publish step $step")
 
-  // FileSystem.rename/delete report failure by RETURNING FALSE, not by
-  // throwing — an unchecked rename would let a publish "succeed" while
-  // the store still serves the old data, and recovery could drop the
-  // only surviving copy after a failed promote. Every move in the
-  // protocol checks its result.
-  private def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
-      src: Path, dst: Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"Publish: rename $src -> $dst failed")
-
-  private def deleteOrThrow(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path): Unit =
+  // FileSystem.delete reports failure by RETURNING FALSE, not by
+  // throwing — an unchecked delete lets a fold retire its sidecar while
+  // the folded children survive (rows in live AND delta, nothing left
+  // to recover from). Every delete in the protocol checks its result.
+  private[ops] def deleteOrThrow(fs: FileSystem, p: Path): Unit =
     if (fs.exists(p) && !fs.delete(p, true))
       throw new java.io.IOException(s"Publish: delete $p failed")
 
   /** One-shot small control file (markers, sidecars, pointers) in UTF-8,
-    * overwriting any leftover. create() + close() is not atomic, but
-    * every use below is inside a directory whose VISIBILITY is what
-    * commits (a staged dir before its rename, a pointer temp before its
-    * rename) — a torn control file is never observable as committed.
+    * overwriting any leftover. create() + close() is not atomic: a torn
+    * marker leaves its version uncommittable, and a torn pointer names
+    * no complete version — neither is ever observable as committed.
     */
-  private[ops] def writeSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path, contents: String): Unit = {
+  private[ops] def writeSmallFile(fs: FileSystem, p: Path,
+      contents: String): Unit = {
     val out = fs.create(p, true)
     try out.write(contents.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
-  private[ops] def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path): String = {
+  private[ops] def readSmallFile(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
     try {
       val buf = new java.io.ByteArrayOutputStream()
@@ -206,129 +108,136 @@ object Publish {
     } finally in.close()
   }
 
-  /** `sidecar` — an optional (filename, contents) pair written INTO the
-    * staged directory after Spark's job commit and before the staging
-    * marker, so it promotes atomically with the data. The one user is
-    * [[graft.ops.StoreIO.publishMerged]]'s folded-children list: the
-    * list must survive a crash between the promote and the child
-    * retirement, or the folded rows exist in both the new live store
-    * and the surviving delta children with no mechanical recovery.
+  /** A committed state: pointer number + the version dir it names. */
+  final case class Commit(n: Long, version: String)
+
+  /** The version a pointer file names — its FIRST line (the second, when
+    * present, is the publishing span's lease claim id, for forensics).
     */
-  def publish(spark: SparkSession, path: String, frame: DataFrame,
+  private def ptrVersion(fs: FileSystem, r: Path, n: Long): String =
+    readSmallFile(fs, new Path(r, ptrName(n)))
+      .linesIterator.nextOption().getOrElse("").trim
+
+  /** Every pointer naming a COMPLETE version (staging marker present),
+    * newest first — torn pointers and torn stagings are skipped.
+    */
+  private def commits(fs: FileSystem, r: Path): Iterator[Commit] =
+    if (!fs.exists(r)) Iterator.empty
+    else fs.listStatus(r).flatMap(st => ptrNumber(st.getPath.getName))
+      .sorted(Ordering[Long].reverse).iterator
+      .map(n => Commit(n, ptrVersion(fs, r, n)))
+      .filter(c => c.version.nonEmpty &&
+        fs.exists(new Path(new Path(r, c.version), StagedMarker)))
+
+  /** The newest committed state of `root`; None = never published. */
+  def current(spark: SparkSession, root: String): Option[Commit] =
+    commits(fsOf(spark, root), new Path(root)).nextOption()
+
+  /** The committed version directory to read, or None when the store
+    * has never been published.
+    */
+  def resolveLive(spark: SparkSession, root: String): Option[String] =
+    current(spark, root).map(c => s"${root.stripSuffix("/")}/${c.version}")
+
+  /** The committed version directory; fails loudly when the store has
+    * never been published (a store is born through [[publish]] — data
+    * written beside the protocol is never served).
+    */
+  def liveDir(spark: SparkSession, root: String): String =
+    resolveLive(spark, root).getOrElse(throw new java.io.FileNotFoundException(
+      s"Publish: no committed version at $root"))
+
+  /** Reads the committed version ([[liveDir]]). */
+  def readLive(spark: SparkSession, root: String): DataFrame =
+    spark.read.parquet(liveDir(spark, root))
+
+  /** `sidecar` — an optional (filename, contents) pair written INTO the
+    * version directory after Spark's job commit and before the staging
+    * marker, so it commits atomically with the data. The one user is
+    * [[StoreIO.publishMerged]]'s folded-children list: it must survive
+    * a crash between the commit and the child retirement, or the folded
+    * rows exist in both the new live store and the surviving delta
+    * children with no mechanical recovery.
+    */
+  def publish(spark: SparkSession, root: String, frame: DataFrame,
       partitionBy: Seq[String] = Nil,
       sidecar: Option[(String, String)] = None): Unit =
-    publishImpl(spark, path, frame, partitionBy, crashAfter = Int.MaxValue,
+    publishImpl(spark, root, frame, partitionBy, crashAfter = Int.MaxValue,
       sidecar = sidecar)
 
   /** The publish with an injectable crash point — the test seam the
-    * kill-at-every-interleave spec drives. Production callers use
-    * [[publish]].
+    * kill-at-every-step drills drive. Production callers use [[publish]].
     */
-  private[graft] def publishImpl(spark: SparkSession, path: String,
+  private[graft] def publishImpl(spark: SparkSession, root: String,
       frame: DataFrame, partitionBy: Seq[String], crashAfter: Int,
       sidecar: Option[(String, String)] = None): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(path)
-    val staged = new Path(stagedOf(path))
-    val prev = new Path(prevOf(path))
+    val fs = fsOf(spark, root)
+    val r = new Path(root)
     def crash(step: Int): Unit =
       if (crashAfter == step) throw new InjectedCrash(step)
+    fs.mkdirs(r)
     // settle any state a previously-crashed publish left behind
-    recover(spark, path)
+    val n = gc(fs, r)._1.map(_.n + 1).getOrElse(0L)
     // a leased span renews its heartbeat before its longest step — the
-    // staging write is minutes at scale, and a renewal here keeps the
-    // claim alive through it (no-op when unleased)
-    Lease.renew(spark, path)
-    // step 0: stage (the live store is readable throughout — frames
-    // derived FROM the live store execute here, before anything moves)
+    // staging write is minutes at scale (no-op when unleased)
+    Lease.renew(spark, root)
+    val vdir = new Path(r, versionName(n))
+    // step 0: stage the immutable version (the live version stays
+    // readable throughout — frames derived FROM it execute here)
     val w = frame.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(staged.toString)
+      .parquet(vdir.toString)
     crash(AfterSpark)
     sidecar.foreach { case (name, contents) =>
-      writeSmallFile(fs, new Path(staged, name), contents)
+      writeSmallFile(fs, new Path(vdir, name), contents)
     }
-    // the marker commits the STAGING (data + sidecar together) and
-    // carries the span's claim id as the fence token recovery re-reads;
-    // recovery never rolls forward a staging without the marker
-    writeSmallFile(fs, new Path(staged, StagedMarker),
-      Lease.heldClaim(path).getOrElse(""))
+    val claim = Lease.heldClaim(root).getOrElse("")
+    writeSmallFile(fs, new Path(vdir, StagedMarker), claim)
     crash(AfterStage)
-    // FENCE between staging completion and the swap: the staging write
-    // is the span's long pole, so a TTL break overwhelmingly lands
-    // inside it — a usurped span must abort HERE, with the live store
-    // untouched (recovery later clears the orphaned staging)
-    Lease.checkHeld(spark, path)
-    // step 1: rename-aside (never delete the only copy)
-    if (fs.exists(live)) renameOrThrow(fs, live, prev)
-    crash(AfterAside)
-    // FENCE immediately before the promote — the closest cheap
-    // approximation of a token checked atomically at the rename (plain
-    // filesystems have no compare-and-rename; the residual window is
-    // this exists() to the rename below). On failure, roll the aside
-    // back by hand: leaving live missing with a complete staging would
-    // otherwise hand recovery a usurped staging to settle
-    try Lease.checkHeld(spark, path)
-    catch { case e: Lease.ConcurrentWriter =>
-      if (fs.exists(prev)) renameOrThrow(fs, prev, live)
-      deleteOrThrow(fs, staged)
-      spark.catalog.refreshByPath(path)
-      throw e
-    }
-    // step 2: promote
-    renameOrThrow(fs, staged, live)
-    crash(AfterPromote)
-    // step 3: drop the superseded store
-    deleteOrThrow(fs, prev)
-    // the renames bypass Spark's writers: re-cache any persisted plans
-    // over this path (new spark.read calls list afresh; a Dataset
-    // created before the publish must not be reused)
-    spark.catalog.refreshByPath(path)
+    // FENCE immediately before the commit: the staging write is the
+    // span's long pole, so a TTL break overwhelmingly lands inside it —
+    // a usurped span aborts HERE, leaving only an unreferenced version
+    // the next recover drops. (The residual window is this exists() to
+    // the create below; the atomic form is a conditional PUT.)
+    Lease.checkHeld(spark, root)
+    // step 1: the commit — ONE pointer-object create
+    writeSmallFile(fs, new Path(r, ptrName(n)),
+      versionName(n) + (if (claim.isEmpty) "" else "\n" + claim))
+    crash(AfterCommit)
+    // step 2: GC the superseded version
+    gc(fs, r)
+    // re-cache any persisted plans over this store (new reads resolve
+    // afresh; a Dataset created before the publish must not be reused)
+    spark.catalog.refreshByPath(root)
   }
 
-  /** Settles whatever a crashed [[publish]] left at `path` (see the
-    * crash matrix above) and reports the action taken: `none`,
-    * `cleared`, `rolled_forward`, `rolled_back`, or `missing`.
-    * Idempotent; safe to run on a healthy store.
+  /** Settles whatever a crashed publish left at `root` (see the crash
+    * matrix above) and reports `none` (healthy), `cleared` (dropped an
+    * unreferenced staging, a superseded state, or a torn pointer) or
+    * `missing` (no committed version — never published, or lost; the
+    * caller plans a rebuild, never this function). Idempotent.
     */
-  def recover(spark: SparkSession, path: String): String = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(path)
-    val staged = new Path(stagedOf(path))
-    val prev = new Path(prevOf(path))
-    val stagedComplete = fs.exists(new Path(staged, StagedMarker))
-    if (fs.exists(live)) {
-      val leftovers = fs.exists(prev) || fs.exists(staged)
-      deleteOrThrow(fs, prev)
-      deleteOrThrow(fs, staged)
-      if (leftovers) "cleared" else "none"
-    } else if (stagedComplete && {
-        val claim = readSmallFile(fs, new Path(staged, StagedMarker)).trim
-        claim.isEmpty || Lease.claimExists(spark, path, claim)
-      }) {
-      // promote FIRST, and only then drop prev — a failed promote must
-      // leave the old copy intact (renameOrThrow throws before the
-      // delete can run). Rolling forward is CONDITIONAL on the fence
-      // token in the marker: an unleased staging ("" — bootstrap and
-      // scratch publishes) always promotes; a leased one promotes only
-      // while its claim still exists. A crashed holder's claim survives
-      // until its TTL, so a prompt recovery rolls its completed staging
-      // forward; once the claim is gone — a TTL usurpation, or a crash
-      // so old the claim was GC'd — the staging is treated as
-      // publish-never-happened and rolled back, which is the only safe
-      // reading when another writer may have taken the store since.
-      renameOrThrow(fs, staged, live)
-      deleteOrThrow(fs, prev)
-      spark.catalog.refreshByPath(path)
-      "rolled_forward"
-    } else if (fs.exists(prev)) {
-      deleteOrThrow(fs, staged) // torn staging, if any
-      renameOrThrow(fs, prev, live)
-      spark.catalog.refreshByPath(path)
-      "rolled_back"
-    } else {
-      deleteOrThrow(fs, staged) // torn staging of a first-ever publish
-      "missing"
+  def recover(spark: SparkSession, root: String): String =
+    gc(fsOf(spark, root), new Path(root)) match {
+      case (None, _) => "missing"
+      case (_, removed) => if (removed > 0) "cleared" else "none"
     }
+
+  /** Deletes every version directory and pointer file except the newest
+    * committed pair (torn stagings and torn pointers are unreferenced by
+    * construction). Entries the protocol does not own are left alone.
+    * Returns the surviving commit and the number of entries removed.
+    */
+  private def gc(fs: FileSystem, r: Path): (Option[Commit], Int) = {
+    if (!fs.exists(r)) return (None, 0)
+    val kept = commits(fs, r).nextOption()
+    val stale = fs.listStatus(r).map(_.getPath).filter { p =>
+      val name = p.getName
+      if (name.startsWith(PtrPrefix)) !kept.exists(c => ptrName(c.n) == name)
+      else if (name.startsWith(VersionPrefix)) !kept.exists(_.version == name)
+      else false
+    }
+    stale.foreach(deleteOrThrow(fs, _))
+    (kept, stale.length)
   }
 }

@@ -177,28 +177,20 @@ object Scale {
       .parquet(path)
   }
 
-  /** Small-file compaction: rewrite a parquet directory into
+  /** Small-file compaction: rewrite a maintained store into
     * ceil(bytes / targetFileBytes) files. Incremental pipelines accrete
     * tiny files (one-per-task-per-batch); at scale the file count, not
     * the data volume, starts to dominate listing and scan startup.
-    * Rewrite goes through the shared recoverable publish
-    * ([[graft.ops.Publish]]: stage, rename-aside, promote — never
-    * overwrite a path mid-read, and a crash at any step leaves a
-    * recoverable state, never a vanished directory).
+    * The rewrite is a [[graft.ops.Publish]] like any other: the new
+    * version commits with one pointer create, so a reader never sees a
+    * half-compacted store and a crash leaves the old version serving.
     */
   def compact(spark: SparkSession, path: String, targetFileBytes: Long = 128L << 20): Unit = {
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    // mode-aware: size and read the RESOLVED live dir (the committed
-    // version under graft.publish.mode=pointer), publish through the
-    // mode dispatch — compaction is a store rewrite like any other
-    val live = Publish.resolveLive(spark, path).getOrElse(path)
+    val live = Publish.liveDir(spark, path)
     val p = new org.apache.hadoop.fs.Path(live)
-    val fs = p.getFileSystem(hadoopConf)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(p).getLength
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    // the staged frame reads the live dir, which stays intact until the
-    // staging write completes (the Publish step-0 contract)
-    Publish.publishAuto(spark, path,
-      spark.read.parquet(live).repartition(nFiles))
+    Publish.publish(spark, path, spark.read.parquet(live).repartition(nFiles))
   }
 }

@@ -8,29 +8,29 @@ import org.apache.spark.sql.types.StructType
   * are serialized against MAINTENANCE REWRITES without a lock.
   *
   * The hazard: the streaming paths append to the same stores (verified
-  * pairs, MinHash sketch index, content-hash registry) that the
-  * maintenance operators ([[graft.ext.Dedup.storeRepair]] /
-  * `deleteApply` / `runMaintenance`) rewrite through the
-  * [[Publish]] swap. An append landing INSIDE the live directory while
-  * a swap is in flight is either deleted with the superseded store or
-  * orphaned in the renamed-away staging — silent data loss either way.
+  * pairs, MinHash sketch index, content-hash registry, pack manifest,
+  * IVF/PQ serving layouts) that the maintenance operators
+  * ([[graft.ext.Dedup.storeRepair]] / `deleteApply` / `runMaintenance`)
+  * rewrite through [[Publish]]. A committed version directory is
+  * immutable, so an append can never land inside it: rows written
+  * beside the version are never served, and rows written into it would
+  * vanish with the next publish's GC.
   *
-  * The discipline: writers never touch the live directory.
+  * The discipline: writers never touch the live version.
   *
   *   - [[append]] writes a self-contained parquet child under
   *     `path__delta/d-<token>`. Distinct tokens never collide, so any
   *     number of appenders run concurrently with each other and with a
-  *     swap; a REPLAYED append reusing its token overwrites its own
+  *     publish; a REPLAYED append reusing its token overwrites its own
   *     child (at-least-once delivery folds to exactly-once state).
   *   - [[read]] serves live ∪ delta children — appends are visible
   *     immediately, no fold required.
   *   - [[snapshot]] pins the delta children present NOW; a rewrite
   *     derives its output from exactly that snapshot and
-  *     [[publishMerged]] folds it: publish through [[Publish]] (which
-  *     only swaps the live directory) and delete exactly the
-  *     snapshotted children. Appends that arrive after the snapshot
-  *     survive untouched in the delta directory and remain visible
-  *     through [[read]] — the post-state is the serial order
+  *     [[publishMerged]] folds it: publish a new version and delete
+  *     exactly the snapshotted children. Appends that arrive after the
+  *     snapshot survive untouched in the delta directory and remain
+  *     visible through [[read]] — the post-state is the serial order
   *     "rewrite, then the late appends".
   *
   * Contract, stated precisely: APPENDS are safe against any concurrent
@@ -39,16 +39,16 @@ import org.apache.spark.sql.types.StructType
   * trigger fires) are lost-update-prone against EACH OTHER and must run
   * in one maintenance actor — a stream deployed alongside an external
   * maintenance loop passes `compactTrigger = Int.MaxValue` and lets
-  * that loop own all folds. Between the publish promote and the
-  * snapshot-child retirement inside [[publishMerged]], a reader in
-  * another thread sees the folded rows twice — TRANSIENTLY only: the
-  * folded-children sidecar promotes with the data, so a crash in that
-  * window is settled by [[recoverFolds]] (every snapshot and the
-  * maintenance pre-pass run it), and a replayed append of a retired
-  * token is a no-op (the `_retired` registry). Plain parquet has no
-  * multi-directory atomicity; the production-scale form of this whole
-  * file is a transaction log (Delta/Iceberg-style manifest + pointer
-  * commit) — the delta directory is its filesystem approximation.
+  * that loop own all folds. Between the commit and the snapshot-child
+  * retirement inside [[publishMerged]], a reader in another thread sees
+  * the folded rows twice — TRANSIENTLY only: the folded-children
+  * sidecar commits with the data, so a crash in that window is settled
+  * by [[recoverFolds]] (every snapshot and the maintenance pre-pass run
+  * it), and a replayed append of a retired token is a no-op (the
+  * `_retired` registry). Plain parquet has no multi-directory
+  * atomicity; the production-scale form of this whole file is a
+  * transaction log (Delta/Iceberg-style manifest + pointer commit) —
+  * the delta directory is its filesystem approximation.
   */
 object StoreIO {
 
@@ -69,8 +69,8 @@ object StoreIO {
   private def retiredDirOf(path: String): String =
     deltaDirOf(path) + "/_retired"
 
-  /** Folded-children sidecar, written into the staged directory by
-    * [[publishMerged]] and promoted atomically with the folded data:
+  /** Folded-children sidecar, written into the version directory by
+    * [[publishMerged]] and committed atomically with the folded data:
     * the recovery bookkeeping that lets [[recoverFolds]] retire exactly
     * the children a crashed fold had already merged into live.
     */
@@ -78,27 +78,6 @@ object StoreIO {
 
   private def fsOf(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Publish-mode switch ([[Publish.mode]], `graft.publish.mode` Spark
-    * conf): "rename" (default — the [[Publish]] rename-aside protocol,
-    * atomic on HDFS/local filesystems) or "pointer" (the
-    * [[PointerStore]] version-dir + pointer-commit protocol, the
-    * S3-shaped form whose every step is a single-object operation).
-    * The delta-directory append discipline is identical in both modes
-    * — only where "live" resolves and how a fold publishes differ.
-    */
-  private def pointerMode(spark: SparkSession): Boolean =
-    Publish.mode(spark) == "pointer"
-
-  /** The readable live directory, or None when the store has never
-    * been published (rename mode: the path itself when present;
-    * pointer mode: the committed version dir, or the plain path for a
-    * store that predates the mode switch — [[PointerStore.resolve]]'s
-    * migration read, so a mode flip never reads an existing store as
-    * empty).
-    */
-  private def liveDirOf(spark: SparkSession, path: String): Option[String] =
-    Publish.resolveLive(spark, path)
 
   /** Appends `frame` as a self-contained delta child. `token` is the
     * idempotence key: replays of the same logical append MUST reuse it
@@ -128,7 +107,7 @@ object StoreIO {
     // fold's own child delete (which follows its marker) removes the
     // just-written child instead — either way the rows exist once.
     if (token.nonEmpty && fs.exists(marker))
-      fs.delete(new Path(deltaDirOf(path), s"d-$t"), true)
+      Publish.deleteOrThrow(fs, new Path(deltaDirOf(path), s"d-$t"))
   }
 
   /** The delta children present now (each one complete parquet dir).
@@ -160,7 +139,7 @@ object StoreIO {
     def rd(p: String): DataFrame =
       ddl.fold(spark.read.parquet(p))(d =>
         spark.read.schema(StructType.fromDDL(d)).parquet(p))
-    val parts = liveDirOf(spark, path).toSeq ++ children
+    val parts = Publish.resolveLive(spark, path).toSeq ++ children
     if (parts.isEmpty) {
       require(ddl.isDefined, s"StoreIO.read: missing store $path needs a schema")
       spark.createDataFrame(
@@ -176,11 +155,10 @@ object StoreIO {
 
   def snapshot(spark: SparkSession, path: String,
       ddl: Option[String] = None): Snapshot = {
-    // settle any crashed publish/fold FIRST: a snapshot taken over a
-    // half-promoted store misses the live rows, and one taken before a
+    // settle any crashed publish/fold FIRST: a snapshot taken before a
     // crashed fold's children are retired would fold those rows a
     // second time (they are already in live)
-    Publish.recoverAuto(spark, path)
+    Publish.recover(spark, path)
     recoverFolds(spark, path)
     val children = deltaChildren(spark, path)
     Snapshot(readParts(spark, path, children, ddl), children)
@@ -191,9 +169,9 @@ object StoreIO {
     * landed in children the snapshot never listed — they survive.
     *
     * The child retirement is CRASH-RECOVERABLE: the folded-children
-    * list rides the staged directory as a sidecar ([[Publish.publish]])
-    * and promotes atomically with the folded data, so a crash between
-    * the promote and the retirement leaves a live `_graft_folded` list
+    * list rides the version directory as a sidecar ([[Publish.publish]])
+    * and commits atomically with the folded data, so a crash between
+    * the commit and the retirement leaves a live `_graft_folded` list
     * that [[recoverFolds]] (run by every [[snapshot]], by this method,
     * and by `Dedup.runMaintenance`'s pre-pass) settles by retiring
     * exactly those children — the folded rows can never persist in both
@@ -206,24 +184,24 @@ object StoreIO {
     // the caller holds no lease)
     Lease.checkHeld(spark, path)
     val names = snap.children.map(c => new Path(c).getName)
-    val sidecar = Some(FoldedSidecar -> names.mkString("\n"))
-    if (pointerMode(spark))
-      PointerStore.publish(spark, path, frame, partitionBy, sidecar,
-        keepVersions = Publish.keepVersionsConf(spark))
-    else Publish.publish(spark, path, frame, partitionBy, sidecar)
+    // a fold with no children has nothing to retire: no sidecar (every
+    // small-file create costs a chmod fork on a local filesystem)
+    val sidecar =
+      if (names.isEmpty) None else Some(FoldedSidecar -> names.mkString("\n"))
+    Publish.publish(spark, path, frame, partitionBy, sidecar)
     recoverFolds(spark, path)
   }
 
-  /** Settles a fold whose publish promoted but whose child retirement
+  /** Settles a fold whose publish committed but whose child retirement
     * did not complete (crash, or simply the tail of a healthy
-    * [[publishMerged]]): reads the promoted `_graft_folded` sidecar,
+    * [[publishMerged]]): reads the committed `_graft_folded` sidecar,
     * marks each listed child's token retired (so a replayed append of
     * that token no-ops), deletes the child, and drops the sidecar.
     * Idempotent; no-op on stores without a pending fold.
     */
   def recoverFolds(spark: SparkSession, path: String): Unit = {
     val fs = fsOf(spark, path)
-    val liveOpt = liveDirOf(spark, path)
+    val liveOpt = Publish.resolveLive(spark, path)
     if (liveOpt.isEmpty) return
     val sidecar = new Path(liveOpt.get, FoldedSidecar)
     if (!fs.exists(sidecar)) return
@@ -235,9 +213,11 @@ object StoreIO {
       // both retired and present, and the re-run deletes it — the
       // reverse order would let a replayed append resurrect the rows
       Publish.writeSmallFile(fs, new Path(retiredDirOf(path), name), "")
-      fs.delete(new Path(deltaDirOf(path), name), true)
+      Publish.deleteOrThrow(fs, new Path(deltaDirOf(path), name))
     }
-    fs.delete(sidecar, false)
+    // only after every child is gone: a failed child delete throws
+    // above and leaves the sidecar as the record to retry from
+    Publish.deleteOrThrow(fs, sidecar)
   }
 
   /** Snapshot-rewrite in one call: `f` over live ∪ pinned delta,
@@ -278,6 +258,6 @@ object StoreIO {
         n
       }
     }
-    leaves(liveDirOf(spark, path).getOrElse(path)) + leaves(deltaDirOf(path))
+    leaves(Publish.resolveLive(spark, path).getOrElse(path)) + leaves(deltaDirOf(path))
   }
 }

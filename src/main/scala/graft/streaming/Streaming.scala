@@ -1595,8 +1595,8 @@ object Streaming {
           // 3. delta-append this batch's hashes through StoreIO with
           //    the batch id as idempotence token (a replayed batch
           //    overwrites its own child — the old batch-keyed-overwrite
-          //    semantics, now OUTSIDE the live dir a maintenance swap
-          //    may be rewriting). Per-doc (h, doc_id) rows — doc-keyed
+          //    semantics, now OUTSIDE the live version a maintenance
+          //    publish may be replacing). Per-doc (h, doc_id) rows — doc-keyed
           //    state is what makes the store RETRACTABLE
           //    (graft.ext.Dedup.deleteApply anti-joins on doc_id); the
           //    read path above still takes DISTINCT h, so flag
@@ -1758,8 +1758,8 @@ object Streaming {
           // index append carries the batch id as its delta-child token
           // (graft.ops.StoreIO), so a replayed batch OVERWRITES its own
           // sketch child instead of double-appending, and it lands in
-          // the delta directory, never the live dirs a maintenance swap
-          // is rewriting. Retry-idempotence holds because the in-stream
+          // the delta directory, never the live version a maintenance
+          // publish is replacing. Retry-idempotence holds because the in-stream
           // fold runs BEFORE the append (a fold can never retire the
           // current batch's child); the residual is a crash INSIDE a
           // fold — the documented fold caveat, audit-visible. A stream

@@ -691,34 +691,15 @@ class PlanSpec extends SparkSuite {
       "ext/Retrieval.scala" -> 2,
       "ext/Packing.scala" -> 2,
       "queries/Parity.scala" -> 5)
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
     // \s spans newlines, so a line-wrapped `Window\n  .orderBy(...)`
     // cannot escape the pin (r13 ADVICE); comments are stripped from
-    // the whole content first (block then line) instead of per-line
+    // the whole content first (SourceScan) instead of per-line
     // prefix-sniffing
-    val re = """Window\s*\.\s*(orderBy|partitionBy\(\))""".r
-    val blockComment = """(?s)/\*.*?\*/""".r
-    val lineComment = """//[^\n]*""".r
-    val found = scala.collection.mutable.Map.empty[String, Int]
-    val walk = java.nio.file.Files.walk(root)
-    try {
-      walk.forEach { p =>
-        if (p.toString.endsWith(".scala")) {
-          val rel = root.relativize(p).toString
-          // String's UTF-8 constructor replaces malformed bytes instead
-          // of throwing (Source.fromFile dies on the first odd byte)
-          val raw = new String(java.nio.file.Files.readAllBytes(p),
-            java.nio.charset.StandardCharsets.UTF_8)
-          val code = lineComment.replaceAllIn(
-            blockComment.replaceAllIn(raw, ""), "")
-          val n = re.findAllIn(code).size
-          if (n > 0) found(rel) = n
-        }
-      }
-    } finally walk.close()
-    assert(found.toMap === pinned,
+    val found = SourceScan.codeMatches(
+      """Window\s*\.\s*(orderBy|partitionBy\(\))""".r)
+    assert(found === pinned,
       s"unpartitioned-window sites drifted from the pinned allowlist.\n" +
-        s"found:  ${found.toMap.toSeq.sorted}\npinned: ${pinned.toSeq.sorted}\n" +
+        s"found:  ${found.toSeq.sorted}\npinned: ${pinned.toSeq.sorted}\n" +
         "A NEW site means corpus-sized input may hit one task: partition " +
         "it, or prove the input bounded and extend the justification " +
         "table + pin in this spec.")
@@ -727,5 +708,26 @@ class PlanSpec extends SparkSuite {
     val registered = SparkEntry.queries.keySet
     assert(registered.contains("q_ntile") && registered.contains("q_pack_sequences"))
     assert(!registered.exists(_.contains("global_window")))
+  }
+
+  test("one store protocol: no rename-aside or publish-mode names in src/main; only the two streaming sinks append in place") {
+    // the pointer commit is the only publish: the rename-aside paths,
+    // the mode switch and its knobs must not come back, in code or prose
+    val gone = Seq("graft.publish.mode", "graft.publish.keepVersions",
+      "__staged", "__prev", "publishAuto", "recoverAuto", "PointerStore")
+    val mentions = for {
+      (rel, raw, _) <- SourceScan.mainSources
+      name <- gone if raw.contains(name)
+    } yield s"$rel: $name"
+    assert(mentions.isEmpty, s"removed protocol names reappeared: $mentions")
+    // an in-place append into a maintained store lands beside its
+    // committed version and is never served: stores append through
+    // StoreIO delta children. The two streaming output sinks are not
+    // maintained stores.
+    val appends = SourceScan.codeMatches(
+      """SaveMode\s*\.\s*Append|\.mode\(\s*"(?i:append)"\s*\)""".r)
+    assert(appends === Map(
+      "streaming/Streaming.scala" -> 1, "ext/Similarity.scala" -> 1),
+      s"append-mode parquet writers drifted from the two streaming sinks: $appends")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared test session: one JVM-wide SparkSession across suites. */
@@ -8,6 +8,13 @@ trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   def fixture(rel: String): String =
     getClass.getResource(s"/fixtures/$rel").getPath
+
+  /** Staged stores are born through the one publish protocol, like the
+    * engine's own bootstrap writers. */
+  implicit class PublishTo(df: DataFrame) {
+    def publishTo(root: String, partitionBy: String*): Unit =
+      graft.ops.Publish.publish(df.sparkSession, root, df, partitionBy)
+  }
 }
 
 object SparkSuite {

@@ -215,7 +215,7 @@ class ExtSpec extends SparkSuite {
     assert(Ivf.modelArtifactRead(spark, modelPath) === centsNew)
     val fresh = root.resolve("fresh").toString
     Ivf.writeIvfPartitioned(emb, centsNew, fresh)
-    def rows(p: String): Seq[String] = spark.read.parquet(p)
+    def rows(p: String): Seq[String] = graft.ops.Publish.readLive(spark, p)
       .select(col("vec_id"), col("nrm"), col("list_id").cast("int"))
       .collect().map(_.toString).sorted.toSeq
     assert(rows(layoutPath) === rows(fresh))
@@ -258,7 +258,7 @@ class ExtSpec extends SparkSuite {
     val emb = Tables.embeddings(spark, dir).localCheckpoint()
     val n = emb.count()
     val cents = Ivf.ensureModel(spark, dir)
-    val layout = spark.read.parquet(Ivf.ensureLayout(spark, dir))
+    val layout = graft.ops.Publish.readLive(spark, Ivf.ensureLayout(spark, dir))
       .localCheckpoint()
     def audit(l: org.apache.spark.sql.DataFrame) =
       Ivf.ivfLayoutAuditDf(emb, l, cents).head()
@@ -318,7 +318,7 @@ class ExtSpec extends SparkSuite {
     // bootstrap on the first arrivals, then two incremental waves —
     // wave 1 APPLIED TWICE (at-least-once replay)
     Ivf.writeIvfPartitioned(emb.filter(col("vec_id") < cut1), cents, lP)
-    Pq.encodeCorpus(emb.filter(col("vec_id") < cut1), cb).write.parquet(cP)
+    Pq.encodeCorpus(emb.filter(col("vec_id") < cut1), cb).publishTo(cP)
     val wave1 = emb.filter(col("vec_id") >= cut1 && col("vec_id") < cut2)
     val wave2 = emb.filter(col("vec_id") >= cut2)
     Ivf.layoutAppend(wave1, cents, lP)
@@ -331,20 +331,54 @@ class ExtSpec extends SparkSuite {
       df.collect().map(_.toString).sorted.toSeq
     val fresh = root.resolve("fresh").toString
     Ivf.writeIvfPartitioned(emb, cents, fresh)
-    assert(rows(spark.read.parquet(lP)
+    assert(rows(graft.ops.StoreIO.read(spark, lP)
         .select(col("vec_id"), col("nrm"), col("list_id").cast("int"))) ===
-      rows(spark.read.parquet(fresh)
+      rows(graft.ops.StoreIO.read(spark, fresh)
         .select(col("vec_id"), col("nrm"), col("list_id").cast("int"))))
-    assert(rows(spark.read.parquet(cP)) === rows(Pq.encodeCorpus(emb, cb)))
+    assert(rows(graft.ops.StoreIO.read(spark, cP)) === rows(Pq.encodeCorpus(emb, cb)))
     // and the audits gate the maintained artifacts directly
-    val la = Ivf.ivfLayoutAuditDf(emb, spark.read.parquet(lP), cents).head()
+    val la = Ivf.ivfLayoutAuditDf(emb, graft.ops.StoreIO.read(spark, lP), cents).head()
     for (c <- Seq("n_multi", "n_missing", "n_orphans", "n_misassigned",
         "n_norm_mismatch"))
       assert(la.getAs[Long](c) === 0L, s"layout $c")
-    val ca = Pq.codesAuditDf(emb, spark.read.parquet(cP), cb).head()
+    val ca = Pq.codesAuditDf(emb, graft.ops.StoreIO.read(spark, cP), cb).head()
     for (c <- Seq("n_multi", "n_missing", "n_orphans", "n_len_bad",
         "n_code_mismatch"))
       assert(ca.getAs[Long](c) === 0L, s"codes $c")
+  }
+
+  test("layout appends around a retrain: retrainApply folds the appended rows, a later layoutAppend is visible to the served search") {
+    import org.apache.spark.sql.functions.col
+    val emb = Tables.embeddings(spark, dir).localCheckpoint()
+    val (cut1, cut2) = (300L, 400L)
+    val centsOld = Ivf.trainCentroids(emb.filter(col("vec_id") < cut1))
+    val centsNew = Ivf.trainCentroids(emb)
+    val root = java.nio.file.Files.createTempDirectory("retrain_append")
+    val (lP, mP) = (root.resolve("layout").toString, root.resolve("model").toString)
+    Ivf.modelArtifactWrite(spark, centsOld, mP)
+    Ivf.writeIvfPartitioned(emb.filter(col("vec_id") < cut1), centsOld, lP)
+    // appended under the OLD model: the retrain must re-assign and fold it
+    Ivf.layoutAppend(emb.filter(col("vec_id") >= cut1 && col("vec_id") < cut2),
+      centsOld, lP)
+    Ivf.retrainApply(spark, lP, mP, centsNew).collect()
+    assert(graft.ops.StoreIO.deltaChildren(spark, lP).isEmpty)
+    // appended AFTER the retrain, under the new model
+    Ivf.layoutAppend(emb.filter(col("vec_id") >= cut2), centsNew, lP)
+    val fresh = root.resolve("fresh").toString
+    Ivf.writeIvfPartitioned(emb, centsNew, fresh)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(rows(graft.ops.StoreIO.read(spark, lP)
+        .select(col("vec_id"), col("nrm"), col("list_id").cast("int"))) ===
+      rows(graft.ops.Publish.readLive(spark, fresh)
+        .select(col("vec_id"), col("nrm"), col("list_id").cast("int"))))
+    val queries = emb.filter(col("vec_id") >= cut2).orderBy("vec_id").limit(5)
+      .select(col("vec_id").as("query_id"), col("embedding").as("query_emb"))
+    val served = Ivf.ivfSearchPartitioned(spark, lP, queries, centsNew, k = 5)
+      .collect().map(_.toString).toSeq
+    assert(served === Ivf.ivfSearchPartitioned(spark, fresh, queries, centsNew,
+      k = 5).collect().map(_.toString).toSeq)
+    assert(served.nonEmpty)
   }
 
   test("pq codes audit: healthy table all-zero; dup, missing, orphan, torn write, and code rot reported exactly") {
@@ -352,7 +386,7 @@ class ExtSpec extends SparkSuite {
     val emb = Tables.embeddings(spark, dir).localCheckpoint()
     val n = emb.count()
     val cb = Pq.ensureModel(spark, dir)
-    val codes = spark.read.parquet(Pq.ensureCodes(spark, dir)).localCheckpoint()
+    val codes = graft.ops.Publish.readLive(spark, Pq.ensureCodes(spark, dir)).localCheckpoint()
     def audit(c: org.apache.spark.sql.DataFrame) =
       Pq.codesAuditDf(emb, c, cb).head()
     val healthy = audit(codes)
@@ -443,7 +477,7 @@ class ExtSpec extends SparkSuite {
     // --- ivfpq serving layout ---
     val cents = Ivf.ensureModel(spark, dir)
     val cb = Pq.ensureModel(spark, dir)
-    val ipq = spark.read.parquet(Pq.ensureIvfPqLayout(spark, dir))
+    val ipq = graft.ops.Publish.readLive(spark, Pq.ensureIvfPqLayout(spark, dir))
       .localCheckpoint()
     def ipqAudit(l: org.apache.spark.sql.DataFrame) =
       Pq.ivfPqLayoutAuditDf(emb, l, cents, cb).head()
@@ -469,7 +503,7 @@ class ExtSpec extends SparkSuite {
       .getAs[Long]("n_missing") === 1L)
 
     // --- packed physical layout ---
-    val packed = spark.read.parquet(Packing.ensurePackedStore(spark, dir))
+    val packed = graft.ops.Publish.readLive(spark, Packing.ensurePackedStore(spark, dir))
       .localCheckpoint()
     def pkAudit(p: org.apache.spark.sql.DataFrame) =
       Packing.packedAuditDf(docs, p).head()
@@ -494,8 +528,8 @@ class ExtSpec extends SparkSuite {
       .getAs[Long]("n_tok_mismatch") === 1L)
 
     // --- feature artifact ---
-    val feats = spark.read
-      .parquet(Backfill.ensureFeatureArtifactFull(spark, dir)).localCheckpoint()
+    val feats = graft.ops.Publish.readLive(spark,
+      Backfill.ensureFeatureArtifactFull(spark, dir)).localCheckpoint()
     def feAudit(a: org.apache.spark.sql.DataFrame) =
       Backfill.featureAuditDf(docs, a).head()
     val fh = feAudit(feats)
@@ -638,23 +672,23 @@ class ExtSpec extends SparkSuite {
         .withColumn("batch", lit(9L)))
       .withColumn("h", when(col("doc_id") === docR, lit("0" * 32))
         .otherwise(col("h")))
-      .write.partitionBy("batch").parquet(hP)
-    Packing.packSequences(docs).write.parquet(mP)
-    healthyP.write.parquet(pP)
+      .publishTo(hP, "batch")
+    Packing.packSequences(docs).publishTo(mP)
+    healthyP.publishTo(pP)
     // layout with one misassigned row; codes with one rotten code
     Ivf.assignLists(emb, cents)
       .select(col("vec_id"), col("embedding"),
         graft.functions.VectorFns.l2norm(col("embedding")).as("nrm"),
         when(col("vec_id") === 0L, (col("list_id") + 1) % cents.size)
           .otherwise(col("list_id")).as("list_id"))
-      .write.partitionBy("list_id").parquet(lP)
+      .publishTo(lP, "list_id")
     Pq.encodeCorpus(emb, codebooks)
       .withColumn("codes", when(col("vec_id") === 0L,
         org.apache.spark.sql.functions.concat(
           org.apache.spark.sql.functions.array((col("codes")(0) + 1) % Pq.Ksub),
           org.apache.spark.sql.functions.slice(col("codes"), 2, Pq.M - 1)))
         .otherwise(col("codes")))
-      .write.parquet(cP)
+      .publishTo(cP)
     // r15 stores, each with its own damage class: the sketch index
     // misses a doc, the ivfpq layout misassigns a row, the packed store
     // replays a doc, the feature artifact misses a whole partition
@@ -662,17 +696,17 @@ class ExtSpec extends SparkSuite {
     Pq.ivfPqLayoutFrame(emb, cents, codebooks)
       .withColumn("list_id", when(col("vec_id") === 0L,
         (col("list_id") + 1) % cents.size).otherwise(col("list_id")))
-      .write.partitionBy("list_id").parquet(qP)
+      .publishTo(qP, "list_id")
     val packedHealthy = Packing.packedFrame(docs)
     packedHealthy.unionByName(packedHealthy.limit(1))
-      .write.partitionBy("shard").parquet(kP)
+      .publishTo(kP, "shard")
     // feature artifact: one whole partition missing AND one torn
     // partition (partial rows inside a still-covered source — invisible
     // to the listing-level diff, so convergence needs the row-granular
     // remedy the plan routes `backfill` to)
     Backfill.featureDf(docs.filter(col("source") =!= "src9"))
       .filter(!(col("source") === "src3" && col("doc_id") % 7 === 0))
-      .write.parquet(fP)
+      .publishTo(fP)
     val finalPlan = Dedup.runMaintenance(docs, emb, hP, mP, pP, lP,
       cents, codebooks, cP, iP, qP, kP, fP).collect()
     finalPlan.foreach { r =>
@@ -684,15 +718,15 @@ class ExtSpec extends SparkSuite {
     // converged state equals the from-scratch derivation of every store
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
-    assert(rows(spark.read.parquet(hP).select(col("h"), col("doc_id"))) ===
+    assert(rows(graft.ops.Publish.readLive(spark, hP).select(col("h"), col("doc_id"))) ===
       rows(healthyH.select(col("h"), col("doc_id"))))
     // the restored row landed in the explicit backfill batch
-    assert(spark.read.parquet(hP).filter(col("doc_id") === docM)
+    assert(graft.ops.Publish.readLive(spark, hP).filter(col("doc_id") === docM)
       .head().getAs[Number]("batch").longValue === -1L)
-    assert(rows(spark.read.parquet(mP)) === rows(Packing.packSequences(docs)))
+    assert(rows(graft.ops.Publish.readLive(spark, mP)) === rows(Packing.packSequences(docs)))
     assert(rows(Dedup.pairsArtifactRead(spark, pP)) === rows(healthyP))
-    assert(rows(spark.read.parquet(cP)) === rows(Pq.encodeCorpus(emb, codebooks)))
-    assert(rows(spark.read.parquet(lP)
+    assert(rows(graft.ops.Publish.readLive(spark, cP)) === rows(Pq.encodeCorpus(emb, codebooks)))
+    assert(rows(graft.ops.Publish.readLive(spark, lP)
         .select(col("vec_id"), col("nrm"), col("list_id").cast("int"))) ===
       rows(Ivf.assignLists(emb, cents).select(col("vec_id"),
         graft.functions.VectorFns.l2norm(col("embedding")).as("nrm"),
@@ -700,14 +734,14 @@ class ExtSpec extends SparkSuite {
     // r15 stores converge to their from-scratch derivations too
     assert(rows(graft.ops.StoreIO.read(spark, s"$iP/shingles",
         Some(Dedup.ShinglesDdl))) === rows(Dedup.shingleTable(docs)))
-    assert(rows(spark.read.parquet(qP)
+    assert(rows(graft.ops.Publish.readLive(spark, qP)
         .select(col("vec_id"), col("codes"), col("list_id").cast("int"))) ===
       rows(Pq.ivfPqLayoutFrame(emb, cents, codebooks)
         .select(col("vec_id"), col("codes"), col("list_id").cast("int"))))
-    assert(rows(spark.read.parquet(kP).select(col("doc_id"), col("t_off"))) ===
+    assert(rows(graft.ops.Publish.readLive(spark, kP).select(col("doc_id"), col("t_off"))) ===
       rows(Packing.packedFrame(docs).select(col("doc_id"), col("t_off"))))
     // the feature gap was BACKFILLED: full coverage, original rows kept
-    assert(rows(spark.read.parquet(fP)) === rows(Backfill.featureDf(docs)))
+    assert(rows(graft.ops.Publish.readLive(spark, fP)) === rows(Backfill.featureDf(docs)))
     // idempotence: a healthy state plans nothing and nothing is rewritten
     val again = Dedup.runMaintenance(docs, emb, hP, mP, pP, lP,
       cents, codebooks, cP, iP, qP, kP, fP).collect()
@@ -722,14 +756,14 @@ class ExtSpec extends SparkSuite {
     val (hP2, mP2, pP2) = (root2.resolve("hashes").toString,
       root2.resolve("manifest").toString, root2.resolve("pairs").toString)
     healthyH.filter(col("doc_id") =!= docM)
-      .write.partitionBy("batch").parquet(hP2)
-    Packing.packSequences(docs).write.parquet(mP2)
-    healthyP.write.parquet(pP2)
+      .publishTo(hP2, "batch")
+    Packing.packSequences(docs).publishTo(mP2)
+    healthyP.publishTo(pP2)
     val fp2 = Dedup.runMaintenance(docs, emb, hP2, mP2, pP2, lP,
       cents, codebooks, cP, iP, qP, kP, fP).collect()
     fp2.foreach(r => assert(r.getAs[String]("action") === "none",
       s"lost-append: ${r.getString(0)}"))
-    assert(rows(spark.read.parquet(hP2).select(col("h"), col("doc_id"))) ===
+    assert(rows(graft.ops.Publish.readLive(spark, hP2).select(col("h"), col("doc_id"))) ===
       rows(healthyH.select(col("h"), col("doc_id"))))
     assert(rows(Dedup.pairsArtifactRead(spark, pP2)) === rows(healthyP))
 
@@ -741,17 +775,17 @@ class ExtSpec extends SparkSuite {
     val root3 = java.nio.file.Files.createTempDirectory("run_maint_orphan")
     val (hP3, mP3, pP3) = (root3.resolve("hashes").toString,
       root3.resolve("manifest").toString, root3.resolve("pairs").toString)
-    healthyH.write.partitionBy("batch").parquet(hP3)
-    Packing.packSequences(docs).write.parquet(mP3)
-    healthyP.write.parquet(pP3)
+    healthyH.publishTo(hP3, "batch")
+    Packing.packSequences(docs).publishTo(mP3)
+    healthyP.publishTo(pP3)
     // the r15 stores (converged on the FULL corpus above) now carry
     // docM as a corpus orphan — the loop must rebuild them on docs2
     val fp3 = Dedup.runMaintenance(docs2, emb, hP3, mP3, pP3, lP,
       cents, codebooks, cP, iP, qP, kP, fP).collect()
     fp3.foreach(r => assert(r.getAs[String]("action") === "none",
       s"orphan: ${r.getString(0)}"))
-    assert(spark.read.parquet(hP3).filter(col("doc_id") === docM).count() === 0L)
-    assert(spark.read.parquet(mP3).filter(col("doc_id") === docM).count() === 0L)
+    assert(graft.ops.Publish.readLive(spark, hP3).filter(col("doc_id") === docM).count() === 0L)
+    assert(graft.ops.Publish.readLive(spark, mP3).filter(col("doc_id") === docM).count() === 0L)
     assert(Dedup.pairsArtifactRead(spark, pP3)
       .filter(col("doc_a") === docM || col("doc_b") === docM).count() === 0L)
   }
@@ -775,16 +809,16 @@ class ExtSpec extends SparkSuite {
       val iP = root.resolve("index").toString
       val (qP, kP, fP) = (root.resolve("ivfpq").toString,
         root.resolve("packed").toString, root.resolve("features").toString)
-      healthyH.write.partitionBy("batch").parquet(hP)
-      Packing.packSequences(docs).write.parquet(mP)
-      healthyP.write.parquet(pP)
+      healthyH.publishTo(hP, "batch")
+      Packing.packSequences(docs).publishTo(mP)
+      healthyP.publishTo(pP)
       Ivf.writeIvfPartitioned(emb, cents, lP)
-      Pq.encodeCorpus(emb, codebooks).write.parquet(cP)
+      Pq.encodeCorpus(emb, codebooks).publishTo(cP)
       Dedup.indexInit(docs, iP)
       Pq.ivfPqLayoutFrame(emb, cents, codebooks)
-        .write.partitionBy("list_id").parquet(qP)
-      Packing.packedFrame(docs).write.partitionBy("shard").parquet(kP)
-      Backfill.featureDf(docs).write.parquet(fP)
+        .publishTo(qP, "list_id")
+      Packing.packedFrame(docs).publishTo(kP, "shard")
+      Backfill.featureDf(docs).publishTo(fP)
       (hP, mP, pP, lP, cP, iP, qP, kP, fP)
     }
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
@@ -803,21 +837,21 @@ class ExtSpec extends SparkSuite {
       cents, codebooks, cP1, iP1, qP1, kP1, fP1).collect()
     fp1.foreach(r => assert(r.getAs[String]("action") === "none",
       s"vanished: ${r.getString(0)} plans ${r.getAs[String]("action")}"))
-    assert(rows(spark.read.parquet(hP1).select(col("h"), col("doc_id"))) ===
+    assert(rows(graft.ops.Publish.readLive(spark, hP1).select(col("h"), col("doc_id"))) ===
       rows(healthyH.select(col("h"), col("doc_id"))))
     // every restored hash row lands in the backfill batch (no carried state)
-    assert(spark.read.parquet(hP1)
+    assert(graft.ops.Publish.readLive(spark, hP1)
       .filter(col("batch").cast("long") =!= -1L).count() === 0L)
     assert(rows(Dedup.pairsArtifactRead(spark, pP1)) === rows(healthyP))
 
-    // CRASHED SWAP: a publish died between rename-aside and promote —
-    // live missing, __prev holds the old store, __staged is a complete
-    // rewrite. The recovery pre-pass must roll it forward; the plan then
-    // audits the settled store and schedules nothing.
+    // CRASHED SWAP: a publish died after staging a complete version but
+    // before its pointer commit — the staged version holds a damaged
+    // frame that must never serve. The recovery pre-pass drops it; the
+    // plan then audits the committed store and schedules nothing.
     val (hP2, mP2, pP2, lP2, cP2, iP2, qP2, kP2, fP2) = stage()
     intercept[RuntimeException] {
-      graft.ops.Publish.publishImpl(spark, pP2, healthyP, Nil,
-        crashAfter = graft.ops.Publish.AfterAside)
+      graft.ops.Publish.publishImpl(spark, pP2, healthyP.limit(1), Nil,
+        crashAfter = graft.ops.Publish.AfterStage)
     }
     val fp2 =
       try Dedup.runMaintenance(docs, emb, hP2, mP2, pP2, lP2,
@@ -842,8 +876,8 @@ class ExtSpec extends SparkSuite {
       Dedup.pairsArtifactInit(docs, pairs)
       docs.select(md5(col("text").cast("binary")).as("h"), col("doc_id"),
           lit(0L).as("batch"))
-        .write.partitionBy("batch").parquet(hashes)
-      Packing.packSequences(docs).write.parquet(manifest)
+        .publishTo(hashes, "batch")
+      Packing.packSequences(docs).publishTo(manifest)
       (idx, pairs, hashes, manifest)
     }
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
@@ -888,8 +922,8 @@ class ExtSpec extends SparkSuite {
     // the manifest is positional: the served form is a repack of the
     // filtered rows (a recompute, not a filter) — equal to the rewrite
     assert(rows(Packing.repackManifest(Dedup.docStoreServed(
-        spark.read.parquet(manA), tombs)))
-      === rows(spark.read.parquet(manB)))
+        graft.ops.Publish.readLive(spark, manA), tombs)))
+      === rows(graft.ops.Publish.readLive(spark, manB)))
 
     // the tombstone delta equals the rewrite's re-election delta
     val beforeA = Dedup.pairsArtifactRead(spark, pairsA)
@@ -908,7 +942,7 @@ class ExtSpec extends SparkSuite {
       === rows(Dedup.pairsArtifactRead(spark, pairsB)))
     assert(rows(StoreIO.read(spark, hashesA, Some(Dedup.HashStoreDdl)))
       === rows(StoreIO.read(spark, hashesB, Some(Dedup.HashStoreDdl))))
-    assert(rows(spark.read.parquet(manA)) === rows(spark.read.parquet(manB)))
+    assert(rows(graft.ops.Publish.readLive(spark, manA)) === rows(graft.ops.Publish.readLive(spark, manB)))
     // idempotence: a second compaction with nothing pending is a pure
     // no-op — empty delta AND no store rewritten (the physical file
     // listing is untouched, not just row-equal)
@@ -1233,9 +1267,9 @@ class ExtSpec extends SparkSuite {
     val root = java.nio.file.Files.createTempDirectory("store_repair")
     val (hP, mP, pP) = (root.resolve("hashes").toString,
       root.resolve("manifest").toString, root.resolve("pairs").toString)
-    stagedH.write.partitionBy("batch").parquet(hP)
-    stagedM.write.parquet(mP)
-    stagedP.write.parquet(pP)
+    stagedH.publishTo(hP, "batch")
+    stagedM.publishTo(mP)
+    stagedP.publishTo(pP)
     val nOrphan = healthyP
       .filter(col("doc_a") === docA || col("doc_b") === docA ||
         col("doc_a") === docC || col("doc_b") === docC).count()
@@ -1251,13 +1285,14 @@ class ExtSpec extends SparkSuite {
     assert(rep.getAs[Long]("n_pairs") === healthyP.count() - nOrphan)
     // post-repair state: audit-green, hive layout kept, and EQUAL to a
     // from-scratch rebuild on the survivor corpus (delete-dominance)
-    val (h2, m2, p2) = (spark.read.parquet(hP), spark.read.parquet(mP),
+    val (h2, m2, p2) = (graft.ops.Publish.readLive(spark, hP), graft.ops.Publish.readLive(spark, mP),
       Dedup.pairsArtifactRead(spark, pP))
     val cons = Dedup.storeConsistencyDf(h2, m2, p2).head()
     assert(cons.getAs[Long]("n_manifest_not_hash") === 0L)
     assert(cons.getAs[Long]("n_hash_not_manifest") === 0L)
     assert(cons.getAs[Long]("n_pair_endpoints_unregistered") === 0L)
-    assert(new java.io.File(hP).listFiles().exists(_.getName.startsWith("batch=")))
+    assert(new java.io.File(graft.ops.Publish.liveDir(spark, hP)).listFiles()
+      .exists(_.getName.startsWith("batch=")))
     val survivors = docs.filter(col("doc_id") =!= docA && col("doc_id") =!= docC)
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
@@ -1274,7 +1309,7 @@ class ExtSpec extends SparkSuite {
         "n_pair_dups_removed", "n_hash_drift_removed",
         "n_manifest_drift_removed", "n_pair_orphans_removed"))
       assert(rep2.getAs[Long](c) === 0L, c)
-    assert(rows(spark.read.parquet(hP).select("h", "doc_id", "batch")) ===
+    assert(rows(graft.ops.Publish.readLive(spark, hP).select("h", "doc_id", "batch")) ===
       h2rows)
   }
 
@@ -1289,15 +1324,17 @@ class ExtSpec extends SparkSuite {
     Dedup.indexInit(docs, idx)
     Dedup.pairsArtifactInit(docs, pairs)
     docs.filter(col("doc_id") % 100 =!= 0)
-      .select(md5(col("text").cast("binary")).as("h"), col("doc_id"))
-      .write.parquet(s"$hashes/batch=0")
-    Packing.packSequences(docs).write.parquet(manifest)
+      .select(md5(col("text").cast("binary")).as("h"), col("doc_id"),
+        org.apache.spark.sql.functions.lit(0L).as("batch"))
+      .publishTo(hashes, "batch")
+    Packing.packSequences(docs).publishTo(manifest)
     val del = docs.filter(col("source") === "src7").select("doc_id")
     def snapshot(): Map[String, Seq[String]] =
       Seq("bands" -> s"$idx/bands", "shingles" -> s"$idx/shingles",
         "pairs" -> pairs, "hashes" -> hashes, "manifest" -> manifest)
         .map { case (k, p) =>
-          k -> spark.read.parquet(p).collect().map(_.toString).sorted.toSeq
+          k -> graft.ops.StoreIO.read(spark, p).collect().map(_.toString)
+            .sorted.toSeq
         }.toMap
     val first = Dedup.deleteApply(del, idx, pairs, Some(hashes), Some(manifest))
       .collect()
@@ -1320,22 +1357,25 @@ class ExtSpec extends SparkSuite {
     val hashes = root.resolve("hashes").toString
     Dedup.indexInit(docs.limit(0), idx)
     Dedup.pairsArtifactInit(docs.limit(0), pairs)
-    def hashRows(d: org.apache.spark.sql.DataFrame) =
-      d.select(md5(col("text").cast("binary")).as("h"), col("doc_id"))
-    hashRows(docs.filter(col("doc_id") < 250)).write.parquet(s"$hashes/batch=0")
+    def hashRows(d: org.apache.spark.sql.DataFrame, batch: Long) =
+      d.select(md5(col("text").cast("binary")).as("h"), col("doc_id"),
+        org.apache.spark.sql.functions.lit(batch).as("batch"))
+    hashRows(docs.filter(col("doc_id") < 250), 0L).publishTo(hashes, "batch")
     val del = docs.filter(col("doc_id") < 30).select("doc_id")
     Dedup.deleteApply(del, idx, pairs, Some(hashes))
     // deleted docs' hashes are gone: a re-arriving copy reads as NEW
     val delIds = del.collect().map(_.getLong(0)).toSet
-    val afterApply = spark.read.parquet(hashes)
+    val afterApply = graft.ops.Publish.readLive(spark, hashes)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(afterApply.intersect(delIds).isEmpty)
     // the store stays hive-partitioned, so the NEXT ingest batch
     // appends batch-keyed and the union read (with its batch filter —
     // the corpus-build stream's read path) still works
-    hashRows(docs.filter(col("doc_id") >= 250)).write
-      .parquet(s"$hashes/batch=1")
-    val all = spark.read.parquet(hashes)
+    assert(new java.io.File(graft.ops.Publish.liveDir(spark, hashes))
+      .listFiles().exists(_.getName.startsWith("batch=")))
+    graft.ops.StoreIO.append(hashRows(docs.filter(col("doc_id") >= 250), 1L),
+      hashes)
+    val all = graft.ops.StoreIO.read(spark, hashes, Some(Dedup.HashStoreDdl))
     assert(all.filter(col("batch") < 2).count() === all.count())
     assert(all.select("doc_id").collect().map(_.getLong(0)).toSet ===
       (docs.collect().map(_.getLong(0)).toSet -- delIds))
@@ -1932,7 +1972,8 @@ class ExtSpec extends SparkSuite {
     val e = Tables.embeddings(spark, dir)
     val centroids = Ivf.trainCentroids(e)
     Ivf.writeIvfPartitioned(e, centroids, path)
-    val layout = new java.io.File(path).listFiles().map(_.getName).filter(_.startsWith("list_id="))
+    val layout = new java.io.File(graft.ops.Publish.liveDir(spark, path)).listFiles()
+      .map(_.getName).filter(_.startsWith("list_id="))
     assert(layout.length > 1, "corpus must span multiple inverted-list directories")
 
     val queries = e.filter(col("vec_id") < 3)

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{SparkSuite, Tables}
+import graft.ops.{Publish, StoreIO}
 import org.apache.spark.sql.functions._
 
 /** The "operate day N" drill — the round-14 pieces composed into one
@@ -41,22 +42,25 @@ class LifecycleSpec extends SparkSuite {
     def hashRows(d: org.apache.spark.sql.DataFrame, batch: Int) = d
       .select(md5(col("text").cast("binary")).as("h"), col("doc_id"),
         lit(batch.toLong).as("batch"))
-    hashRows(wave1, 0).write.partitionBy("batch").parquet(hashes)
-    Packing.packSequences(wave1).write.parquet(manifest)
+    Publish.publish(spark, hashes, hashRows(wave1, 0), Seq("batch"))
+    Publish.publish(spark, manifest, Packing.packSequences(wave1))
 
     // ingest wave 2: incremental appends (probe-and-append for pairs,
-    // packDelta for the manifest, a new batch for the registry)
+    // packDelta for the manifest, a new batch for the registry), each a
+    // delta child beside the committed version
     Dedup.pairsArtifactAppend(Dedup.indexIncremental(wave2, idx), pairs)
-    hashRows(wave2, 1).write.mode("append").partitionBy("batch").parquet(hashes)
-    val delta = Packing.packDelta(spark.read.parquet(manifest), wave2)
-    delta.write.mode("append").parquet(manifest)
+    StoreIO.append(hashRows(wave2, 1), hashes)
+    StoreIO.append(Packing.packDelta(StoreIO.read(spark, manifest), wave2),
+      manifest)
+    def hashesNow() = StoreIO.read(spark, hashes, Some(Dedup.HashStoreDdl))
+    def manifestNow() = StoreIO.read(spark, manifest)
 
     def allAuditsGreen(corpus: org.apache.spark.sql.DataFrame, label: String): Unit = {
       val a = Dedup.artifactAuditDf(corpus,
         Dedup.pairsArtifactRead(spark, pairs), n = corpus.count().toInt).head()
       assert(a.getAs[Long]("n_missing") === 0L, s"$label pair artifact missing")
       assert(a.getAs[Long]("n_extra") === 0L, s"$label pair artifact extra")
-      val m = Packing.manifestAuditDf(corpus, spark.read.parquet(manifest),
+      val m = Packing.manifestAuditDf(corpus, manifestNow(),
         sampleN = corpus.count().toInt).head()
       assert(m.getAs[Long]("n_formula_bad") === 0L, s"$label manifest formula")
       assert(m.getAs[Long]("n_adjacency_bad") === 0L, s"$label manifest adjacency")
@@ -64,14 +68,14 @@ class LifecycleSpec extends SparkSuite {
       assert(m.getAs[Long]("n_orphans") === 0L, s"$label manifest orphans")
       assert(m.getAs[Long]("n_dup_rows") === 0L, s"$label manifest dups")
       assert(m.getAs[Long]("n_tok_mismatch") === 0L, s"$label manifest n_tok")
-      val h = Dedup.hashStoreAuditDf(corpus, spark.read.parquet(hashes),
+      val h = Dedup.hashStoreAuditDf(corpus, hashesNow(),
         sampleN = corpus.count().toInt).head()
       assert(h.getAs[Long]("n_multi") === 0L, s"$label hash multi")
       assert(h.getAs[Long]("n_missing") === 0L, s"$label hash missing")
       assert(h.getAs[Long]("n_orphans") === 0L, s"$label hash orphans")
       assert(h.getAs[Long]("n_hash_mismatch") === 0L, s"$label hash rot")
-      val c = Dedup.storeConsistencyDf(spark.read.parquet(hashes),
-        spark.read.parquet(manifest), Dedup.pairsArtifactRead(spark, pairs)).head()
+      val c = Dedup.storeConsistencyDf(hashesNow(),
+        manifestNow(), Dedup.pairsArtifactRead(spark, pairs)).head()
       assert(c.getAs[Long]("n_manifest_not_hash") === 0L, s"$label x-store m!h")
       assert(c.getAs[Long]("n_hash_not_manifest") === 0L, s"$label x-store h!m")
       assert(c.getAs[Long]("n_pair_endpoints_unregistered") === 0L, s"$label x-store pairs")
@@ -98,19 +102,16 @@ class LifecycleSpec extends SparkSuite {
       .select("doc_id").localCheckpoint()
     val nDel2 = del2.count()
     assert(nDel2 > 0, "day-3 takedown must delete something")
-    val replayed = spark.read.parquet(hashes)
+    val replayed = hashesNow()
       .join(del2, Seq("doc_id"), "left_anti").limit(1)
       .withColumn("batch", lit(9L)).localCheckpoint()
-    val crashed = spark.read.parquet(hashes)
+    val crashed = hashesNow()
       .join(del2, Seq("doc_id"), "left_anti")
       .unionByName(replayed.select(col("h"), col("doc_id"), col("batch")))
       .localCheckpoint()
-    val fs = new org.apache.hadoop.fs.Path(hashes)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(hashes), true)
-    crashed.write.partitionBy("batch").parquet(hashes)
-    val drift = Dedup.storeConsistencyDf(spark.read.parquet(hashes),
-      spark.read.parquet(manifest), Dedup.pairsArtifactRead(spark, pairs)).head()
+    Publish.publish(spark, hashes, crashed, Seq("batch"))
+    val drift = Dedup.storeConsistencyDf(hashesNow(),
+      manifestNow(), Dedup.pairsArtifactRead(spark, pairs)).head()
     assert(drift.getAs[Long]("n_manifest_not_hash") === nDel2)
     val rep = Dedup.storeRepair(spark, hashes, manifest, pairs).head()
     assert(rep.getAs[Long]("n_hash_dups_removed") === 1L)

@@ -81,10 +81,10 @@ class PackingSpec extends SparkSuite {
     val out = java.nio.file.Files.createTempDirectory("packed").toString
     // tiny shards so the corpus spans several
     Packing.writePacked(docs, out, seqLen = 64L, shardSeqs = 4L)
-    val shards = new java.io.File(out).listFiles()
+    val shards = new java.io.File(graft.ops.Publish.liveDir(spark, out)).listFiles()
       .filter(_.getName.startsWith("shard=")).map(_.getName).sorted
     assert(shards.length > 2, s"expected several shards, got ${shards.toSeq}")
-    val back = spark.read.parquet(out)
+    val back = graft.ops.Publish.readLive(spark, out)
     // every manifest row survives the join+write with its text
     val manifest = Packing.packSequences(docs, seqLen = 64L)
     assert(back.count() === manifest.count())
@@ -112,7 +112,8 @@ class PackingSpec extends SparkSuite {
     Packing.packStream(spark, s"$in/b*", mv, ckpt)
     val want35 = Packing.packSequences(docs.filter(col("doc_id") < 35))
       .collect().map(_.toString).sorted.toSeq
-    def mvRows = spark.read.parquet(mv).collect().map(_.toString).sorted.toSeq
+    def mvRows = graft.ops.StoreIO.read(spark, mv).collect().map(_.toString)
+      .sorted.toSeq
     assert(mvRows === want35)
     // fresh checkpoint replays every file: deltas must be empty
     Packing.packStream(spark, s"$in/b*", mv, root.resolve("ckpt2").toString)

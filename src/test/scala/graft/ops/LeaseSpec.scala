@@ -134,7 +134,7 @@ class LeaseSpec extends SparkSuite {
     import spark.implicits._
     val path = tmp("lease_fence")
     val Ddl = "id BIGINT, v STRING"
-    (1L to 4L).map(i => (i, "orig")).toDF("id", "v").write.parquet(path)
+    Publish.publish(spark, path, (1L to 4L).map(i => (i, "orig")).toDF("id", "v"))
     val fenced = intercept[Lease.ConcurrentWriter] {
       StoreIO.rewrite(spark, path, { df =>
         // simulate a TTL usurpation mid-span: the usurper's acquire
@@ -156,7 +156,8 @@ class LeaseSpec extends SparkSuite {
     import spark.implicits._
     val path = tmp("lease_rw")
     val Ddl = "id BIGINT, v STRING"
-    (1L to 6L).map(i => (i, s"live $i")).toDF("id", "v").write.parquet(path)
+    Publish.publish(spark, path,
+      (1L to 6L).map(i => (i, s"live $i")).toDF("id", "v"))
     // writer A's transform callback is the interleave seam: while A is
     // mid-span (snapshot taken, publish pending), writer B attempts the
     // same rewrite on another thread
@@ -193,10 +194,10 @@ class LeaseSpec extends SparkSuite {
     val healthyH = docs.select(md5(col("text").cast("binary")).as("h"),
       col("doc_id"), (col("doc_id") % 3).as("batch"))
     // seed a replay duplicate so the repair has real work
-    healthyH.unionByName(healthyH.limit(1))
-      .write.partitionBy("batch").parquet(hP)
-    Packing.packSequences(docs).write.parquet(mP)
-    Dedup.minhashPairsDf(docs).write.parquet(pP)
+    Publish.publish(spark, hP, healthyH.unionByName(healthyH.limit(1)),
+      Seq("batch"))
+    Publish.publish(spark, mP, Packing.packSequences(docs))
+    Dedup.pairsArtifactInit(docs, pP)
     var bFailure: Option[Throwable] = None
     Dedup.storeRepairImpl(spark, hP, mP, pP, interleave = () => {
       val b = new Thread(() =>
@@ -207,7 +208,7 @@ class LeaseSpec extends SparkSuite {
     assert(bFailure.exists(_.isInstanceOf[Lease.ConcurrentWriter]),
       s"concurrent repair should fail loudly, got $bFailure")
     // the surviving serial order: repaired store, no duplicate left
-    val dups = spark.read.parquet(hP).groupBy(col("doc_id"))
+    val dups = Publish.readLive(spark, hP).groupBy(col("doc_id"))
       .count().filter(col("count") > 1).count()
     assert(dups === 0L)
     // and a later repair (the loser's retry) runs clean
@@ -267,7 +268,7 @@ class LeaseSpec extends SparkSuite {
   test("a TTL break landing during the staging write aborts at the in-publish fence with the live store intact") {
     import spark.implicits._
     val path = tmp("lease_pub_fence")
-    (1L to 4L).map(i => (i, "orig")).toDF("id", "v").write.parquet(path)
+    Publish.publish(spark, path, (1L to 4L).map(i => (i, "orig")).toDF("id", "v"))
     Lease.withLeases(spark, Seq(path)) {
       // the break lands while Publish stages (the span's long pole):
       // equivalently, the claim is gone by the time staging completes
@@ -278,69 +279,31 @@ class LeaseSpec extends SparkSuite {
           (1L to 4L).map(i => (i, "usurped-span")).toDF("id", "v"))
       }
     }
-    // live store untouched; the orphaned staging is recoverable garbage
+    // live store untouched; the unreferenced version is recoverable garbage
     assert(Publish.recover(spark, path) === "cleared")
-    val vs = spark.read.parquet(path).select(col("v")).distinct()
+    val vs = Publish.readLive(spark, path).select(col("v")).distinct()
       .collect().map(_.getString(0)).toSeq
     assert(vs === Seq("orig"))
-  }
-
-  test("recovery refuses to roll a usurped staging forward (claim token in the marker); a live claim still rolls forward") {
-    import spark.implicits._
-    val path = tmp("lease_rec_fence")
-    (1L to 3L).map(i => (i, "orig")).toDF("id", "v").write.parquet(path)
-    // a leased publish crashes after the rename-aside (live missing,
-    // staging complete, marker carrying the span's claim id)
-    intercept[RuntimeException] {
-      Lease.withLeases(spark, Seq(path)) {
-        Publish.publishImpl(spark, path,
-          (1L to 3L).map(i => (i, "crashed")).toDF("id", "v"),
-          Nil, crashAfter = Publish.AfterAside)
-      }
-    }
-    // the span's lease was released (or TTL-broken): its claim is gone,
-    // so recovery must treat the staging as usurped and roll BACK
-    val stagedMarker = new Path(Publish.stagedOf(path), "_graft_staged")
-    val claim = Publish.readSmallFile(fs, stagedMarker).trim
-    assert(claim.startsWith("claim-"), "marker must carry the claim token")
-    assert(Publish.recover(spark, path) === "rolled_back")
-    assert(spark.read.parquet(path).select(col("v")).distinct()
-      .collect().map(_.getString(0)).toSeq === Seq("orig"))
-    // same crash state, but the holder's claim still ALIVE (a prompt
-    // recovery after a plain crash): recovery rolls forward as before
-    intercept[RuntimeException] {
-      Lease.withLeases(spark, Seq(path)) {
-        Publish.publishImpl(spark, path,
-          (1L to 3L).map(i => (i, "crashed2")).toDF("id", "v"),
-          Nil, crashAfter = Publish.AfterAside)
-      }
-    }
-    val claim2 = Publish.readSmallFile(fs, stagedMarker).trim
-    fs.createNewFile(new Path(Lease.leaseDirOf(path), claim2))
-    assert(Publish.recover(spark, path) === "rolled_forward")
-    assert(spark.read.parquet(path).select(col("v")).distinct()
-      .collect().map(_.getString(0)).toSeq === Seq("crashed2"))
-    fs.delete(new Path(Lease.leaseDirOf(path), claim2), false)
   }
 
   test("pointer-mode fence: a usurped span aborts before the commit PUT; the committed version stands") {
     import spark.implicits._
     val root = tmp("lease_ptr_fence")
     Lease.withLeases(spark, Seq(root)) {
-      PointerStore.publish(spark, root,
+      Publish.publish(spark, root,
         (1L to 3L).map(i => (i, "v0")).toDF("id", "v"))
-      val v0 = PointerStore.resolve(spark, root).get
+      val v0 = Publish.resolveLive(spark, root).get
       // the break lands during the second publish's staging
       claims(root).filter(_.getName.startsWith("claim-"))
         .foreach(fs.delete(_, false))
       intercept[Lease.ConcurrentWriter] {
-        PointerStore.publish(spark, root,
+        Publish.publish(spark, root,
           (1L to 3L).map(i => (i, "usurped")).toDF("id", "v"))
       }
       // the commit PUT never happened: still v0, and recover drops the
       // unreferenced staging
-      assert(PointerStore.resolve(spark, root) === Some(v0))
-      PointerStore.recover(spark, root)
+      assert(Publish.resolveLive(spark, root) === Some(v0))
+      Publish.recover(spark, root)
       assert(spark.read.parquet(v0).select(col("v")).distinct()
         .collect().map(_.getString(0)).toSeq === Seq("v0"))
     }

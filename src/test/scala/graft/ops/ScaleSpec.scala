@@ -168,14 +168,16 @@ class ScaleSpec extends SparkSuite {
     import spark.implicits._
     val path = java.nio.file.Files.createTempDirectory("compact_tbl").toString
     // 64 tiny files
-    (1L to 6400L).toDF("v").repartition(64).write.mode("overwrite").parquet(path)
-    def parquetFiles = new java.io.File(path).listFiles()
+    Publish.publish(spark, path, (1L to 6400L).toDF("v").repartition(64))
+    def parquetFiles = new java.io.File(Publish.liveDir(spark, path)).listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(parquetFiles === 64)
     Scale.compact(spark, path, targetFileBytes = 1L << 30)
     assert(parquetFiles === 1, "1 GiB target must collapse tiny files to one")
-    val vs = spark.read.parquet(path).as[Long].collect().sorted
+    val vs = Publish.readLive(spark, path).as[Long].collect().sorted
     assert(vs.toSeq === (1L to 6400L))
-    assert(!new java.io.File(path.stripSuffix("/") + "__compact").exists())
+    // the superseded version was collected: one version, one pointer
+    assert(new java.io.File(path).list().filter(_.startsWith("_")).sorted.toSeq ===
+      Seq("_ptr-00000001", "_v-00000001"))
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.col
 /** Drills for the delta-directory append/fold machinery beyond the
   * racing-append interleaves StreamingSpec covers: token idempotence
   * ACROSS a fold (the retired-token registry), crash recovery of the
-  * fold's child retirement (the promoted `_graft_folded` sidecar), and
+  * fold's child retirement (the committed `_graft_folded` sidecar), and
   * the recursive fragment count on hive-partitioned stores.
   */
 class StoreIOSpec extends SparkSuite {
@@ -23,7 +23,7 @@ class StoreIOSpec extends SparkSuite {
     val path = java.nio.file.Files.createTempDirectory("storeio")
       .resolve("store").toString
     val live = (1L to 6L).map(i => (i, s"live $i")).toDF("id", "v")
-    live.write.parquet(path)
+    Publish.publish(spark, path, live)
     (path, live)
   }
 
@@ -74,20 +74,20 @@ class StoreIOSpec extends SparkSuite {
     val folded = snap.frame.localCheckpoint()
     val names = snap.children.map(c => new Path(c).getName)
     // drive the publish to the exact crash point publishMerged is
-    // exposed to: promote done, child retirement not run
+    // exposed to: commit done, child retirement not run
     intercept[RuntimeException] {
       Publish.publishImpl(spark, path, folded, Nil,
-        crashAfter = Publish.AfterPromote,
+        crashAfter = Publish.AfterCommit,
         sidecar = Some(StoreIO.FoldedSidecar -> names.mkString("\n")))
     }
     // the crash state: folded rows in live AND still in the delta child
-    assert(fs.exists(new Path(path, StoreIO.FoldedSidecar)))
+    assert(fs.exists(new Path(Publish.liveDir(spark, path), StoreIO.FoldedSidecar)))
     assert(StoreIO.deltaChildren(spark, path).nonEmpty)
     // any snapshot (or the maintenance pre-pass' recoverFolds) settles it
     val settled = StoreIO.snapshot(spark, path, Some(Ddl))
     assert(settled.children.isEmpty)
     assert(rows(settled.frame) === rows(live.unionByName(b)))
-    assert(!fs.exists(new Path(path, StoreIO.FoldedSidecar)))
+    assert(!fs.exists(new Path(Publish.liveDir(spark, path), StoreIO.FoldedSidecar)))
     // and the folded token stays exactly-once under replay
     StoreIO.append(b, path, token = "batch-9")
     assert(rows(StoreIO.read(spark, path, Some(Ddl))) === rows(live.unionByName(b)))
@@ -102,7 +102,7 @@ class StoreIOSpec extends SparkSuite {
     StoreIO.publishMerged(spark, path, snap.frame.localCheckpoint(), snap)
     val children = StoreIO.deltaChildren(spark, path)
     assert(children.map(c => new Path(c).getName) === Seq("d-b"))
-    assert(!fs.exists(new Path(path, StoreIO.FoldedSidecar)))
+    assert(!fs.exists(new Path(Publish.liveDir(spark, path), StoreIO.FoldedSidecar)))
     assert(rows(StoreIO.read(spark, path, Some(Ddl))) ===
       rows(live.unionByName(batch(500 to 501)).unionByName(batch(600 to 601))))
   }
@@ -111,11 +111,11 @@ class StoreIOSpec extends SparkSuite {
     import spark.implicits._
     val path = java.nio.file.Files.createTempDirectory("storeio_hive")
       .resolve("store").toString
-    (1L to 9L).map(i => (i, i % 3)).toDF("id", "batch")
-      .repartition(3).write.partitionBy("batch").parquet(path)
+    Publish.publish(spark, path, (1L to 9L).map(i => (i, i % 3))
+      .toDF("id", "batch").repartition(3), Seq("batch"))
     // every part file lives under a batch=N subdirectory: a top-level
     // listing sees zero leaves, the recursive count sees them all
-    assert(fs.listStatus(new Path(path))
+    assert(fs.listStatus(new Path(Publish.liveDir(spark, path)))
       .count(_.getPath.getName.endsWith(".parquet")) === 0)
     assert(StoreIO.fragmentCount(spark, path) >= 3)
     // the retired-token registry contributes nothing to the count

@@ -929,9 +929,10 @@ class StreamingSpec extends SparkSuite {
     Dedup.indexInit(docs, idx)
     Dedup.pairsArtifactInit(docs, pairs)
     docs.filter(col("doc_id") % 100 =!= 0)
-      .select(md5(col("text").cast("binary")).as("h"), col("doc_id"))
-      .write.parquet(s"$hashes/batch=0")
-    graft.ext.Packing.packSequences(docs).write.parquet(manifest)
+      .select(md5(col("text").cast("binary")).as("h"), col("doc_id"),
+        lit(0L).as("batch"))
+      .publishTo(hashes, "batch")
+    graft.ext.Packing.packSequences(docs).publishTo(manifest)
     val oldLabels = Cluster.connectedComponents(
         Dedup.pairsArtifactRead(spark, pairs)
           .select(col("doc_a").as("u"), col("doc_b").as("v")))
@@ -963,8 +964,8 @@ class StreamingSpec extends SparkSuite {
     val pairs2 = r2.resolve("pairs").toString
     Dedup.indexInit(survivors, idx2)
     Dedup.pairsArtifactInit(survivors, pairs2)
-    def rows(p: String): Seq[String] =
-      spark.read.parquet(p).collect().map(_.toString).sorted.toSeq
+    def rows(p: String): Seq[String] = graft.ops.Publish.readLive(spark, p)
+      .collect().map(_.toString).sorted.toSeq
     assert(rows(s"$idx/bands") === rows(s"$idx2/bands"))
     assert(rows(s"$idx/shingles") === rows(s"$idx2/shingles"))
     assert(rows(pairs) === rows(pairs2))
@@ -972,7 +973,7 @@ class StreamingSpec extends SparkSuite {
     val hashTruth = survivors.filter(col("doc_id") % 100 =!= 0)
       .select(md5(col("text").cast("binary")).as("h"), col("doc_id"))
       .collect().map(_.toString).sorted.toSeq
-    assert(spark.read.parquet(hashes).select("h", "doc_id")
+    assert(graft.ops.Publish.readLive(spark, hashes).select("h", "doc_id")
       .collect().map(_.toString).sorted.toSeq === hashTruth)
     // pack manifest: offsets re-derived from surviving rows equal a
     // from-scratch pack of the surviving corpus
@@ -1013,8 +1014,8 @@ class StreamingSpec extends SparkSuite {
     Dedup.pairsArtifactInit(docs, pairs)
     docs.select(md5(col("text").cast("binary")).as("h"), col("doc_id"),
         lit(0L).as("batch"))
-      .write.partitionBy("batch").parquet(hashes)
-    Packing.packSequences(docs).write.parquet(manifest)
+      .publishTo(hashes, "batch")
+    Packing.packSequences(docs).publishTo(manifest)
     // the takedown feed: src7 split across two arrivals
     val ids = docs.filter(col("source") === "src7").select("doc_id")
       .collect().map(_.getLong(0)).sorted
@@ -1055,7 +1056,7 @@ class StreamingSpec extends SparkSuite {
     assert(Dedup.tombstonesRead(spark, tombs).count() === 0L)
     assert(rows(Dedup.pairsArtifactRead(spark, pairs))
       === rows(Dedup.minhashPairsDf(survivors)))
-    assert(rows(spark.read.parquet(manifest))
+    assert(rows(graft.ops.Publish.readLive(spark, manifest))
       === rows(Packing.packSequences(survivors)))
   }
 
@@ -1074,8 +1075,8 @@ class StreamingSpec extends SparkSuite {
       Dedup.pairsArtifactInit(docs, pairs)
       docs.select(md5(col("text").cast("binary")).as("h"), col("doc_id"),
           lit(0L).as("batch"))
-        .write.partitionBy("batch").parquet(hashes)
-      Packing.packSequences(docs).write.parquet(manifest)
+        .publishTo(hashes, "batch")
+      Packing.packSequences(docs).publishTo(manifest)
       (idx, pairs, hashes, manifest)
     }
     // the racing ingest: a pair between two surviving docs and a hash
