@@ -12,20 +12,8 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // JVM warmup on the smallest SF: classloading, parquet reader init, and
-    // the codegen compiler otherwise land on whichever query happens to run
-    // first (~4-6s of non-query cost attributed to it). Warmup work is not
-    // timed; the queries cover scan+agg, native expressions, a shuffle
-    // join, and the generate+window codegen paths (explode, group-limit).
-    val warm = new java.io.File("/root/testdata/sf0.001")
-    val warmDir = if (warm.isDirectory) warm.toString else sfDir
-    Seq("q_agg", "text_quality", "dedup_minhash", "q_tfidf", "q_window_topk").foreach { q =>
-      SparkEntry.queries.get(q).foreach { fn =>
-        try { fn(spark, warmDir).write.format("noop").mode("overwrite").save() }
-        catch { case _: Throwable => () }
-      }
-    }
-    stageFixtures(spark, sfDir)
+    warmup(spark, sfDir)
+    val staged = stageFixtures(spark, sfDir)
     // Host-state calibration anchor (r13 verdict item 5): the same
     // synthetic CPU-bound query — no I/O, fixed row count, hash agg —
     // timed immediately after warmup (calib_first) and after the last
@@ -68,9 +56,7 @@ object Bench {
         Some(name -> (System.nanoTime() - t0) / 1e9)
       } catch {
         case e: Throwable =>
-          // strip everything that would need JSON escaping (quotes,
-          // backslashes, ALL control chars — stack traces carry tabs)
-          errors += name -> e.toString.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(160)
+          errors += name -> jsonSafe(e.toString)
           None
       }
     }
@@ -112,19 +98,16 @@ object Bench {
     val calibLast = calibrate()
     val calib = f""","calib_first":$calibFirst%.3f,"calib_last":$calibLast%.3f"""
     val total = if (medianResults.nonEmpty) medianResults.values.sum else 0.0
-    val errJson = errors.toSeq.sortBy(_._1)
-      .map { case (k, m) => s""""$k":"$m"""" }.mkString("{", ",", "}")
-    val fullQs = medianResults.toSeq.sortBy(_._1)
-      .map { case (k, v) => f"""\"$k\":$v%.2f""" }.mkString("{", ",", "}")
+    val errJson = jsonObj(errors.toSeq.sortBy(_._1).map { case (k, m) => k -> s""""$m"""" })
+    val fullQs = jsonObj(medianResults.toSeq.sortBy(_._1).map { case (k, v) => k -> f"$v%.2f" })
     // Host-normalized per-query values (r14 verdict item 5): t_i divided
     // by the run's own calibration mean, so cross-session per-query
     // comparisons read off one field instead of a re-measure session —
     // BASELINE.md states the comparison rule.
     val calibMean = (calibFirst + calibLast) / 2.0
     val normQs =
-      if (calibMean > 0) medianResults.toSeq.sortBy(_._1)
-        .map { case (k, v) => f"""\"$k\":${v / calibMean}%.3f""" }
-        .mkString("{", ",", "}")
+      if (calibMean > 0) jsonObj(medianResults.toSeq.sortBy(_._1)
+        .map { case (k, v) => k -> f"${v / calibMean}%.3f" })
       else "{}"
     val medianedJson = medianed.sorted.map(n => s""""$n"""")
       .mkString("[", ",", "]")
@@ -144,8 +127,12 @@ object Bench {
         s""","note":"$safe""""
       }
       .getOrElse("")
+    // fixture staging runs untimed before the first entry: its per-stage
+    // seconds and errors say what the timed entries could rely on
+    val stageS = jsonObj(staged.map(st => st.name -> f"${st.seconds}%.2f"))
+    val stageErrors = jsonObj(staged.flatMap(st => st.error.map(e => st.name -> s""""$e"""")))
     val fullLine =
-      f"""{"queries":$fullQs,"queries_norm":$normQs,"medianed":$medianedJson,"calib_mean":$calibMean%.3f,"errors":$errJson,"sf":"$sfDir","metric":"total","unit":"sec","value":$total%.3f,"n":${medianResults.size},"nerr":${errors.size}$calib$note}"""
+      f"""{"queries":$fullQs,"queries_norm":$normQs,"medianed":$medianedJson,"calib_mean":$calibMean%.3f,"errors":$errJson,"sf":"$sfDir","metric":"total","unit":"sec","value":$total%.3f,"n":${medianResults.size},"nerr":${errors.size},"stage_s":$stageS,"stage_errors":$stageErrors$calib$note}"""
     // Dev-loop subset runs (SPARK_GRAFT_ONLY set) must NOT clobber the
     // committed full-surface snapshot — a 1-query artifact replacing the
     // 180-query baseline is exactly the stale-snapshot failure the
@@ -170,8 +157,30 @@ object Bench {
     spark.stop()
   }
 
+  /** JVM warmup on the smallest SF (`sf0.001` beside `sfDir`, else
+    * `sfDir` itself): classloading, parquet reader init, and
+    * the codegen compiler otherwise land on whichever query happens to run
+    * first (~4-6s of non-query cost attributed to it). Warmup work is not
+    * timed; the queries cover scan+agg, native expressions, a shuffle
+    * join, and the generate+window codegen paths (explode, group-limit).
+    */
+  def warmup(spark: SparkSession, sfDir: String): Unit = {
+    val warm = new java.io.File(new java.io.File(sfDir).getAbsoluteFile.getParentFile, "sf0.001")
+    val warmDir = if (warm.isDirectory) warm.toString else sfDir
+    Seq("q_agg", "text_quality", "dedup_minhash", "q_tfidf", "q_window_topk").foreach { q =>
+      SparkEntry.queries.get(q).foreach { fn =>
+        try { fn(spark, warmDir).write.format("noop").mode("overwrite").save() }
+        catch { case _: Throwable => () }
+      }
+    }
+  }
+
+  /** `{"k":v,...}` over already-rendered JSON values, in order. */
+  private def jsonObj(kv: Seq[(String, String)]): String =
+    kv.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+
   /** Ingest-side setup, excluded from query timings (shared with the
-    * Probe measurement harness so isolated runs stage the identical
+    * Probe and ScaleBench harnesses so isolated runs stage the identical
     * state): the incremental near-dup index is built once per corpus at
     * ingest; the timed dedup_incremental entry measures the probe
     * pipeline only. Same for the gvid container staging behind
@@ -186,27 +195,43 @@ object Bench {
     * the execute-operator entries (q_delete_apply, ann_retrain_apply)
     * copy per invocation — the timed window is copy + the operator
     * itself, and the standing tombstone store the tombstone entries
-    * read.
+    * read. A failed stage does not throw: it is reported with its
+    * seconds, and the first timed entry that needs it pays the build.
     */
-  def stageFixtures(spark: SparkSession, sfDir: String): Unit = {
-    val stages: Seq[() => Any] = Seq(
-      () => ext.Dedup.ensureIncrementalIndex(spark, sfDir),
-      () => ext.Dedup.ensurePairsArtifact(spark, sfDir),
-      () => ext.Ivf.ensureModel(spark, sfDir),
-      () => ext.Ivf.ensureLayout(spark, sfDir),
-      () => ext.Pq.ensureModel(spark, sfDir),
-      () => ext.Pq.ensureCodes(spark, sfDir),
-      () => ext.Pq.ensureIvfPqLayout(spark, sfDir),
-      () => ext.Multimodal.ensureGvidStage(sfDir),
-      () => ext.Packing.ensureManifest(spark, sfDir),
-      () => ext.Dedup.ensureHashStore(spark, sfDir),
-      () => ext.Backfill.ensureFeatureArtifact(spark, sfDir),
-      () => ext.Dedup.ensureFullIndex(spark, sfDir),
-      () => ext.Packing.ensurePackedStore(spark, sfDir),
-      () => ext.Backfill.ensureFeatureArtifactFull(spark, sfDir),
-      () => ext.Dedup.ensureDeleteFixture(spark, sfDir),
-      () => ext.Ivf.ensureRetrainFixture(spark, sfDir),
-      () => ext.Dedup.ensureStandingTombstones(spark, sfDir))
-    stages.foreach { s => try s() catch { case _: Throwable => () } }
+  def stageFixtures(spark: SparkSession, sfDir: String): Seq[Staged] = {
+    val stages: Seq[(String, () => Any)] = Seq(
+      "dedup_incremental_index" -> (() => ext.Dedup.ensureIncrementalIndex(spark, sfDir)),
+      "dedup_pairs_artifact" -> (() => ext.Dedup.ensurePairsArtifact(spark, sfDir)),
+      "ivf_model" -> (() => ext.Ivf.ensureModel(spark, sfDir)),
+      "ivf_layout" -> (() => ext.Ivf.ensureLayout(spark, sfDir)),
+      "pq_model" -> (() => ext.Pq.ensureModel(spark, sfDir)),
+      "pq_codes" -> (() => ext.Pq.ensureCodes(spark, sfDir)),
+      "pq_ivfpq_layout" -> (() => ext.Pq.ensureIvfPqLayout(spark, sfDir)),
+      "gvid_stage" -> (() => ext.Multimodal.ensureGvidStage(sfDir)),
+      "pack_manifest" -> (() => ext.Packing.ensureManifest(spark, sfDir)),
+      "hash_store" -> (() => ext.Dedup.ensureHashStore(spark, sfDir)),
+      "feature_artifact" -> (() => ext.Backfill.ensureFeatureArtifact(spark, sfDir)),
+      "dedup_full_index" -> (() => ext.Dedup.ensureFullIndex(spark, sfDir)),
+      "packed_store" -> (() => ext.Packing.ensurePackedStore(spark, sfDir)),
+      "feature_artifact_full" -> (() => ext.Backfill.ensureFeatureArtifactFull(spark, sfDir)),
+      "dedup_delete_fixture" -> (() => ext.Dedup.ensureDeleteFixture(spark, sfDir)),
+      "ivf_retrain_fixture" -> (() => ext.Ivf.ensureRetrainFixture(spark, sfDir)),
+      "standing_tombstones" -> (() => ext.Dedup.ensureStandingTombstones(spark, sfDir)))
+    stages.map { case (name, stage) =>
+      val t0 = System.nanoTime()
+      val error =
+        try { stage(); None }
+        catch { case scala.util.control.NonFatal(e) => Some(jsonSafe(e.toString)) }
+      Staged(name, (System.nanoTime() - t0) / 1e9, error)
+    }
   }
+
+  /** One fixture stage's wall seconds and JSON-safe error, if it failed. */
+  case class Staged(name: String, seconds: Double, error: Option[String])
+
+  /** `s` cut to 160 chars with everything JSON would escape blanked
+    * (quotes, backslashes, ALL control chars — stack traces carry tabs).
+    */
+  def jsonSafe(s: String): String =
+    s.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(160)
 }

@@ -29,16 +29,10 @@ object Probe {
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val warm = new java.io.File("/root/testdata/sf0.001")
-    val warmDir = if (warm.isDirectory) warm.toString else sfDir
-    Seq("q_agg", "text_quality", "dedup_minhash", "q_tfidf", "q_window_topk")
-      .foreach { q =>
-        SparkEntry.queries.get(q).foreach { fn =>
-          try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
-        }
-      }
-    Bench.stageFixtures(spark, sfDir)
+    Bench.warmup(spark, sfDir)
+    Bench.stageFixtures(spark, sfDir).foreach { st =>
+      st.error.foreach(e => println(f"[probe] stage ${st.name} FAILED: $e"))
+    }
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to reps).foreach { i =>

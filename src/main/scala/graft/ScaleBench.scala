@@ -355,27 +355,10 @@ object ScaleBench {
         spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
         System.err.println(s"[scale x$f] shuffle.partitions = $parts")
       }
-      // ingest-maintained state, staged untimed (the Bench discipline):
-      // derived graph/report entries read the pair artifact; IVF/PQ
-      // entries read the persisted quantizer models
-      try ext.Dedup.ensurePairsArtifact(spark, dir)
-      catch { case e: Throwable =>
-        System.err.println(s"[scale x$f] pairs artifact staging FAILED: ${e.toString.take(200)}") }
-      try { ext.Ivf.ensureModel(spark, dir); ext.Pq.ensureModel(spark, dir)
-            ext.Ivf.ensureLayout(spark, dir) }
-      catch { case e: Throwable =>
-        System.err.println(s"[scale x$f] model staging FAILED: ${e.toString.take(200)}") }
-      try { ext.Pq.ensureCodes(spark, dir); ext.Pq.ensureIvfPqLayout(spark, dir)
-            ext.Packing.ensureManifest(spark, dir); ext.Dedup.ensureHashStore(spark, dir)
-            ext.Backfill.ensureFeatureArtifact(spark, dir)
-            ext.Dedup.ensureFullIndex(spark, dir)
-            ext.Packing.ensurePackedStore(spark, dir)
-            ext.Backfill.ensureFeatureArtifactFull(spark, dir)
-            ext.Dedup.ensureDeleteFixture(spark, dir)
-            ext.Ivf.ensureRetrainFixture(spark, dir)
-            ext.Dedup.ensureStandingTombstones(spark, dir); () }
-      catch { case e: Throwable =>
-        System.err.println(s"[scale x$f] serving/store staging FAILED: ${e.toString.take(200)}") }
+      // ingest-maintained state, staged untimed by the one Bench list
+      Bench.stageFixtures(spark, dir).foreach { st =>
+        st.error.foreach(e => System.err.println(s"[scale x$f] ${st.name} staging FAILED: $e"))
+      }
       val entries = heavy.flatMap { q =>
         System.gc()
         val t0 = System.nanoTime()

@@ -169,53 +169,40 @@ object Backfill {
 
   /** FEATURE-ARTIFACT AUDIT — the derived-column store member of the
     * audit family: volume + partition spread, replay duplicates,
-    * row-granular coverage anti-joins vs the corpus (stronger than the
+    * row-granular coverage vs the corpus (stronger than the
     * backfill's partition-granular diff — a partially-published
     * partition hides from the listing diff but not from this), and the
     * three derived columns re-computed from the fixed hash sample's
-    * own documents, counted once per doc. Healthy = all-zero
+    * own documents, counted once per doc — one [[Audit.keyedAuditDf]]
+    * pass on doc_id plus the partition spread. Healthy = all-zero
     * violations, oracle-pinned.
     */
   def featureAuditDf(docs: DataFrame, artifact: DataFrame,
-      sampleN: Int = 1024): DataFrame = {
+      sample: DataFrame): DataFrame = {
     val a = artifact.select(col("doc_id"), col("source"), col("n_tok"),
       col("n_chars"), col("alpha_permille"))
-    val volLeg = a.agg(count(lit(1)).as("n_rows"),
-      countDistinct(col("source")).as("n_partitions"))
-    val ids = docs.select(col("doc_id"))
-    val aids = a.select(col("doc_id"))
-    val multiLeg = aids.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).agg(count(lit(1)).as("n_multi"))
-    val missLeg = ids.join(aids, Seq("doc_id"), "left_anti")
-      .agg(count(lit(1)).as("n_missing"))
-    val orphanLeg = aids.join(ids, Seq("doc_id"), "left_anti")
-      .agg(count(lit(1)).as("n_orphans"))
-    val sample = featureDf(Dedup.hashSampleDocs(docs, sampleN))
-      .select(col("doc_id"), col("n_tok").as("t_re"),
-        col("n_chars").as("c_re"), col("alpha_permille").as("a_re"))
-      .localCheckpoint()
+    val re = featureDf(sample).select(col("doc_id"), col("n_tok").as("t_re"),
+      col("n_chars").as("c_re"), col("alpha_permille").as("a_re"))
     // a MISSING row is a coverage gap (n_missing — routed to the cheap
     // row-granular backfill remedy), NOT content rot: only rows that
     // exist and disagree count as mismatch, else a pure gap would
     // mis-route to the full rebuild
-    val sampLeg = sample.join(a, Seq("doc_id"), "left")
-      .groupBy(col("doc_id"))
-      .agg(max(when(col("n_tok").isNotNull &&
-          (col("n_tok") =!= col("t_re") ||
-           col("n_chars") =!= col("c_re") ||
-           col("alpha_permille") =!= col("a_re")), 1L).otherwise(0L)).as("mm"))
-      .agg(count(lit(1)).as("sample_n"),
-        coalesce(sum(col("mm")), lit(0L)).as("n_feature_mismatch"))
-    volLeg.crossJoin(multiLeg).crossJoin(missLeg).crossJoin(orphanLeg)
-      .crossJoin(sampLeg)
-      .select(col("n_rows"), col("n_partitions"), col("n_multi"),
+    Audit.keyedAuditDf(Seq("doc_id"), docs, a, Some(re),
+        Seq("n_feature_mismatch" -> (col("n_tok").isNotNull &&
+          (col("n_tok") =!= col("t_re") || col("n_chars") =!= col("c_re") ||
+            col("alpha_permille") =!= col("a_re")))))
+      .crossJoin(a.agg(countDistinct(col("source")).as("n_partitions")))
+      .select(col("n_store").as("n_rows"), col("n_partitions"), col("n_multi"),
         col("n_missing"), col("n_orphans"), col("sample_n"),
         col("n_feature_mismatch"))
   }
 
-  def qBackfillAudit(spark: SparkSession, dir: String): DataFrame =
-    featureAuditDf(Tables.documents(spark, dir),
-      graft.ops.Publish.readLive(spark, ensureFeatureArtifactFull(spark, dir)))
+  def qBackfillAudit(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    featureAuditDf(docs,
+      graft.ops.Publish.readLive(spark, ensureFeatureArtifactFull(spark, dir)),
+      Audit.docSample(docs))
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_backfill" -> (qBackfill _),

@@ -482,9 +482,9 @@ object Curation {
     * the identical comparison.
     */
   def sampleCiDf(docs: DataFrame, n: Int = Dedup.SweepSampleDocs): DataFrame = {
-    // the ONE shared splitmix64 draw (Dedup.hashSampleDocs — already
+    // the ONE shared splitmix64 draw (Audit.hashSample — already
     // checkpointed; both metric legs aggregate the same 1024 rows)
-    val sample = Dedup.hashSampleDocs(docs, n)
+    val sample = Audit.hashSample(docs, "doc_id", n)
       .select(col("doc_id"),
         size(graft.functions.TextFns.tokens(col("text"))).cast("long").as("v_tok"),
         col("n_chars").as("v_chars"))

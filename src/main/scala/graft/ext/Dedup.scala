@@ -393,37 +393,34 @@ object Dedup {
     * sample-internal endpoints — sound because pair emission is
     * pairwise (a pair's existence depends only on its own two
     * documents), so a HEALTHY artifact's sample-internal slice equals
-    * the sample recompute exactly. One row: sample size, both pair
-    * counts, and the missing/extra drift (0/0 when healthy — which is
+    * the sample recompute exactly. `sample` is the document sample
+    * ([[Audit.docSample]]; the corpus itself for a full recompute).
+    * One row: sample size, both pair counts, and the missing/extra
+    * drift ([[Audit.keyedAuditDf]] on the pair key, with the recompute
+    * as the truth set; 0/0 when healthy — which is
     * what the DuckDB oracle pins, so any artifact corruption or
     * staleness fails the hash gate). Cost is sample²-bounded plus one
     * artifact scan with broadcast-semi endpoint filters — constant in
     * corpus size except the sample draw, the sampled-sweep shape.
     */
-  def artifactAuditDf(docs: DataFrame, artifact: DataFrame,
-      n: Int = SweepSampleDocs): DataFrame = {
-    val sample = hashSampleDocs(docs, n)
-    val ids = sample.select(col("doc_id")).localCheckpoint()
-    val recomputed = minhashPairsDf(sample)
-      .select(col("doc_a"), col("doc_b")).localCheckpoint()
+  def artifactAuditDf(sample: DataFrame, artifact: DataFrame): DataFrame = {
+    val ids = sample.select(col("doc_id"))
     val inArtifact = artifact
       .join(broadcast(ids.withColumnRenamed("doc_id", "doc_a")),
         Seq("doc_a"), "left_semi")
       .join(broadcast(ids.withColumnRenamed("doc_id", "doc_b")),
         Seq("doc_b"), "left_semi")
-      .select(col("doc_a"), col("doc_b")).localCheckpoint()
-    val nSample = ids.agg(count(lit(1)).as("n_sample_docs"))
-    val nArt = inArtifact.agg(count(lit(1)).as("n_artifact_pairs"))
-    val nRec = recomputed.agg(count(lit(1)).as("n_recomputed_pairs"))
-    val nMissing = recomputed.join(inArtifact, Seq("doc_a", "doc_b"), "left_anti")
-      .agg(count(lit(1)).as("n_missing"))
-    val nExtra = inArtifact.join(recomputed, Seq("doc_a", "doc_b"), "left_anti")
-      .agg(count(lit(1)).as("n_extra"))
-    nSample.crossJoin(nArt).crossJoin(nRec).crossJoin(nMissing).crossJoin(nExtra)
+    sample.agg(count(lit(1)).as("n_sample_docs"))
+      .crossJoin(Audit.keyedAuditDf(Seq("doc_a", "doc_b"),
+        minhashPairsDf(sample), inArtifact.select(col("doc_a"), col("doc_b"))))
+      .select(col("n_sample_docs"), col("n_store").as("n_artifact_pairs"),
+        col("n_truth").as("n_recomputed_pairs"), col("n_missing"),
+        col("n_orphans").as("n_extra"))
   }
 
   def dedupArtifactAudit(spark: SparkSession, dir: String): DataFrame =
-    artifactAuditDf(Tables.documents(spark, dir), verifiedPairs(spark, dir))
+    artifactAuditDf(Audit.docSample(Tables.documents(spark, dir)),
+      verifiedPairs(spark, dir))
 
   /** HASH-STORE AUDIT — the content-hash delta store member of the
     * store-audit family (pairs: [[artifactAuditDf]]; pack manifest:
@@ -431,14 +428,15 @@ object Dedup {
     * corpus-build stream's exact-dup state: one (h, doc_id) row per
     * ingested document, hive-partitioned by arrival batch
     * ([[graft.streaming.Streaming.runDeleteApply]]'s third store). Its
-    * health facts, each one bounded pass:
+    * health facts, from one [[Audit.keyedAuditDf]] pass on doc_id plus
+    * the batch spread:
     *
-    *   - `n_store` / `n_batches`: volume and batch spread (one agg);
+    *   - `n_store` / `n_batches`: volume and batch spread;
     *   - `n_multi`: doc_ids present in MORE than one row — an
     *     at-least-once replay that the idempotent append failed to
-    *     swallow (group-count, partial-aggregated);
+    *     swallow;
     *   - `n_missing` / `n_orphans`: coverage vs the corpus — a missed
-    *     batch / a delete apply that skipped this store (anti-joins);
+    *     batch / a delete apply that skipped this store;
     *   - `n_hash_mismatch`: md5 recomputed on the fixed splitmix64
     *     hash sample vs the stored h — sound because a row's hash
     *     depends only on its own document (the pairwise-local audit
@@ -448,30 +446,14 @@ object Dedup {
     * corruption, staleness, or replay duplication fails the hash gate.
     */
   def hashStoreAuditDf(docs: DataFrame, store: DataFrame,
-      sampleN: Int = SweepSampleDocs): DataFrame = {
-    val s = store.select(col("h"), col("doc_id"))
-    val volLeg = store.agg(count(lit(1)).as("n_store"),
-      countDistinct(col("batch")).as("n_batches"))
-    val multiLeg = s.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1)
-      .agg(count(lit(1)).as("n_multi"))
-    val ids = docs.select(col("doc_id"))
-    val missLeg = ids.join(s, Seq("doc_id"), "left_anti")
-      .agg(count(lit(1)).as("n_missing"))
-    val orphanLeg = s.select(col("doc_id")).join(ids, Seq("doc_id"), "left_anti")
-      .agg(count(lit(1)).as("n_orphans"))
-    val sample = hashSampleDocs(docs, sampleN)
-      .select(col("doc_id"), md5(col("text").cast("binary")).as("h_re"))
-    val sampLeg = sample.join(s, Seq("doc_id"), "left")
-      .agg(count(lit(1)).as("sample_n"),
-        coalesce(sum(when(col("h").isNull || col("h") =!= col("h_re"), 1L)),
-          lit(0L)).as("n_hash_mismatch"))
-    volLeg.crossJoin(multiLeg).crossJoin(missLeg).crossJoin(orphanLeg)
-      .crossJoin(sampLeg)
+      sample: DataFrame): DataFrame =
+    Audit.keyedAuditDf(Seq("doc_id"), docs, store.select(col("h"), col("doc_id")),
+      Some(sample.select(col("doc_id"), md5(col("text").cast("binary")).as("h_re"))),
+      Seq("n_hash_mismatch" -> (col("h").isNull || col("h") =!= col("h_re"))))
+      .crossJoin(store.agg(countDistinct(col("batch")).as("n_batches")))
       .select(col("n_store"), col("n_batches"), col("n_multi"),
         col("n_missing"), col("n_orphans"), col("sample_n"),
         col("n_hash_mismatch"))
-  }
 
   /** Per-(JVM, corpus) staged content-hash store: the per-doc schema
     * the stream maintains, three deterministic arrival batches
@@ -491,26 +473,31 @@ object Dedup {
   private val scratchHashStores =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  def qHashStoreAudit(spark: SparkSession, dir: String): DataFrame =
-    hashStoreAuditDf(Tables.documents(spark, dir),
-      graft.ops.Publish.readLive(spark, ensureHashStore(spark, dir)))
+  def qHashStoreAudit(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    hashStoreAuditDf(docs,
+      graft.ops.Publish.readLive(spark, ensureHashStore(spark, dir)),
+      Audit.docSample(docs))
+  }
 
   /** SKETCH-INDEX AUDIT — the oldest maintained store in the engine
     * ([[indexInit]] bootstraps it, [[indexIncremental]] and the
     * streaming runners append to it, [[deleteApply]] rewrites it) was
     * also the last without an audit: replay-duplicated sketches,
     * dropped batches, or band rot were invisible until they corrupted
-    * pair emission. Bounded legs over the two index tables:
+    * pair emission. Two [[Audit.keyedAuditDf]] passes: one on doc_id
+    * (the shingle table, with the band rows counted per doc alongside)
+    * and one on the band table's own key (doc_id, band_idx):
     *
     *   - `n_band_rows` / `n_shingle_rows`: volume (a healthy index has
     *     exactly [[Bands]] band rows and one shingle row per doc);
     *   - `n_band_dups` / `n_shingle_multi`: replayed appends the token
-    *     idempotence failed to swallow (group-counts on the stores'
-    *     own keys);
-    *   - `n_missing` / `n_orphans`: coverage vs the corpus (anti-joins
-    *     on the shingle table, the per-doc membership);
-    *   - `n_band_incomplete`: docs with a WRONG band count — a torn
-    *     multi-file append (one group-count against the corpus ids);
+    *     idempotence failed to swallow (keys of the stores' own key
+    *     holding more than one row);
+    *   - `n_missing` / `n_orphans`: coverage vs the corpus (on the
+    *     shingle table, the per-doc membership);
+    *   - `n_band_incomplete`: corpus docs with a WRONG band count — a
+    *     torn multi-file append;
     *   - `n_band_mismatch` / `n_shingle_mismatch`: sketches re-derived
     *     on the fixed splitmix64 hash sample vs the stored rows —
     *     sound because a doc's sketch depends only on its own text
@@ -521,48 +508,27 @@ object Dedup {
     * replay, or staleness fails the hash gate.
     */
   def indexAuditDf(docs: DataFrame, bands: DataFrame, shingles: DataFrame,
-      sampleN: Int = SweepSampleDocs): DataFrame = {
+      sample: DataFrame): DataFrame = {
     val b = bands.select(col("doc_id"), col("band_idx"), col("band_hash"))
-    val s = shingles.select(col("doc_id"), col("hs"))
-    val volLeg = b.agg(count(lit(1)).as("n_band_rows"))
-    val svolLeg = s.agg(count(lit(1)).as("n_shingle_rows"))
-    val dupLeg = b.groupBy(col("doc_id"), col("band_idx"))
-      .agg(count(lit(1)).as("c")).filter(col("c") > 1)
-      .agg(count(lit(1)).as("n_band_dups"))
-    val smultiLeg = s.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).agg(count(lit(1)).as("n_shingle_multi"))
-    val ids = docs.select(col("doc_id"))
-    val missLeg = ids.join(s.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .agg(count(lit(1)).as("n_missing"))
-    val orphanLeg = s.select(col("doc_id")).join(ids, Seq("doc_id"), "left_anti")
-      .agg(count(lit(1)).as("n_orphans"))
-    val incompleteLeg = ids.join(
-        b.groupBy(col("doc_id")).agg(count(lit(1)).as("nb")),
-        Seq("doc_id"), "left")
-      .filter(coalesce(col("nb"), lit(0L)) =!= Bands)
-      .agg(count(lit(1)).as("n_band_incomplete"))
-    val sample = hashSampleDocs(docs, sampleN).localCheckpoint()
     val reBands = bandTable(sample)
       .select(col("doc_id"), col("band_idx"), col("band_hash").as("bh_re"))
-    val bSampLeg = reBands.join(b, Seq("doc_id", "band_idx"), "left")
-      .groupBy(col("doc_id"), col("band_idx"))
-      .agg(max(when(col("band_hash").isNull ||
-        col("band_hash") =!= col("bh_re"), 1L).otherwise(0L)).as("mm"))
-      .agg(coalesce(sum(col("mm")), lit(0L)).as("n_band_mismatch"))
-    val reSh = shingleTable(sample).select(col("doc_id"), col("hs").as("hs_re"))
-    val sSampLeg = reSh.join(s, Seq("doc_id"), "left")
-      .groupBy(col("doc_id"))
-      .agg(max(when(col("hs").isNull ||
-        col("hs") =!= col("hs_re"), 1L).otherwise(0L)).as("mm"))
-      .agg(count(lit(1)).as("sample_n"),
-        coalesce(sum(col("mm")), lit(0L)).as("n_shingle_mismatch"))
-    volLeg.crossJoin(svolLeg).crossJoin(dupLeg).crossJoin(smultiLeg)
-      .crossJoin(missLeg).crossJoin(orphanLeg).crossJoin(incompleteLeg)
-      .crossJoin(bSampLeg).crossJoin(sSampLeg)
-      .select(col("n_band_rows"), col("n_shingle_rows"), col("n_band_dups"),
-        col("n_shingle_multi"), col("n_missing"), col("n_orphans"),
-        col("n_band_incomplete"), col("sample_n"), col("n_band_mismatch"),
-        col("n_shingle_mismatch"))
+    // the second key: band rows are unique per (doc_id, band_idx)
+    val bandLeg = Audit.keyedAuditDf(Seq("doc_id", "band_idx"), reBands, b,
+        Some(reBands), Seq("n_band_mismatch" ->
+          (col("band_hash").isNull || col("band_hash") =!= col("bh_re"))))
+      .select(col("n_store").as("n_band_rows"), col("n_multi").as("n_band_dups"),
+        col("n_band_mismatch"))
+    Audit.keyedAuditDf(Seq("doc_id"), docs, shingles.select(col("doc_id"), col("hs")),
+        Some(shingleTable(sample).select(col("doc_id"), col("hs").as("hs_re"))),
+        Seq("n_shingle_mismatch" -> (col("hs").isNull || col("hs") =!= col("hs_re"))),
+        sides = Seq("n_b" -> b),
+        keyAggs = Seq(Audit.sum0(when(col("n_t") > 0 && col("n_b") =!= Bands,
+          col("n_t"))).as("n_band_incomplete")))
+      .crossJoin(bandLeg)
+      .select(col("n_band_rows"), col("n_store").as("n_shingle_rows"),
+        col("n_band_dups"), col("n_multi").as("n_shingle_multi"),
+        col("n_missing"), col("n_orphans"), col("n_band_incomplete"),
+        col("sample_n"), col("n_band_mismatch"), col("n_shingle_mismatch"))
   }
 
   /** Per-(JVM, corpus) FULL-corpus staged index (the maintained
@@ -583,9 +549,11 @@ object Dedup {
 
   def dedupIndexAudit(spark: SparkSession, dir: String): DataFrame = {
     val idx = ensureFullIndex(spark, dir)
-    indexAuditDf(Tables.documents(spark, dir),
+    val docs = Tables.documents(spark, dir)
+    indexAuditDf(docs,
       graft.ops.StoreIO.read(spark, s"$idx/bands", Some(BandsDdl)),
-      graft.ops.StoreIO.read(spark, s"$idx/shingles", Some(ShinglesDdl)))
+      graft.ops.StoreIO.read(spark, s"$idx/shingles", Some(ShinglesDdl)),
+      Audit.docSample(docs))
   }
 
   /** CROSS-STORE CONSISTENCY — the check that completes the audit
@@ -596,38 +564,34 @@ object Dedup {
     * [[deleteApply]] rewrites) and drift independently — a delete apply
     * that crashed between store rewrites leaves every store
     * individually plausible and mutually wrong. All three are keyed by
-    * doc_id, so consistency is three anti-join counts over store-sized
-    * frames (the corpus is never read):
+    * doc_id, so consistency is one [[Audit.keyedAuditDf]] pass over
+    * store-sized frames — the hash registry as the truth set, the
+    * manifest as the store, the pair endpoints counted alongside (the
+    * corpus is never read):
     *
     *   - `n_manifest_not_hash` / `n_hash_not_manifest`: the pack
     *     manifest and the content-hash registry must cover the same
     *     documents (both are written per ingested doc);
     *   - `n_pair_endpoints_unregistered`: every verified-pair endpoint
     *     must be a registered document (a retraction that rewrote the
-    *     hash store but not the pair artifact shows here).
+    *     hash store but not the pair artifact shows here; counted per
+    *     distinct endpoint).
     *
     * Healthy = all-zero, oracle-pinned; ExtSpec stages a partial
     * delete apply and asserts the drift is reported exactly.
     */
   def storeConsistencyDf(hashes: DataFrame, manifest: DataFrame,
       pairs: DataFrame): DataFrame = {
-    val h = hashes.select(col("doc_id"))
-    val m = manifest.select(col("doc_id"))
-    val nH = h.agg(count(lit(1)).as("n_hash"))
-    val nM = m.agg(count(lit(1)).as("n_manifest"))
-    val nP = pairs.agg(count(lit(1)).as("n_pairs"))
-    val mNotH = m.join(h, Seq("doc_id"), "left_anti")
-      .agg(count(lit(1)).as("n_manifest_not_hash"))
-    val hNotM = h.join(m, Seq("doc_id"), "left_anti")
-      .agg(count(lit(1)).as("n_hash_not_manifest"))
     val endpoints = pairs.select(col("doc_a").as("doc_id"))
-      .unionByName(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    val orphanEp = endpoints.join(h, Seq("doc_id"), "left_anti")
-      .agg(count(lit(1)).as("n_pair_endpoints_unregistered"))
-    nH.crossJoin(nM).crossJoin(nP).crossJoin(mNotH).crossJoin(hNotM)
-      .crossJoin(orphanEp)
-      .select(col("n_hash"), col("n_manifest"), col("n_pairs"),
-        col("n_manifest_not_hash"), col("n_hash_not_manifest"),
+      .unionByName(pairs.select(col("doc_b").as("doc_id")))
+    Audit.keyedAuditDf(Seq("doc_id"), hashes, manifest.select(col("doc_id")),
+        sides = Seq("n_ep" -> endpoints),
+        keyAggs = Seq(count(when(col("n_ep") > 0 && col("n_t") === 0, 1))
+          .as("n_pair_endpoints_unregistered")))
+      .crossJoin(pairs.agg(count(lit(1)).as("n_pairs")))
+      .select(col("n_truth").as("n_hash"), col("n_store").as("n_manifest"),
+        col("n_pairs"), col("n_orphans").as("n_manifest_not_hash"),
+        col("n_missing").as("n_hash_not_manifest"),
         col("n_pair_endpoints_unregistered"))
   }
 
@@ -682,30 +646,25 @@ object Dedup {
     */
   def storeRepairDf(hashes: DataFrame, manifest: DataFrame,
       pairs: DataFrame): DataFrame = {
-    val hIds = hashes.select(col("doc_id")).distinct()
-    val mIds = manifest.select(col("doc_id")).distinct()
-    val member = hIds.join(mIds, Seq("doc_id"), "left_semi").localCheckpoint()
-    val dupH = hashes.agg(
-      (count(lit(1)) - countDistinct(col("doc_id"))).as("n_hash_dups_removed"))
-    val dupM = manifest.agg(
-      (count(lit(1)) - countDistinct(col("doc_id"))).as("n_manifest_dups_removed"))
-    val dupP = pairs.agg(
-      (count(lit(1)) - countDistinct(col("doc_a"), col("doc_b")))
-        .as("n_pair_dups_removed"))
-    val driftH = hIds.join(mIds, Seq("doc_id"), "left_anti")
-      .agg(count(lit(1)).as("n_hash_drift_removed"))
-    val driftM = mIds.join(hIds, Seq("doc_id"), "left_anti")
-      .agg(count(lit(1)).as("n_manifest_drift_removed"))
-    val pDistinct = pairs.select(col("doc_a"), col("doc_b")).distinct()
+    val member = hashes.select(col("doc_id")).distinct()
+      .join(manifest.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .localCheckpoint()
-    val pKept = pDistinct
+    val pDistinct = countDistinct(col("doc_a"), col("doc_b"))
+    val pKept = pairs.select(col("doc_a"), col("doc_b")).distinct()
       .join(member.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_semi")
       .join(member.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_semi")
       .agg(count(lit(1)).as("n_pairs"))
-    val pAll = pDistinct.agg(count(lit(1)).as("n_pair_distinct"))
-    val nMember = member.agg(count(lit(1)).as("n_member"))
-    dupH.crossJoin(dupM).crossJoin(dupP).crossJoin(driftH).crossJoin(driftM)
-      .crossJoin(pAll).crossJoin(pKept).crossJoin(nMember)
+    // membership per doc_id: the hash registry as truth, the manifest as store
+    Audit.keyedAuditDf(Seq("doc_id"), hashes, manifest.select(col("doc_id")),
+        keyAggs = Seq(
+          Audit.sum0(when(col("n_t") > 0, col("n_t") - 1)).as("n_hash_dups_removed"),
+          Audit.sum0(when(col("n_s") > 0, col("n_s") - 1)).as("n_manifest_dups_removed"),
+          count(when(col("n_t") > 0 && col("n_s") === 0, 1)).as("n_hash_drift_removed"),
+          count(when(col("n_s") > 0 && col("n_t") === 0, 1)).as("n_manifest_drift_removed"),
+          count(when(col("n_t") > 0 && col("n_s") > 0, 1)).as("n_member")))
+      .crossJoin(pairs.agg((count(lit(1)) - pDistinct).as("n_pair_dups_removed"),
+        pDistinct.as("n_pair_distinct")))
+      .crossJoin(pKept)
       .select(col("n_hash_dups_removed"), col("n_manifest_dups_removed"),
         col("n_pair_dups_removed"), col("n_hash_drift_removed"),
         col("n_manifest_drift_removed"),
@@ -793,9 +752,8 @@ object Dedup {
   // --- maintenance PLAN -------------------------------------------------------
   //
   // The DECIDE layer that ties the operate loop together: the audits
-  // OBSERVE ([[artifactAuditDf]] / [[hashStoreAuditDf]] /
-  // [[graft.ext.Packing.manifestAuditDf]] / [[storeConsistencyDf]] /
-  // [[graft.ext.Ivf.ivfLayoutAuditDf]] / [[graft.ext.Pq.codesAuditDf]]),
+  // OBSERVE (the ten store audits, each one [[Audit.keyedAuditDf]]
+  // declaration — [[storePlanDf]] lists them),
   // the reports PRICE (`q_delete_impact`, `ann_retrain_delta`,
   // `q_repack_delta`), and the apply operators EXECUTE ([[storeRepair]],
   // [[deleteApply]], [[graft.ext.Ivf.retrainApply]]); this emits what an
@@ -820,12 +778,12 @@ object Dedup {
   //     delete-dominance repair and coverage reingest never fight over
   //     the same document.
   //
-  // Healthy stores plan six `none` rows, which is what the DuckDB
+  // Healthy stores plan ten `none` rows, which is what the DuckDB
   // oracle pins — a plan that would touch a healthy store fails the
-  // hash gate. Cost = the six audits (store-sized legs + fixed-sample
-  // recomputes) in one query.
+  // hash gate. Cost = the ten audits (one keyed pass per store key
+  // over one draw of each hash sample) in one query.
 
-  /** The plan over six explicit audit rows — factored so the spec can
+  /** The plan over ten explicit audit rows — factored so the spec can
     * stage corrupted audits and pin the action routing.
     *
     * Priority per store: for the MEMBERSHIP stores (hashes, manifest)
@@ -901,6 +859,29 @@ object Dedup {
       .orderBy("store")
   }
 
+  /** The ten store audits over ONE draw of each hash sample (documents,
+    * embeddings), routed by [[maintenancePlanDf]]. [[qMaintenancePlan]]
+    * and [[runMaintenance]] differ only in how they read the stores.
+    */
+  def storePlanDf(docs: DataFrame, emb: DataFrame, pairs: DataFrame,
+      hashes: DataFrame, manifest: DataFrame, layout: DataFrame,
+      codes: DataFrame, bands: DataFrame, shingles: DataFrame,
+      ivfpq: DataFrame, packed: DataFrame, features: DataFrame,
+      cents: Seq[Seq[Float]], codebooks: Seq[Seq[Seq[Float]]]): DataFrame = {
+    val ds = Audit.docSample(docs)
+    val es = Audit.vecSample(emb)
+    maintenancePlanDf(artifactAuditDf(ds, pairs),
+      hashStoreAuditDf(docs, hashes, ds),
+      Packing.manifestAuditDf(docs, manifest, ds),
+      storeConsistencyDf(hashes, manifest, pairs),
+      Ivf.ivfLayoutAuditDf(emb, layout, cents, es),
+      Pq.codesAuditDf(emb, codes, codebooks, es),
+      indexAuditDf(docs, bands, shingles, ds),
+      Pq.ivfPqLayoutAuditDf(emb, ivfpq, cents, codebooks, es),
+      Packing.packedAuditDf(docs, packed, ds),
+      Backfill.featureAuditDf(docs, features, ds))
+  }
+
   /** EXECUTES a maintenance plan to convergence: compute the plan over
     * the on-disk stores, run each scheduled remedy, re-plan, repeat
     * until every store plans `none` (or `maxRounds`). A store with
@@ -966,24 +947,12 @@ object Dedup {
     // in-flight appends are audited and a missing store reads as empty
     def read(path: String, ddl: String): DataFrame =
       StoreIO.read(spark, path, Some(ddl))
-    def plan(): DataFrame = maintenancePlanDf(
-      artifactAuditDf(docs, pairsArtifactRead(spark, pairsPath)),
-      hashStoreAuditDf(docs, read(hashesRoot, HashStoreDdl)),
-      graft.ext.Packing.manifestAuditDf(docs,
-        read(manifestPath, ManifestDdl)),
-      storeConsistencyDf(read(hashesRoot, HashStoreDdl),
-        read(manifestPath, ManifestDdl),
-        pairsArtifactRead(spark, pairsPath)),
-      Ivf.ivfLayoutAuditDf(emb, read(layoutPath, LayoutDdl), cents),
-      Pq.codesAuditDf(emb, read(codesPath, CodesDdl), codebooks),
-      indexAuditDf(docs, read(s"$indexPath/bands", BandsDdl),
-        read(s"$indexPath/shingles", ShinglesDdl)),
-      Pq.ivfPqLayoutAuditDf(emb, read(ivfpqPath, IvfPqDdl),
-        cents, codebooks),
-      graft.ext.Packing.packedAuditDf(docs,
-        read(packedPath, PackedDdl)),
-      graft.ext.Backfill.featureAuditDf(docs,
-        read(featuresPath, FeaturesDdl)))
+    def plan(): DataFrame = storePlanDf(docs, emb, read(pairsPath, PairsDdl),
+      read(hashesRoot, HashStoreDdl), read(manifestPath, ManifestDdl),
+      read(layoutPath, LayoutDdl), read(codesPath, CodesDdl),
+      read(s"$indexPath/bands", BandsDdl), read(s"$indexPath/shingles", ShinglesDdl),
+      read(ivfpqPath, IvfPqDdl), read(packedPath, PackedDdl),
+      read(featuresPath, FeaturesDdl), cents, codebooks)
       .localCheckpoint()
     // every remedy is a snapshot fold (StoreIO.rewrite, reentrant under
     // the loop's lease): a re-derivation from the corpus SUBSUMES the
@@ -1102,34 +1071,18 @@ object Dedup {
       "alpha_permille BIGINT"
 
   def qMaintenancePlan(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val emb = Tables.embeddings(spark, dir)
-    val pairs = verifiedPairs(spark, dir)
-    val hashes = graft.ops.Publish.readLive(spark, ensureHashStore(spark, dir))
-    val manifest = graft.ops.Publish.readLive(spark, graft.ext.Packing.ensureManifest(spark, dir))
+    def live(path: String) = graft.ops.Publish.readLive(spark, path)
     val idx = ensureFullIndex(spark, dir)
-    maintenancePlanDf(
-      artifactAuditDf(docs, pairs),
-      hashStoreAuditDf(docs, hashes),
-      graft.ext.Packing.manifestAuditDf(docs, manifest),
-      storeConsistencyDf(hashes, manifest, pairs),
-      Ivf.ivfLayoutAuditDf(emb,
-        graft.ops.Publish.readLive(spark, Ivf.ensureLayout(spark, dir)),
-        Ivf.ensureModel(spark, dir)),
-      Pq.codesAuditDf(emb,
-        graft.ops.Publish.readLive(spark, Pq.ensureCodes(spark, dir)),
-        Pq.ensureModel(spark, dir)),
-      indexAuditDf(docs,
-        graft.ops.StoreIO.read(spark, s"$idx/bands", Some(BandsDdl)),
-        graft.ops.StoreIO.read(spark, s"$idx/shingles", Some(ShinglesDdl))),
-      Pq.ivfPqLayoutAuditDf(emb,
-        graft.ops.Publish.readLive(spark, Pq.ensureIvfPqLayout(spark, dir)),
-        Ivf.ensureModel(spark, dir), Pq.ensureModel(spark, dir)),
-      graft.ext.Packing.packedAuditDf(docs,
-        graft.ops.Publish.readLive(spark, graft.ext.Packing.ensurePackedStore(spark, dir))),
-      graft.ext.Backfill.featureAuditDf(docs,
-        graft.ops.Publish.readLive(spark,
-          graft.ext.Backfill.ensureFeatureArtifactFull(spark, dir))))
+    storePlanDf(Tables.documents(spark, dir), Tables.embeddings(spark, dir),
+      verifiedPairs(spark, dir), live(ensureHashStore(spark, dir)),
+      live(Packing.ensureManifest(spark, dir)), live(Ivf.ensureLayout(spark, dir)),
+      live(Pq.ensureCodes(spark, dir)),
+      graft.ops.StoreIO.read(spark, s"$idx/bands", Some(BandsDdl)),
+      graft.ops.StoreIO.read(spark, s"$idx/shingles", Some(ShinglesDdl)),
+      live(Pq.ensureIvfPqLayout(spark, dir)),
+      live(Packing.ensurePackedStore(spark, dir)),
+      live(Backfill.ensureFeatureArtifactFull(spark, dir)),
+      Ivf.ensureModel(spark, dir), Pq.ensureModel(spark, dir))
   }
 
   // --- delete APPLY -----------------------------------------------------------
@@ -1651,25 +1604,7 @@ object Dedup {
     */
   val SweepSampleDocs = 1024
 
-  /** The first [[SweepSampleDocs]] documents in splitmix64(doc_id)
-    * order with id tie-break — the [[Ivf.trainCentroids]] sampling
-    * discipline: stable across runs and partitionings, and UNIFORM
-    * whatever the ids encode (an id-prefix draw would sample one crawl
-    * / one day / one source at corpus scale). The hash order + limit
-    * is a TakeOrdered (per-partition top-n, then a bounded merge — no
-    * global sort), and the sample is locally checkpointed because the
-    * sweep pipelines consume it from several branches.
-    */
-  // private[ext]: the ONE Spark-side copy of the sampling rule — every
-  // sampled leg in the ext package (audits, sampled sweeps, the CI
-  // estimator) must draw through here so the rule can never drift from
-  // its oracle mirror (MixSql.hashSampleCtes) one callsite at a time
-  private[ext] def hashSampleDocs(docs: DataFrame, n: Int = SweepSampleDocs): DataFrame =
-    docs.orderBy(graft.functions.VectorFns.mix64(col("doc_id")), col("doc_id"))
-      .limit(n)
-      .localCheckpoint()
-
-  /** DuckDB mirror of [[hashSampleDocs]] — [[graft.functions.MixSql]]'s
+  /** DuckDB mirror of [[Audit.docSample]] — [[graft.functions.MixSql]]'s
     * ONE hash-sample chain, ending in `documents_s` (the sampled
     * documents table the sampled oracles then read like `documents`).
     */
@@ -1678,7 +1613,7 @@ object Dedup {
        |documents_s AS MATERIALIZED (
        |  SELECT d.* FROM documents d JOIN swsamp USING (doc_id))""".stripMargin
 
-  /** [[dedupThresholdSweep]] over the [[hashSampleDocs]] sample — the
+  /** [[dedupThresholdSweep]] over the [[Audit.docSample]] sample — the
     * form of the knob-picking measurement that stays RUNNABLE at
     * 100 TB: the exact sweep's one recall-1 pair pass is corpus×corpus
     * (its x100 wall is the repo's heaviest), while this one's is
@@ -1692,16 +1627,16 @@ object Dedup {
     * ([[sampledDocsCtes]]), so the entry stays hash-checkable.
     */
   def dedupThresholdSweepSampled(spark: SparkSession, dir: String): DataFrame =
-    thresholdSweepDf(hashSampleDocs(Tables.documents(spark, dir)))
+    thresholdSweepDf(Audit.docSample(Tables.documents(spark, dir)))
 
-  /** [[dedupLshCalibration]] over the [[hashSampleDocs]] sample — same
+  /** [[dedupLshCalibration]] over the [[Audit.docSample]] sample — same
     * scale argument as [[dedupThresholdSweepSampled]]: banding
     * catch-rates and the MinHash estimator mean are per-pair FRACTIONS,
     * so a fixed uniform sample estimates them at constant cost where
     * the exact form's truth pass grows with the corpus.
     */
   def dedupLshCalibrationSampled(spark: SparkSession, dir: String): DataFrame =
-    lshCalibrationDf(hashSampleDocs(Tables.documents(spark, dir)))
+    lshCalibrationDf(Audit.docSample(Tables.documents(spark, dir)))
 
   /** Dedup-threshold sensitivity curve — the knob-picking measurement run
     * BEFORE committing a near-dup threshold at corpus scale: exact

@@ -349,18 +349,20 @@ object Ivf {
     * [[writeIvfPartitioned]] layout is MAINTAINED state (ingest writes,
     * [[retrainApply]] rewrites, a delete apply filters), and a serving
     * process must be able to check it without re-deriving it. Health
-    * facts, each one bounded pass:
+    * facts, from one [[Audit.keyedAuditDf]] pass on vec_id plus the
+    * list spread:
     *
     *   - `n_layout` / `n_lists`: volume and how many inverted lists are
-    *     occupied (one aggregate);
+    *     occupied;
     *   - `n_multi`: vec_ids present in MORE than one layout row — a
     *     replayed ingest append or a retrain apply that crashed after
-    *     staging (group-count);
+    *     staging;
     *   - `n_missing` / `n_orphans`: coverage vs the corpus — a dropped
-    *     batch / a takedown that skipped this store (anti-joins);
+    *     batch / a takedown that skipped this store;
     *   - `n_misassigned` / `n_norm_mismatch`: assignment and stored
     *     norm recomputed under the LIVE model on the fixed
-    *     splitmix64-hash sample (the [[trainCentroids]] draw) vs the
+    *     splitmix64-hash sample (`sample`, the [[Audit.vecSample]]
+    *     draw), once per sampled vec_id, vs the
     *     layout's rows — sound because a row's list_id and nrm depend
     *     only on its own vector and the model (the pairwise-local audit
     *     argument), so a healthy layout's sample slice matches exactly.
@@ -371,49 +373,27 @@ object Ivf {
     * the hash gate.
     */
   def ivfLayoutAuditDf(emb: DataFrame, layout: DataFrame,
-      cents: Seq[Seq[Float]], sampleN: Int = SampleN): DataFrame = {
+      cents: Seq[Seq[Float]], sample: DataFrame): DataFrame = {
     require(cents.nonEmpty, "ivfLayoutAuditDf: empty quantizer")
     val lay = layout.select(col("vec_id"), col("list_id").cast("int").as("list_id"),
       col("nrm"))
-    val volLeg = lay.agg(count(lit(1)).as("n_layout"),
-      countDistinct(col("list_id")).as("n_lists"))
-    val multiLeg = lay.groupBy(col("vec_id")).agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1)
-      .agg(count(lit(1)).as("n_multi"))
-    val ids = emb.select(col("vec_id"))
-    val missLeg = ids.join(lay, Seq("vec_id"), "left_anti")
-      .agg(count(lit(1)).as("n_missing"))
-    val orphanLeg = lay.select(col("vec_id")).join(ids, Seq("vec_id"), "left_anti")
-      .agg(count(lit(1)).as("n_orphans"))
-    val sample = emb
-      .orderBy(VectorFns.mix64(col("vec_id")), col("vec_id")).limit(sampleN)
-      .select(col("vec_id"),
-        element_at(NearestCentroids(col("embedding"), cents, 1), 1).as("list_re"),
-        VectorFns.l2norm(col("embedding")).as("nrm_re"))
-    // per-vec_id aggregate between join and count: a replay-duplicated
-    // store row for a sampled vec_id must neither inflate sample_n
-    // beyond least(n, sampleN) nor double-count its mismatches (n_multi
-    // already flags the dup itself) — a vec_id counts misassigned once
-    // if ANY of its rows disagrees with the recompute
-    val sampLeg = sample.join(lay, Seq("vec_id"), "left")
-      .groupBy(col("vec_id"))
-      .agg(max(when(col("list_id").isNull ||
-          col("list_id") =!= col("list_re"), 1L).otherwise(0L)).as("mis"),
-        max(when(col("nrm").isNull ||
-          col("nrm") =!= col("nrm_re"), 1L).otherwise(0L)).as("nmm"))
-      .agg(count(lit(1)).as("sample_n"),
-        coalesce(sum(col("mis")), lit(0L)).as("n_misassigned"),
-        coalesce(sum(col("nmm")), lit(0L)).as("n_norm_mismatch"))
-    volLeg.crossJoin(multiLeg).crossJoin(missLeg).crossJoin(orphanLeg)
-      .crossJoin(sampLeg)
-      .select(col("n_layout"), col("n_lists"), col("n_multi"),
+    Audit.keyedAuditDf(Seq("vec_id"), emb, lay,
+        Some(sample.select(col("vec_id"),
+          element_at(NearestCentroids(col("embedding"), cents, 1), 1).as("list_re"),
+          VectorFns.l2norm(col("embedding")).as("nrm_re"))),
+        Seq("n_misassigned" -> (col("list_id").isNull || col("list_id") =!= col("list_re")),
+          "n_norm_mismatch" -> (col("nrm").isNull || col("nrm") =!= col("nrm_re"))))
+      .crossJoin(lay.agg(countDistinct(col("list_id")).as("n_lists")))
+      .select(col("n_store").as("n_layout"), col("n_lists"), col("n_multi"),
         col("n_missing"), col("n_orphans"), col("sample_n"),
         col("n_misassigned"), col("n_norm_mismatch"))
   }
 
-  def annLayoutAudit(spark: SparkSession, dir: String): DataFrame =
-    ivfLayoutAuditDf(Tables.embeddings(spark, dir),
-      graft.ops.Publish.readLive(spark, ensureLayout(spark, dir)), ensureModel(spark, dir))
+  def annLayoutAudit(spark: SparkSession, dir: String): DataFrame = {
+    val emb = Tables.embeddings(spark, dir)
+    ivfLayoutAuditDf(emb, graft.ops.Publish.readLive(spark, ensureLayout(spark, dir)),
+      ensureModel(spark, dir), Audit.vecSample(emb))
+  }
 
   /** nProbe grid for [[annProbeCurve]] — doubling from "cheapest possible"
     * to half the centroid count; the candidate sets nest, so recall is

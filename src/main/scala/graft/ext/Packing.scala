@@ -2,7 +2,7 @@ package graft.ext
 
 import graft.Tables
 import graft.functions.TextFns
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -303,23 +303,6 @@ object Packing {
     q.awaitTermination()
   }
 
-  /** The textbook form of the same packing manifest — ONE window over the
-    * global doc_id order, which Spark executes on a single task. Kept as
-    * the in-repo oracle for [[packSequences]] (PackingSpec asserts result
-    * equality); never registered as a driver query.
-    */
-  def packSequencesGlobalWindow(docs: DataFrame, seqLen: Long = 512L): DataFrame = {
-    val w = Window.orderBy("doc_id").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tokenCosts(docs)
-      .withColumn("t_off", sum("cost").over(w) - col("cost"))
-      .withColumn("seq_id", expr(s"t_off div $seqLen"))
-      .withColumn("n_seqs",
-        when(col("n_tok") === 0L, lit(0L))
-          .otherwise(expr(s"(t_off + n_tok - 1) div $seqLen") - col("seq_id") + lit(1L)))
-      .select("doc_id", "n_tok", "t_off", "seq_id", "n_seqs")
-      .orderBy("doc_id")
-  }
-
   /** Per-sequence occupancy profile over the packed manifest: how many
     * documents START in each training sequence and the token mass they
     * contribute — the skew check a pack run ends with (a sequence
@@ -418,114 +401,91 @@ object Packing {
     scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** MANIFEST AUDIT — one health row for a stored pack manifest, from
-    * four bounded legs (none of which repacks the corpus):
+    * one [[Audit.keyedAuditDf]] pass on doc_id plus the bucketed
+    * adjacency check (neither repacks the corpus):
     *
     *   - `n_formula_bad`: rows whose (seq_id, n_seqs) disagree with
-    *     their own (t_off, n_tok) — the per-row arithmetic invariant;
-    *     one manifest scan, fused with `n_rows`/`total_cost`.
+    *     their own (t_off, n_tok) — the per-row arithmetic invariant,
+    *     summed in the keyed pass with `n_rows`/`total_cost`.
     *   - `n_adjacency_bad`: the prefix-sum invariant t_off(next) =
     *     t_off + n_tok + 1 in doc_id order. Checked WITHOUT a global
     *     window (corpus-sized single-task input — the shape the
     *     unpartitioned-window pin forbids): rows bucket by a doc_id
     *     range split exactly as [[packSequences]] packs, adjacency runs
     *     as a per-bucket `lead`, and the ≤`buckets` bucket summaries
-    *     (first offset via `min_by`, last end via `max_by`) close the
-    *     chain across boundaries on a driver-bounded frame — including
-    *     t_off(first) = 0.
+    *     (in-bucket breaks, first offset via `min_by`, last end via
+    *     `max_by`) close the chain across boundaries on a frame of at
+    *     most `buckets` rows — including t_off(first) = 0.
     *   - `n_missing` / `n_orphans`: corpus docs absent from the
     *     manifest / manifest rows whose document is gone (a delete
-    *     apply that rewrote the corpus but not the manifest) — two
-    *     anti-join counts.
+    *     apply that rewrote the corpus but not the manifest).
     *   - `n_dup_rows`: doc_ids holding MORE than one manifest row — a
     *     replayed [[packDelta]] append that the max-doc_id idempotence
-    *     guard failed to swallow (one group-count pass; also the reason
+    *     guard failed to swallow (also the reason
     *     the adjacency verdict can be trusted: with duplicates present
     *     the per-bucket `lead` order is ambiguous, so dup detection is
     *     its own explicit column, not a side effect).
     *   - `n_tok_mismatch`: token counts recomputed on the fixed
-    *     splitmix64 hash sample (the [[graft.ext.Dedup.artifactAuditDf]]
-    *     draw) vs the stored rows — sound because n_tok depends only on
-    *     the row's own document, so a healthy manifest's sample slice
-    *     matches exactly.
+    *     splitmix64 hash sample (`sample`, the [[Audit.docSample]]
+    *     draw) vs the stored rows, once per sampled doc — sound because
+    *     n_tok depends only on the row's own document, so a healthy
+    *     manifest's sample slice matches exactly.
     *
     * All violation counts are 0 on a healthy store — which is what the
     * DuckDB oracle pins, so any corruption, staleness, or drift fails
     * the hash gate. PackingSpec plants each corruption class and
     * asserts the audit catches it.
     */
-  def manifestAuditDf(docs: DataFrame, manifest: DataFrame, seqLen: Long = 512L,
-      buckets: Int = 64, sampleN: Int = 1024): DataFrame = {
+  def manifestAuditDf(docs: DataFrame, manifest: DataFrame, sample: DataFrame,
+      seqLen: Long = 512L, buckets: Int = 64): DataFrame = {
     val m = manifest.select(col("doc_id"), col("n_tok"), col("t_off"),
       col("seq_id"), col("n_seqs"))
-    // leg 1: per-row arithmetic + totals, one fused scan
-    val rowLeg = m.agg(
-      count(lit(1)).as("n_rows"),
-      coalesce(sum(col("n_tok") + 1), lit(0L)).as("total_cost"),
-      coalesce(sum(when(
-        col("n_tok") < 0 || col("t_off") < 0 ||
-        col("seq_id") =!= expr(s"t_off div $seqLen") ||
-        col("n_seqs") =!= when(col("n_tok") === 0L, lit(0L))
-          .otherwise(expr(s"(t_off + n_tok - 1) div $seqLen") - col("seq_id") + lit(1L)),
-        1L)), lit(0L)).as("n_formula_bad"))
-    // leg 2: prefix-sum adjacency, bucketed (the packSequences split)
-    val bounds = m.agg(min(col("doc_id")), max(col("doc_id"))).head()
-    val adjLeg =
-      if (bounds.isNullAt(0))
-        docs.sparkSession.range(1).select(lit(0L).as("n_adjacency_bad"))
-      else {
-        val lo = bounds.getLong(0); val hi = bounds.getLong(1)
-        val width = math.max(1L, (hi - lo) / buckets + 1L)
-        val b = m.withColumn("bucket",
-            ((col("doc_id") - lit(lo)) / lit(width)).cast("long"))
-          .withColumn("nd", col("t_off") + col("n_tok") + lit(1L))
-        val wB = Window.partitionBy("bucket").orderBy("doc_id")
-        val inBucket = b
-          .withColumn("nxt", lead(col("t_off"), 1).over(wB))
-          .agg(coalesce(sum(when(
-            col("nxt").isNotNull && col("nxt") =!= col("nd"), 1L)), lit(0L))
-            .as("bad_in"))
-        // ≤`buckets` summary rows: the one place an unpartitioned window
-        // is sound (driver-bounded frame; pinned in PlanSpec's allowlist)
-        val boundary = b.groupBy(col("bucket"))
-          .agg(min_by(col("t_off"), col("doc_id")).as("first_off"),
-            max_by(col("nd"), col("doc_id")).as("last_end"))
-          .withColumn("prev_end", lag(col("last_end"), 1)
-            .over(Window.orderBy(col("bucket"))))
-          .agg(coalesce(sum(when(
-            coalesce(col("prev_end"), lit(0L)) =!= col("first_off"), 1L)),
-            lit(0L)).as("bad_boundary"))
-        inBucket.crossJoin(boundary)
-          .select((col("bad_in") + col("bad_boundary")).as("n_adjacency_bad"))
-      }
-    // leg 3: coverage, two anti-join counts + replay duplicates
-    val ids = docs.select(col("doc_id"))
-    val mids = m.select(col("doc_id"))
-    val missLeg = ids.join(mids, Seq("doc_id"), "left_anti")
-      .agg(count(lit(1)).as("n_missing"))
-    val orphanLeg = mids.join(ids, Seq("doc_id"), "left_anti")
-      .agg(count(lit(1)).as("n_orphans"))
-    val dupLeg = mids.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1)
-      .agg(count(lit(1)).as("n_dup_rows"))
-    // leg 4: sample-bounded token-count recompute (the ONE shared draw)
-    val sample = Dedup.hashSampleDocs(docs, sampleN)
-      .select(col("doc_id"), nTok.as("n_tok_re"))
-    val sampLeg = sample
-      .join(m.select(col("doc_id"), col("n_tok")), Seq("doc_id"), "left")
-      .agg(count(lit(1)).as("sample_n"),
-        coalesce(sum(when(col("n_tok").isNull ||
-          col("n_tok") =!= col("n_tok_re"), 1L)), lit(0L)).as("n_tok_mismatch"))
-    rowLeg.crossJoin(adjLeg).crossJoin(missLeg).crossJoin(orphanLeg)
-      .crossJoin(dupLeg).crossJoin(sampLeg)
-      .select(col("n_rows"), col("total_cost"), col("n_formula_bad"),
+    // prefix-sum adjacency, bucketed (the packSequences split); an
+    // empty manifest has no buckets and sums to 0
+    val bounds = m.agg(coalesce(min(col("doc_id")), lit(0L)),
+      coalesce(max(col("doc_id")), lit(0L))).head()
+    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    val width = math.max(1L, (hi - lo) / buckets + 1L)
+    // ≤`buckets` summary rows: the one place an unpartitioned window is
+    // sound (a bounded frame; pinned in PlanSpec's allowlist)
+    val adjLeg = m
+      .withColumn("bucket", ((col("doc_id") - lit(lo)) / lit(width)).cast("long"))
+      .withColumn("nd", col("t_off") + col("n_tok") + lit(1L))
+      .withColumn("nxt", lead(col("t_off"), 1).over(
+        Window.partitionBy("bucket").orderBy("doc_id")))
+      .groupBy(col("bucket"))
+      .agg(Audit.sum0(Audit.flag(col("nxt").isNotNull && col("nxt") =!= col("nd")))
+          .as("bad_in"),
+        min_by(col("t_off"), col("doc_id")).as("first_off"),
+        max_by(col("nd"), col("doc_id")).as("last_end"))
+      .withColumn("prev_end", lag(col("last_end"), 1).over(Window.orderBy(col("bucket"))))
+      .agg((Audit.sum0(col("bad_in")) + Audit.sum0(Audit.flag(
+        coalesce(col("prev_end"), lit(0L)) =!= col("first_off")))).as("n_adjacency_bad"))
+    Audit.keyedAuditDf(Seq("doc_id"), docs, m,
+        Some(sample.select(col("doc_id"), nTok.as("n_tok_re"))),
+        Seq("n_tok_mismatch" -> (col("n_tok").isNull || col("n_tok") =!= col("n_tok_re"))),
+        Seq("total_cost" -> (col("n_tok") + 1L),
+          "n_formula_bad" -> Audit.flag(formulaBad(seqLen))))
+      .crossJoin(adjLeg)
+      .select(col("n_store").as("n_rows"), col("total_cost"), col("n_formula_bad"),
         col("n_adjacency_bad"), col("n_missing"), col("n_orphans"),
-        col("n_dup_rows"), col("sample_n"), col("n_tok_mismatch"))
+        col("n_multi").as("n_dup_rows"), col("sample_n"), col("n_tok_mismatch"))
   }
 
+  /** A row whose (seq_id, n_seqs) disagree with its own (t_off, n_tok). */
+  private def formulaBad(seqLen: Long): Column =
+    col("n_tok") < 0 || col("t_off") < 0 ||
+      col("seq_id") =!= expr(s"t_off div $seqLen") ||
+      col("n_seqs") =!= when(col("n_tok") === 0L, lit(0L))
+        .otherwise(expr(s"(t_off + n_tok - 1) div $seqLen") - col("seq_id") + lit(1L))
+
   /** Driver entry: audit the staged (healthy) manifest artifact. */
-  def qManifestAudit(spark: SparkSession, dir: String): DataFrame =
-    manifestAuditDf(Tables.documents(spark, dir),
-      graft.ops.Publish.readLive(spark, ensureManifest(spark, dir)))
+  def qManifestAudit(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    manifestAuditDf(docs,
+      graft.ops.Publish.readLive(spark, ensureManifest(spark, dir)),
+      Audit.docSample(docs))
+  }
 
   /** Per-(JVM, corpus) staged PHYSICAL pack layout ([[writePacked]]) —
     * the shard-partitioned store a trainer reads; built once at ingest
@@ -544,62 +504,39 @@ object Packing {
 
   /** PACKED-STORE AUDIT — the physical shard layout member of the
     * store-audit family: [[manifestAuditDf]] trusts the COORDINATES,
-    * this trusts the layout a trainer actually reads. Bounded legs:
-    * volume + shard spread; replay duplicates; coverage anti-joins vs
-    * the corpus; the per-row arithmetic invariant (seq_id/n_seqs from
+    * this trusts the layout a trainer actually reads. One
+    * [[Audit.keyedAuditDf]] pass on doc_id plus the shard spread:
+    * volume; replay duplicates; coverage vs the corpus; the per-row
+    * arithmetic invariant (seq_id/n_seqs from
     * t_off/n_tok — the manifest formula) plus the SHARD rule
     * (shard = seq_id div shardSeqs — a row filed in the wrong shard
     * directory serves the wrong trainer); and token counts re-derived
     * from the rows' own carried text on the fixed hash sample. All
     * violations zero on a healthy store, oracle-pinned.
     */
-  def packedAuditDf(docs: DataFrame, packed: DataFrame, seqLen: Long = 512L,
-      shardSeqs: Long = 1000L, sampleN: Int = 1024): DataFrame = {
+  def packedAuditDf(docs: DataFrame, packed: DataFrame, sample: DataFrame,
+      seqLen: Long = 512L, shardSeqs: Long = 1000L): DataFrame = {
     val p = packed.select(col("doc_id"), col("n_tok"), col("t_off"),
       col("seq_id"), col("n_seqs"), col("shard").cast("long").as("shard"),
       col("text"))
-    val rowLeg = p.agg(
-      count(lit(1)).as("n_rows"),
-      countDistinct(col("shard")).as("n_shards"),
-      coalesce(sum(when(
-        col("n_tok") < 0 || col("t_off") < 0 ||
-        col("seq_id") =!= expr(s"t_off div $seqLen") ||
-        col("n_seqs") =!= when(col("n_tok") === 0L, lit(0L))
-          .otherwise(expr(s"(t_off + n_tok - 1) div $seqLen") - col("seq_id") + lit(1L)),
-        1L)), lit(0L)).as("n_formula_bad"),
-      coalesce(sum(when(col("shard") =!= expr(s"seq_id div $shardSeqs"), 1L)),
-        lit(0L)).as("n_shard_bad"))
-    val ids = docs.select(col("doc_id"))
-    val pids = p.select(col("doc_id"))
-    val multiLeg = pids.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).agg(count(lit(1)).as("n_multi"))
-    val missLeg = ids.join(pids, Seq("doc_id"), "left_anti")
-      .agg(count(lit(1)).as("n_missing"))
-    val orphanLeg = pids.join(ids, Seq("doc_id"), "left_anti")
-      .agg(count(lit(1)).as("n_orphans"))
     // the carried text IS the row's own payload: re-tokenize it (no
-    // corpus join needed), sample-bounded by the shared hash draw
-    val sampleIds = Dedup.hashSampleDocs(docs, sampleN).select(col("doc_id"))
-      .localCheckpoint()
-    val sampLeg = sampleIds
-      .join(p.select(col("doc_id"), col("n_tok"),
-        size(TextFns.tokens(col("text"))).cast("long").as("n_tok_re")),
-        Seq("doc_id"), "left")
-      .groupBy(col("doc_id"))
-      .agg(max(when(col("n_tok").isNull ||
-        col("n_tok") =!= col("n_tok_re"), 1L).otherwise(0L)).as("mm"))
-      .agg(count(lit(1)).as("sample_n"),
-        coalesce(sum(col("mm")), lit(0L)).as("n_tok_mismatch"))
-    rowLeg.crossJoin(multiLeg).crossJoin(missLeg).crossJoin(orphanLeg)
-      .crossJoin(sampLeg)
-      .select(col("n_rows"), col("n_shards"), col("n_multi"),
+    // corpus join needed) on the sampled keys
+    Audit.keyedAuditDf(Seq("doc_id"), docs, p, Some(sample.select(col("doc_id"))),
+        Seq("n_tok_mismatch" -> (col("n_tok").isNull || col("n_tok") =!= nTok)),
+        Seq("n_formula_bad" -> Audit.flag(formulaBad(seqLen)),
+          "n_shard_bad" -> Audit.flag(col("shard") =!= expr(s"seq_id div $shardSeqs"))))
+      .crossJoin(p.agg(countDistinct(col("shard")).as("n_shards")))
+      .select(col("n_store").as("n_rows"), col("n_shards"), col("n_multi"),
         col("n_missing"), col("n_orphans"), col("n_formula_bad"),
         col("n_shard_bad"), col("sample_n"), col("n_tok_mismatch"))
   }
 
-  def qPackedAudit(spark: SparkSession, dir: String): DataFrame =
-    packedAuditDf(Tables.documents(spark, dir),
-      graft.ops.Publish.readLive(spark, ensurePackedStore(spark, dir)))
+  def qPackedAudit(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    packedAuditDf(docs,
+      graft.ops.Publish.readLive(spark, ensurePackedStore(spark, dir)),
+      Audit.docSample(docs))
+  }
 
   def qPackSequences(spark: SparkSession, dir: String): DataFrame =
     packSequences(Tables.documents(spark, dir))

@@ -251,62 +251,45 @@ object Pq {
     * ([[graft.ext.Ivf.ivfLayoutAuditDf]] is the IVF twin): the
     * persisted code table ([[ensureCodes]]) is what serving reads, so
     * it needs the same trust check as every other maintained store.
-    * Bounded legs: volume; replay duplicates (vec_ids in >1 row);
-    * coverage anti-joins vs the corpus; rows whose code vector is not
-    * exactly M codes (a torn write — one linear size() pass); and codes
+    * One [[Audit.keyedAuditDf]] pass on vec_id: volume; replay
+    * duplicates (vec_ids in >1 row); coverage vs the corpus; rows whose
+    * code vector is not exactly M codes (a torn write); and codes
     * re-derived under the live codebooks on the fixed splitmix64 hash
-    * sample vs the stored rows ([[graft.functions.PqEncode]] is
-    * deterministic and a row's codes depend only on its own vector and
-    * the model — the pairwise-local audit argument). Healthy = all-zero
+    * sample ([[Audit.vecSample]]) vs the stored rows
+    * ([[graft.functions.PqEncode]] is deterministic and a row's codes
+    * depend only on its own vector and the model — the pairwise-local
+    * audit argument). Healthy = all-zero
     * violations, oracle-pinned, so bit rot, a crashed re-encode, or
     * staleness after retraining fails the hash gate.
     */
   def codesAuditDf(emb: DataFrame, codes: DataFrame,
-      codebooks: Seq[Seq[Seq[Float]]], sampleN: Int = SampleN): DataFrame = {
+      codebooks: Seq[Seq[Seq[Float]]], sample: DataFrame): DataFrame = {
     require(codebooks.nonEmpty, "codesAuditDf: empty codebooks")
-    val c = codes.select(col("vec_id"), col("codes"))
-    val volLeg = c.agg(count(lit(1)).as("n_codes"))
-    val multiLeg = c.groupBy(col("vec_id")).agg(count(lit(1)).as("k"))
-      .filter(col("k") > 1)
-      .agg(count(lit(1)).as("n_multi"))
-    val ids = emb.select(col("vec_id"))
-    val missLeg = ids.join(c, Seq("vec_id"), "left_anti")
-      .agg(count(lit(1)).as("n_missing"))
-    val orphanLeg = c.select(col("vec_id")).join(ids, Seq("vec_id"), "left_anti")
-      .agg(count(lit(1)).as("n_orphans"))
-    val lenLeg = c.filter(col("codes").isNull ||
-        size(col("codes")) =!= codebooks.size)
-      .agg(count(lit(1)).as("n_len_bad"))
-    val sample = emb
-      .orderBy(VectorFns.mix64(col("vec_id")), col("vec_id")).limit(sampleN)
-      .select(col("vec_id"),
-        PqEncode(normalizedCol(col("embedding")), codebooks).as("codes_re"))
-    // per-vec_id aggregate between join and count (the ivfLayoutAuditDf
-    // discipline): a replay-duplicated store row must neither inflate
-    // sample_n nor double-count n_code_mismatch — a vec_id counts once
-    // if ANY of its rows disagrees with the recompute
-    val sampLeg = sample.join(c, Seq("vec_id"), "left")
-      .groupBy(col("vec_id"))
-      .agg(max(when(col("codes").isNull ||
-          col("codes") =!= col("codes_re"), 1L).otherwise(0L)).as("mm"))
-      .agg(count(lit(1)).as("sample_n"),
-        coalesce(sum(col("mm")), lit(0L)).as("n_code_mismatch"))
-    volLeg.crossJoin(multiLeg).crossJoin(missLeg).crossJoin(orphanLeg)
-      .crossJoin(lenLeg).crossJoin(sampLeg)
-      .select(col("n_codes"), col("n_multi"), col("n_missing"),
+    Audit.keyedAuditDf(Seq("vec_id"), emb, codes.select(col("vec_id"), col("codes")),
+        Some(sample.select(col("vec_id"),
+          PqEncode(normalizedCol(col("embedding")), codebooks).as("codes_re"))),
+        Seq("n_code_mismatch" -> (col("codes").isNull || col("codes") =!= col("codes_re"))),
+        Seq("n_len_bad" -> lenBad(codebooks)))
+      .select(col("n_store").as("n_codes"), col("n_multi"), col("n_missing"),
         col("n_orphans"), col("n_len_bad"), col("sample_n"),
         col("n_code_mismatch"))
   }
 
-  def annCodesAudit(spark: SparkSession, dir: String): DataFrame =
-    codesAuditDf(Tables.embeddings(spark, dir),
-      graft.ops.Publish.readLive(spark, ensureCodes(spark, dir)), ensureModel(spark, dir))
+  /** A stored code vector that is not exactly M codes (a torn write). */
+  private def lenBad(codebooks: Seq[Seq[Seq[Float]]]): Column = Audit.flag(
+    col("codes").isNull || size(col("codes")) =!= codebooks.size)
+
+  def annCodesAudit(spark: SparkSession, dir: String): DataFrame = {
+    val emb = Tables.embeddings(spark, dir)
+    codesAuditDf(emb, graft.ops.Publish.readLive(spark, ensureCodes(spark, dir)),
+      ensureModel(spark, dir), Audit.vecSample(emb))
+  }
 
   /** IVFPQ-LAYOUT AUDIT — [[codesAuditDf]] covers the FLAT code table;
     * this audits the hive-partitioned serving layout
     * ([[ensureIvfPqLayout]]) that `ann_ivfpq_search_served` actually
     * reads, under BOTH live models at once: volume and occupied-list
-    * count, replay duplicates, coverage anti-joins vs the corpus, torn
+    * count, replay duplicates, coverage vs the corpus, torn
     * code vectors, and — on the fixed splitmix64 hash sample — the
     * list assignment re-derived under the live coarse quantizer plus
     * the codes re-derived under the live codebooks, each counted once
@@ -315,49 +298,31 @@ object Pq {
     */
   def ivfPqLayoutAuditDf(emb: DataFrame, layout: DataFrame,
       cents: Seq[Seq[Float]], codebooks: Seq[Seq[Seq[Float]]],
-      sampleN: Int = SampleN): DataFrame = {
+      sample: DataFrame): DataFrame = {
     require(cents.nonEmpty && codebooks.nonEmpty,
       "ivfPqLayoutAuditDf: empty models")
     val l = layout.select(col("vec_id"), col("codes"),
       col("list_id").cast("int").as("list_id"))
-    val volLeg = l.agg(count(lit(1)).as("n_rows"),
-      countDistinct(col("list_id")).as("n_lists"))
-    val multiLeg = l.groupBy(col("vec_id")).agg(count(lit(1)).as("k"))
-      .filter(col("k") > 1).agg(count(lit(1)).as("n_multi"))
-    val ids = emb.select(col("vec_id"))
-    val missLeg = ids.join(l, Seq("vec_id"), "left_anti")
-      .agg(count(lit(1)).as("n_missing"))
-    val orphanLeg = l.select(col("vec_id")).join(ids, Seq("vec_id"), "left_anti")
-      .agg(count(lit(1)).as("n_orphans"))
-    val lenLeg = l.filter(col("codes").isNull ||
-        size(col("codes")) =!= codebooks.size)
-      .agg(count(lit(1)).as("n_len_bad"))
-    val sample = emb
-      .orderBy(VectorFns.mix64(col("vec_id")), col("vec_id")).limit(sampleN)
-      .select(col("vec_id"),
-        element_at(graft.functions.NearestCentroids(col("embedding"), cents, 1), 1)
-          .as("list_re"),
-        PqEncode(normalizedCol(col("embedding")), codebooks).as("codes_re"))
-    val sampLeg = sample.join(l, Seq("vec_id"), "left")
-      .groupBy(col("vec_id"))
-      .agg(max(when(col("list_id").isNull ||
-          col("list_id") =!= col("list_re"), 1L).otherwise(0L)).as("mis"),
-        max(when(col("codes").isNull ||
-          col("codes") =!= col("codes_re"), 1L).otherwise(0L)).as("mm"))
-      .agg(count(lit(1)).as("sample_n"),
-        coalesce(sum(col("mis")), lit(0L)).as("n_misassigned"),
-        coalesce(sum(col("mm")), lit(0L)).as("n_code_mismatch"))
-    volLeg.crossJoin(multiLeg).crossJoin(missLeg).crossJoin(orphanLeg)
-      .crossJoin(lenLeg).crossJoin(sampLeg)
-      .select(col("n_rows"), col("n_lists"), col("n_multi"), col("n_missing"),
-        col("n_orphans"), col("n_len_bad"), col("sample_n"),
+    Audit.keyedAuditDf(Seq("vec_id"), emb, l,
+        Some(sample.select(col("vec_id"),
+          element_at(graft.functions.NearestCentroids(col("embedding"), cents, 1), 1)
+            .as("list_re"),
+          PqEncode(normalizedCol(col("embedding")), codebooks).as("codes_re"))),
+        Seq("n_misassigned" -> (col("list_id").isNull || col("list_id") =!= col("list_re")),
+          "n_code_mismatch" -> (col("codes").isNull || col("codes") =!= col("codes_re"))),
+        Seq("n_len_bad" -> lenBad(codebooks)))
+      .crossJoin(l.agg(countDistinct(col("list_id")).as("n_lists")))
+      .select(col("n_store").as("n_rows"), col("n_lists"), col("n_multi"),
+        col("n_missing"), col("n_orphans"), col("n_len_bad"), col("sample_n"),
         col("n_misassigned"), col("n_code_mismatch"))
   }
 
-  def annIvfPqLayoutAudit(spark: SparkSession, dir: String): DataFrame =
-    ivfPqLayoutAuditDf(Tables.embeddings(spark, dir),
+  def annIvfPqLayoutAudit(spark: SparkSession, dir: String): DataFrame = {
+    val emb = Tables.embeddings(spark, dir)
+    ivfPqLayoutAuditDf(emb,
       graft.ops.Publish.readLive(spark, ensureIvfPqLayout(spark, dir)),
-      Ivf.ensureModel(spark, dir), ensureModel(spark, dir))
+      Ivf.ensureModel(spark, dir), ensureModel(spark, dir), Audit.vecSample(emb))
+  }
 
   /** IVF+PQ (IVFADC, Jégou et al. §IV) — the composition that serves
     * billion-vector corpora: the IVF coarse quantizer restricts each

@@ -680,8 +680,8 @@ object Parity {
     * assignment is a pure map over the rank. The input is
     * localCheckpointed so the offset
     * pass and the profile pass scan the shuffled data once each instead
-    * of re-shuffling. [[qNtileGlobalWindow]] keeps the one-task window
-    * form as the test oracle (ParitySpec asserts equality).
+    * of re-shuffling. ParitySpec keeps the one-task window form as the
+    * test oracle and asserts equality.
     */
   def qNtile(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1181,20 +1181,6 @@ object Parity {
         count(lit(1)).as("n_bins_hit"))
       .select(col("ks"), col("psi"), col("n_bins_hit"),
         col("tot_early"), col("tot_late"))
-  }
-
-  /** The one-task exact form retired from the driver surface — kept as
-    * the ParitySpec oracle for [[qNtile]]'s distributed-rank rewrite.
-    */
-  def qNtileGlobalWindow(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.orderBy(col("o_totalprice"), col("o_orderkey"))
-    Tables.orders(spark, dir)
-      .withColumn("decile", ntile(10).over(w))
-      .groupBy(col("decile"))
-      .agg(count(lit(1)).as("n"),
-        min(col("o_totalprice")).as("lo"), max(col("o_totalprice")).as("hi"))
-      .orderBy("decile")
   }
 
   /** Morton (Z-order) interleave of two 16-bit key columns — the

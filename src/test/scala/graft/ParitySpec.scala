@@ -450,9 +450,25 @@ class ParitySpec extends SparkSuite {
     }
   }
 
+  /** The one-task exact form of q_ntile: one ntile window over the
+    * global order — the oracle for [[queries.Parity.qNtile]]'s
+    * distributed-rank rewrite, never a registered query.
+    */
+  private def qNtileGlobalWindow: org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val w = Window.orderBy(col("o_totalprice"), col("o_orderkey"))
+    Tables.orders(spark, sfDir)
+      .withColumn("decile", ntile(10).over(w))
+      .groupBy(col("decile"))
+      .agg(count(lit(1)).as("n"),
+        min(col("o_totalprice")).as("lo"), max(col("o_totalprice")).as("hi"))
+      .orderBy("decile")
+  }
+
   test("q_ntile distributed rank: equals the exact global-window form, no single-task window") {
     val got = queries.Parity.qNtile(spark, sfDir).collect().map(_.toString).toSeq
-    val want = queries.Parity.qNtileGlobalWindow(spark, sfDir).collect().map(_.toString).toSeq
+    val want = qNtileGlobalWindow.collect().map(_.toString).toSeq
     assert(got === want)
     // the profile plan must not merge the corpus into one task: the only
     // windows are per-range-partition (the old form shuffled everything

@@ -673,14 +673,9 @@ class PlanSpec extends SparkSuite {
     //   ext/Curation.scala mixtureWeights         — #domains rows
     //   ext/Curation.scala mixtureWaterfill (×3)  — #languages rows
     //   ext/Retrieval.scala rrfFusion (×2)        — depth=50 rows per leg
-    //   ext/Packing.scala packSequencesGlobalWindow — spec-only oracle for
-    //                                               the distributed rewrite,
-    //                                               never a driver query
     //   ext/Packing.scala manifestAuditDf boundary  — ≤`buckets`(=64)
     //                                               bucket-summary rows
     //   queries/Parity.scala qKsGap               — nBins bucket rows
-    //   queries/Parity.scala qNtileGlobalWindow   — spec-only oracle for
-    //                                               qNtile's rank rewrite
     //   queries/Parity.scala qSkyline (×2)        — price-range buckets;
     //                                               frontier candidates
     //   queries/Parity.scala qCusum               — one row per date
@@ -689,8 +684,8 @@ class PlanSpec extends SparkSuite {
       "ext/Text.scala" -> 2,
       "ext/Curation.scala" -> 4,
       "ext/Retrieval.scala" -> 2,
-      "ext/Packing.scala" -> 2,
-      "queries/Parity.scala" -> 5)
+      "ext/Packing.scala" -> 1,
+      "queries/Parity.scala" -> 4)
     // \s spans newlines, so a line-wrapped `Window\n  .orderBy(...)`
     // cannot escape the pin (r13 ADVICE); comments are stripped from
     // the whole content first (SourceScan) instead of per-line
@@ -703,11 +698,40 @@ class PlanSpec extends SparkSuite {
         "A NEW site means corpus-sized input may hit one task: partition " +
         "it, or prove the input bounded and extend the justification " +
         "table + pin in this spec.")
-    // and the two spec-only global-window oracles must never be on the
-    // driver surface (their distributed rewrites are)
+    // the global-window oracles of q_ntile and the packing manifest live
+    // in their specs (ParitySpec, PackingSpec) and are never registered
+    // (their distributed rewrites are)
     val registered = SparkEntry.queries.keySet
     assert(registered.contains("q_ntile") && registered.contains("q_pack_sequences"))
     assert(!registered.exists(_.contains("global_window")))
+  }
+
+  test("store audits are declarations over one keyed pass; the maintenance plan's shape is pinned") {
+    // every coverage / replay count of the ten store audits comes from
+    // Audit.keyedAuditDf: an audit body with an anti-join or a second
+    // cross join is a hand-written one-row leg coming back
+    val audits = Seq("artifactAuditDf", "hashStoreAuditDf", "indexAuditDf",
+      "storeConsistencyDf", "manifestAuditDf", "packedAuditDf",
+      "ivfLayoutAuditDf", "codesAuditDf", "ivfPqLayoutAuditDf", "featureAuditDf")
+    val bodies = for {
+      (_, _, code) <- SourceScan.mainSources
+      name <- audits
+      i = code.indexOf(s"def $name(") if i >= 0
+    } yield name -> code.substring(i, """\n  \S""".r.findFirstMatchIn(code.substring(i))
+      .map(i + _.start).getOrElse(code.length))
+    assert(bodies.map(_._1).sorted === audits.sorted)
+    bodies.foreach { case (name, body) =>
+      assert(body.contains("Audit.keyedAuditDf"), s"$name bypasses the primitive")
+      assert(!body.contains("left_anti"), s"$name counts coverage by anti-join")
+      assert("crossJoin".r.findAllIn(body).size <= 1,
+        s"$name cross-joins more than two one-row frames")
+    }
+    // the tree section of the formatted plan (the node details follow
+    // after the first blank line)
+    val tree = planOf(ext.Dedup.qMaintenancePlan(spark, dir)).split("\n\n")(0)
+    def nodes(re: String) = re.r.findAllIn(tree).size
+    assert((nodes("BroadcastNestedLoopJoin"), nodes("(?<![A-Za-z])Exchange"),
+      nodes("BroadcastExchange")) === ((9, 30, 23)), tree)
   }
 
   test("one store protocol: no rename-aside or publish-mode names in src/main; only the two streaming sinks append in place") {

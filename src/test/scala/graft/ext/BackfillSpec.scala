@@ -80,7 +80,7 @@ class BackfillSpec extends SparkSuite {
     // and the audit that schedules the remedy converges: n_missing
     // drops to zero, so the maintenance loop stops re-planning backfill
     val audited = Backfill.featureAuditDf(docs,
-      Backfill.backfillApplyRows(docs, torn)).head()
+      Backfill.backfillApplyRows(docs, torn), Audit.docSample(docs)).head()
     assert(audited.getAs[Long]("n_missing") === 0L)
     assert(audited.getAs[Long]("n_multi") === 0L)
   }

@@ -261,7 +261,7 @@ class ExtSpec extends SparkSuite {
     val layout = graft.ops.Publish.readLive(spark, Ivf.ensureLayout(spark, dir))
       .localCheckpoint()
     def audit(l: org.apache.spark.sql.DataFrame) =
-      Ivf.ivfLayoutAuditDf(emb, l, cents).head()
+      Ivf.ivfLayoutAuditDf(emb, l, cents, Audit.vecSample(emb)).head()
     val healthy = audit(layout)
     assert(healthy.getAs[Long]("n_layout") === n)
     assert(healthy.getAs[Long]("n_lists") ===
@@ -337,11 +337,13 @@ class ExtSpec extends SparkSuite {
         .select(col("vec_id"), col("nrm"), col("list_id").cast("int"))))
     assert(rows(graft.ops.StoreIO.read(spark, cP)) === rows(Pq.encodeCorpus(emb, cb)))
     // and the audits gate the maintained artifacts directly
-    val la = Ivf.ivfLayoutAuditDf(emb, graft.ops.StoreIO.read(spark, lP), cents).head()
+    val la = Ivf.ivfLayoutAuditDf(emb, graft.ops.StoreIO.read(spark, lP), cents,
+      Audit.vecSample(emb)).head()
     for (c <- Seq("n_multi", "n_missing", "n_orphans", "n_misassigned",
         "n_norm_mismatch"))
       assert(la.getAs[Long](c) === 0L, s"layout $c")
-    val ca = Pq.codesAuditDf(emb, graft.ops.StoreIO.read(spark, cP), cb).head()
+    val ca = Pq.codesAuditDf(emb, graft.ops.StoreIO.read(spark, cP), cb,
+      Audit.vecSample(emb)).head()
     for (c <- Seq("n_multi", "n_missing", "n_orphans", "n_len_bad",
         "n_code_mismatch"))
       assert(ca.getAs[Long](c) === 0L, s"codes $c")
@@ -388,7 +390,7 @@ class ExtSpec extends SparkSuite {
     val cb = Pq.ensureModel(spark, dir)
     val codes = graft.ops.Publish.readLive(spark, Pq.ensureCodes(spark, dir)).localCheckpoint()
     def audit(c: org.apache.spark.sql.DataFrame) =
-      Pq.codesAuditDf(emb, c, cb).head()
+      Pq.codesAuditDf(emb, c, cb, Audit.vecSample(emb)).head()
     val healthy = audit(codes)
     assert(healthy.getAs[Long]("n_codes") === n)
     assert(healthy.getAs[Long]("sample_n") === math.min(n, Pq.SampleN.toLong))
@@ -451,7 +453,7 @@ class ExtSpec extends SparkSuite {
       .localCheckpoint()
     def idxAudit(b: org.apache.spark.sql.DataFrame,
         s: org.apache.spark.sql.DataFrame) =
-      Dedup.indexAuditDf(docs, b, s).head()
+      Dedup.indexAuditDf(docs, b, s, Audit.docSample(docs)).head()
     val ih = idxAudit(bands, shingles)
     assert(ih.getAs[Long]("n_band_rows") === 32L * n)
     assert(ih.getAs[Long]("n_shingle_rows") === n)
@@ -480,7 +482,7 @@ class ExtSpec extends SparkSuite {
     val ipq = graft.ops.Publish.readLive(spark, Pq.ensureIvfPqLayout(spark, dir))
       .localCheckpoint()
     def ipqAudit(l: org.apache.spark.sql.DataFrame) =
-      Pq.ivfPqLayoutAuditDf(emb, l, cents, cb).head()
+      Pq.ivfPqLayoutAuditDf(emb, l, cents, cb, Audit.vecSample(emb)).head()
     val qh = ipqAudit(ipq)
     assert(qh.getAs[Long]("n_rows") === emb.count())
     for (c <- Seq("n_multi", "n_missing", "n_orphans", "n_len_bad",
@@ -506,7 +508,7 @@ class ExtSpec extends SparkSuite {
     val packed = graft.ops.Publish.readLive(spark, Packing.ensurePackedStore(spark, dir))
       .localCheckpoint()
     def pkAudit(p: org.apache.spark.sql.DataFrame) =
-      Packing.packedAuditDf(docs, p).head()
+      Packing.packedAuditDf(docs, p, Audit.docSample(docs)).head()
     val kh = pkAudit(packed)
     assert(kh.getAs[Long]("n_rows") === n)
     for (c <- Seq("n_multi", "n_missing", "n_orphans", "n_formula_bad",
@@ -531,7 +533,7 @@ class ExtSpec extends SparkSuite {
     val feats = graft.ops.Publish.readLive(spark,
       Backfill.ensureFeatureArtifactFull(spark, dir)).localCheckpoint()
     def feAudit(a: org.apache.spark.sql.DataFrame) =
-      Backfill.featureAuditDf(docs, a).head()
+      Backfill.featureAuditDf(docs, a, Audit.docSample(docs)).head()
     val fh = feAudit(feats)
     assert(fh.getAs[Long]("n_rows") === n)
     for (c <- Seq("n_multi", "n_missing", "n_orphans", "n_feature_mismatch"))
@@ -1168,7 +1170,7 @@ class ExtSpec extends SparkSuite {
         (col("doc_id") % 3).as("batch"))
       .localCheckpoint()
     def audit(s: org.apache.spark.sql.DataFrame) =
-      Dedup.hashStoreAuditDf(docs, s, sampleN = n.toInt).head()
+      Dedup.hashStoreAuditDf(docs, s, docs).head()
     val healthy = audit(store)
     assert(healthy.getAs[Long]("n_store") === n)
     assert(healthy.getAs[Long]("n_batches") === 3L)
@@ -1182,7 +1184,10 @@ class ExtSpec extends SparkSuite {
     // replayed batch: one doc_id twice
     val replayed = store.unionByName(store.filter(col("doc_id") === someId)
       .withColumn("batch", lit(9L)))
-    assert(audit(replayed).getAs[Long]("n_multi") === 1L)
+    val rep = audit(replayed)
+    assert(rep.getAs[Long]("n_multi") === 1L)
+    // the replayed doc is sampled once: sample_n stays the sample size
+    assert(rep.getAs[Long]("sample_n") === n)
     // missed row / stale orphan
     assert(audit(store.filter(col("doc_id") =!= someId))
       .getAs[Long]("n_missing") === 1L)

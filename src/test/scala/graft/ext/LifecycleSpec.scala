@@ -57,19 +57,17 @@ class LifecycleSpec extends SparkSuite {
 
     def allAuditsGreen(corpus: org.apache.spark.sql.DataFrame, label: String): Unit = {
       val a = Dedup.artifactAuditDf(corpus,
-        Dedup.pairsArtifactRead(spark, pairs), n = corpus.count().toInt).head()
+        Dedup.pairsArtifactRead(spark, pairs)).head()
       assert(a.getAs[Long]("n_missing") === 0L, s"$label pair artifact missing")
       assert(a.getAs[Long]("n_extra") === 0L, s"$label pair artifact extra")
-      val m = Packing.manifestAuditDf(corpus, manifestNow(),
-        sampleN = corpus.count().toInt).head()
+      val m = Packing.manifestAuditDf(corpus, manifestNow(), corpus).head()
       assert(m.getAs[Long]("n_formula_bad") === 0L, s"$label manifest formula")
       assert(m.getAs[Long]("n_adjacency_bad") === 0L, s"$label manifest adjacency")
       assert(m.getAs[Long]("n_missing") === 0L, s"$label manifest missing")
       assert(m.getAs[Long]("n_orphans") === 0L, s"$label manifest orphans")
       assert(m.getAs[Long]("n_dup_rows") === 0L, s"$label manifest dups")
       assert(m.getAs[Long]("n_tok_mismatch") === 0L, s"$label manifest n_tok")
-      val h = Dedup.hashStoreAuditDf(corpus, hashesNow(),
-        sampleN = corpus.count().toInt).head()
+      val h = Dedup.hashStoreAuditDf(corpus, hashesNow(), corpus).head()
       assert(h.getAs[Long]("n_multi") === 0L, s"$label hash multi")
       assert(h.getAs[Long]("n_missing") === 0L, s"$label hash missing")
       assert(h.getAs[Long]("n_orphans") === 0L, s"$label hash orphans")

@@ -6,10 +6,31 @@ import org.apache.spark.sql.functions._
 class PackingSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
+  /** The textbook form of the packing manifest — ONE window over the
+    * global doc_id order, which Spark executes on a single task: the
+    * oracle for [[Packing.packSequences]], never a registered query.
+    */
+  private def packSequencesGlobalWindow(docs: org.apache.spark.sql.DataFrame,
+      seqLen: Long = 512L) = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.orderBy("doc_id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    docs.select(col("doc_id"),
+        size(graft.functions.TextFns.tokens(col("text"))).cast("long").as("n_tok"))
+      .withColumn("cost", col("n_tok") + lit(1L))
+      .withColumn("t_off", sum("cost").over(w) - col("cost"))
+      .withColumn("seq_id", expr(s"t_off div $seqLen"))
+      .withColumn("n_seqs",
+        when(col("n_tok") === 0L, lit(0L))
+          .otherwise(expr(s"(t_off + n_tok - 1) div $seqLen") - col("seq_id") + lit(1L)))
+      .select("doc_id", "n_tok", "t_off", "seq_id", "n_seqs")
+      .orderBy("doc_id")
+  }
+
   test("distributed prefix-sum packing equals the global-window form") {
     val docs = Tables.documents(spark, dir)
     val got = Packing.packSequences(docs).collect().toSeq
-    val ref = Packing.packSequencesGlobalWindow(docs).collect().toSeq
+    val ref = packSequencesGlobalWindow(docs).collect().toSeq
     assert(got.nonEmpty)
     assert(got === ref)
   }
@@ -229,7 +250,7 @@ class PackingSpec extends SparkSuite {
   test("manifest audit: a healthy manifest audits to all-zero violations") {
     val docs = Tables.documents(spark, dir)
     val m = Packing.packSequences(docs)
-    val r = Packing.manifestAuditDf(docs, m).head()
+    val r = Packing.manifestAuditDf(docs, m, Audit.docSample(docs)).head()
     assert(r.getAs[Long]("n_rows") === docs.count())
     assert(r.getAs[Long]("n_formula_bad") === 0L)
     assert(r.getAs[Long]("n_adjacency_bad") === 0L)
@@ -250,33 +271,38 @@ class PackingSpec extends SparkSuite {
     // (a) one shifted offset: the prefix-sum chain breaks around it
     val shifted = m.withColumn("t_off",
       when(col("doc_id") === someId, col("t_off") + 1L).otherwise(col("t_off")))
-    assert(Packing.manifestAuditDf(docs, shifted).head()
+    assert(Packing.manifestAuditDf(docs, shifted, Audit.docSample(docs)).head()
       .getAs[Long]("n_adjacency_bad") >= 1L)
     // (b) a dropped row: coverage AND adjacency both fire
     val dropped = m.filter(col("doc_id") =!= someId)
-    val rd = Packing.manifestAuditDf(docs, dropped).head()
+    val rd = Packing.manifestAuditDf(docs, dropped, Audit.docSample(docs)).head()
     assert(rd.getAs[Long]("n_missing") === 1L)
     assert(rd.getAs[Long]("n_adjacency_bad") >= 1L)
     // (c) an orphan row (manifest kept a deleted doc)
     val orphan = m.unionByName(m.filter(col("doc_id") === someId)
       .withColumn("doc_id", col("doc_id") + 1000000L))
-    assert(Packing.manifestAuditDf(docs, orphan).head()
+    assert(Packing.manifestAuditDf(docs, orphan, Audit.docSample(docs)).head()
       .getAs[Long]("n_orphans") === 1L)
     // (d) a stale token count, caught by the sampled recompute when the
-    // row is in the sample (sampleN = corpus size ⇒ always sampled)
+    // row is in the sample (the corpus as the sample ⇒ always sampled)
     val stale = m.withColumn("n_tok",
       when(col("doc_id") === someId, col("n_tok") + 3L).otherwise(col("n_tok")))
-    assert(Packing.manifestAuditDf(docs, stale, sampleN = docs.count().toInt)
+    assert(Packing.manifestAuditDf(docs, stale, docs)
       .head().getAs[Long]("n_tok_mismatch") === 1L)
     // (e) broken per-row arithmetic
     val badSeq = m.withColumn("seq_id",
       when(col("doc_id") === someId, col("seq_id") + 1L).otherwise(col("seq_id")))
-    assert(Packing.manifestAuditDf(docs, badSeq).head()
+    assert(Packing.manifestAuditDf(docs, badSeq, Audit.docSample(docs)).head()
       .getAs[Long]("n_formula_bad") === 1L)
     // (f) a replayed append: one doc_id holds two rows
     val replayed = m.unionByName(m.filter(col("doc_id") === someId))
-    assert(Packing.manifestAuditDf(docs, replayed).head()
+    assert(Packing.manifestAuditDf(docs, replayed, Audit.docSample(docs)).head()
       .getAs[Long]("n_dup_rows") === 1L)
+    // a stale token count on BOTH rows of a replayed sampled doc counts once
+    val staleReplayed = Packing.manifestAuditDf(docs,
+      stale.unionByName(stale.filter(col("doc_id") === someId)), docs).head()
+    assert(staleReplayed.getAs[Long]("n_tok_mismatch") === 1L)
+    assert(staleReplayed.getAs[Long]("sample_n") === docs.count())
   }
 
   test("manifest audit boundary leg catches a whole-bucket shift the in-bucket lead misses") {
@@ -294,7 +320,8 @@ class PackingSpec extends SparkSuite {
         .otherwise(col("t_off")))
     assert(shifted.filter(col("doc_id") >= b2lo && col("doc_id") < b2hi).count() > 0,
       "test needs a populated interior bucket")
-    val r = Packing.manifestAuditDf(docs, shifted, buckets = buckets).head()
+    val r = Packing.manifestAuditDf(docs, shifted, Audit.docSample(docs),
+      buckets = buckets).head()
     assert(r.getAs[Long]("n_adjacency_bad") === 2L,
       "exactly the two boundaries of the shifted bucket must fire")
   }
