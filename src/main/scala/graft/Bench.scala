@@ -12,7 +12,7 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    warmup(spark, sfDir)
+    val warmed = warmup(spark, sfDir)
     val staged = stageFixtures(spark, sfDir)
     // Host-state calibration anchor (r13 verdict item 5): the same
     // synthetic CPU-bound query — no I/O, fixed row count, hash agg —
@@ -130,9 +130,10 @@ object Bench {
     // fixture staging runs untimed before the first entry: its per-stage
     // seconds and errors say what the timed entries could rely on
     val stageS = jsonObj(staged.map(st => st.name -> f"${st.seconds}%.2f"))
-    val stageErrors = jsonObj(staged.flatMap(st => st.error.map(e => st.name -> s""""$e"""")))
+    def errorsJson(runs: Seq[Staged]) =
+      jsonObj(runs.flatMap(st => st.error.map(e => st.name -> s""""$e"""")))
     val fullLine =
-      f"""{"queries":$fullQs,"queries_norm":$normQs,"medianed":$medianedJson,"calib_mean":$calibMean%.3f,"errors":$errJson,"sf":"$sfDir","metric":"total","unit":"sec","value":$total%.3f,"n":${medianResults.size},"nerr":${errors.size},"stage_s":$stageS,"stage_errors":$stageErrors$calib$note}"""
+      f"""{"queries":$fullQs,"queries_norm":$normQs,"medianed":$medianedJson,"calib_mean":$calibMean%.3f,"errors":$errJson,"sf":"$sfDir","metric":"total","unit":"sec","value":$total%.3f,"n":${medianResults.size},"nerr":${errors.size},"stage_s":$stageS,"stage_errors":${errorsJson(staged)},"warmup_errors":${errorsJson(warmed)}$calib$note}"""
     // Dev-loop subset runs (SPARK_GRAFT_ONLY set) must NOT clobber the
     // committed full-surface snapshot — a 1-query artifact replacing the
     // 180-query baseline is exactly the stale-snapshot failure the
@@ -163,16 +164,17 @@ object Bench {
     * first (~4-6s of non-query cost attributed to it). Warmup work is not
     * timed; the queries cover scan+agg, native expressions, a shuffle
     * join, and the generate+window codegen paths (explode, group-limit).
+    * A failed warm query does not throw: it is returned with its error,
+    * like a failed fixture stage.
     */
-  def warmup(spark: SparkSession, sfDir: String): Unit = {
+  def warmup(spark: SparkSession, sfDir: String): Seq[Staged] = {
     val warm = new java.io.File(new java.io.File(sfDir).getAbsoluteFile.getParentFile, "sf0.001")
     val warmDir = if (warm.isDirectory) warm.toString else sfDir
-    Seq("q_agg", "text_quality", "dedup_minhash", "q_tfidf", "q_window_topk").foreach { q =>
-      SparkEntry.queries.get(q).foreach { fn =>
-        try { fn(spark, warmDir).write.format("noop").mode("overwrite").save() }
-        catch { case _: Throwable => () }
+    Seq("q_agg", "text_quality", "dedup_minhash", "q_tfidf", "q_window_topk")
+      .flatMap(q => SparkEntry.queries.get(q).map(q -> _))
+      .map { case (q, fn) =>
+        attempt(q)(fn(spark, warmDir).write.format("noop").mode("overwrite").save())
       }
-    }
   }
 
   /** `{"k":v,...}` over already-rendered JSON values, in order. */
@@ -198,36 +200,37 @@ object Bench {
     * read. A failed stage does not throw: it is reported with its
     * seconds, and the first timed entry that needs it pays the build.
     */
-  def stageFixtures(spark: SparkSession, sfDir: String): Seq[Staged] = {
-    val stages: Seq[(String, () => Any)] = Seq(
-      "dedup_incremental_index" -> (() => ext.Dedup.ensureIncrementalIndex(spark, sfDir)),
-      "dedup_pairs_artifact" -> (() => ext.Dedup.ensurePairsArtifact(spark, sfDir)),
-      "ivf_model" -> (() => ext.Ivf.ensureModel(spark, sfDir)),
-      "ivf_layout" -> (() => ext.Ivf.ensureLayout(spark, sfDir)),
-      "pq_model" -> (() => ext.Pq.ensureModel(spark, sfDir)),
-      "pq_codes" -> (() => ext.Pq.ensureCodes(spark, sfDir)),
-      "pq_ivfpq_layout" -> (() => ext.Pq.ensureIvfPqLayout(spark, sfDir)),
-      "gvid_stage" -> (() => ext.Multimodal.ensureGvidStage(sfDir)),
-      "pack_manifest" -> (() => ext.Packing.ensureManifest(spark, sfDir)),
-      "hash_store" -> (() => ext.Dedup.ensureHashStore(spark, sfDir)),
-      "feature_artifact" -> (() => ext.Backfill.ensureFeatureArtifact(spark, sfDir)),
-      "dedup_full_index" -> (() => ext.Dedup.ensureFullIndex(spark, sfDir)),
-      "packed_store" -> (() => ext.Packing.ensurePackedStore(spark, sfDir)),
-      "feature_artifact_full" -> (() => ext.Backfill.ensureFeatureArtifactFull(spark, sfDir)),
-      "dedup_delete_fixture" -> (() => ext.Dedup.ensureDeleteFixture(spark, sfDir)),
-      "ivf_retrain_fixture" -> (() => ext.Ivf.ensureRetrainFixture(spark, sfDir)),
-      "standing_tombstones" -> (() => ext.Dedup.ensureStandingTombstones(spark, sfDir)))
-    stages.map { case (name, stage) =>
-      val t0 = System.nanoTime()
-      val error =
-        try { stage(); None }
-        catch { case scala.util.control.NonFatal(e) => Some(jsonSafe(e.toString)) }
-      Staged(name, (System.nanoTime() - t0) / 1e9, error)
-    }
-  }
+  def stageFixtures(spark: SparkSession, sfDir: String): Seq[Staged] = Seq(
+    attempt("dedup_incremental_index")(ext.Dedup.ensureIncrementalIndex(spark, sfDir)),
+    attempt("dedup_pairs_artifact")(ext.Dedup.ensurePairsArtifact(spark, sfDir)),
+    attempt("ivf_model")(ext.Ivf.ensureModel(spark, sfDir)),
+    attempt("ivf_layout")(ext.Ivf.ensureLayout(spark, sfDir)),
+    attempt("pq_model")(ext.Pq.ensureModel(spark, sfDir)),
+    attempt("pq_codes")(ext.Pq.ensureCodes(spark, sfDir)),
+    attempt("pq_ivfpq_layout")(ext.Pq.ensureIvfPqLayout(spark, sfDir)),
+    attempt("gvid_stage")(ext.Multimodal.ensureGvidStage(sfDir)),
+    attempt("pack_manifest")(ext.Packing.ensureManifest(spark, sfDir)),
+    attempt("hash_store")(ext.Dedup.ensureHashStore(spark, sfDir)),
+    attempt("feature_artifact")(ext.Backfill.ensureFeatureArtifact(spark, sfDir)),
+    attempt("dedup_full_index")(ext.Dedup.ensureFullIndex(spark, sfDir)),
+    attempt("packed_store")(ext.Packing.ensurePackedStore(spark, sfDir)),
+    attempt("feature_artifact_full")(ext.Backfill.ensureFeatureArtifactFull(spark, sfDir)),
+    attempt("dedup_delete_fixture")(ext.Dedup.ensureDeleteFixture(spark, sfDir)),
+    attempt("ivf_retrain_fixture")(ext.Ivf.ensureRetrainFixture(spark, sfDir)),
+    attempt("standing_tombstones")(ext.Dedup.ensureStandingTombstones(spark, sfDir)))
 
-  /** One fixture stage's wall seconds and JSON-safe error, if it failed. */
+  /** One fixture stage's (or warm query's) wall seconds and JSON-safe
+    * error, if it failed. */
   case class Staged(name: String, seconds: Double, error: Option[String])
+
+  /** Runs `body` timed; a non-fatal error is kept, never rethrown. */
+  private def attempt(name: String)(body: => Any): Staged = {
+    val t0 = System.nanoTime()
+    val error =
+      try { body; None }
+      catch { case scala.util.control.NonFatal(e) => Some(jsonSafe(e.toString)) }
+    Staged(name, (System.nanoTime() - t0) / 1e9, error)
+  }
 
   /** `s` cut to 160 chars with everything JSON would escape blanked
     * (quotes, backslashes, ALL control chars — stack traces carry tabs).

@@ -29,7 +29,9 @@ object Probe {
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Bench.warmup(spark, sfDir)
+    Bench.warmup(spark, sfDir).foreach { w =>
+      w.error.foreach(e => println(f"[probe] warmup ${w.name} FAILED: $e"))
+    }
     Bench.stageFixtures(spark, sfDir).foreach { st =>
       st.error.foreach(e => println(f"[probe] stage ${st.name} FAILED: $e"))
     }

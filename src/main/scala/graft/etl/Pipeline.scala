@@ -2,7 +2,7 @@ package graft.etl
 
 import graft.GraftSession
 import graft.qc.Checks
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 
 /** End-to-end batch pipeline: the reference's Airflow DAG collapsed to a
   * sequential main (its only semantic content is ordering — SURVEY §3.3):
@@ -149,14 +149,17 @@ object Pipeline {
     q.awaitTermination()
   }
 
-  /** QC step: reads the ETL outputs back and runs the 8 reference checks,
-    * writing a JSON error report (empty when all pass).
+  /** The ETL output dirs the QC checks read, by their QC table name. */
+  private val qcTables = Map("bal_auth" -> "balancing_authorities", "weather" -> "weather")
+
+  /** QC step: reads the ETL outputs back and runs the 8 reference checks
+    * (one aggregate per table), writing a JSON error report (empty when
+    * all pass).
     */
   def runQc(spark: SparkSession, outputDir: String): Seq[Checks.CheckResult] = {
-    spark.read.parquet(s"$outputDir/bal_auth")
-      .createOrReplaceTempView("balancing_authorities")
-    spark.read.parquet(s"$outputDir/weather")
-      .createOrReplaceTempView("weather")
+    qcTables.foreach { case (dir, table) =>
+      spark.read.parquet(s"$outputDir/$dir").createOrReplaceTempView(table)
+    }
     val results = Checks.run(spark, Checks.referenceChecks)
     Checks.writeErrorReport(spark, results, s"$outputDir/data_quality")
     results
@@ -165,52 +168,22 @@ object Pipeline {
   /** ETL + the reference's QC in ONE pass: the same partitioned writes
     * as [[runEtl]], with every balancing_authorities / weather check
     * accumulated via `Dataset.observe` INSIDE the write jobs — the
-    * row-count, null-count, and net-generation-consistency counters
-    * ride the scan that was happening anyway, where [[runQc]] re-reads
-    * the output once per check (8 scans). At 100 TB that is the
-    * difference between QC-for-free and re-scanning the day's output
-    * eight times; the post-hoc [[runQc]] remains the independent audit
-    * path (PipelineSpec asserts both produce identical CheckResults).
-    * Results carry the SAME names/sql/expectations as
-    * [[Checks.referenceChecks]], so downstream reporting is unchanged.
+    * checks' counted Columns ride the scan that was happening anyway,
+    * where [[runQc]] reads the output back. The post-hoc [[runQc]]
+    * remains the independent audit path (PipelineSpec asserts both
+    * produce identical CheckResults).
     */
   def runEtlObserved(
       spark: SparkSession, inputDir: String, outputDir: String): Seq[Checks.CheckResult] = {
-    import org.apache.spark.sql.functions._
-    var balObs: org.apache.spark.sql.Observation = null
-    var wObs: org.apache.spark.sql.Observation = null
-    val instrument: (String, DataFrame) => DataFrame = {
-      case ("bal_auth", df) =>
-        // null measures make the condition null -> otherwise(0): exactly
-        // the rows the SQL check's WHERE abs(...) > 1e-6 would keep
-        val mismatch =
-          sum(when(abs(col("net_generation") - Checks.netGenPartsSum) > 1e-6, 1L)
-            .otherwise(0L)).as("n_netgen_mismatch")
-        val (o, h) = Checks.observed(df, Seq("bal_auth"), mismatch)
-        balObs = h; o
-      case ("weather", df) =>
-        val (o, h) = Checks.observed(df, Seq("station_id", "date", "TMIN", "TMAX"))
-        wObs = h; o
-      case (_, df) => df
-    }
+    val observations = scala.collection.mutable.Map.empty[String, Observation]
+    val instrument: (String, DataFrame) => DataFrame = (dir, df) =>
+      qcTables.get(dir).fold(df) { table =>
+        val (o, obs) = Checks.observed(df, Checks.referenceChecks.filter(_.table == table))
+        observations(table) = obs
+        o
+      }
     etlWrites(spark, inputDir, outputDir, dynamic = false, instrument)
-
-    val bm = balObs.get
-    val wm = wObs.get
-    def metric(m: Map[String, Any], key: String): Long =
-      Option(m(key)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val byName = Checks.referenceChecks.map(c => c.name -> c).toMap
-    def result(name: String, actual: Long): Checks.CheckResult =
-      byName(name).result(actual)
-    val results = Seq(
-      result("balancing_authorities_non_empty", metric(bm, "n_rows")),
-      result("balancing_authorities.bal_auth_not_null", metric(bm, "n_null_bal_auth")),
-      result("net_generation_sum_of_parts", metric(bm, "n_netgen_mismatch")),
-      result("weather_non_empty", metric(wm, "n_rows")),
-      result("weather.station_id_not_null", metric(wm, "n_null_station_id")),
-      result("weather.date_not_null", metric(wm, "n_null_date")),
-      result("weather.TMIN_not_null", metric(wm, "n_null_TMIN")),
-      result("weather.TMAX_not_null", metric(wm, "n_null_TMAX")))
+    val results = Checks.referenceChecks.map(c => c.observedIn(observations(c.table)))
     Checks.writeErrorReport(spark, results, s"$outputDir/data_quality")
     results
   }

@@ -118,10 +118,10 @@ object Backfill {
     */
   def ensureFeatureArtifact(spark: SparkSession, dir: String): String =
     scratchArtifacts.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("feature_artifact")
-        .resolve("features").toString
-      graft.ops.Publish.publish(spark, p, featureDf(Tables.documents(spark, dir)
-        .filter(!col("source").isin("src9", "src19"))))
+      val features = featureDf(Tables.documents(spark, dir)
+        .filter(!col("source").isin("src9", "src19")))
+      val p = graft.ops.Scratch.fixtureDir("feature_artifact").resolve("features").toString
+      graft.ops.Publish.publish(spark, p, features)
       p
     })
 
@@ -158,9 +158,9 @@ object Backfill {
     */
   def ensureFeatureArtifactFull(spark: SparkSession, dir: String): String =
     scratchFull.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("feature_artifact_full")
-        .resolve("features").toString
-      graft.ops.Publish.publish(spark, p, featureDf(Tables.documents(spark, dir)))
+      val features = featureDf(Tables.documents(spark, dir))
+      val p = graft.ops.Scratch.fixtureDir("feature_artifact_full").resolve("features").toString
+      graft.ops.Publish.publish(spark, p, features)
       p
     })
 

@@ -276,8 +276,9 @@ object Dedup {
 
   def ensureIncrementalIndex(spark: SparkSession, dir: String): String =
     scratchIndex.getOrElseUpdate(dir, {
-      val idx = java.nio.file.Files.createTempDirectory("minhash_index").toString
-      indexInit(Tables.documents(spark, dir).filter(col("doc_id") < 250), idx)
+      val docs = Tables.documents(spark, dir)
+      val idx = graft.ops.Scratch.fixtureDir("minhash_index").toString
+      indexInit(docs.filter(col("doc_id") < 250), idx)
       idx
     })
 
@@ -372,9 +373,9 @@ object Dedup {
 
   def ensurePairsArtifact(spark: SparkSession, dir: String): String =
     scratchPairs.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("pairs_artifact")
-        .resolve("pairs").toString
-      pairsArtifactInit(Tables.documents(spark, dir), p)
+      val docs = Tables.documents(spark, dir)
+      val p = graft.ops.Scratch.fixtureDir("pairs_artifact").resolve("pairs").toString
+      pairsArtifactInit(docs, p)
       p
     })
 
@@ -462,9 +463,9 @@ object Dedup {
     */
   def ensureHashStore(spark: SparkSession, dir: String): String =
     scratchHashStores.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("hash_store")
-        .resolve("hashes").toString
-      graft.ops.Publish.publish(spark, p, Tables.documents(spark, dir)
+      val docs = Tables.documents(spark, dir)
+      val p = graft.ops.Scratch.fixtureDir("hash_store").resolve("hashes").toString
+      graft.ops.Publish.publish(spark, p, docs
         .select(md5(col("text").cast("binary")).as("h"), col("doc_id"),
           (col("doc_id") % 3).as("batch")), partitionBy = Seq("batch"))
       p
@@ -538,9 +539,9 @@ object Dedup {
     */
   def ensureFullIndex(spark: SparkSession, dir: String): String =
     scratchFullIndex.getOrElseUpdate(dir, {
-      val idx = java.nio.file.Files.createTempDirectory("minhash_full_index")
-        .toString
-      indexInit(Tables.documents(spark, dir), idx)
+      val docs = Tables.documents(spark, dir)
+      val idx = graft.ops.Scratch.fixtureDir("minhash_full_index").toString
+      indexInit(docs, idx)
       idx
     })
 
@@ -1272,8 +1273,7 @@ object Dedup {
   def ensureDeleteFixture(spark: SparkSession, dir: String): String =
     scratchDeleteFixture.getOrElseUpdate(dir, {
       val docs = Tables.documents(spark, dir)
-      val root = java.nio.file.Files.createTempDirectory("delete_fixture")
-        .toString
+      val root = graft.ops.Scratch.fixtureDir("delete_fixture").toString
       indexInit(docs, s"$root/index")
       pairsArtifactInit(docs, s"$root/pairs")
       graft.ops.Publish.publish(spark, s"$root/hashes",
@@ -1435,10 +1435,10 @@ object Dedup {
     */
   def ensureStandingTombstones(spark: SparkSession, dir: String): String =
     scratchTombs.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("tombstones")
-        .resolve("tombs").toString
-      tombstoneAppend(Tables.documents(spark, dir)
-        .filter(col("source") === "src7").select("doc_id"), p, token = "src7")
+      val docs = Tables.documents(spark, dir)
+      val p = graft.ops.Scratch.fixtureDir("tombstones").resolve("tombs").toString
+      tombstoneAppend(docs.filter(col("source") === "src7").select("doc_id"), p,
+        token = "src7")
       p
     })
 

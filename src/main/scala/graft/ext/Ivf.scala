@@ -107,9 +107,9 @@ object Ivf {
     */
   def ensureModel(spark: SparkSession, dir: String): Seq[Seq[Float]] =
     loadedModels.getOrElseUpdate(dir, {
-      val path = java.nio.file.Files.createTempDirectory("ivf_model")
-        .resolve("model").toString
-      modelArtifactWrite(spark, trainCentroids(Tables.embeddings(spark, dir)), path)
+      val emb = Tables.embeddings(spark, dir)
+      val path = graft.ops.Scratch.fixtureDir("ivf_model").resolve("model").toString
+      modelArtifactWrite(spark, trainCentroids(emb), path)
       modelArtifactRead(spark, path)
     })
 
@@ -243,10 +243,10 @@ object Ivf {
     */
   def ensureLayout(spark: SparkSession, dir: String): String =
     scratchLayouts.getOrElseUpdate(dir, {
-      val path = java.nio.file.Files.createTempDirectory("ivf_layout")
-        .resolve("corpus").toString
-      writeIvfPartitioned(Tables.embeddings(spark, dir),
-        ensureModel(spark, dir), path)
+      val emb = Tables.embeddings(spark, dir)
+      val model = ensureModel(spark, dir)
+      val path = graft.ops.Scratch.fixtureDir("ivf_layout").resolve("corpus").toString
+      writeIvfPartitioned(emb, model, path)
       path
     })
 
@@ -311,10 +311,9 @@ object Ivf {
     */
   def ensureVecTombstones(spark: SparkSession, dir: String): String =
     scratchVecTombs.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("vec_tombs")
-        .resolve("tombs").toString
-      Dedup.tombstoneAppend(standingVecTombstones(Tables.embeddings(spark, dir)),
-        p, token = "standing")
+      val emb = Tables.embeddings(spark, dir)
+      val p = graft.ops.Scratch.fixtureDir("vec_tombs").resolve("tombs").toString
+      Dedup.tombstoneAppend(standingVecTombstones(emb), p, token = "standing")
       p
     })
 
@@ -759,8 +758,7 @@ object Ivf {
     scratchRetrainFixture.getOrElseUpdate(dir, {
       val emb = Tables.embeddings(spark, dir)
       val cut = 4L * emb.count() / 5L
-      val root = java.nio.file.Files.createTempDirectory("retrain_fixture")
-        .toString
+      val root = graft.ops.Scratch.fixtureDir("retrain_fixture").toString
       val centsOld = trainCentroids(emb.filter(col("vec_id") < cut))
       modelArtifactWrite(spark, centsOld, s"$root/model")
       writeIvfPartitioned(emb, centsOld, s"$root/corpus")

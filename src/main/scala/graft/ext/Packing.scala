@@ -391,9 +391,9 @@ object Packing {
     */
   def ensureManifest(spark: SparkSession, dir: String): String =
     scratchManifests.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("pack_manifest")
-        .resolve("manifest").toString
-      graft.ops.Publish.publish(spark, p, packSequences(Tables.documents(spark, dir)))
+      val manifest = packSequences(Tables.documents(spark, dir))
+      val p = graft.ops.Scratch.fixtureDir("pack_manifest").resolve("manifest").toString
+      graft.ops.Publish.publish(spark, p, manifest)
       p
     })
 
@@ -493,9 +493,9 @@ object Packing {
     */
   def ensurePackedStore(spark: SparkSession, dir: String): String =
     scratchPacked.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("packed_store")
-        .resolve("packed").toString
-      writePacked(Tables.documents(spark, dir), p)
+      val docs = Tables.documents(spark, dir)
+      val p = graft.ops.Scratch.fixtureDir("packed_store").resolve("packed").toString
+      writePacked(docs, p)
       p
     })
 

@@ -116,9 +116,9 @@ object Pq {
     */
   def ensureModel(spark: SparkSession, dir: String): Seq[Seq[Seq[Float]]] =
     loadedModels.getOrElseUpdate(dir, {
-      val path = java.nio.file.Files.createTempDirectory("pq_model")
-        .resolve("model").toString
-      modelArtifactWrite(spark, trainCodebooks(Tables.embeddings(spark, dir)), path)
+      val emb = Tables.embeddings(spark, dir)
+      val path = graft.ops.Scratch.fixtureDir("pq_model").resolve("model").toString
+      modelArtifactWrite(spark, trainCodebooks(emb), path)
       modelArtifactRead(spark, path)
     })
 
@@ -223,10 +223,9 @@ object Pq {
     */
   def ensureCodes(spark: SparkSession, dir: String): String =
     scratchCodes.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("pq_codes")
-        .resolve("codes").toString
-      graft.ops.Publish.publish(spark, p,
-        encodeCorpus(Tables.embeddings(spark, dir), ensureModel(spark, dir)))
+      val codes = encodeCorpus(Tables.embeddings(spark, dir), ensureModel(spark, dir))
+      val p = graft.ops.Scratch.fixtureDir("pq_codes").resolve("codes").toString
+      graft.ops.Publish.publish(spark, p, codes)
       p
     })
 
@@ -430,12 +429,10 @@ object Pq {
 
   def ensureIvfPqLayout(spark: SparkSession, dir: String): String =
     scratchIvfPqLayouts.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("ivfpq_layout")
-        .resolve("codes").toString
-      graft.ops.Publish.publish(spark, p,
-        ivfPqLayoutFrame(Tables.embeddings(spark, dir),
-          Ivf.ensureModel(spark, dir), ensureModel(spark, dir)),
-        partitionBy = Seq("list_id"))
+      val layout = ivfPqLayoutFrame(Tables.embeddings(spark, dir),
+        Ivf.ensureModel(spark, dir), ensureModel(spark, dir))
+      val p = graft.ops.Scratch.fixtureDir("ivfpq_layout").resolve("codes").toString
+      graft.ops.Publish.publish(spark, p, layout, partitionBy = Seq("list_id"))
       p
     })
 

@@ -15,6 +15,24 @@ import org.apache.spark.sql.SparkSession
   */
 object Scratch {
 
+  /** Root of this JVM's `ensure*` fixture stores: one temp dir, made on
+    * first use and deleted when the JVM exits. The `ensure*` caches are
+    * per-JVM maps, so no later process reads what a run staged.
+    */
+  private[graft] lazy val fixtureRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_fixtures")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.spark.network.util.JavaUtils.deleteRecursively(root.toFile)))
+    root
+  }
+
+  /** A fresh `<prefix><N>` dir for one `ensure*` fixture under the JVM's
+    * fixture root. Call it only once the fixture's input read resolved,
+    * so a missing corpus leaves no empty dir behind.
+    */
+  def fixtureDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(fixtureRoot, prefix)
+
   def withFixtureCopy[T](spark: SparkSession, fixture: String,
       prefix: String)(body: String => T): T = {
     val root = java.nio.file.Files.createTempDirectory(prefix)

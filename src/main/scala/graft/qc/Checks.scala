@@ -1,6 +1,6 @@
 package graft.qc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Declarative data-quality harness (ref: nrg_qc.py data_qc), with the
@@ -8,27 +8,45 @@ import org.apache.spark.sql.functions._
   *   1. count_rows returned the function object instead of the SQL —
   *      here checks are typed values, not stringly-built;
   *   2. Row-vs-int comparison made every equality check fail — here the
-  *      scalar is extracted (`first().getLong(0)`);
+  *      count is read as a Long from the aggregate row;
   *   3. the JSON error report used a driver-local open() on an HDFS URI —
   *      here the report is written through the Spark writer, so any
   *      Hadoop-supported filesystem works.
   */
 object Checks {
 
-  /** One declarative assertion: run `sql`, compare the single LONG scalar
-    * against `expected` (equals when `expectEqual`, not-equals otherwise —
-    * the reference's equal_flag=False rows assert "row count must NOT be
-    * 0").
+  /** One declarative assertion over `table`: count the rows matching
+    * `violation` (a SQL boolean fragment; `None` counts every row) and
+    * compare that count against `expected` (equals when `expectEqual`,
+    * not-equals otherwise — the reference's equal_flag=False rows assert
+    * "row count must NOT be 0"). The report's [[sql]] and the evaluated
+    * [[counted]] Column are both derived from this one declaration.
     */
-  final case class Check(name: String, sql: String, expectEqual: Boolean, expected: Long) {
-    /** Build the result from an already-known actual (shared by the
-      * SQL-scan path [[run]] and the observed-counter path
-      * [[graft.etl.Pipeline.runEtlObserved]] so pass/fail semantics
-      * cannot diverge).
+  final case class Check(
+      name: String, table: String, violation: Option[String],
+      expectEqual: Boolean, expected: Long) {
+
+    /** The check as the reference writes it, for the error report. */
+    def sql: String = s"SELECT COUNT(*) FROM $table" + violation.fold("")(p => s" WHERE $p")
+
+    /** The violation count as an aggregate Column: 0 over an empty
+      * table, and a row whose predicate is null is not counted (as the
+      * SQL form's WHERE drops it).
+      */
+    def counted: Column = violation.fold(count(lit(1)))(p => count_if(expr(p))).as(name)
+
+    /** Shared by the one-aggregate scan [[run]] and the observed path
+      * [[observed]], so pass/fail semantics cannot diverge.
       */
     def result(actual: Long): CheckResult =
       CheckResult(name, sql, expectEqual, expected, actual,
         if (expectEqual) actual == expected else actual != expected)
+
+    /** This check's result from an [[observed]] frame's `Observation`
+      * (blocks until the observed action has run).
+      */
+    def observedIn(obs: Observation): CheckResult =
+      result(obs.get(name).asInstanceOf[Long])
   }
 
   final case class CheckResult(
@@ -36,43 +54,23 @@ object Checks {
       expected: Long, actual: Long, passed: Boolean)
 
   def nullChecker(table: String, column: String): Check =
-    Check(s"${table}.${column}_not_null",
-      s"SELECT COUNT(*) FROM $table WHERE `$column` IS NULL",
+    Check(s"${table}.${column}_not_null", table, Some(s"`$column` IS NULL"),
       expectEqual = true, expected = 0L)
 
   def countRows(table: String): Check =
-    Check(s"${table}_non_empty", s"SELECT COUNT(*) FROM $table",
-      expectEqual = false, expected = 0L)
-
-  /** The nine fuel-type components of net_generation — the ONE source of
-    * truth from which both languages of the consistency invariant are
-    * built (the SQL check below and the observed Column in
-    * [[graft.etl.Pipeline.runEtlObserved]]); adding or renaming a fuel
-    * column is a one-line change that reaches both paths.
-    */
-  val netGenParts: Seq[String] = Seq(
-    "net_generation_coal", "net_generation_nat_gas", "net_generation_nuclear",
-    "net_generation_petro", "net_generation_hydro", "net_generation_solar",
-    "net_generation_wind", "net_generation_other", "net_generation_unknown")
-
-  /** [[netGenParts]] as a Column sum, for the observed (single-pass)
-    * form of the invariant.
-    */
-  def netGenPartsSum: org.apache.spark.sql.Column =
-    netGenParts.map(col).reduce(_ + _)
+    Check(s"${table}_non_empty", table, None, expectEqual = false, expected = 0L)
 
   /** Cross-column invariant: total net generation equals the sum of its
     * nine fuel-type parts (ref net_gen_qc). Measures are typed double at
     * ingest, so the comparison is numeric, not string (SURVEY §4.3.5).
     */
-  val netGenConsistency: Check = Check(
-    "net_generation_sum_of_parts",
-    s"""SELECT COUNT(*) FROM (
-      |  SELECT net_generation,
-      |         ${netGenParts.mkString(" + ")} AS sum_of_parts
-      |  FROM balancing_authorities) main
-      |WHERE abs(main.net_generation - main.sum_of_parts) > 1e-6""".stripMargin,
-    expectEqual = true, expected = 0L)
+  val netGenConsistency: Check = {
+    val parts = Seq("coal", "nat_gas", "nuclear", "petro", "hydro", "solar",
+      "wind", "other", "unknown").map(f => s"net_generation_$f")
+    Check("net_generation_sum_of_parts", "balancing_authorities",
+      Some(s"abs(net_generation - (${parts.mkString(" + ")})) > 1e-6"),
+      expectEqual = true, expected = 0L)
+  }
 
   /** The reference's 8 checks over the two output tables (nrg_qc.py:27-34). */
   val referenceChecks: Seq[Check] = Seq(
@@ -85,8 +83,17 @@ object Checks {
     nullChecker("weather", "TMIN"),
     nullChecker("weather", "TMAX"))
 
-  def run(spark: SparkSession, checks: Seq[Check]): Seq[CheckResult] =
-    checks.map(c => c.result(spark.sql(c.sql).first().getLong(0)))
+  /** Evaluates `checks` with ONE aggregate per table (the reference, and
+    * a per-check query, scan each table once per check); results come
+    * back in the order of `checks`.
+    */
+  def run(spark: SparkSession, checks: Seq[Check]): Seq[CheckResult] = {
+    val actual = checks.groupBy(_.table).flatMap { case (table, cs) =>
+      val row = spark.table(table).agg(cs.head.counted, cs.tail.map(_.counted): _*).first()
+      cs.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }
+    }
+    checks.map(c => c.result(actual(c)))
+  }
 
   /** Error report: failures only, one JSON object per line, written via
     * the Spark writer (S6 intent-fixed — works on hdfs/s3a/local alike).
@@ -98,23 +105,17 @@ object Checks {
       .write.mode("overwrite").json(path)
   }
 
-  /** ZERO-EXTRA-PASS QC via `Dataset.observe`: the row count and
-    * per-column null counts are accumulated INSIDE whatever job
+  /** ZERO-EXTRA-PASS QC via `Dataset.observe`: the [[Check.counted]]
+    * Columns of `checks` are accumulated INSIDE whatever job
     * materializes the frame (the ETL write itself), so at 100 TB the
     * quality counters cost nothing beyond the write that was happening
-    * anyway — where the reference's QC (and [[run]]) re-scans the output
-    * once per check. Call, run exactly one action on the returned frame,
-    * then read the metrics row from the `Observation`.
+    * anyway — where the reference's QC (and [[run]]) reads the output back.
+    * Call, run exactly one action on the returned frame, then read each
+    * check's result with [[Check.observedIn]].
     */
-  def observed(df: DataFrame, nullCols: Seq[String],
-      extra: org.apache.spark.sql.Column*)
-      : (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation()
-    val metrics =
-      count(lit(1)).as("n_rows") +:
-        (nullCols.map(c => sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"n_null_$c")) ++
-          extra)
-    (df.observe(obs, metrics.head, metrics.tail: _*), obs)
+  def observed(df: DataFrame, checks: Seq[Check]): (DataFrame, Observation) = {
+    val obs = Observation()
+    (df.observe(obs, checks.head.counted, checks.tail.map(_.counted): _*), obs)
   }
 
   /** [[observed]] surfaced on the driver contract: richer profile
@@ -129,7 +130,7 @@ object Checks {
   def qObserve(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val ev = graft.Tables.events(spark, dir)
-    val obs = org.apache.spark.sql.Observation()
+    val obs = Observation()
     val outPath = java.nio.file.Files.createTempDirectory("graft_observe")
     // the write exists only to drive the observed scan; remove its
     // output afterwards so repeated bench/oracle invocations of this

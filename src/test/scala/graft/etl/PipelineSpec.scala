@@ -25,6 +25,24 @@ class PipelineSpec extends SparkSuite {
 
     val results = Pipeline.runQc(spark, out)
     assert(results.length === 8)
+    // the report fields, pinned in the reference's check order
+    assert(results.map(r => (r.name, r.expectEqual, r.expected, r.actual, r.passed)) === Seq(
+      ("balancing_authorities_non_empty", false, 0L, 5L, true),
+      ("balancing_authorities.bal_auth_not_null", true, 0L, 1L, false),
+      ("net_generation_sum_of_parts", true, 0L, 1L, false),
+      ("weather_non_empty", false, 0L, 3L, true),
+      ("weather.station_id_not_null", true, 0L, 0L, true),
+      ("weather.date_not_null", true, 0L, 0L, true),
+      ("weather.TMIN_not_null", true, 0L, 1L, false),
+      ("weather.TMAX_not_null", true, 0L, 1L, false)))
+    assert(results.filterNot(_.name == "net_generation_sum_of_parts").map(_.sql) === Seq(
+      "SELECT COUNT(*) FROM balancing_authorities",
+      "SELECT COUNT(*) FROM balancing_authorities WHERE `bal_auth` IS NULL",
+      "SELECT COUNT(*) FROM weather",
+      "SELECT COUNT(*) FROM weather WHERE `station_id` IS NULL",
+      "SELECT COUNT(*) FROM weather WHERE `date` IS NULL",
+      "SELECT COUNT(*) FROM weather WHERE `TMIN` IS NULL",
+      "SELECT COUNT(*) FROM weather WHERE `TMAX` IS NULL"))
     // seeded violations: null bal_auth partition value, net-gen mismatch,
     // TMIN/TMAX nulls from missing parameters
     assert(results.count(!_.passed) === 4)
@@ -46,8 +64,8 @@ class PipelineSpec extends SparkSuite {
     // ...and the ride-along counters equal what a post-hoc scan computes
     val postHoc = Pipeline.runQc(spark, out)
     assert(observed.length === 8)
-    assert(observed.sortBy(_.name) === postHoc.sortBy(_.name),
-      "observed counters must equal the 8-scan audit exactly")
+    assert(observed === postHoc,
+      "observed counters must equal the post-hoc aggregates exactly")
     assert(observed.count(!_.passed) === 4) // the seeded violations
   }
 

@@ -2,6 +2,7 @@ package graft.qc
 
 import graft.SparkSuite
 import graft.etl.{BalAuth, Pipeline, Weather}
+import org.apache.spark.sql.DataFrame
 
 /** QC harness over the seeded-violation fixtures: the fixture data
   * contains a null bal_auth and a net-generation sum mismatch (bal_auth
@@ -10,12 +11,12 @@ import graft.etl.{BalAuth, Pipeline, Weather}
   */
 class QcSpec extends SparkSuite {
 
-  def registerViews(): Unit = {
+  def registerViews(rows: DataFrame => DataFrame = identity): Unit = {
     val eia = Pipeline.readEia(spark, fixture("bal_auth"))
-    BalAuth.balAuthTable(eia).createOrReplaceTempView("balancing_authorities")
+    rows(BalAuth.balAuthTable(eia)).createOrReplaceTempView("balancing_authorities")
     val ghcn = Pipeline.readGhcn(spark, fixture("weather/ghcn.csv.gz"))
     val locations = Pipeline.readLocations(spark, fixture("weather/locations.csv"))
-    Weather(ghcn, locations).createOrReplaceTempView("weather")
+    rows(Weather(ghcn, locations)).createOrReplaceTempView("weather")
   }
 
   test("reference checks flag exactly the seeded violations") {
@@ -54,20 +55,41 @@ class QcSpec extends SparkSuite {
     assert(Checks.run(spark, baChecks).forall(_.passed))
   }
 
+  test("each result's sql, re-run as SQL, equals the actual of the one-aggregate scan") {
+    registerViews()
+    val results = Checks.run(spark, Checks.referenceChecks)
+    assert(results.map(_.name) === Checks.referenceChecks.map(_.name))
+    results.foreach { r =>
+      assert(spark.sql(r.sql).first().getLong(0) === r.actual, r.sql)
+    }
+  }
+
+  test("over empty tables only the non-empty checks fail; every other check passes with 0") {
+    registerViews(_.limit(0))
+    val results = Checks.run(spark, Checks.referenceChecks)
+    val (nonEmpty, rest) = results.partition(_.name.endsWith("_non_empty"))
+    assert(nonEmpty.map(_.name).toSet ===
+      Set("balancing_authorities_non_empty", "weather_non_empty"))
+    assert(nonEmpty.forall(r => !r.passed && r.actual == 0L))
+    assert(rest.nonEmpty && rest.forall(r => r.passed && r.actual == 0L), rest)
+  }
+
   test("observed QC accumulates counters inside the single materializing job") {
     import org.apache.spark.sql.functions._
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
       .withColumn("maybe_null",
         when(pmod(col("doc_id"), lit(7)) === 0, lit(null).cast("string"))
           .otherwise(col("lang")))
-    val (observedDf, obs) = Checks.observed(docs, Seq("maybe_null", "doc_id"))
+    val checks = Seq(Checks.countRows("docs"),
+      Checks.nullChecker("docs", "maybe_null"), Checks.nullChecker("docs", "doc_id"))
+    val (observedDf, obs) = Checks.observed(docs, checks)
     // ONE action — the metrics ride along with it, no extra scan
     observedDf.write.format("noop").mode("overwrite").save()
-    val row = obs.get
+    val Seq(rows, maybeNull, docId) = checks.map(_.observedIn(obs))
     val expectedNulls = docs.filter(col("maybe_null").isNull).count()
-    assert(row("n_rows") === docs.count())
-    assert(row("n_null_maybe_null") === expectedNulls && expectedNulls > 0)
-    assert(row("n_null_doc_id") === 0L)
+    assert(rows.actual === docs.count() && rows.passed)
+    assert(maybeNull.actual === expectedNulls && expectedNulls > 0 && !maybeNull.passed)
+    assert(docId.actual === 0L && docId.passed)
   }
 
   test("q_observe metrics riding the write equal a dedicated aggregate pass") {
