@@ -2,6 +2,7 @@ package graft.etl
 
 import graft.GraftSession
 import graft.qc.Checks
+import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 
 /** End-to-end batch pipeline: the reference's Airflow DAG collapsed to a
@@ -123,16 +124,12 @@ object Pipeline {
     * existing files (the header-name contract still holds).
     */
   def runEtlStream(spark: SparkSession, inputDir: String, outputDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val schema = readEia(spark, s"$inputDir/bal_auth/*.gz").schema
-    val stream = spark.readStream
-      .option("header", true)
-      .option("maxFilesPerTrigger", 1)
-      .schema(schema)
-      .csv(s"$inputDir/bal_auth/*.gz")
+    val glob = s"$inputDir/bal_auth/*.gz"
     val outPath = s"$outputDir/bal_auth"
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    Streams.drain(
+      Streams.fileStream(spark, readEia(spark, glob).schema, glob, oneFilePerTrigger = true,
+        format = "csv", options = Map("header" -> "true")),
+      Streams.ForeachBatch(Some(s"$outputDir/_checkpoints/bal_auth"), { (batch, _) =>
         val day = BalAuth.balAuthTable(batch)
         val fs = new org.apache.hadoop.fs.Path(outPath)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -142,11 +139,7 @@ object Pipeline {
             partCols = Seq("bal_auth", "year", "month"))
         else
           writePartitioned(day, Seq("bal_auth", "year", "month"), outPath, dynamic = true)
-      }
-      .option("checkpointLocation", s"$outputDir/_checkpoints/bal_auth")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }))
   }
 
   /** The ETL output dirs the QC checks read, by their QC table name. */

@@ -1217,19 +1217,23 @@ object Dedup {
       step("da:delta")(reElectionDelta(before, after, del)))
     var fi = 0
     def nextFrame(): DataFrame = { val f = frames(fi); fi += 1; f }
-    step("da:pubBands")(StoreIO.publishMerged(spark, s"$indexPath/bands",
-      nextFrame(), bandsSnap))
-    step("da:pubShingles")(StoreIO.publishMerged(spark, s"$indexPath/shingles",
-      nextFrame(), shinglesSnap))
-    manifestSnap.foreach { snap =>
-      step("da:pubManifest")(StoreIO.publishMerged(spark, manifestPath.get,
-        nextFrame(), snap))
-    }
-    hashSnap.foreach { snap =>
-      step("da:pubHashes")(StoreIO.publishMerged(spark, hashesRoot.get,
-        nextFrame(), snap, partitionBy = Seq("batch")))
-    }
-    step("da:pubPairs")(StoreIO.publishMerged(spark, pairsPath, after, pairsSnap))
+    // a failed publish still waits for the delta: it must not run on
+    // after the leases are released and the caller's inputs are gone
+    try {
+      step("da:pubBands")(StoreIO.publishMerged(spark, s"$indexPath/bands",
+        nextFrame(), bandsSnap))
+      step("da:pubShingles")(StoreIO.publishMerged(spark, s"$indexPath/shingles",
+        nextFrame(), shinglesSnap))
+      manifestSnap.foreach { snap =>
+        step("da:pubManifest")(StoreIO.publishMerged(spark, manifestPath.get,
+          nextFrame(), snap))
+      }
+      hashSnap.foreach { snap =>
+        step("da:pubHashes")(StoreIO.publishMerged(spark, hashesRoot.get,
+          nextFrame(), snap, partitionBy = Seq("batch")))
+      }
+      step("da:pubPairs")(StoreIO.publishMerged(spark, pairsPath, after, pairsSnap))
+    } finally deltaH.await()
     deltaH.get()
     }
   }

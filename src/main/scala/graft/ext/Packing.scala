@@ -259,15 +259,6 @@ object Packing {
       .orderBy("doc_id")
   }
 
-  /** The documents drop-file schema, for the streaming reader. */
-  val docsSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-  }
-
   /** Streaming face of the manifest maintenance: a checkpointed file
     * stream watches the document drop directory and every micro-batch
     * appends its [[packDelta]] to the stored manifest as a
@@ -285,22 +276,17 @@ object Packing {
     */
   def packStream(spark: SparkSession, inputGlob: String, manifestPath: String,
       checkpoint: String, seqLen: Long = 512L, buckets: Int = 64): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.ops.StoreIO
-    val stream = spark.readStream.schema(docsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(inputGlob)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    import graft.streaming.{Streaming, Streams}
+    Streams.drain(
+      Streams.fileStream(spark, Streaming.docsRawSchema, inputGlob, oneFilePerTrigger = true),
+      Streams.ForeachBatch(Some(checkpoint), { (batch, _) =>
         // a missing manifest reads as empty: the first delta packs from 0
         val delta = packDelta(
           StoreIO.read(spark, manifestPath, Some(Dedup.ManifestDdl)),
           batch, seqLen, buckets)
         if (!delta.isEmpty) StoreIO.append(delta, manifestPath)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }))
   }
 
   /** Per-sequence occupancy profile over the packed manifest: how many

@@ -62,12 +62,6 @@ object Pca {
     (tot(0), tot.slice(1, 1 + d), tot.slice(1 + d, 1 + d + tri))
   }
 
-  /** Per-dimension mean of the corpus (from the one-pass moments). */
-  def meanVector(emb: DataFrame): Array[Double] = {
-    val (n, s, _) = moments(embDouble(emb))
-    s.map(_ / n)
-  }
-
   /** Top principal direction and eigenvalue of the centered covariance
     * (1/n)·Σ(e−μ)(e−μ)ᵀ. Returns (direction, eigenvalue, μ).
     */

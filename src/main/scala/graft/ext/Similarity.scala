@@ -532,24 +532,16 @@ object Similarity {
     */
   def runIndexAppendStream(spark: SparkSession, inputGlob: String, indexPath: String): Unit = {
     import graft.functions.VectorFns
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
-    val stream = spark.readStream.schema(schema).parquet(inputGlob)
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          batch.select(col("vec_id"), col("embedding"),
-              VectorFns.l2norm(col("embedding")).as("nrm"),
-              lshSignature(col("embedding")).as("bucket"))
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .partitionBy("bucket").parquet(indexPath)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    import graft.streaming.{Streaming, Streams}
+    Streams.drain(
+      Streams.fileStream(spark, Streaming.embRawSchema, inputGlob, oneFilePerTrigger = false),
+      Streams.ForeachBatch(None, Streams.nonEmpty { (batch, _) =>
+        batch.select(col("vec_id"), col("embedding"),
+            VectorFns.l2norm(col("embedding")).as("nrm"),
+            lshSignature(col("embedding")).as("bucket"))
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .partitionBy("bucket").parquet(indexPath)
+      }))
   }
 
   /** Per-dimension corpus statistics — the feature-scaling / whitening

@@ -75,8 +75,10 @@ object SuffixDedup {
     val spark = docs.sparkSession
     val root = spark.conf.getOption("spark.graft.scratchDir")
       .getOrElse(System.getProperty("java.io.tmpdir"))
-    val scratch = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get(root), "suffix_sa").toString
+    // one per-JVM dir holds every call's stage: the returned frame reads
+    // it lazily, so it can go no earlier than the JVM
+    val scratch = java.nio.file.Files.createTempDirectory(
+      graft.ops.Scratch.jvmRoot(root, "graft_suffix_sa"), "suffix_sa").toString
     rankedInput(docs).write.mode("overwrite").parquet(scratch)
     spark.read.parquet(scratch)
   }

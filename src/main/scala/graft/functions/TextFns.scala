@@ -30,47 +30,11 @@ object TextFns {
           i => concat_ws(" ", slice(w, i + 1, lit(n))))))
   }
 
-  /** Character n-gram shingles (distinct). */
-  def charShingles(text: Column, n: Int): Column = {
-    val len = length(text)
-    array_distinct(
-      when(len < n, array(text))
-        .otherwise(transform(
-          sequence(lit(0), len - n),
-          i => text.substr(i + 1, lit(n)))))
-  }
-
-  /** Distinct characters of a string, for character-set Jaccard (matches
-    * DuckDB's `jaccard` string function).
-    */
-  def charSet(text: Column): Column = array_distinct(split(text, ""))
-
   /** |A ∩ B| / |A ∪ B| over two array columns (distinct elements). */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")
     val union = (size(a) + size(b)).cast("double") - size(array_intersect(a, b))
     when(union === 0d, lit(0d)).otherwise(inter / union)
-  }
-
-  // --- quality scoring -----------------------------------------------------
-
-  def punctRatio(text: Column): Column =
-    length(regexp_replace(text, "[^\\p{Punct}]", "")).cast("double") / length(text)
-
-  def digitRatio(text: Column): Column =
-    length(regexp_replace(text, "[^0-9]", "")).cast("double") / length(text)
-
-  def upperRatio(text: Column): Column =
-    length(regexp_replace(text, "[^A-Z]", "")).cast("double") / length(text)
-
-  def meanTokenLen(text: Column): Column = {
-    val t = tokens(text)
-    aggregate(t, lit(0L), (acc, x) => acc + length(x)).cast("double") / size(t)
-  }
-
-  def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
-    val t = tokens(lower(text))
-    size(filter(t, x => array_contains(lit(stopwords.toArray), x))).cast("double") / size(t)
   }
 
   // --- language identification --------------------------------------------

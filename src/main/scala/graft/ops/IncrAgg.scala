@@ -117,11 +117,7 @@ object IncrAgg {
   def maintainStream(spark: SparkSession, inputGlob: String, mvPath: String,
       checkpoint: String): Unit = {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
-    val stream = spark.readStream
-      .schema(graft.streaming.Streaming.eventsRawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputGlob)
+    import graft.streaming.{Streaming, Streams}
     val fs = new Path(mvPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ledger = new Path(mvPath, "_ledger")
@@ -146,18 +142,15 @@ object IncrAgg {
     // prior micro-batch or a batch-mode init that seeded the history
     def viewExists: Boolean = fs.exists(new Path(mvPath)) &&
       fs.listStatus(new Path(mvPath)).exists(_.getPath.getName.startsWith("day="))
-    val q = graft.streaming.Streaming.normalize(stream).writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    Streams.drain(
+      Streaming.eventStream(spark, inputGlob, oneFilePerTrigger = true),
+      Streams.ForeachBatch(Some(checkpoint), { (batch, id) =>
         if (id > lastApplied) {
           if (viewExists) merge(spark, mvPath, batch)
           else init(batch, mvPath)
           record(id)
         }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }))
   }
 
   // --- driver-contract entry ------------------------------------------------
@@ -176,7 +169,7 @@ object IncrAgg {
       val days = ev.select(col("d").cast("string")).distinct()
         .collect().map(_.getString(0)).sorted
       val splitDay = days(days.length * 2 / 3)
-      val mv = java.nio.file.Files.createTempDirectory("incr_agg_mv").toString
+      val mv = Scratch.fixtureDir("incr_agg_mv").toString
       init(ev.filter(col("d").cast("string") < splitDay), mv)
       (mv, splitDay)
     })
@@ -247,7 +240,7 @@ object IncrAgg {
       val days = ev.select(col("d").cast("string")).distinct()
         .collect().map(_.getString(0)).sorted
       val splitDay = days(days.length * 2 / 3)
-      val mv = java.nio.file.Files.createTempDirectory("hll_mv").toString
+      val mv = Scratch.fixtureDir("hll_mv").toString
       sketchInit(ev.filter(col("d").cast("string") < splitDay), mv)
       (mv, splitDay)
     })

@@ -1,5 +1,8 @@
 package graft.ops
 
+import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors, Future}
+import java.util.concurrent.atomic.AtomicInteger
+
 /** Concurrent driver-side job submission (optimization guide §2.6:
   * "overlap independent jobs" — Spark's scheduler happily runs several
   * jobs at once inside one application; actions are only sequential
@@ -16,52 +19,60 @@ package graft.ops
   *   - every thunk is deterministic and side-effect-free apart from
   *     Spark job submission, so concurrency cannot reorder results
   *     (results return in thunk order).
+  *
+  * Worker threads are named `graft-par-<N>` and are daemons, and every
+  * pool is shut down as soon as its thunks are submitted, so a worker
+  * ends with its thunk whatever the caller does.
   */
 object Par {
 
-  /** Runs the thunks concurrently on a short-lived pool and returns
-    * their results IN ORDER; the first failure is rethrown (after all
-    * threads settle) with its original type, matching the sequential
-    * form's error behavior.
+  private val threadIds = new AtomicInteger()
+
+  /** Submits every thunk to a fresh pool of `thunks.size` threads. */
+  private def submit[T](thunks: Seq[() => T]): Seq[Future[T]] = {
+    val pool: ExecutorService = Executors.newFixedThreadPool(thunks.size, (r: Runnable) => {
+      val t = new Thread(r, s"graft-par-${threadIds.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+    try thunks.map(t => pool.submit(new Callable[T] { def call(): T = t() }))
+    finally pool.shutdown()
+  }
+
+  /** Waits for every future, then returns the results in order or
+    * rethrows the first failure in thunk order with its original type,
+    * so no leg is still running when the caller sees the failure.
+    */
+  private def join[T](futs: Seq[Future[T]]): Seq[T] =
+    futs.map { f =>
+      try Right(f.get())
+      catch { case e: ExecutionException => Left(e.getCause) }
+    }.map {
+      case Right(v) => v
+      case Left(e)  => throw e
+    }
+
+  /** Runs the thunks concurrently and returns their results IN ORDER;
+    * the first failure is rethrown after every thunk has finished,
+    * matching the sequential form's error behavior.
     */
   def all[T](thunks: Seq[() => T]): Seq[T] =
     if (thunks.lengthCompare(1) <= 0) thunks.map(_())
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
-      try {
-        val futs = thunks.map { t =>
-          pool.submit(new java.util.concurrent.Callable[T] {
-            def call(): T = t()
-          })
-        }
-        futs.map { f =>
-          try f.get()
-          catch { // unwrap so callers observe the sequential form's exception
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
-          }
-        }
-      } finally pool.shutdownNow()
-    }
+    else join(submit(thunks))
 
   /** Starts one thunk on its own thread; [[Handle.get]] joins it. For
     * overlapping a single independent computation with caller-thread
     * work (e.g. the re-election delta with the store publishes).
     */
-  def start[T](thunk: () => T): Handle[T] = {
-    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-    val fut = pool.submit(new java.util.concurrent.Callable[T] {
-      def call(): T = thunk()
-    })
-    new Handle[T](fut, pool)
-  }
+  def start[T](thunk: () => T): Handle[T] = new Handle[T](submit(Seq(thunk)).head)
 
-  final class Handle[T](fut: java.util.concurrent.Future[T],
-      pool: java.util.concurrent.ExecutorService) {
-    def get(): T =
-      try fut.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      } finally pool.shutdownNow()
+  final class Handle[T](fut: Future[T]) {
+    def get(): T = join(Seq(fut)).head
+
+    /** Waits for the thunk to finish and drops its outcome: for a caller
+      * that is already failing and must not leave the thunk running.
+      */
+    def await(): Unit =
+      try fut.get() catch { case _: ExecutionException => () }
   }
 }

@@ -15,16 +15,26 @@ import org.apache.spark.sql.SparkSession
   */
 object Scratch {
 
-  /** Root of this JVM's `ensure*` fixture stores: one temp dir, made on
-    * first use and deleted when the JVM exits. The `ensure*` caches are
-    * per-JVM maps, so no later process reads what a run staged.
+  private val jvmRoots = scala.collection.mutable.Map.empty[(String, String), java.nio.file.Path]
+
+  /** This JVM's `<prefix><N>` dir under `parent`: made on first use and
+    * deleted when the JVM exits. What is staged there is read only by
+    * this JVM (per-JVM caches, frames read lazily until the end of a run).
     */
-  private[graft] lazy val fixtureRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft_fixtures")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      org.apache.spark.network.util.JavaUtils.deleteRecursively(root.toFile)))
-    root
-  }
+  private[graft] def jvmRoot(parent: String, prefix: String): java.nio.file.Path =
+    jvmRoots.synchronized {
+      jvmRoots.getOrElseUpdate((parent, prefix), {
+        val root = java.nio.file.Files.createTempDirectory(
+          java.nio.file.Paths.get(parent), prefix)
+        Runtime.getRuntime.addShutdownHook(new Thread(() =>
+          org.apache.spark.network.util.JavaUtils.deleteRecursively(root.toFile)))
+        root
+      })
+    }
+
+  /** Root of this JVM's `ensure*` fixture stores. */
+  private[graft] def fixtureRoot: java.nio.file.Path =
+    jvmRoot(System.getProperty("java.io.tmpdir"), "graft_fixtures")
 
   /** A fresh `<prefix><N>` dir for one `ensure*` fixture under the JVM's
     * fixture root. Call it only once the fixture's input read resolved,

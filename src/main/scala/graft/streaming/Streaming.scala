@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (capability superset — the reference's
@@ -13,7 +13,8 @@ import org.apache.spark.sql.types._
   * Design: the aggregation logic is a plain DataFrame => DataFrame shared
   * verbatim between batch and stream — the Spark contract that makes
   * batch/streaming parity testable (StreamingSpec asserts stream output
-  * equals the batch run on the same files).
+  * equals the batch run on the same files). Each `run*` runner declares
+  * only its source, transform and sink; [[Streams]] drives them.
   */
 object Streaming {
 
@@ -30,6 +31,11 @@ object Streaming {
 
   def normalize(raw: DataFrame): DataFrame =
     raw.withColumn("ts", timestamp_micros(col("ts")))
+
+  /** The events file stream, `ts` as a timestamp. */
+  private[graft] def eventStream(spark: SparkSession, inputGlob: String,
+      oneFilePerTrigger: Boolean = false): DataFrame =
+    normalize(Streams.fileStream(spark, eventsRawSchema, inputGlob, oneFilePerTrigger))
 
   /** Shared transform: per-hour, per-type event counts + exact money sum.
     * Used identically by the batch query (q_stream_window) and the file
@@ -67,38 +73,20 @@ object Streaming {
 
   /** File-source stream over a parquet directory, 10-minute watermark,
     * AvailableNow trigger (drain-everything-then-stop: incremental batch).
-    * Returns the in-memory result table name.
+    * Results land in the in-memory table `queryName`.
     */
-  def runFileStream(spark: SparkSession, inputGlob: String, queryName: String): Unit = {
-    val stream = spark.readStream
-      .schema(eventsRawSchema)
-      .parquet(inputGlob)
-    val agg = hourlyTypeCounts(normalize(stream).withWatermark("ts", "10 minutes"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runFileStream(spark: SparkSession, inputGlob: String, queryName: String): Unit =
+    Streams.drain(
+      hourlyTypeCounts(eventStream(spark, inputGlob).withWatermark("ts", "10 minutes")),
+      Streams.Memory(queryName, OutputMode.Complete()))
 
   /** The sliding-window aggregation as a stream (same expression as the
     * batch [[slidingTypeCounts]]; overlap handled by window state).
     */
-  def runSlidingStream(spark: SparkSession, inputGlob: String, queryName: String): Unit = {
-    val stream = spark.readStream
-      .schema(eventsRawSchema)
-      .parquet(inputGlob)
-    val agg = slidingTypeCounts(normalize(stream).withWatermark("ts", "10 minutes"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runSlidingStream(spark: SparkSession, inputGlob: String, queryName: String): Unit =
+    Streams.drain(
+      slidingTypeCounts(eventStream(spark, inputGlob).withWatermark("ts", "10 minutes")),
+      Streams.Memory(queryName, OutputMode.Complete()))
 
   // --- stateful sessionization ---------------------------------------------
 
@@ -183,20 +171,13 @@ object Streaming {
     val changeSchema = StructType(Seq(
       StructField("event_id", LongType), StructField("user_id", LongType),
       StructField("value", DoubleType), StructField("day", StringType)))
-    val stream = spark.readStream
-      .schema(changeSchema)
-      .option("maxFilesPerTrigger", 1) // one micro-batch per change file
-      .parquet(changesDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.ops.Upsert.upsertPartitioned(
-            batch.sparkSession, tablePath, batch.toDF(),
-            keyCols = Seq("event_id"), partCols = Seq("day"))
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    // one micro-batch per change file
+    Streams.drain(
+      Streams.fileStream(spark, changeSchema, changesDir, oneFilePerTrigger = true),
+      Streams.ForeachBatch(None, Streams.nonEmpty { (batch, _) =>
+        graft.ops.Upsert.upsertPartitioned(batch.sparkSession, tablePath, batch,
+          keyCols = Seq("event_id"), partCols = Seq("day"))
+      }))
   }
 
   // --- streaming incremental dedup -----------------------------------------
@@ -296,12 +277,24 @@ object Streaming {
     }
   }
 
-  /** Streaming run of milestone detection through transformWithState
-    * (requires the RocksDB state store; the runner pins it for the
-    * query and restores the previous provider).
+  /** The typed events the stateful processors read, one file per
+    * trigger; `prep` runs on the untyped stream first.
     */
-  /** Checkpointed variant writing to a parquet FILE sink — the
-    * fault-tolerant pairing (the memory sink cannot recover): committed
+  private def typedEvents(spark: SparkSession, inputGlob: String,
+      prep: DataFrame => DataFrame = identity): Dataset[Event] =
+    prep(eventStream(spark, inputGlob, oneFilePerTrigger = true))
+      .select("event_id", "ts", "user_id", "event_type", "value").as(Encoders.product[Event])
+
+  /** A per-user `transformWithState` run of `processor`, append mode. */
+  private def perUser[O <: Product : scala.reflect.runtime.universe.TypeTag](
+      events: Dataset[Event], processor: StatefulProcessor[Long, Event, O],
+      timeMode: TimeMode = TimeMode.None()): DataFrame =
+    events.groupByKey(_.user_id)(Encoders.scalaLong)
+      .transformWithState(processor, timeMode, OutputMode.Append())(Encoders.product[O])
+      .toDF()
+
+  /** Milestone detection as a checkpointed stream into a parquet FILE
+    * sink — the fault-tolerant pairing (the memory sink cannot recover): committed
     * source offsets skip already-processed files on restart, the RocksDB
     * state restores each key's running total, and the file sink's commit
     * log makes output exactly-once across restarts. StreamingSpec stops
@@ -309,36 +302,9 @@ object Streaming {
     * union-of-runs == batch with zero re-emission.
     */
   def runMilestoneStreamToFiles(
-      spark: SparkSession, inputGlob: String, outPath: String, checkpoint: String): Unit = {
-    import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = normalize(
-        spark.readStream.schema(eventsRawSchema)
-          .option("maxFilesPerTrigger", 1).parquet(inputGlob))
-        .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
-      val q = stream.groupByKey(_.user_id)
-        .transformWithState(new MilestoneProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-        .toDF()
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .format("parquet")
-        .option("path", outPath)
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
-  }
+      spark: SparkSession, inputGlob: String, outPath: String, checkpoint: String): Unit =
+    Streams.drain(perUser(typedEvents(spark, inputGlob), new MilestoneProcessor),
+      Streams.Parquet(outPath, checkpoint))
 
   /** `dedupeInput` composes the at-least-once answer in front of the
     * stateful processor: a redelivering source (file replays, Kafka
@@ -351,39 +317,12 @@ object Streaming {
   def runMilestoneStream(
       spark: SparkSession, inputGlob: String, queryName: String,
       dedupeInput: Boolean = false): Unit = {
-    import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val raw = normalize(
-        spark.readStream.schema(eventsRawSchema)
-          .option("maxFilesPerTrigger", 1).parquet(inputGlob))
-      val cleaned =
-        if (dedupeInput)
-          raw.withWatermark("ts", "10 minutes")
-            .dropDuplicatesWithinWatermark("event_id")
-        else raw
-      val stream = cleaned
-        .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
-      val writer = stream.groupByKey(_.user_id)
-        .transformWithState(new MilestoneProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-        .toDF()
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-      val q = writer.start()
-      q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
+    val events = typedEvents(spark, inputGlob, raw =>
+      if (dedupeInput)
+        raw.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark("event_id")
+      else raw)
+    Streams.drain(perUser(events, new MilestoneProcessor),
+      Streams.Memory(queryName, OutputMode.Append()))
   }
 
   // --- inactivity detection (event-time timers) ----------------------------
@@ -463,36 +402,11 @@ object Streaming {
     * once something advances the watermark past each user's deadline —
     * the heartbeat discipline again (StreamingSpec stages it).
     */
-  def runInactivityStream(spark: SparkSession, inputGlob: String, queryName: String): Unit = {
-    import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = normalize(
-        spark.readStream.schema(eventsRawSchema)
-          .option("maxFilesPerTrigger", 1).parquet(inputGlob))
-        .withWatermark("ts", "10 minutes")
-        .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
-      val q = stream.groupByKey(_.user_id)
-        .transformWithState(new InactivityProcessor,
-          org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-        .toDF()
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
-  }
+  def runInactivityStream(spark: SparkSession, inputGlob: String, queryName: String): Unit =
+    Streams.drain(
+      perUser(typedEvents(spark, inputGlob, _.withWatermark("ts", "10 minutes")),
+        new InactivityProcessor, TimeMode.EventTime()),
+      Streams.Memory(queryName, OutputMode.Append()))
 
   // --- burst detection (ListState sliding window) ---------------------------
 
@@ -567,35 +481,9 @@ object Streaming {
   /** Streaming run (RocksDB state, AvailableNow; no timers — bursts are
     * detected on arrival, so no heartbeat is needed either).
     */
-  def runBurstStream(spark: SparkSession, inputGlob: String, queryName: String): Unit = {
-    import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = normalize(
-        spark.readStream.schema(eventsRawSchema)
-          .option("maxFilesPerTrigger", 1).parquet(inputGlob))
-        .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
-      val q = stream.groupByKey(_.user_id)
-        .transformWithState(new BurstProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-        .toDF()
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
-  }
+  def runBurstStream(spark: SparkSession, inputGlob: String, queryName: String): Unit =
+    Streams.drain(perUser(typedEvents(spark, inputGlob), new BurstProcessor),
+      Streams.Memory(queryName, OutputMode.Append()))
 
   // --- first-touch attribution (MapState) -----------------------------------
 
@@ -649,35 +537,9 @@ object Streaming {
   /** Streaming run (RocksDB state, AvailableNow, no timers needed —
     * first touches emit on arrival).
     */
-  def runFirstTouchStream(spark: SparkSession, inputGlob: String, queryName: String): Unit = {
-    import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = normalize(
-        spark.readStream.schema(eventsRawSchema)
-          .option("maxFilesPerTrigger", 1).parquet(inputGlob))
-        .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
-      val q = stream.groupByKey(_.user_id)
-        .transformWithState(new FirstTouchProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-        .toDF()
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
-  }
+  def runFirstTouchStream(spark: SparkSession, inputGlob: String, queryName: String): Unit =
+    Streams.drain(perUser(typedEvents(spark, inputGlob), new FirstTouchProcessor),
+      Streams.Memory(queryName, OutputMode.Append()))
 
   // --- stream-stream join ---------------------------------------------------
 
@@ -741,19 +603,10 @@ object Streaming {
     * the source emits every match). StreamingSpec asserts stream == batch.
     */
   def runStreamJoin(spark: SparkSession, inputGlob: String, queryName: String): Unit = {
-    def src(): DataFrame =
-      normalize(spark.readStream.schema(eventsRawSchema).parquet(inputGlob))
-    val views = src().filter(col("event_type") === "view")
-      .withWatermark("ts", "10 minutes")
-    val purchases = src().filter(col("event_type") === "purchase")
-      .withWatermark("ts", "10 minutes")
-    val q = viewPurchaseJoin(views, purchases).writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    def side(eventType: String): DataFrame = eventStream(spark, inputGlob)
+      .filter(col("event_type") === eventType).withWatermark("ts", "10 minutes")
+    Streams.drain(viewPurchaseJoin(side("view"), side("purchase")),
+      Streams.Memory(queryName, OutputMode.Append()))
   }
 
   /** Stream-stream LEFT OUTER join runner — and the outer-join tail
@@ -772,20 +625,10 @@ object Streaming {
     * StreamingSpec stages exactly this and asserts stream == batch.
     */
   def runStreamLeftJoin(spark: SparkSession, inputGlob: String, queryName: String): Unit = {
-    def src(): DataFrame =
-      normalize(spark.readStream
-        .schema(eventsRawSchema)
-        .parquet(inputGlob))
-        .withWatermark("ts", "10 minutes")
-    val views = src().filter(col("event_type") === "view")
-    val purchases = src().filter(col("event_type") === "purchase")
-    val q = viewPurchaseLeftJoin(views, purchases).writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    def side(eventType: String): DataFrame = eventStream(spark, inputGlob)
+      .withWatermark("ts", "10 minutes").filter(col("event_type") === eventType)
+    Streams.drain(viewPurchaseLeftJoin(side("view"), side("purchase")),
+      Streams.Memory(queryName, OutputMode.Append()))
   }
 
   // --- stream-static enrichment ---------------------------------------------
@@ -816,17 +659,9 @@ object Streaming {
   /** Stream runner for the enrichment rollup (Complete mode: running
     * per-category totals, the live-dashboard shape).
     */
-  def runEnrichedStream(spark: SparkSession, inputGlob: String, queryName: String): Unit = {
-    val stream = normalize(
-      spark.readStream.schema(eventsRawSchema).parquet(inputGlob))
-    val q = categoryCounts(stream).writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runEnrichedStream(spark: SparkSession, inputGlob: String, queryName: String): Unit =
+    Streams.drain(categoryCounts(eventStream(spark, inputGlob)),
+      Streams.Memory(queryName, OutputMode.Complete()))
 
   // --- exactly-once over at-least-once delivery ----------------------------
 
@@ -860,23 +695,14 @@ object Streaming {
     * watermark-bounded dedup + per-type totals into a memory sink.
     */
   def runDedupDeliveryStream(spark: SparkSession, inputGlob: String, queryName: String): Unit = {
-    val stream = spark.readStream
-      .schema(eventsRawSchema)
-      .parquet(inputGlob)
-    val deduped = normalize(stream)
+    val deduped = eventStream(spark, inputGlob)
       .withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark("event_id")
       .groupBy(col("event_type"))
       .agg(
         count(lit(1)).as("n_events"),
         sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
-    val q = deduped.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Streams.drain(deduped, Streams.Memory(queryName, OutputMode.Complete()))
   }
 
   /** Streaming as-of enrichment: each micro-batch of events is enriched
@@ -891,24 +717,15 @@ object Streaming {
     * appends, the same sink discipline as the CDC apply.
     */
   def runAsofEnrichStream(
-      spark: SparkSession, inputGlob: String, dim: DataFrame, outDir: String): Unit = {
-    val stream = spark.readStream
-      .schema(eventsRawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputGlob)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty) {
-          val enriched = graft.ops.Asof.joinLastExec(
-            normalize(batch.toDF()).select("event_id", "user_id", "ts"),
-            dim, "user_id", "ts", Seq("last_purchase"))
-          enriched.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      spark: SparkSession, inputGlob: String, dim: DataFrame, outDir: String): Unit =
+    Streams.drain(
+      Streams.fileStream(spark, eventsRawSchema, inputGlob, oneFilePerTrigger = true),
+      Streams.ForeachBatch(None, Streams.nonEmpty { (batch, _) =>
+        val enriched = graft.ops.Asof.joinLastExec(
+          normalize(batch).select("event_id", "user_id", "ts"),
+          dim, "user_id", "ts", Seq("last_purchase"))
+        enriched.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
+      }))
 
   // --- driver-contract query entries ---------------------------------------
 
@@ -961,18 +778,10 @@ object Streaming {
     * watermark-gated tail, a drained replay needs a heartbeat to flush
     * the final sessions (StreamingSpec stages one on a sentinel user).
     */
-  def runSessionWindowStream(spark: SparkSession, inputGlob: String, queryName: String): Unit = {
-    val stream = normalize(
-      spark.readStream.schema(eventsRawSchema).parquet(inputGlob))
-      .withWatermark("ts", "10 minutes")
-    val q = sessionWindowAgg(stream).writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runSessionWindowStream(spark: SparkSession, inputGlob: String, queryName: String): Unit =
+    Streams.drain(
+      sessionWindowAgg(eventStream(spark, inputGlob).withWatermark("ts", "10 minutes")),
+      Streams.Memory(queryName, OutputMode.Append()))
 
   def qStreamJoin(spark: SparkSession, dir: String): DataFrame = {
     val ev = graft.Tables.events(spark, dir)
@@ -1054,38 +863,20 @@ object Streaming {
   /** Streaming run of [[hourlyValueHist]]: watermark + append mode,
     * bucket-count state per open window, results to a memory table.
     */
-  def runValueHistStream(spark: SparkSession, inputGlob: String, queryName: String): Unit = {
-    val stream = spark.readStream
-      .schema(eventsRawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputGlob)
-    val agg = hourlyValueHist(normalize(stream).withWatermark("ts", "2 hours"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runValueHistStream(spark: SparkSession, inputGlob: String, queryName: String): Unit =
+    Streams.drain(
+      hourlyValueHist(eventStream(spark, inputGlob, oneFilePerTrigger = true)
+        .withWatermark("ts", "2 hours")),
+      Streams.Memory(queryName, OutputMode.Append()))
 
   /** Streaming run of [[hourlyDistinctUsers]]: watermark + append mode,
     * sketch state per open window, results to a named memory table.
     */
-  def runDistinctUsersStream(spark: SparkSession, inputGlob: String, queryName: String): Unit = {
-    val stream = spark.readStream
-      .schema(eventsRawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputGlob)
-    val agg = hourlyDistinctUsers(normalize(stream).withWatermark("ts", "2 hours"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runDistinctUsersStream(spark: SparkSession, inputGlob: String, queryName: String): Unit =
+    Streams.drain(
+      hourlyDistinctUsers(eventStream(spark, inputGlob, oneFilePerTrigger = true)
+        .withWatermark("ts", "2 hours")),
+      Streams.Memory(queryName, OutputMode.Append()))
 
   /** Streaming maintenance of the corpus heavy-hitter candidate summary
     * — the frequency companion to the HLL distinct view: as document
@@ -1110,31 +901,15 @@ object Streaming {
     StructField("lang", StringType), StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  /** One-file-per-trigger stream over a documents glob — the arrival
-    * shape both document streams share.
-    */
-  private def docsFileStream(spark: SparkSession, inputGlob: String): DataFrame =
-    spark.readStream
-      .schema(docsRawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputGlob)
-
   def runHeavyHitterStream(spark: SparkSession, inputGlob: String, queryName: String,
       capacity: Int = 1023): Unit = {
     import graft.functions.{MisraGriesAgg, TextFns}
-    val stream = docsFileStream(spark, inputGlob)
-    val agg = stream
+    val agg = Streams.fileStream(spark, docsRawSchema, inputGlob, oneFilePerTrigger = true)
       .select(explode(TextFns.tokens(lower(col("text")))).as("tok"))
       .agg(
         MisraGriesAgg.candidates(col("tok"), capacity).as("cands"),
         count(lit(1)).as("n_total"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Streams.drain(agg, Streams.Memory(queryName, OutputMode.Complete()))
   }
 
   /** Per-group distinct-shingle HLL sketch: registers + per-doc-distinct
@@ -1206,52 +981,25 @@ object Streaming {
   def runNoveltyStream(
       spark: SparkSession, inputGlob: String, regsPath: String,
       outDir: String): Unit = {
-    import graft.functions.Hll
-    val q = docsFileStream(spark, inputGlob).writeStream
-      .option("checkpointLocation", s"$regsPath/_stream_checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          import java.nio.file.{Files, Paths}
-          val b = shingleSketch(batch.toDF().withColumn("g", lit(1)), "g")
+    import graft.functions.HllSketch
+    Streams.drain(
+      Streams.fileStream(spark, docsRawSchema, inputGlob, oneFilePerTrigger = true),
+      Streams.ForeachBatch(Some(s"$regsPath/_stream_checkpoint"), Streams.nonEmpty {
+        (batch, batchId) =>
+          val b = shingleSketch(batch.withColumn("g", lit(1)), "g")
             .select(col("sk"), col("n_shingles"))
             .first()
           val (bsk, bn) = (b.getAs[Array[Byte]](0), b.getLong(1))
-          // BATCH-KEYED register files make the novelty delta
-          // replay-idempotent: foreachBatch is at-least-once, and with
-          // one mutable file a replayed batch would merge into a state
-          // that already contains itself and record delta ~0 forever.
-          // Keyed files mean a replay of batch N re-reads batch N-1's
-          // registers (still present) and overwrites regs_N and its
-          // output row with IDENTICAL contents. Streaming replays only
-          // the last uncommitted batch, so files older than N-1 are
-          // pruned — the persisted state stays two register files.
-          val dir = Paths.get(regsPath)
-          // plain String listing — no stream handle to leak per batch
-          def regIds(): Seq[Long] = dir.toFile.list().toSeq
-            .filter(f => f.startsWith("regs_") && f.endsWith(".bin"))
-            .map(_.stripPrefix("regs_").stripSuffix(".bin").toLong)
-          val prevId = regIds().filter(_ < batchId).sorted.lastOption
-          val prev = prevId
-            .map(i => Files.readAllBytes(dir.resolve(s"regs_$i.bin")))
-          val prevEst = prev.map(graft.functions.HllSketch.estimate).getOrElse(0L)
-          // elementwise-max merge mutates its first argument
-          val merged = prev.map { p =>
-            graft.functions.HllSketch.merge(p, bsk); p
-          }.getOrElse(bsk)
-          val est = graft.functions.HllSketch.estimate(merged)
-          Files.write(dir.resolve(s"regs_$batchId.bin"), merged)
-          prevId.foreach(pi => regIds().filter(_ < pi)
-            .foreach(i => Files.delete(dir.resolve(s"regs_$i.bin"))))
+          val (est, prevEst) = Streams.batchKeyed(regsPath, "regs", "bin", batchId) { prev =>
+            val prevEst = prev.map(HllSketch.estimate).getOrElse(0L)
+            // elementwise-max merge mutates its first argument
+            val merged = prev.map { p => HllSketch.merge(p, bsk); p }.getOrElse(bsk)
+            (merged, (HllSketch.estimate(merged), prevEst))
+          }
           import spark.implicits._
-          Seq((batchId, bn, est, est - prevEst))
-            .toDF("batch_id", "n_shingles", "est_cum_types", "est_new_types")
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$outDir/batch=$batchId")
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+          writeBatch(Seq((batchId, bn, est, est - prevEst))
+            .toDF("batch_id", "n_shingles", "est_cum_types", "est_new_types"), outDir, batchId)
+      }))
   }
 
   /** Per-group per-source char sums — the ONE composition sketch both
@@ -1349,13 +1097,11 @@ object Streaming {
       .mixtureWeights(graft.Tables.documents(spark, staticDir), 0.5)
       .select(col("source"), col("target_share"))
       .collect().map(r => Option(r.getString(0)) -> r.getDouble(1)).toMap
-    val q = docsFileStream(spark, inputGlob).writeStream
-      .option("checkpointLocation", s"$statePath/_stream_checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          import java.nio.file.{Files, Paths}
-          val dir = Paths.get(statePath)
-          val bCounts = sourceMixSketch(batch.toDF().withColumn("g", lit(1)), "g")
+    Streams.drain(
+      Streams.fileStream(spark, docsRawSchema, inputGlob, oneFilePerTrigger = true),
+      Streams.ForeachBatch(Some(s"$statePath/_stream_checkpoint"), Streams.nonEmpty {
+        (batch, batchId) =>
+          val bCounts = sourceMixSketch(batch.withColumn("g", lit(1)), "g")
             .select(col("source"), col("chars"))
             .collect().map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
           // state format v2: the "mix2_" filename prefix VERSIONS the
@@ -1364,34 +1110,29 @@ object Streaming {
           // literally equal to "-" is ambiguous with NULL) is detected
           // and refused rather than silently reinterpreted (r13 ADVICE)
           // — a live-upgrade operator must drain or migrate old state.
-          val legacy = dir.toFile.list().toSeq
+          val legacy = new java.io.File(statePath).list().toSeq
             .filter(f => f.startsWith("mix_") && f.endsWith(".tsv"))
           require(legacy.isEmpty,
             s"runMixStream: unversioned v1 mix state found (${legacy.mkString(", ")}); " +
               "v1 raw keys are ambiguous under the v2 tagged encoding — " +
               "migrate them to mix2_<id>.tsv with '+'-prefixed sources first")
-          def stateIds(): Seq[Long] = dir.toFile.list().toSeq
-            .filter(f => f.startsWith("mix2_") && f.endsWith(".tsv"))
-            .map(_.stripPrefix("mix2_").stripSuffix(".tsv").toLong)
-          val prevId = stateIds().filter(_ < batchId).sorted.lastOption
-          // tagged key encoding so NULL round-trips through the TSV
-          // state: "-" = the NULL-source category, "+<source>" = a
-          // real source (no real source can collide with the tag)
-          val prev: Map[Option[String], Long] =
-            prevId.fold(Map.empty[Option[String], Long]) { i =>
-              scala.io.Source.fromFile(dir.resolve(s"mix2_$i.tsv").toFile).getLines()
-                .map(_.split("\t", 2))
-                .map(a => (if (a(0) == "-") None else Some(a(0).stripPrefix("+")))
-                  -> a(1).toLong).toMap
-            }
-          val merged = (prev.keySet ++ bCounts.keySet).map(s =>
-            s -> (prev.getOrElse(s, 0L) + bCounts.getOrElse(s, 0L))).toMap
-          Files.write(dir.resolve(s"mix2_$batchId.tsv"),
-            merged.toSeq.sortBy(_._1)
+          val merged = Streams.batchKeyed(statePath, "mix2", "tsv", batchId) { bytes =>
+            // tagged key encoding so NULL round-trips through the TSV
+            // state: "-" = the NULL-source category, "+<source>" = a
+            // real source (no real source can collide with the tag)
+            val prev: Map[Option[String], Long] =
+              bytes.fold(Map.empty[Option[String], Long]) { b =>
+                new String(b, "UTF-8").linesIterator
+                  .map(_.split("\t", 2))
+                  .map(a => (if (a(0) == "-") None else Some(a(0).stripPrefix("+")))
+                    -> a(1).toLong).toMap
+              }
+            val merged = (prev.keySet ++ bCounts.keySet).map(s =>
+              s -> (prev.getOrElse(s, 0L) + bCounts.getOrElse(s, 0L))).toMap
+            (merged.toSeq.sortBy(_._1)
               .map { case (s, c) => s"${s.fold("-")("+" + _)}\t$c" }
-              .mkString("\n").getBytes("UTF-8"))
-          prevId.foreach(pi => stateIds().filter(_ < pi)
-            .foreach(i => Files.delete(dir.resolve(s"mix2_$i.tsv"))))
+              .mkString("\n").getBytes("UTF-8"), merged)
+          }
           val total = merged.values.sum
           val diffs = (target.keySet ++ merged.keySet).toSeq.map { s =>
             val share = merged.getOrElse(s, 0L).toDouble / total
@@ -1404,16 +1145,11 @@ object Streaming {
           // asc-nulls-first source tie-break
           val (worstS, worstD) = diffs.sortBy { case (s, d) => (-d, s) }.head
           import spark.implicits._
-          Seq((batchId, total, math.floor(tvd * 1e6 + 0.5) / 1e6, worstS.orNull,
+          writeBatch(Seq((batchId, total, math.floor(tvd * 1e6 + 0.5) / 1e6, worstS.orNull,
             math.floor(worstD.toDouble * 1e6 + 0.5) / 1e6))
-            .toDF("batch_id", "cum_chars", "mix_tvd", "worst_source", "worst_gap")
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$outDir/batch=$batchId")
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+            .toDF("batch_id", "cum_chars", "mix_tvd", "worst_source", "worst_gap"),
+            outDir, batchId)
+      }))
   }
 
   /** Ingest-time CORPUS-BUILD monitor — the flagship funnel
@@ -1540,13 +1276,11 @@ object Streaming {
       .localCheckpoint()
     val stageNames = Seq(
       "0_raw", "1_exact_dedup", "2_near_dedup", "3_decontaminated", "4_quality")
-    val q = docsFileStream(spark, inputGlob).writeStream
-      .option("checkpointLocation", s"$statePath/_stream_checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          import java.nio.file.{Files, Paths}
-          val dir = Paths.get(statePath)
-          val b = batch.toDF().localCheckpoint()
+    Streams.drain(
+      Streams.fileStream(spark, docsRawSchema, inputGlob, oneFilePerTrigger = true),
+      Streams.ForeachBatch(Some(s"$statePath/_stream_checkpoint"), Streams.nonEmpty {
+        (batch, batchId) =>
+          val b = batch.localCheckpoint()
           // 1. probe-and-append: the pair SET is replay-stable (a
           //    replayed batch probes its own appended sketches, but
           //    same-id candidates are excluded and distinct() restores
@@ -1606,36 +1340,24 @@ object Streaming {
               col("doc_id"), lit(batchId).as("batch")),
             hashesRoot, token = s"b$batchId")
           // 4. cumulative totals: predecessor + increments
-          def stateIds(): Seq[Long] = dir.toFile.list().toSeq
-            .filter(f => f.startsWith("funnel_") && f.endsWith(".tsv"))
-            .map(_.stripPrefix("funnel_").stripSuffix(".tsv").toLong)
-          val prevId = stateIds().filter(_ < batchId).sorted.lastOption
-          val prev: Map[String, (Long, Long)] =
-            prevId.fold(Map.empty[String, (Long, Long)]) { i =>
-              scala.io.Source.fromFile(dir.resolve(s"funnel_$i.tsv").toFile)
-                .getLines().map(_.split("\t"))
-                .map(a => a(0) -> (a(1).toLong, a(2).toLong)).toMap
+          val cum = Streams.batchKeyed(statePath, "funnel", "tsv", batchId) { bytes =>
+            val prev: Map[String, (Long, Long)] =
+              bytes.fold(Map.empty[String, (Long, Long)]) { b =>
+                new String(b, "UTF-8").linesIterator.map(_.split("\t"))
+                  .map(a => a(0) -> (a(1).toLong, a(2).toLong)).toMap
+              }
+            val cum = stageNames.zip(inc).map { case (s, (d, c)) =>
+              val (pd, pc) = prev.getOrElse(s, (0L, 0L))
+              (s, pd + d, pc + c)
             }
-          val cum = stageNames.zip(inc).map { case (s, (d, c)) =>
-            val (pd, pc) = prev.getOrElse(s, (0L, 0L))
-            (s, pd + d, pc + c)
+            (cum.map { case (s, d, c) => s"$s\t$d\t$c" }
+              .mkString("\n").getBytes("UTF-8"), cum)
           }
-          Files.write(dir.resolve(s"funnel_$batchId.tsv"),
-            cum.map { case (s, d, c) => s"$s\t$d\t$c" }
-              .mkString("\n").getBytes("UTF-8"))
-          prevId.foreach(pi => stateIds().filter(_ < pi)
-            .foreach(i => Files.delete(dir.resolve(s"funnel_$i.tsv"))))
           // 5. batch-keyed output rows
           import spark.implicits._
-          cum.map { case (s, d, c) => (batchId, s, d, c) }
-            .toDF("batch_id", "stage", "n_docs", "n_chars")
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$outDir/batch=$batchId")
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+          writeBatch(cum.map { case (s, d, c) => (batchId, s, d, c) }
+            .toDF("batch_id", "stage", "n_docs", "n_chars"), outDir, batchId)
+      }))
   }
 
   /** Streaming DELETE APPLY — the right-to-be-forgotten loop closed:
@@ -1662,28 +1384,13 @@ object Streaming {
   def runDeleteApply(
       spark: SparkSession, inputGlob: String, indexPath: String,
       pairsPath: String, hashesRoot: Option[String], outDir: String,
-      checkpointDir: String, manifestPath: Option[String] = None): Unit = {
-    val deleteSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    val q = spark.readStream
-      .schema(deleteSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.ext.Dedup.deleteApply(batch.toDF(), indexPath, pairsPath,
-              hashesRoot, manifestPath)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$outDir/batch=$batchId")
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpointDir: String, manifestPath: Option[String] = None): Unit =
+    Streams.drain(
+      Streams.fileStream(spark, deleteIdsSchema, inputGlob, oneFilePerTrigger = true),
+      Streams.ForeachBatch(Some(checkpointDir), Streams.nonEmpty { (batch, batchId) =>
+        writeBatch(graft.ext.Dedup.deleteApply(batch, indexPath, pairsPath,
+          hashesRoot, manifestPath), outDir, batchId)
+      }))
 
   /** Streaming TOMBSTONE takedowns — the per-arrival form of the
     * delete loop and the cheap half of the rewrite-vs-tombstone
@@ -1703,25 +1410,12 @@ object Streaming {
     */
   def runTombstoneStream(
       spark: SparkSession, inputGlob: String, tombsPath: String,
-      checkpointDir: String): Unit = {
-    val deleteSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    val q = spark.readStream
-      .schema(deleteSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.ext.Dedup.tombstoneAppend(batch.toDF(), tombsPath,
-            token = s"b$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpointDir: String): Unit =
+    Streams.drain(
+      Streams.fileStream(spark, deleteIdsSchema, inputGlob, oneFilePerTrigger = true),
+      Streams.ForeachBatch(Some(checkpointDir), Streams.nonEmpty { (batch, batchId) =>
+        graft.ext.Dedup.tombstoneAppend(batch, tombsPath, token = s"b$batchId")
+      }))
 
   /** Streaming NEAR-DUPLICATE detection — the ingest-time face of the
     * persistent MinHash index ([[graft.ext.Dedup.indexIncremental]]):
@@ -1741,17 +1435,17 @@ object Streaming {
   def runNearDupStream(
       spark: SparkSession, inputGlob: String, indexPath: String,
       outDir: String,
-      compactTrigger: Int = graft.ext.Dedup.CompactTriggerFiles): Unit = {
+      compactTrigger: Int = graft.ext.Dedup.CompactTriggerFiles): Unit =
     // A DURABLE checkpoint is part of the contract: without one a
     // restart forgets which files were processed, replays them, and the
     // replayed batches double-append both pairs and index sketches —
     // the exactly-once union becomes at-least-once. Living next to the
     // index keeps the two halves of the state (processed-file log,
     // accumulated sketches) on the same storage.
-    val q = docsFileStream(spark, inputGlob).writeStream
-      .option("checkpointLocation", s"$indexPath/_stream_checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
+    Streams.drain(
+      Streams.fileStream(spark, docsRawSchema, inputGlob, oneFilePerTrigger = true),
+      Streams.ForeachBatch(Some(s"$indexPath/_stream_checkpoint"), Streams.nonEmpty {
+        (batch, batchId) =>
           // batch-keyed OVERWRITE makes the pair output idempotent under
           // foreachBatch's retry-on-failure (a replayed batch rewrites
           // its own directory instead of appending a duplicate). The
@@ -1768,16 +1462,9 @@ object Streaming {
           // fold (StoreIO's single-fold-actor contract: folds are
           // rewrites and rewrites are lost-update-prone against each
           // other).
-          graft.ext.Dedup.indexIncremental(batch.toDF(), indexPath,
-              compactTrigger = compactTrigger, appendToken = s"b$batchId")
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$outDir/batch=$batchId")
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+          writeBatch(graft.ext.Dedup.indexIncremental(batch, indexPath,
+            compactTrigger = compactTrigger, appendToken = s"b$batchId"), outDir, batchId)
+      }))
 
   /** Streaming ingest-time DECONTAMINATION guard — the filter face of
     * `q_contamination`: arriving corpus documents probe the static
@@ -1800,18 +1487,11 @@ object Streaming {
     val benchGrams = graft.ext.Retrieval
       .benchGramSet(graft.Tables.documents(spark, staticDir))
       .localCheckpoint()
-    val q = docsFileStream(spark, inputGlob).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.ext.Retrieval.quarantine(batch.toDF(), benchGrams)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$outDir/batch=$batchId")
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Streams.drain(
+      Streams.fileStream(spark, docsRawSchema, inputGlob, oneFilePerTrigger = true),
+      Streams.ForeachBatch(Some(checkpointDir), Streams.nonEmpty { (batch, batchId) =>
+        writeBatch(graft.ext.Retrieval.quarantine(batch, benchGrams), outDir, batchId)
+      }))
   }
 
   /** embeddings.parquet physical schema, for staged arrival feeds. */
@@ -1820,11 +1500,15 @@ object Streaming {
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
-  private def embFileStream(spark: SparkSession, inputGlob: String): DataFrame =
-    spark.readStream
-      .schema(embRawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputGlob)
+  /** Delete-request feed schema: one doc_id per takedown. */
+  val deleteIdsSchema: StructType =
+    StructType(Seq(StructField("doc_id", LongType, nullable = false)))
+
+  /** Batch-keyed overwrite of one micro-batch's output rows: a replayed
+    * batch rewrites its own directory instead of appending a duplicate.
+    */
+  private def writeBatch(rows: DataFrame, outDir: String, batchId: Long): Unit =
+    rows.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
 
   /** Ingest-time EMBEDDING-DRIFT monitor — the vector-space member of the
     * ingest-monitor family (novelty = content freshness, mix =
@@ -1941,19 +1625,17 @@ object Streaming {
       .groupBy(col("list_id")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val nt = baseCounts.values.sum
-    val q = embFileStream(spark, inputGlob).writeStream
-      .option("checkpointLocation", s"$statePath/_stream_checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          import java.nio.file.{Files, Paths}
+    Streams.drain(
+      Streams.fileStream(spark, embRawSchema, inputGlob, oneFilePerTrigger = true),
+      Streams.ForeachBatch(Some(s"$statePath/_stream_checkpoint"), Streams.nonEmpty {
+        (batch, batchId) =>
           val spark2 = batch.sparkSession
           import spark2.implicits._
-          val dir = Paths.get(statePath)
           val centDf = broadcast(
             cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("list_id", "cent"))
           // the SAME compiled assignment+distortion pipeline the batch
           // monitor runs, over the arriving file only
-          val bStats: Map[Int, (Long, java.math.BigDecimal)] = batch.toDF()
+          val bStats: Map[Int, (Long, java.math.BigDecimal)] = batch
             .select(col("embedding"),
               element_at(NearestCentroids(col("embedding"), cents, 1), 1).as("list_id"))
             .join(centDf, Seq("list_id"))
@@ -1962,28 +1644,23 @@ object Streaming {
                 .cast(d2012).as("dist"))
             .groupBy(col("list_id")).agg(count(lit(1)).as("n"), sum(col("dist")).as("ds"))
             .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getDecimal(2))).toMap
-          def stateIds(): Seq[Long] = dir.toFile.list().toSeq
-            .filter(f => f.startsWith("drift_") && f.endsWith(".tsv"))
-            .map(_.stripPrefix("drift_").stripSuffix(".tsv").toLong)
-          val prevId = stateIds().filter(_ < batchId).sorted.lastOption
-          val prev: Map[Int, (Long, java.math.BigDecimal)] =
-            prevId.fold(Map.empty[Int, (Long, java.math.BigDecimal)]) { i =>
-              scala.io.Source.fromFile(dir.resolve(s"drift_$i.tsv").toFile).getLines()
-                .map(_.split("\t", 3))
-                .map(a => a(0).toInt -> (a(1).toLong, new java.math.BigDecimal(a(2))))
-                .toMap
-            }
-          val merged = (prev.keySet ++ bStats.keySet).map { l =>
-            val (pn, pd) = prev.getOrElse(l, (0L, java.math.BigDecimal.ZERO))
-            val (bn, bd) = bStats.getOrElse(l, (0L, java.math.BigDecimal.ZERO))
-            l -> (pn + bn, pd.add(bd))
-          }.toMap
-          Files.write(dir.resolve(s"drift_$batchId.tsv"),
-            merged.toSeq.sortBy(_._1)
+          val merged = Streams.batchKeyed(statePath, "drift", "tsv", batchId) { bytes =>
+            val prev: Map[Int, (Long, java.math.BigDecimal)] =
+              bytes.fold(Map.empty[Int, (Long, java.math.BigDecimal)]) { b =>
+                new String(b, "UTF-8").linesIterator
+                  .map(_.split("\t", 3))
+                  .map(a => a(0).toInt -> (a(1).toLong, new java.math.BigDecimal(a(2))))
+                  .toMap
+              }
+            val merged = (prev.keySet ++ bStats.keySet).map { l =>
+              val (pn, pd) = prev.getOrElse(l, (0L, java.math.BigDecimal.ZERO))
+              val (bn, bd) = bStats.getOrElse(l, (0L, java.math.BigDecimal.ZERO))
+              l -> (pn + bn, pd.add(bd))
+            }.toMap
+            (merged.toSeq.sortBy(_._1)
               .map { case (l, (n, d)) => s"$l\t$n\t${d.toPlainString}" }
-              .mkString("\n").getBytes("UTF-8"))
-          prevId.foreach(pi => stateIds().filter(_ < pi)
-            .foreach(i => Files.delete(dir.resolve(s"drift_$i.tsv"))))
+              .mkString("\n").getBytes("UTF-8"), merged)
+          }
           val totalN = merged.values.map(_._1).sum
           val dsum = merged.values.map(_._2)
             .foldLeft(java.math.BigDecimal.ZERO)(_.add(_))
@@ -1998,15 +1675,10 @@ object Streaming {
           }
           val tvd = r((diffs.map(_._2).sum / 2).toDouble, 1e6)
           val (wl, wd) = diffs.sortBy { case (l, d) => (-d, l) }.head
-          Seq((batchId, totalN, meanDist, tvd, wl, r(wd.toDouble, 1e6)))
-            .toDF("batch_id", "cum_n", "mean_dist", "occ_tvd", "worst_list", "worst_gap")
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$outDir/batch=$batchId")
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+          writeBatch(Seq((batchId, totalN, meanDist, tvd, wl, r(wd.toDouble, 1e6)))
+            .toDF("batch_id", "cum_n", "mean_dist", "occ_tvd", "worst_list", "worst_gap"),
+            outDir, batchId)
+      }))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

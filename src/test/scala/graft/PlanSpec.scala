@@ -754,4 +754,13 @@ class PlanSpec extends SparkSuite {
       "streaming/Streaming.scala" -> 1, "ext/Similarity.scala" -> 1),
       s"append-mode parquet writers drifted from the two streaming sinks: $appends")
   }
+
+  test("one stream driver: only streaming/Streams.scala reads or writes a stream, triggers, awaits or picks the state store") {
+    // every runner declares a source, a transform and a sink; a runner
+    // that spells out its own drain would bring the copies back
+    Seq("""\breadStream\b""", """\bwriteStream\b""", """Trigger\s*\.\s*AvailableNow""",
+      """\bawaitTermination\b""", "RocksDBStateStoreProvider").foreach { re =>
+      assert(SourceScan.codeMatches(re.r).keySet === Set("streaming/Streams.scala"), re)
+    }
+  }
 }

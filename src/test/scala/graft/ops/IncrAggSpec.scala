@@ -149,4 +149,24 @@ class IncrAggSpec extends SparkSuite {
     val exact = ev.select(countDistinct("user_id")).head().getLong(0)
     assert(math.abs(est - exact).toDouble / exact < 0.05, s"est $est vs exact $exact")
   }
+
+  test("q_incr_agg and q_hll_view stage their views under the fixture root, not directly in java.io.tmpdir") {
+    // a corpus dir of its own, so neither view is already cached
+    val corpus = java.nio.file.Files.createTempDirectory("incr_agg_corpus")
+    java.nio.file.Files.createSymbolicLink(corpus.resolve("events.parquet"),
+      java.nio.file.Paths.get(s"$dir/events.parquet"))
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def views(d: java.io.File) = d.list().toSet
+      .filter(n => n.startsWith("incr_agg_mv") || n.startsWith("hll_mv"))
+    val before = views(tmp)
+    val fixturesBefore = views(Scratch.fixtureRoot.toFile)
+    assert(IncrAgg.qIncrAgg(spark, corpus.toString).count() > 0)
+    assert(IncrAgg.qHllView(spark, corpus.toString).count() > 0)
+    assert(views(tmp) -- before === Set.empty)
+    assert((views(Scratch.fixtureRoot.toFile) -- fixturesBefore).map(_.takeWhile(!_.isDigit)) ===
+      Set("incr_agg_mv", "hll_mv"))
+    // the link only, never the table it points to
+    java.nio.file.Files.delete(corpus.resolve("events.parquet"))
+    java.nio.file.Files.delete(corpus)
+  }
 }
