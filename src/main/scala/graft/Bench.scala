@@ -2,17 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    // The f"" interpolators below delegate to String.format in the DEFAULT
-    // locale; a comma-decimal locale would emit invalid JSON ("value":1,23).
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder("graft-bench")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val warmed = warmup(spark, sfDir)
+    val spark = Harness.session("graft-bench")
+    val warmed = Harness.warmup(spark, sfDir)
     val staged = stageFixtures(spark, sfDir)
     // Host-state calibration anchor (r13 verdict item 5): the same
     // synthetic CPU-bound query — no I/O, fixed row count, hash agg —
@@ -23,43 +15,23 @@ object Bench {
     // mean(calib_first, calib_last) before comparing across sessions,
     // and distrust any comparison where calib_last/calib_first > 1.5).
     def calibrate(): Double = {
-      System.gc()
-      val t0 = System.nanoTime()
-      spark.range(0L, 400000000L, 1L, 32)
+      val r = Harness.run("calib")(spark.range(0L, 400000000L, 1L, 32)
         .selectExpr("xxhash64(id) % 4096 AS k", "id")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("id"))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+        .groupBy("k").agg(org.apache.spark.sql.functions.sum("id")))
+      r.error.foreach(e => sys.error(s"calibration anchor failed: $e"))
+      r.seconds
     }
     calibrate() // one untimed run: codegen-compiles the anchor itself
     val calibFirst = calibrate()
-    // Dev loop: SPARK_GRAFT_ONLY=q1,q2 times a subset (driver leaves it unset)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = only.fold(SparkEntry.queries)(s => SparkEntry.queries.filter(kv => s(kv._1)))
-    val errors = scala.collection.mutable.ListBuffer.empty[(String, String)]
-    val results = selected.flatMap { case (name, fn) =>
-      // GC outside the timer: broadcast/shuffle cleanup is GC-triggered in
-      // Spark, so without this a heavy query's garbage is collected inside
-      // some later query's timing window.
-      System.gc()
-      val t0 = System.nanoTime()
-      // noop sink, not count(): count() lets Catalyst prune projections and
-      // drop sorts, so scan-shaped queries would time less work than the
-      // declared query. The noop writer materializes every output row.
-      // A failing query must NOT read as a fast query: it is excluded from
-      // the timing map and lands in "errors" (both stdout and BENCH_FULL).
-      // The process still exits 0 — the driver captures the JSON line from
-      // stdout, and a nonzero exit would risk the whole artifact being
-      // discarded; automation must read "errors"/"nerr", not exit status.
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Some(name -> (System.nanoTime() - t0) / 1e9)
-      } catch {
-        case e: Throwable =>
-          errors += name -> jsonSafe(e.toString)
-          None
-      }
-    }
+    val selected = SparkEntry.queries.filter(kv => Harness.selected(kv._1))
+    // A failing query must NOT read as a fast query: it is excluded from
+    // the timing map and lands in "errors" (both stdout and BENCH_FULL).
+    // The process still exits 0 — the driver captures the JSON line from
+    // stdout, and a nonzero exit would risk the whole artifact being
+    // discarded; automation must read "errors"/"nerr", not exit status.
+    val runs = selected.toSeq.map { case (name, fn) => Harness.run(name)(fn(spark, sfDir)) }
+    val errors = runs.flatMap(r => r.error.map(r.name -> _))
+    val results = runs.filter(_.error.isEmpty).map(r => r.name -> r.seconds).toMap
     // MEDIANS RULE for heavy entries (r15 verdict item 2): a single-shot
     // timing of a store-heavy composite can mislead by 5x on a 234-query
     // session (q_maintenance_plan: 49.1s in the r15 snapshot vs 8.7s in
@@ -68,23 +40,18 @@ object Bench {
     // median of the three, so one cold-cache hit cannot stand as the
     // baseline; "medianed" in BENCH_FULL names the entries the rule
     // touched (BASELINE.md states the comparison rule).
-    val medianOverrides = results.toSeq.sortBy(-_._2).take(10).flatMap {
-      case (name, firstShot) =>
-        val fn = selected(name)
-        val reruns = (1 to 2).flatMap { _ =>
-          System.gc()
-          val t0 = System.nanoTime()
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case _: Throwable => None }
-        }
-        // an entry whose reruns failed keeps its single-shot value and
-        // must NOT be listed as medianed — the artifact would otherwise
-        // claim the rule touched a value it did not
-        if (reruns.size < 2) None
-        else Some(name -> (reruns :+ firstShot).sorted.apply(1))
+    val reruns = results.toSeq.sortBy(-_._2).take(10).map { case (name, firstShot) =>
+      (name, firstShot, (1 to 2).map(_ => Harness.run(name)(selected(name)(spark, sfDir))))
     }
+    // an entry whose reruns failed keeps its single-shot value and
+    // must NOT be listed as medianed — the artifact would otherwise
+    // claim the rule touched a value it did not; the failure itself
+    // lands in "rerun_errors"
+    val medianOverrides = reruns.collect {
+      case (name, firstShot, rs) if rs.forall(_.error.isEmpty) =>
+        name -> (rs.map(_.seconds) :+ firstShot).sorted.apply(1)
+    }
+    val rerunErrors = reruns.flatMap(_._3.find(_.error.isDefined))
     val medianed = medianOverrides.map(_._1)
     val medianResults = results ++ medianOverrides
     // The driver keeps only the LAST ~2000 chars of stdout (every round so
@@ -130,18 +97,23 @@ object Bench {
     // fixture staging runs untimed before the first entry: its per-stage
     // seconds and errors say what the timed entries could rely on
     val stageS = jsonObj(staged.map(st => st.name -> f"${st.seconds}%.2f"))
-    def errorsJson(runs: Seq[Staged]) =
-      jsonObj(runs.flatMap(st => st.error.map(e => st.name -> s""""$e"""")))
+    def errorsJson(runs: Seq[Harness.Run]) =
+      jsonObj(runs.flatMap(r => r.error.map(e => r.name -> s""""$e"""")))
     val fullLine =
-      f"""{"queries":$fullQs,"queries_norm":$normQs,"medianed":$medianedJson,"calib_mean":$calibMean%.3f,"errors":$errJson,"sf":"$sfDir","metric":"total","unit":"sec","value":$total%.3f,"n":${medianResults.size},"nerr":${errors.size},"stage_s":$stageS,"stage_errors":${errorsJson(staged)},"warmup_errors":${errorsJson(warmed)}$calib$note}"""
+      f"""{"queries":$fullQs,"queries_norm":$normQs,"medianed":$medianedJson,"calib_mean":$calibMean%.3f,"errors":$errJson,"sf":"$sfDir","metric":"total","unit":"sec","value":$total%.3f,"n":${medianResults.size},"nerr":${errors.size},"stage_s":$stageS,"stage_errors":${errorsJson(staged)},"warmup_errors":${errorsJson(warmed)},"rerun_errors":${errorsJson(rerunErrors)}$calib$note}"""
     // Dev-loop subset runs (SPARK_GRAFT_ONLY set) must NOT clobber the
     // committed full-surface snapshot — a 1-query artifact replacing the
     // 180-query baseline is exactly the stale-snapshot failure the
-    // round-9 verdict flagged.
-    if (only.isEmpty) try {
+    // round-9 verdict flagged. A failed write is reported, not
+    // swallowed: the previous run's file would otherwise pass for this
+    // run's; the stdout line still prints.
+    if (Harness.only.isEmpty) try {
       val w = new java.io.PrintWriter("BENCH_FULL.json")
       try w.println(fullLine) finally w.close()
-    } catch { case _: Throwable => () }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] BENCH_FULL.json not written: $e")
+    }
     val lineBudget = 1750 // 2000-char tail minus sbt epilogue, with margin
     // Error names always make the stdout line (ahead of any timing): a
     // broken query must be visible even in the truncated tail.
@@ -156,25 +128,6 @@ object Bench {
     val qs = kept.mkString("{", ",", "}")
     println(f"""{"queries":$qs,"errors":$errNames,"sf":"$sfDir","metric":"total","unit":"sec","value":$total%.3f,"qdropped":${medianResults.size - kept.size}$calib}""")
     spark.stop()
-  }
-
-  /** JVM warmup on the smallest SF (`sf0.001` beside `sfDir`, else
-    * `sfDir` itself): classloading, parquet reader init, and
-    * the codegen compiler otherwise land on whichever query happens to run
-    * first (~4-6s of non-query cost attributed to it). Warmup work is not
-    * timed; the queries cover scan+agg, native expressions, a shuffle
-    * join, and the generate+window codegen paths (explode, group-limit).
-    * A failed warm query does not throw: it is returned with its error,
-    * like a failed fixture stage.
-    */
-  def warmup(spark: SparkSession, sfDir: String): Seq[Staged] = {
-    val warm = new java.io.File(new java.io.File(sfDir).getAbsoluteFile.getParentFile, "sf0.001")
-    val warmDir = if (warm.isDirectory) warm.toString else sfDir
-    Seq("q_agg", "text_quality", "dedup_minhash", "q_tfidf", "q_window_topk")
-      .flatMap(q => SparkEntry.queries.get(q).map(q -> _))
-      .map { case (q, fn) =>
-        attempt(q)(fn(spark, warmDir).write.format("noop").mode("overwrite").save())
-      }
   }
 
   /** `{"k":v,...}` over already-rendered JSON values, in order. */
@@ -200,41 +153,25 @@ object Bench {
     * read. A failed stage does not throw: it is reported with its
     * seconds, and the first timed entry that needs it pays the build.
     */
-  def stageFixtures(spark: SparkSession, sfDir: String): Seq[Staged] = Seq(
-    attempt("dedup_incremental_index")(ext.Dedup.ensureIncrementalIndex(spark, sfDir)),
-    attempt("dedup_pairs_artifact")(ext.Dedup.ensurePairsArtifact(spark, sfDir)),
-    attempt("ivf_model")(ext.Ivf.ensureModel(spark, sfDir)),
-    attempt("ivf_layout")(ext.Ivf.ensureLayout(spark, sfDir)),
-    attempt("pq_model")(ext.Pq.ensureModel(spark, sfDir)),
-    attempt("pq_codes")(ext.Pq.ensureCodes(spark, sfDir)),
-    attempt("pq_ivfpq_layout")(ext.Pq.ensureIvfPqLayout(spark, sfDir)),
-    attempt("gvid_stage")(ext.Multimodal.ensureGvidStage(sfDir)),
-    attempt("pack_manifest")(ext.Packing.ensureManifest(spark, sfDir)),
-    attempt("hash_store")(ext.Dedup.ensureHashStore(spark, sfDir)),
-    attempt("feature_artifact")(ext.Backfill.ensureFeatureArtifact(spark, sfDir)),
-    attempt("dedup_full_index")(ext.Dedup.ensureFullIndex(spark, sfDir)),
-    attempt("packed_store")(ext.Packing.ensurePackedStore(spark, sfDir)),
-    attempt("feature_artifact_full")(ext.Backfill.ensureFeatureArtifactFull(spark, sfDir)),
-    attempt("dedup_delete_fixture")(ext.Dedup.ensureDeleteFixture(spark, sfDir)),
-    attempt("ivf_retrain_fixture")(ext.Ivf.ensureRetrainFixture(spark, sfDir)),
-    attempt("standing_tombstones")(ext.Dedup.ensureStandingTombstones(spark, sfDir)))
-
-  /** One fixture stage's (or warm query's) wall seconds and JSON-safe
-    * error, if it failed. */
-  case class Staged(name: String, seconds: Double, error: Option[String])
-
-  /** Runs `body` timed; a non-fatal error is kept, never rethrown. */
-  private def attempt(name: String)(body: => Any): Staged = {
-    val t0 = System.nanoTime()
-    val error =
-      try { body; None }
-      catch { case scala.util.control.NonFatal(e) => Some(jsonSafe(e.toString)) }
-    Staged(name, (System.nanoTime() - t0) / 1e9, error)
+  def stageFixtures(spark: SparkSession, sfDir: String): Seq[Harness.Run] = {
+    import Harness.attempt
+    Seq(
+      attempt("dedup_incremental_index")(ext.Dedup.ensureIncrementalIndex(spark, sfDir)),
+      attempt("dedup_pairs_artifact")(ext.Dedup.ensurePairsArtifact(spark, sfDir)),
+      attempt("ivf_model")(ext.Ivf.ensureModel(spark, sfDir)),
+      attempt("ivf_layout")(ext.Ivf.ensureLayout(spark, sfDir)),
+      attempt("pq_model")(ext.Pq.ensureModel(spark, sfDir)),
+      attempt("pq_codes")(ext.Pq.ensureCodes(spark, sfDir)),
+      attempt("pq_ivfpq_layout")(ext.Pq.ensureIvfPqLayout(spark, sfDir)),
+      attempt("gvid_stage")(ext.Multimodal.ensureGvidStage(sfDir)),
+      attempt("pack_manifest")(ext.Packing.ensureManifest(spark, sfDir)),
+      attempt("hash_store")(ext.Dedup.ensureHashStore(spark, sfDir)),
+      attempt("feature_artifact")(ext.Backfill.ensureFeatureArtifact(spark, sfDir)),
+      attempt("dedup_full_index")(ext.Dedup.ensureFullIndex(spark, sfDir)),
+      attempt("packed_store")(ext.Packing.ensurePackedStore(spark, sfDir)),
+      attempt("feature_artifact_full")(ext.Backfill.ensureFeatureArtifactFull(spark, sfDir)),
+      attempt("dedup_delete_fixture")(ext.Dedup.ensureDeleteFixture(spark, sfDir)),
+      attempt("ivf_retrain_fixture")(ext.Ivf.ensureRetrainFixture(spark, sfDir)),
+      attempt("standing_tombstones")(ext.Dedup.ensureStandingTombstones(spark, sfDir)))
   }
-
-  /** `s` cut to 160 chars with everything JSON would escape blanked
-    * (quotes, backslashes, ALL control chars — stack traces carry tabs).
-    */
-  def jsonSafe(s: String): String =
-    s.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(160)
 }

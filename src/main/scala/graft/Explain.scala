@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps explain("formatted") for the headline queries to PLANS.md — the
   * reviewable evidence that pushdown/broadcast/codegen hold (PlanSpec
@@ -61,22 +60,15 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = GraftSession.local("graft-explain")
+    val spark = Harness.session("graft-explain")
     try {
       val sb = new StringBuilder
       sb ++= "# PLANS — explain(\"formatted\") for headline queries\n\n"
       sb ++= s"Generated by `graft.Explain` over `$sfDir`. Regenerate with\n"
       sb ++= "`sbt \"runMain graft.Explain\"` after plan-affecting changes.\n"
       headline.foreach { name =>
-        val df = SparkEntry.queries(name)(spark, sfDir)
         sb ++= s"\n## $name\n\n```\n"
-        // giant binary literals (e.g. the bloom filter in might_contain)
-        // would dump megabytes of hex into the doc — elide them
-        sb ++= df.queryExecution.explainString(FormattedMode).trim
-          .replaceAll("0x[0-9A-Fa-f]{64}[0-9A-Fa-f]+", "0x<binary literal elided>")
-          // reference-object toStrings can carry control chars (e.g. the
-          // BPE ranks map's NUL key separator) — keep the doc plain text
-          .replaceAll("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F]", "\\\\0")
+        sb ++= Harness.planText(SparkEntry.queries(name)(spark, sfDir))
         sb ++= "\n```\n"
       }
       Files.writeString(Paths.get(out), sb.toString)

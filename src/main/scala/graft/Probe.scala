@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.FormattedMode
-
 /** Dev-only measurement harness (optimization guide §1: measure first,
   * §1.4: noop sink). Runs named queries N times each in ONE JVM after
   * the same warmup + fixture staging as [[Bench]], printing per-rep
@@ -18,18 +16,12 @@ import org.apache.spark.sql.execution.FormattedMode
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args(2).split(",").toSeq
     val planDir = args.lift(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder("graft-probe")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.warmup(spark, sfDir).foreach { w =>
+    val spark = Harness.session("graft-probe")
+    Harness.warmup(spark, sfDir).foreach { w =>
       w.error.foreach(e => println(f"[probe] warmup ${w.name} FAILED: $e"))
     }
     Bench.stageFixtures(spark, sfDir).foreach { st =>
@@ -38,22 +30,15 @@ object Probe {
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to reps).foreach { i =>
-        System.gc()
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        val t1 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        val t2 = System.nanoTime()
-        println(f"[probe] $name rep=$i construct=${(t1 - t0) / 1e9}%.3f " +
-          f"exec=${(t2 - t1) / 1e9}%.3f total=${(t2 - t0) / 1e9}%.3f")
+        val r = Harness.run(name)(fn(spark, sfDir))
+        r.error.foreach(e => println(s"[probe] $name rep=$i FAILED: $e"))
+        println(f"[probe] $name rep=$i construct=${r.construct}%.3f " +
+          f"exec=${r.exec}%.3f total=${r.seconds}%.3f")
       }
       planDir.foreach { d =>
         val p = java.nio.file.Paths.get(d, s"$name.txt")
         java.nio.file.Files.createDirectories(p.getParent)
-        val txt = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
-          .replaceAll("0x[0-9A-Fa-f]{64}[0-9A-Fa-f]+", "0x<binary literal elided>")
-          .replaceAll("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F]", "\\\\0")
-        java.nio.file.Files.writeString(p, txt)
+        java.nio.file.Files.writeString(p, Harness.planText(fn(spark, sfDir)))
         println(s"[probe] wrote plan $p")
       }
     }

@@ -298,47 +298,24 @@ object ScaleBench {
         .groupBy().agg(count(lit(1)).as("n_candidates"))))
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factors = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "1,3,10")
       .split(",").map(_.trim.toInt).toSeq
-    // Dev loop: restrict to a query subset (e.g. the steepest curves at
-    // a larger factor without paying for the flat ones)
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY").map(_.split(",").toSet)
-    val heavy = only.fold(HeavyQueries)(s => HeavyQueries.filter(s))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    // Partition scaling knob: with SPARK_GRAFT_SCALE_PART_PER_X set
-    // (partitions per unit factor, e.g. 3.2 -> 96 at x30 / 320 at
-    // x100), each factor's run sets spark.sql.shuffle.partitions
-    // proportional to the staged corpus. Round-12 measurements showed
-    // this knob is mostly a NO-OP for reduce width (AQE coalesces back
-    // to the 64 MB advisory size — 320 -> 34 tasks observed) and
-    // actively regressive for range exchanges (dedup_suffix 3.2x: the
-    // RangePartitioner's sampling pass and file churn scale with the
-    // requested width). The knob that reaches the real term is
-    // spark.sql.adaptive.advisoryPartitionSizeInBytes (see
-    // GraftSession and BENCH_SCALE.md round 12); PART_PER_X is kept to
-    // make initialPartitionNum large enough for AQE to split finely.
-    val partPerX = sys.env.get("SPARK_GRAFT_SCALE_PART_PER_X").map(_.toDouble)
+    // Dev loop: SPARK_GRAFT_ONLY restricts to a query subset (e.g. the
+    // steepest curves at a larger factor without paying for the flat ones)
+    val heavy = HeavyQueries.filter(Harness.selected)
     // A fixed root (SPARK_GRAFT_SCALE_ROOT) lets repeated measurement
     // runs REUSE an already-staged corpus instead of re-writing ~GBs
     // per invocation: staging IO perturbs the page cache the measured
     // query then runs against, which is exactly the noise an A/B
-    // comparison wants out of the loop. Default: fresh temp dir.
+    // comparison wants out of the loop. Default: a per-JVM scratch dir,
+    // deleted when the JVM exits.
     val root = sys.env.getOrElse("SPARK_GRAFT_SCALE_ROOT",
-      java.nio.file.Files.createTempDirectory("graft_scale").toString)
-    val spark = GraftSession.builder("graft-scale")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+      ops.Scratch.jvmRoot(System.getProperty("java.io.tmpdir"), "graft_scale").toString)
+    val spark = Harness.session("graft-scale")
     // warmup (classloading + codegen) on the smallest SF, untimed
-    val warm = new java.io.File("/root/testdata/sf0.001")
-    if (warm.isDirectory) heavy.foreach { q =>
-      try Extras.getOrElse(q, SparkEntry.queries(q))(spark, warm.toString)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+    Harness.warmup(spark, srcDir, heavy).foreach { w =>
+      w.error.foreach(e => System.err.println(s"[scale] warmup ${w.name} FAILED: $e"))
     }
 
     val results = factors.map { f =>
@@ -350,33 +327,21 @@ object ScaleBench {
         stage(spark, srcDir, dir, f)
         java.nio.file.Files.createFile(marker)
       }
-      partPerX.foreach { p =>
-        val parts = math.max(cpus.toInt, math.round(p * f).toInt)
-        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-        System.err.println(s"[scale x$f] shuffle.partitions = $parts")
-      }
       // ingest-maintained state, staged untimed by the one Bench list
       Bench.stageFixtures(spark, dir).foreach { st =>
         st.error.foreach(e => System.err.println(s"[scale x$f] ${st.name} staging FAILED: $e"))
       }
       val entries = heavy.flatMap { q =>
-        System.gc()
-        val t0 = System.nanoTime()
-        try {
-          val df = Extras.getOrElse(q, SparkEntry.queries(q))(spark, dir)
-          if (df.columns.sameElements(Array("n_candidates"))) {
-            // candidate-volume probe: a ROW COUNT, reported under
-            // "counts" so the "sec"-unit timing map stays honest
-            Some((q, df.first().getLong(0).toDouble, true))
-          } else {
-            df.write.format("noop").mode("overwrite").save()
-            Some((q, (System.nanoTime() - t0) / 1e9, false))
-          }
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[scale x$f] $q FAILED: ${e.toString.take(200)}")
-            None
+        // a candidate-volume probe reports a ROW COUNT, under "counts",
+        // so the "sec"-unit timing map stays honest
+        var count = Option.empty[Double]
+        val r = Extras.get(q) match {
+          case Some(probe) =>
+            Harness.attempt(q) { count = Some(probe(spark, dir).first().getLong(0).toDouble) }
+          case None => Harness.run(q)(SparkEntry.queries(q)(spark, dir))
         }
+        r.error.foreach(e => System.err.println(s"[scale x$f] $q FAILED: $e"))
+        if (r.error.isDefined) None else Some((q, count.getOrElse(r.seconds), count.isDefined))
       }
       f -> entries
     }

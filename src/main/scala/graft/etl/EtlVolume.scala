@@ -1,6 +1,5 @@
 package graft.etl
 
-import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -108,15 +107,11 @@ object EtlVolume {
   }
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val root = java.nio.file.Files.createTempDirectory("graft_etl_volume").toString
+    // deleted when the JVM exits, like the engine's other scratch
+    val root = graft.ops.Scratch.jvmRoot(
+      System.getProperty("java.io.tmpdir"), "graft_etl_volume").toString
     val in = s"$root/input"; val out = s"$root/output"
-    val spark = GraftSession.builder("graft-etl-volume")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session("graft-etl-volume")
 
     val t0 = System.nanoTime()
     writeInputs(spark, in)

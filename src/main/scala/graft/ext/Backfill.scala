@@ -117,16 +117,13 @@ object Backfill {
     * compute + report), not the fixture.
     */
   def ensureFeatureArtifact(spark: SparkSession, dir: String): String =
-    scratchArtifacts.getOrElseUpdate(dir, {
+    graft.ops.Scratch.fixture("feature_artifact", dir) { fixtureDir =>
       val features = featureDf(Tables.documents(spark, dir)
         .filter(!col("source").isin("src9", "src19")))
-      val p = graft.ops.Scratch.fixtureDir("feature_artifact").resolve("features").toString
+      val p = fixtureDir.resolve("features").toString
       graft.ops.Publish.publish(spark, p, features)
       p
-    })
-
-  private val scratchArtifacts =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   /** Driver entry: the artifact was built before `src9`/`src19` arrived
     * (the staging rule the oracle mirrors); the backfill computes
@@ -157,15 +154,12 @@ object Backfill {
     * the backfill entry exercises; audits read the caught-up form).
     */
   def ensureFeatureArtifactFull(spark: SparkSession, dir: String): String =
-    scratchFull.getOrElseUpdate(dir, {
+    graft.ops.Scratch.fixture("feature_artifact_full", dir) { fixtureDir =>
       val features = featureDf(Tables.documents(spark, dir))
-      val p = graft.ops.Scratch.fixtureDir("feature_artifact_full").resolve("features").toString
+      val p = fixtureDir.resolve("features").toString
       graft.ops.Publish.publish(spark, p, features)
       p
-    })
-
-  private val scratchFull =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   /** FEATURE-ARTIFACT AUDIT — the derived-column store member of the
     * audit family: volume + partition spread, replay duplicates,

@@ -272,15 +272,13 @@ object Dedup {
     * over every later batch, so the timed query below is the probe
     * pipeline alone. [[graft.Bench]] pre-builds this untimed.
     */
-  private val scratchIndex = scala.collection.concurrent.TrieMap.empty[String, String]
-
   def ensureIncrementalIndex(spark: SparkSession, dir: String): String =
-    scratchIndex.getOrElseUpdate(dir, {
+    graft.ops.Scratch.fixture("minhash_index", dir) { fixtureDir =>
       val docs = Tables.documents(spark, dir)
-      val idx = graft.ops.Scratch.fixtureDir("minhash_index").toString
+      val idx = fixtureDir.toString
       indexInit(docs.filter(col("doc_id") < 250), idx)
       idx
-    })
+    }
 
   /** Driver-contract entry for the incremental path: docs with id < 250
     * are yesterday's indexed corpus, the rest arrive as today's batch and
@@ -369,15 +367,13 @@ object Dedup {
     * work, which IS the operational reading: the artifact is maintained
     * by ingest, not rebuilt per report).
     */
-  private val scratchPairs = scala.collection.concurrent.TrieMap.empty[String, String]
-
   def ensurePairsArtifact(spark: SparkSession, dir: String): String =
-    scratchPairs.getOrElseUpdate(dir, {
+    graft.ops.Scratch.fixture("pairs_artifact", dir) { fixtureDir =>
       val docs = Tables.documents(spark, dir)
-      val p = graft.ops.Scratch.fixtureDir("pairs_artifact").resolve("pairs").toString
+      val p = fixtureDir.resolve("pairs").toString
       pairsArtifactInit(docs, p)
       p
-    })
+    }
 
   /** The verified near-dup pair table for `dir`, served FROM the
     * artifact — drop-in for [[dedupMinhash]] at every derived-query
@@ -462,17 +458,14 @@ object Dedup {
     * Ingest cost; Bench pre-builds it untimed.
     */
   def ensureHashStore(spark: SparkSession, dir: String): String =
-    scratchHashStores.getOrElseUpdate(dir, {
+    graft.ops.Scratch.fixture("hash_store", dir) { fixtureDir =>
       val docs = Tables.documents(spark, dir)
-      val p = graft.ops.Scratch.fixtureDir("hash_store").resolve("hashes").toString
+      val p = fixtureDir.resolve("hashes").toString
       graft.ops.Publish.publish(spark, p, docs
         .select(md5(col("text").cast("binary")).as("h"), col("doc_id"),
           (col("doc_id") % 3).as("batch")), partitionBy = Seq("batch"))
       p
-    })
-
-  private val scratchHashStores =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   def qHashStoreAudit(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
@@ -538,15 +531,12 @@ object Dedup {
     * Ingest cost; Bench pre-builds it untimed.
     */
   def ensureFullIndex(spark: SparkSession, dir: String): String =
-    scratchFullIndex.getOrElseUpdate(dir, {
+    graft.ops.Scratch.fixture("minhash_full_index", dir) { fixtureDir =>
       val docs = Tables.documents(spark, dir)
-      val idx = graft.ops.Scratch.fixtureDir("minhash_full_index").toString
+      val idx = fixtureDir.toString
       indexInit(docs, idx)
       idx
-    })
-
-  private val scratchFullIndex =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   def dedupIndexAudit(spark: SparkSession, dir: String): DataFrame = {
     val idx = ensureFullIndex(spark, dir)
@@ -1275,9 +1265,9 @@ object Dedup {
     * un-deleted temp roots were the r15 leak finding).
     */
   def ensureDeleteFixture(spark: SparkSession, dir: String): String =
-    scratchDeleteFixture.getOrElseUpdate(dir, {
+    graft.ops.Scratch.fixture("delete_fixture", dir) { fixtureDir =>
       val docs = Tables.documents(spark, dir)
-      val root = graft.ops.Scratch.fixtureDir("delete_fixture").toString
+      val root = fixtureDir.toString
       indexInit(docs, s"$root/index")
       pairsArtifactInit(docs, s"$root/pairs")
       graft.ops.Publish.publish(spark, s"$root/hashes",
@@ -1287,10 +1277,7 @@ object Dedup {
       graft.ops.Publish.publish(spark, s"$root/manifest",
         Packing.packSequences(docs))
       root
-    })
-
-  private val scratchDeleteFixture =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   /** Driver entry: applies the standing src7 takedown
     * ([[graft.ext.Curation.qDeleteImpact]]'s delete set) to the four
@@ -1438,16 +1425,13 @@ object Dedup {
     * token makes re-ensuring a no-op.
     */
   def ensureStandingTombstones(spark: SparkSession, dir: String): String =
-    scratchTombs.getOrElseUpdate(dir, {
+    graft.ops.Scratch.fixture("tombstones", dir) { fixtureDir =>
       val docs = Tables.documents(spark, dir)
-      val p = graft.ops.Scratch.fixtureDir("tombstones").resolve("tombs").toString
+      val p = fixtureDir.resolve("tombs").toString
       tombstoneAppend(docs.filter(col("source") === "src7").select("doc_id"), p,
         token = "src7")
       p
-    })
-
-  private val scratchTombs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   def qDeleteTombstone(spark: SparkSession, dir: String): DataFrame = {
     val tombs = tombstonesRead(spark, ensureStandingTombstones(spark, dir))

@@ -106,15 +106,12 @@ object Ivf {
     * pins the bit equality).
     */
   def ensureModel(spark: SparkSession, dir: String): Seq[Seq[Float]] =
-    loadedModels.getOrElseUpdate(dir, {
+    graft.ops.Scratch.fixture("ivf_model", dir) { fixtureDir =>
       val emb = Tables.embeddings(spark, dir)
-      val path = graft.ops.Scratch.fixtureDir("ivf_model").resolve("model").toString
+      val path = fixtureDir.resolve("model").toString
       modelArtifactWrite(spark, trainCentroids(emb), path)
       modelArtifactRead(spark, path)
-    })
-
-  private val loadedModels =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Float]]]
+    }
 
   /** Ingest-time assignment: one compiled map, no shuffle. */
   def assignLists(emb: DataFrame, centroids: Seq[Seq[Float]]): DataFrame =
@@ -242,16 +239,13 @@ object Ivf {
     * ([[writeIvfPartitioned]] — ingest cost, staged untimed by Bench).
     */
   def ensureLayout(spark: SparkSession, dir: String): String =
-    scratchLayouts.getOrElseUpdate(dir, {
+    graft.ops.Scratch.fixture("ivf_layout", dir) { fixtureDir =>
       val emb = Tables.embeddings(spark, dir)
       val model = ensureModel(spark, dir)
-      val path = graft.ops.Scratch.fixtureDir("ivf_layout").resolve("corpus").toString
+      val path = fixtureDir.resolve("corpus").toString
       writeIvfPartitioned(emb, model, path)
       path
-    })
-
-  private val scratchLayouts =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   /** The SERVED form of [[annIvfSearch]]: identical results (same
     * oracle), but the probe reads the [[writeIvfPartitioned]] layout —
@@ -310,15 +304,12 @@ object Ivf {
     * makes re-ensuring a no-op.
     */
   def ensureVecTombstones(spark: SparkSession, dir: String): String =
-    scratchVecTombs.getOrElseUpdate(dir, {
+    graft.ops.Scratch.fixture("vec_tombs", dir) { fixtureDir =>
       val emb = Tables.embeddings(spark, dir)
-      val p = graft.ops.Scratch.fixtureDir("vec_tombs").resolve("tombs").toString
+      val p = fixtureDir.resolve("tombs").toString
       Dedup.tombstoneAppend(standingVecTombstones(emb), p, token = "standing")
       p
-    })
-
-  private val scratchVecTombs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   def annIvfSearchTombstoned(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
@@ -755,18 +746,15 @@ object Ivf {
     * r15 weak mark. Bench/ScaleBench pre-build this untimed.
     */
   def ensureRetrainFixture(spark: SparkSession, dir: String): String =
-    scratchRetrainFixture.getOrElseUpdate(dir, {
+    graft.ops.Scratch.fixture("retrain_fixture", dir) { fixtureDir =>
       val emb = Tables.embeddings(spark, dir)
       val cut = 4L * emb.count() / 5L
-      val root = graft.ops.Scratch.fixtureDir("retrain_fixture").toString
+      val root = fixtureDir.toString
       val centsOld = trainCentroids(emb.filter(col("vec_id") < cut))
       modelArtifactWrite(spark, centsOld, s"$root/model")
       writeIvfPartitioned(emb, centsOld, s"$root/corpus")
       root
-    })
-
-  private val scratchRetrainFixture =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   /** Driver entry: applies the full-corpus retrain [[annRetrainDelta]]
     * recommends against the frozen-cohort serving state and returns the

@@ -788,28 +788,24 @@ object Multimodal {
     * and rolls up per file — the scan path exercises DSv2 partition
     * planning (one per file) and column pruning end to end.
     */
-  /** Stages the containers once per SF (ingest-side setup — graft.Bench
-    * calls this untimed, like the incremental-dedup index build, so the
-    * timed query measures the scan, not file creation).
+  /** Stages the containers once per (JVM, corpus dir) under the fixture
+    * root (ingest-side setup — graft.Bench calls this untimed, like the
+    * incremental-dedup index build, so the timed query measures the
+    * scan, not file creation).
     */
-  def ensureGvidStage(dir: String): String = {
-    val stage = new java.io.File(
-      s"/tmp/graft_gvid_stage_${new java.io.File(dir).getName}")
-    if (!stage.isDirectory) {
-      stage.mkdirs()
+  def ensureGvidStage(dir: String): String =
+    graft.ops.Scratch.fixture("gvid_stage", dir) { stage =>
       (0L until 50L).foreach { id =>
         val nFrames = 4 + (id % 13).toInt
         val frames = Seq.tabulate(nFrames) { f =>
           val rgb = Array.tabulate(8 * 8 * 3)(i => ((i * 3 + id + f * 11) % 256).toByte)
           MediaCodec.encodeBmp(8, 8, rgb)
         }
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(f"$stage/doc$id%03d.gvid"),
+        java.nio.file.Files.write(stage.resolve(f"doc$id%03d.gvid"),
           MediaCodec.encodeVideo(frames))
       }
+      stage.toString
     }
-    stage.toString
-  }
 
   def multimodalGvidScan(spark: SparkSession, dir: String): DataFrame = {
     val stage = ensureGvidStage(dir)

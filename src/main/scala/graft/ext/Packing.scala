@@ -376,15 +376,12 @@ object Packing {
     * it untimed, so the timed entry measures audit cost only).
     */
   def ensureManifest(spark: SparkSession, dir: String): String =
-    scratchManifests.getOrElseUpdate(dir, {
+    graft.ops.Scratch.fixture("pack_manifest", dir) { fixtureDir =>
       val manifest = packSequences(Tables.documents(spark, dir))
-      val p = graft.ops.Scratch.fixtureDir("pack_manifest").resolve("manifest").toString
+      val p = fixtureDir.resolve("manifest").toString
       graft.ops.Publish.publish(spark, p, manifest)
       p
-    })
-
-  private val scratchManifests =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   /** MANIFEST AUDIT — one health row for a stored pack manifest, from
     * one [[Audit.keyedAuditDf]] pass on doc_id plus the bucketed
@@ -478,15 +475,12 @@ object Packing {
     * cost, Bench pre-builds it untimed.
     */
   def ensurePackedStore(spark: SparkSession, dir: String): String =
-    scratchPacked.getOrElseUpdate(dir, {
+    graft.ops.Scratch.fixture("packed_store", dir) { fixtureDir =>
       val docs = Tables.documents(spark, dir)
-      val p = graft.ops.Scratch.fixtureDir("packed_store").resolve("packed").toString
+      val p = fixtureDir.resolve("packed").toString
       writePacked(docs, p)
       p
-    })
-
-  private val scratchPacked =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   /** PACKED-STORE AUDIT — the physical shard layout member of the
     * store-audit family: [[manifestAuditDf]] trusts the COORDINATES,

@@ -115,15 +115,12 @@ object Pq {
     * training, spec-pinned).
     */
   def ensureModel(spark: SparkSession, dir: String): Seq[Seq[Seq[Float]]] =
-    loadedModels.getOrElseUpdate(dir, {
+    graft.ops.Scratch.fixture("pq_model", dir) { fixtureDir =>
       val emb = Tables.embeddings(spark, dir)
-      val path = graft.ops.Scratch.fixtureDir("pq_model").resolve("model").toString
+      val path = fixtureDir.resolve("model").toString
       modelArtifactWrite(spark, trainCodebooks(emb), path)
       modelArtifactRead(spark, path)
-    })
-
-  private val loadedModels =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Seq[Float]]]]
+    }
 
   /** L2-normalized copy of a float-array column (norm computed once). */
   private def normalizedCol(v: Column): Column = {
@@ -222,15 +219,12 @@ object Pq {
     * search row for row.
     */
   def ensureCodes(spark: SparkSession, dir: String): String =
-    scratchCodes.getOrElseUpdate(dir, {
+    graft.ops.Scratch.fixture("pq_codes", dir) { fixtureDir =>
       val codes = encodeCorpus(Tables.embeddings(spark, dir), ensureModel(spark, dir))
-      val p = graft.ops.Scratch.fixtureDir("pq_codes").resolve("codes").toString
+      val p = fixtureDir.resolve("codes").toString
       graft.ops.Publish.publish(spark, p, codes)
       p
-    })
-
-  private val scratchCodes =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   /** The SERVED form of [[annPqSearch]]: identical results (same
     * oracle), but ADC scans the persisted code table. The timed
@@ -428,16 +422,13 @@ object Pq {
         col("list_id"))
 
   def ensureIvfPqLayout(spark: SparkSession, dir: String): String =
-    scratchIvfPqLayouts.getOrElseUpdate(dir, {
+    graft.ops.Scratch.fixture("ivfpq_layout", dir) { fixtureDir =>
       val layout = ivfPqLayoutFrame(Tables.embeddings(spark, dir),
         Ivf.ensureModel(spark, dir), ensureModel(spark, dir))
-      val p = graft.ops.Scratch.fixtureDir("ivfpq_layout").resolve("codes").toString
+      val p = fixtureDir.resolve("codes").toString
       graft.ops.Publish.publish(spark, p, layout, partitionBy = Seq("list_id"))
       p
-    })
-
-  private val scratchIvfPqLayouts =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   /** The SERVED form of [[annIvfPqSearch]]: identical results (same
     * oracle), but the scan reads the [[ensureIvfPqLayout]] directories

@@ -161,18 +161,16 @@ object IncrAgg {
     * Dedup.ensureIncrementalIndex. The remaining days arrive as today's
     * batch in [[qIncrAgg]].
     */
-  private val scratchMv = scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
   private def ensureMv(spark: SparkSession, dir: String): (String, String) =
-    scratchMv.getOrElseUpdate(dir, {
+    Scratch.fixture("incr_agg_mv", dir) { fixtureDir =>
       val ev = graft.Tables.events(spark, dir).withColumn("d", to_date(col("ts")))
       val days = ev.select(col("d").cast("string")).distinct()
         .collect().map(_.getString(0)).sorted
       val splitDay = days(days.length * 2 / 3)
-      val mv = Scratch.fixtureDir("incr_agg_mv").toString
+      val mv = fixtureDir.toString
       init(ev.filter(col("d").cast("string") < splitDay), mv)
       (mv, splitDay)
-    })
+    }
 
   /** Driver entry: the maintained view after today's batch merges in —
     * equal, by the merge algebra, to the full-history aggregate the
@@ -232,18 +230,16 @@ object IncrAgg {
       .unionByName(merged)
   }
 
-  private val scratchSketchMv = scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
   private def ensureSketchMv(spark: SparkSession, dir: String): (String, String) =
-    scratchSketchMv.getOrElseUpdate(dir, {
+    Scratch.fixture("hll_mv", dir) { fixtureDir =>
       val ev = graft.Tables.events(spark, dir).withColumn("d", to_date(col("ts")))
       val days = ev.select(col("d").cast("string")).distinct()
         .collect().map(_.getString(0)).sorted
       val splitDay = days(days.length * 2 / 3)
-      val mv = Scratch.fixtureDir("hll_mv").toString
+      val mv = fixtureDir.toString
       sketchInit(ev.filter(col("d").cast("string") < splitDay), mv)
       (mv, splitDay)
-    })
+    }
 
   /** Driver entry: daily distinct-user estimates from the maintained
     * sketch view after today's batch unions in. Estimates are

@@ -3,15 +3,17 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Per-invocation scratch copies of pristine store fixtures — the
-  * bench discipline for EXECUTE operators (delete apply, retrain
-  * apply): the pristine state is ingest cost, staged once per
-  * (JVM, corpus) by an `ensure*` fixture; each invocation copies it
-  * (file I/O, not a recompute — the operator rewrites its stores in
-  * place, so a shared fixture would drift) and the copy is dropped in
-  * finally, so a failed or repeated run never accretes corpus-sized
-  * store copies in /tmp. Callers must return only frames rooted in
-  * checkpoints — the scratch is gone when the result is consumed.
+/** The engine's scratch space: per-JVM roots deleted at exit, the one
+  * memo every `ensure*` fixture is staged through, and per-invocation
+  * copies of pristine store fixtures — the bench discipline for
+  * EXECUTE operators (delete apply, retrain apply): the pristine state
+  * is ingest cost, staged once per (JVM, corpus) by an `ensure*`
+  * fixture; each invocation copies it (file I/O, not a recompute — the
+  * operator rewrites its stores in place, so a shared fixture would
+  * drift) and the copy is dropped in finally, so a failed or repeated
+  * run never accretes corpus-sized store copies in /tmp. Callers must
+  * return only frames rooted in checkpoints — the scratch is gone when
+  * the result is consumed.
   */
 object Scratch {
 
@@ -36,12 +38,25 @@ object Scratch {
   private[graft] def fixtureRoot: java.nio.file.Path =
     jvmRoot(System.getProperty("java.io.tmpdir"), "graft_fixtures")
 
-  /** A fresh `<prefix><N>` dir for one `ensure*` fixture under the JVM's
-    * fixture root. Call it only once the fixture's input read resolved,
-    * so a missing corpus leaves no empty dir behind.
+  private val fixtures = scala.collection.concurrent.TrieMap.empty[(String, String), Any]
+
+  /** The one `ensure*` memo: `build` runs once per (kind, corpus dir) in
+    * this JVM, given a fresh `<kind><N>` dir under the fixture root, and
+    * every later call for the pair returns its result. A build that
+    * throws (a corpus read that does not resolve, a failed write) takes
+    * its dir with it and memoizes nothing, so a missing corpus leaves no
+    * empty dir behind and the next call retries.
     */
-  def fixtureDir(prefix: String): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory(fixtureRoot, prefix)
+  def fixture[T](kind: String, dir: String)(build: java.nio.file.Path => T): T =
+    fixtures.getOrElseUpdate((kind, dir), {
+      val fixtureDir = java.nio.file.Files.createTempDirectory(fixtureRoot, kind)
+      try build(fixtureDir)
+      catch {
+        case e: Throwable =>
+          org.apache.spark.network.util.JavaUtils.deleteRecursively(fixtureDir.toFile)
+          throw e
+      }
+    }).asInstanceOf[T]
 
   def withFixtureCopy[T](spark: SparkSession, fixture: String,
       prefix: String)(body: String => T): T = {

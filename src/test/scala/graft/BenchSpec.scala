@@ -1,8 +1,9 @@
 package graft
 
-/** The bench harness's warmup and fixture staging: failures are
-  * reported, not swallowed, so a missing fixture cannot silently move
-  * its build cost into the first timed entry.
+/** The bench harness's timed run, warmup and fixture staging: failures
+  * are recorded, not swallowed or rethrown, so a missing fixture cannot
+  * silently move its build cost into the first timed entry and a
+  * failing entry cannot read as a fast one.
   */
 class BenchSpec extends SparkSuite {
 
@@ -26,11 +27,10 @@ class BenchSpec extends SparkSuite {
     staged.flatMap(_.error).foreach { e =>
       assert(e.nonEmpty && !e.exists(c => c == '"' || c == '\\' || c.isControl), e)
     }
-    val gvid = new java.io.File(s"/tmp/graft_gvid_stage_${empty.toFile.getName}")
-    Option(gvid.listFiles()).foreach(_.foreach(_.delete()))
-    gvid.delete()
-    // a stage whose input read fails creates no fixture dir
-    assert(tmpEntries -- before === Set.empty)
+    // a stage whose input read fails creates no fixture dir: the only
+    // new entry is the gvid containers' stage, under the fixture root
+    val added = tmpEntries -- before
+    assert(added.size === 1 && added.head.startsWith(s"${fixtures.getName}/gvid_stage"), added)
     empty.toFile.delete()
   }
 
@@ -39,11 +39,30 @@ class BenchSpec extends SparkSuite {
     val root = java.nio.file.Files.createTempDirectory("no_tables")
     val empty = root.resolve("sf0.1")
     java.nio.file.Files.createDirectory(empty)
-    val warmed = Bench.warmup(spark, empty.toString)
+    val warmed = Harness.warmup(spark, empty.toString)
     assert(warmed.map(_.name) ===
       Seq("q_agg", "text_quality", "dedup_minhash", "q_tfidf", "q_window_topk"))
     assert(warmed.forall(w => w.error.exists(_.nonEmpty) && w.seconds >= 0.0), warmed)
     empty.toFile.delete()
     root.toFile.delete()
+  }
+
+  test("Harness.run times construct and exec apart and records an entry's error instead of throwing") {
+    val ok = Harness.run("ok") { Thread.sleep(50); spark.range(1000).toDF() }
+    assert(ok.name === "ok" && ok.error.isEmpty, ok)
+    // the query function's own work is construct; the sink is exec
+    assert(ok.construct >= 0.05 && ok.exec > 0.0 && ok.seconds === ok.construct + ok.exec, ok)
+    // a failure in the sink keeps the construct time it measured
+    val failed = Harness.run("bad")(spark.range(10).selectExpr("raise_error('boom')"))
+    assert(failed.error.exists(_.nonEmpty) && failed.exec > 0.0, failed)
+    // a failure while constructing is all construct
+    val unbuilt = Harness.run("unbuilt")(spark.table("no_such_table"))
+    assert(unbuilt.error.exists(_.contains("no_such_table")) && unbuilt.exec === 0.0, unbuilt)
+    // fatal errors are recorded too: one deep query must not end the run
+    val deep = Harness.run("deep")(throw new StackOverflowError("too deep"))
+    assert(deep.error.exists(_.contains("StackOverflowError")), deep)
+    Seq(failed, unbuilt, deep).flatMap(_.error).foreach { e =>
+      assert(!e.exists(c => c == '"' || c == '\\' || c.isControl) && e.length <= 160, e)
+    }
   }
 }

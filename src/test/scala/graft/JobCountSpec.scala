@@ -2,6 +2,7 @@ package graft
 
 import graft.etl.Pipeline
 import graft.qc.Checks
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.ListenerDrain
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -28,7 +29,7 @@ class JobCountSpec extends SparkSuite {
   }
 
   private def withOut[T](body: String => T): T = {
-    val out = java.nio.file.Files.createTempDirectory("job_count")
+    val out = tempDir("job_count")
     try body(out.toString) finally JavaUtils.deleteRecursively(out.toFile)
   }
 
@@ -48,5 +49,24 @@ class JobCountSpec extends SparkSuite {
       val report = jobs(Checks.writeErrorReport(spark, results, s"$out/report"))
       assert(jobs(Pipeline.runEtlObserved(spark, fixture(""), s"$out/observed")) === etl + report)
     }
+  }
+
+  test("warm at sf0.001, the daily_batch store ops run pinned construct and exec job counts") {
+    val dir = "/root/testdata/sf0.001"
+    // (construct jobs, exec jobs) of one warm run, identical over three
+    // reps; construct runs the eager checkpoints, copies and publishes
+    val pinned = Seq(
+      "q_delete_apply" -> ((55, 5)),
+      "ann_retrain_apply" -> ((10, 1)),
+      "dedup_incremental" -> ((3, 6)))
+    def sink(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    val counts = pinned.map { case (q, _) =>
+      val fn = SparkEntry.queries(q)
+      sink(fn(spark, dir)) // stages the fixtures and warms the code paths
+      var df: DataFrame = null
+      val construct = jobs { df = fn(spark, dir) }
+      q -> ((construct, jobs(sink(df))))
+    }
+    assert(counts === pinned)
   }
 }

@@ -565,7 +565,7 @@ class ParitySpec extends SparkSuite {
 
   test("q_anomaly flags exactly the planted spike") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("anomaly_events")
+    val tmp = tempDir("anomaly_events")
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     val rows = (1 to 40).map { i =>
       val v = if (i == 30) 100.0 else if (i % 2 == 0) 10.5 else 9.5

@@ -763,4 +763,20 @@ class PlanSpec extends SparkSuite {
       assert(SourceScan.codeMatches(re.r).keySet === Set("streaming/Streams.scala"), re)
     }
   }
+
+  test("one harness layer: only Harness.scala sinks to noop, explains or sets the log level; one core-count read; one fixture memo") {
+    // a main that times, explains or builds its own session would bring
+    // the per-main copies (and their differing defaults) back
+    Seq("""format\(\s*"noop"\s*\)""", """\bexplainString\b""", """\bsetLogLevel\b""").foreach { re =>
+      assert(SourceScan.codeMatches(re.r).keySet === Set("Harness.scala"), re)
+    }
+    assert(SourceScan.codeMatches("SPARK_GRAFT_CPUS".r).keySet === Set("GraftSession.scala"))
+    assert(SourceScan.codeMatches("""\bTrieMap\b""".r).keySet === Set("ops/Scratch.scala"))
+    // the two removed ScaleBench options stay removed
+    val gone = for {
+      (rel, raw, _) <- SourceScan.mainSources
+      name <- Seq("SPARK_GRAFT_SCALE_ONLY", "SPARK_GRAFT_SCALE_PART_PER_X") if raw.contains(name)
+    } yield s"$rel: $name"
+    assert(gone.isEmpty, gone)
+  }
 }

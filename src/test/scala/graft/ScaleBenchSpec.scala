@@ -61,7 +61,7 @@ class ScaleBenchSpec extends SparkSuite {
   test("events expansion of an empty source is empty, not an NPE") {
     // the id-collision guard reads max(id), which is NULL on an empty
     // source — that must fold into a pass (no rows, no collision)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_empty_events").toString
+    val tmp = tempDir("graft_empty_events").toString
     Tables.events(spark, dir).limit(0).write.parquet(s"$tmp/events.parquet")
     assert(ScaleBench.expandEvents(spark, tmp, 2).count() === 0L)
   }

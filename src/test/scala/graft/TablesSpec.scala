@@ -30,7 +30,7 @@ class TablesSpec extends SparkSuite {
 
   test("metadataRowCount sums footers across a multi-file parquet write") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_multifile").toString
+    val tmp = tempDir("graft_multifile").toString
     (0L until 1000L).toDF("id").repartition(7).write.parquet(s"$tmp/t.parquet")
     val back = spark.read.parquet(s"$tmp/t.parquet")
     assert(back.inputFiles.length === 7)

@@ -69,7 +69,7 @@ class EtlSpec extends SparkSuite {
 
   test("permissive GHCN audit splits clean rows from malformed raw lines in one scan") {
     import org.apache.spark.sql.functions.col
-    val dirTmp = java.nio.file.Files.createTempDirectory("ghcn_audit")
+    val dirTmp = tempDir("ghcn_audit")
     val good1 = "USW00094846,20190101,TMAX,39,,,X,2400"
     val bad = "USW00094847,20190101,TMIN,not_a_number,,,X,2400"
     val good2 = "USW00094848,20190102,TMAX,50,,,X,2400"

@@ -7,7 +7,7 @@ class PipelineSpec extends SparkSuite {
 
   test("ETL writes partitioned parquet and QC flags the seeded violations") {
     val inputDir = fixture("")
-    val out = java.nio.file.Files.createTempDirectory("pipeline_out").toString
+    val out = tempDir("pipeline_out").toString
 
     Pipeline.runEtl(spark, inputDir, out)
 
@@ -52,7 +52,7 @@ class PipelineSpec extends SparkSuite {
 
   test("observed ETL run carries the full QC inside the writes, equal to post-hoc QC") {
     val inputDir = fixture("")
-    val out = java.nio.file.Files.createTempDirectory("pipeline_obs").toString
+    val out = tempDir("pipeline_obs").toString
 
     val observed = Pipeline.runEtlObserved(spark, inputDir, out)
     // the written output is byte-for-byte the plain ETL contract...
@@ -71,7 +71,7 @@ class PipelineSpec extends SparkSuite {
 
   test("incremental run replaces only the arriving batch's partitions") {
     import java.nio.file.{Files, Paths}
-    val out = java.nio.file.Files.createTempDirectory("pipeline_inc").toString
+    val out = tempDir("pipeline_inc").toString
     Pipeline.runEtl(spark, fixture(""), out)
     def bal = spark.read.parquet(s"$out/bal_auth")
     val pjmJanBefore = bal.filter("bal_auth='PJM' AND year=2021 AND month=1").count()
@@ -80,7 +80,7 @@ class PipelineSpec extends SparkSuite {
 
     // day-2 batch: a NEW month for PJM plus a corrected replay of the
     // CISO December partition (sentinel forecast value, 2 rows)
-    val batch = Files.createTempDirectory("pipeline_day2")
+    val batch = tempDir("pipeline_day2")
     Files.createDirectories(batch.resolve("bal_auth"))
     Files.createDirectories(batch.resolve("weather"))
     val header = "Balancing Authority,Region,Data Date,Local Time at End of Hour," +
@@ -117,10 +117,10 @@ class PipelineSpec extends SparkSuite {
 
   test("streaming ETL: daily gz arrivals land incrementally with checkpointed offsets") {
     import java.nio.file.{Files, Paths}
-    val in = Files.createTempDirectory("etl_stream_in")
+    val in = tempDir("etl_stream_in")
     Files.createDirectories(in.resolve("bal_auth"))
     Files.copy(Paths.get(fixture("bal_auth/eia930.csv.gz")), in.resolve("bal_auth/eia930.csv.gz"))
-    val out = Files.createTempDirectory("etl_stream_out").toString
+    val out = tempDir("etl_stream_out").toString
 
     // run 1: day-1 file only
     Pipeline.runEtlStream(spark, in.toString, out)
@@ -171,7 +171,7 @@ class PipelineSpec extends SparkSuite {
     // column; historical partitions never get rewritten. mergeSchema
     // reconciles the footers and back-fills nulls for old partitions.
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("evolve").toString
+    val path = tempDir("evolve").toString
     Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v")
       .write.parquet(s"$path/day=2024-01-01")
     Seq((3L, 30.0, "beta")).toDF("id", "v", "variant")
@@ -190,7 +190,7 @@ class PipelineSpec extends SparkSuite {
     // API — ORC is the other columnar format a lakehouse ingests; same
     // pushdown/pruning contract as parquet
     val li = graft.Tables.lineitem(spark, "/root/testdata/sf0.001")
-    val path = java.nio.file.Files.createTempDirectory("orc_rt").toString + "/li"
+    val path = tempDir("orc_rt").toString + "/li"
     li.write.orc(path)
     val back = spark.read.orc(path)
     assert(back.count() === li.count())

@@ -119,7 +119,7 @@ class ExtSpec extends SparkSuite {
     val batch1Internal = full.filter { case (a, b, _) => a < 250 && b < 250 }
 
     val docs = graft.Tables.documents(spark, dir)
-    val idx = java.nio.file.Files.createTempDirectory("minhash_idx").toString
+    val idx = tempDir("minhash_idx").toString
     Dedup.indexInit(docs.filter(org.apache.spark.sql.functions.col("doc_id") < 250), idx)
     val incremental = Dedup.indexIncremental(
         docs.filter(org.apache.spark.sql.functions.col("doc_id") >= 250), idx)
@@ -143,7 +143,7 @@ class ExtSpec extends SparkSuite {
     assert(Pq.ensureModel(spark, dir) === Pq.trainCodebooks(emb))
     // explicit write/read round-trip preserves float bits
     val cents = Ivf.trainCentroids(emb, k = 4, iters = 2, sampleN = 64)
-    val p = java.nio.file.Files.createTempDirectory("model_rt")
+    val p = tempDir("model_rt")
       .resolve("m").toString
     Ivf.modelArtifactWrite(spark, cents, p)
     assert(Ivf.modelArtifactRead(spark, p) === cents)
@@ -190,7 +190,7 @@ class ExtSpec extends SparkSuite {
     val cut = 4L * n / 5L
     val centsOld = Ivf.trainCentroids(emb.filter(col("vec_id") < cut))
     val centsNew = Ivf.trainCentroids(emb)
-    val root = java.nio.file.Files.createTempDirectory("retrain_apply_spec")
+    val root = tempDir("retrain_apply_spec")
     val modelPath = root.resolve("model").toString
     val layoutPath = root.resolve("corpus").toString
     Ivf.modelArtifactWrite(spark, centsOld, modelPath)
@@ -312,7 +312,7 @@ class ExtSpec extends SparkSuite {
     val cents = Ivf.ensureModel(spark, dir)
     val cb = Pq.ensureModel(spark, dir)
     val cut1 = 200L; val cut2 = 350L
-    val root = java.nio.file.Files.createTempDirectory("serving_append")
+    val root = tempDir("serving_append")
     val lP = root.resolve("layout").toString
     val cP = root.resolve("codes").toString
     // bootstrap on the first arrivals, then two incremental waves —
@@ -355,7 +355,7 @@ class ExtSpec extends SparkSuite {
     val (cut1, cut2) = (300L, 400L)
     val centsOld = Ivf.trainCentroids(emb.filter(col("vec_id") < cut1))
     val centsNew = Ivf.trainCentroids(emb)
-    val root = java.nio.file.Files.createTempDirectory("retrain_append")
+    val root = tempDir("retrain_append")
     val (lP, mP) = (root.resolve("layout").toString, root.resolve("model").toString)
     Ivf.modelArtifactWrite(spark, centsOld, mP)
     Ivf.writeIvfPartitioned(emb.filter(col("vec_id") < cut1), centsOld, lP)
@@ -660,7 +660,7 @@ class ExtSpec extends SparkSuite {
       .limit(2).collect().map(_.getAs[Long]("doc_id"))
     val docB = two(0) // replayed
     val docR = two(1) // rotten hash
-    val root = java.nio.file.Files.createTempDirectory("run_maint")
+    val root = tempDir("run_maint")
     val (hP, mP, pP) = (root.resolve("hashes").toString,
       root.resolve("manifest").toString, root.resolve("pairs").toString)
     val (lP, cP) = (root.resolve("layout").toString, root.resolve("codes").toString)
@@ -754,7 +754,7 @@ class ExtSpec extends SparkSuite {
     // the healthy manifest/pair rows for the same doc (the reingest-
     // before-repair ordering) — the pair artifact must come out
     // UNTOUCHED, not rebuilt-after-deletion.
-    val root2 = java.nio.file.Files.createTempDirectory("run_maint_lost")
+    val root2 = tempDir("run_maint_lost")
     val (hP2, mP2, pP2) = (root2.resolve("hashes").toString,
       root2.resolve("manifest").toString, root2.resolve("pairs").toString)
     healthyH.filter(col("doc_id") =!= docM)
@@ -774,7 +774,7 @@ class ExtSpec extends SparkSuite {
     // keeps it), so the plan must route it to the corpus-covering
     // reingest, and the doc's pairs fall to the cross-store pass.
     val docs2 = docs.filter(col("doc_id") =!= docM).localCheckpoint()
-    val root3 = java.nio.file.Files.createTempDirectory("run_maint_orphan")
+    val root3 = tempDir("run_maint_orphan")
     val (hP3, mP3, pP3) = (root3.resolve("hashes").toString,
       root3.resolve("manifest").toString, root3.resolve("pairs").toString)
     healthyH.publishTo(hP3, "batch")
@@ -803,7 +803,7 @@ class ExtSpec extends SparkSuite {
       col("doc_id"), (col("doc_id") % 3).as("batch")).localCheckpoint()
     def stage(): (String, String, String, String, String, String, String,
         String, String) = {
-      val root = java.nio.file.Files.createTempDirectory("maint_recover")
+      val root = tempDir("maint_recover")
       val (hP, mP, pP) = (root.resolve("hashes").toString,
         root.resolve("manifest").toString, root.resolve("pairs").toString)
       val (lP, cP) = (root.resolve("layout").toString,
@@ -869,7 +869,7 @@ class ExtSpec extends SparkSuite {
     import graft.ops.StoreIO
     val docs = Tables.documents(spark, dir).localCheckpoint()
     def stage(): (String, String, String, String) = {
-      val root = java.nio.file.Files.createTempDirectory("tomb")
+      val root = tempDir("tomb")
       val idx = root.resolve("index").toString
       val pairs = root.resolve("pairs").toString
       val hashes = root.resolve("hashes").toString
@@ -904,7 +904,7 @@ class ExtSpec extends SparkSuite {
     // A carries tombstones; B is the physical rewrite twin
     val (idxA, pairsA, hashesA, manA) = stage()
     val (idxB, pairsB, hashesB, manB) = stage()
-    val tombsPath = java.nio.file.Files.createTempDirectory("tomb_store")
+    val tombsPath = tempDir("tomb_store")
       .resolve("tombs").toString
     Dedup.tombstoneAppend(del, tombsPath, token = "t1")
     Dedup.tombstoneAppend(del, tombsPath, token = "t1") // replay: same child
@@ -976,7 +976,7 @@ class ExtSpec extends SparkSuite {
     // equality with the EXPENSIVE form: a layout physically rewritten
     // on the survivors, searched identically
     val survivors = emb.filter(!(col("vec_id") % 50 === 17)).localCheckpoint()
-    val rewritten = java.nio.file.Files.createTempDirectory("vec_rewrite")
+    val rewritten = tempDir("vec_rewrite")
       .resolve("corpus").toString
     Ivf.writeIvfPartitioned(survivors, cents, rewritten)
     val queries = emb.filter(col("vec_id") < 5)
@@ -986,7 +986,7 @@ class ExtSpec extends SparkSuite {
     assert(tRows === direct)
     // the tombstone anti-join must not defeat partition pruning: the
     // served plan still carries a PartitionFilters prune on list_id
-    val tombsPath = java.nio.file.Files.createTempDirectory("vec_tombs_plan")
+    val tombsPath = tempDir("vec_tombs_plan")
       .resolve("tombs").toString
     Dedup.tombstoneAppend(Ivf.standingVecTombstones(emb), tombsPath)
     val tombs = Dedup.tombstonesRead(spark, tombsPath).localCheckpoint()
@@ -1066,8 +1066,8 @@ class ExtSpec extends SparkSuite {
     //    incremental probe output — the MAINTAINED artifact equals a
     //    from-scratch rebuild (exactly-once pair emission makes the
     //    union of deltas the full pair set, independent of batch cuts)
-    val idx = java.nio.file.Files.createTempDirectory("pairs_idx").toString
-    val artPath = java.nio.file.Files.createTempDirectory("pairs_art")
+    val idx = tempDir("pairs_idx").toString
+    val artPath = tempDir("pairs_art")
       .resolve("pairs").toString
     Dedup.indexInit(docs.filter(col("doc_id") < 250), idx)
     Dedup.pairsArtifactInit(docs.filter(col("doc_id") < 250), artPath)
@@ -1269,7 +1269,7 @@ class ExtSpec extends SparkSuite {
     val stagedM = healthyM.filter(col("doc_id") =!= docC)
       .unionByName(healthyM.filter(col("doc_id") === docB))
     val stagedP = healthyP.unionByName(dupPair)
-    val root = java.nio.file.Files.createTempDirectory("store_repair")
+    val root = tempDir("store_repair")
     val (hP, mP, pP) = (root.resolve("hashes").toString,
       root.resolve("manifest").toString, root.resolve("pairs").toString)
     stagedH.publishTo(hP, "batch")
@@ -1321,7 +1321,7 @@ class ExtSpec extends SparkSuite {
   test("deleteApply is idempotent: a replayed takedown leaves state unchanged and emits an empty delta") {
     import org.apache.spark.sql.functions.{col, md5}
     val docs = graft.Tables.documents(spark, dir)
-    val root = java.nio.file.Files.createTempDirectory("delapply_idem")
+    val root = tempDir("delapply_idem")
     val idx = root.resolve("index").toString
     val pairs = root.resolve("pairs").toString
     val hashes = root.resolve("hashes").toString
@@ -1356,7 +1356,7 @@ class ExtSpec extends SparkSuite {
   test("deleteApply preserves the hash store's hive layout: ingest continues after a takedown") {
     import org.apache.spark.sql.functions.{col, md5}
     val docs = graft.Tables.documents(spark, dir).filter(col("doc_id") % 100 =!= 0)
-    val root = java.nio.file.Files.createTempDirectory("delapply_layout")
+    val root = tempDir("delapply_layout")
     val idx = root.resolve("index").toString
     val pairs = root.resolve("pairs").toString
     val hashes = root.resolve("hashes").toString
@@ -1430,7 +1430,7 @@ class ExtSpec extends SparkSuite {
   test("incremental index compaction: file count drops, probe results identical") {
     import org.apache.spark.sql.functions.col
     val docs = graft.Tables.documents(spark, dir)
-    val idx = java.nio.file.Files.createTempDirectory("minhash_compact").toString
+    val idx = tempDir("minhash_compact").toString
     Dedup.indexInit(docs.filter(col("doc_id") < 250), idx)
     // accrete small files: five 50-doc batches, trigger high enough not to fire
     (250L until 500L by 50L).foreach { lo =>
@@ -1687,7 +1687,7 @@ class ExtSpec extends SparkSuite {
   }
 
   test("bucket-partitioned corpus: multi-probe search prunes the scan to probe directories") {
-    val path = java.nio.file.Files.createTempDirectory("lsh_corpus").toString
+    val path = tempDir("lsh_corpus").toString
     val e = Tables.embeddings(spark, dir)
     Similarity.writeBucketedCorpus(e, path)
     val layout = new java.io.File(path).listFiles().map(_.getName).filter(_.startsWith("bucket="))
@@ -1713,7 +1713,7 @@ class ExtSpec extends SparkSuite {
   }
 
   test("streaming index append keeps the partitioned ANN search fresh") {
-    val path = java.nio.file.Files.createTempDirectory("lsh_live").toString + "/corpus"
+    val path = tempDir("lsh_live").toString + "/corpus"
     val e = Tables.embeddings(spark, dir)
     // bulk build over everything EXCEPT a held-out arrival set
     val arrivals = e.filter(col("vec_id") >= 450)
@@ -1726,7 +1726,7 @@ class ExtSpec extends SparkSuite {
     assert(before.forall(_ < 450), "held-out vectors must be invisible pre-append")
 
     // stream the arrivals in
-    val stageDir = java.nio.file.Files.createTempDirectory("emb_arrivals")
+    val stageDir = tempDir("emb_arrivals")
     arrivals.write.parquet(stageDir.resolve("b1").toString)
     Similarity.runIndexAppendStream(spark, s"$stageDir/*", path)
 
@@ -1973,7 +1973,7 @@ class ExtSpec extends SparkSuite {
   }
 
   test("ivf-partitioned corpus: probe search prunes the scan to the probed list directories") {
-    val path = java.nio.file.Files.createTempDirectory("ivf_corpus").toString
+    val path = tempDir("ivf_corpus").toString
     val e = Tables.embeddings(spark, dir)
     val centroids = Ivf.trainCentroids(e)
     Ivf.writeIvfPartitioned(e, centroids, path)

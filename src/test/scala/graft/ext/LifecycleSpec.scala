@@ -26,7 +26,7 @@ class LifecycleSpec extends SparkSuite {
 
   test("ingest → audits green → takedown → audits green on the surviving corpus") {
     val docs = Tables.documents(spark, dir).localCheckpoint()
-    val root = java.nio.file.Files.createTempDirectory("lifecycle")
+    val root = tempDir("lifecycle")
     val idx = root.resolve("index").toString
     val pairs = root.resolve("pairs").toString
     val hashes = root.resolve("hashes").toString

@@ -99,7 +99,7 @@ class PackingSpec extends SparkSuite {
 
   test("writePacked lands a shard-partitioned layout a reader can prune") {
     val docs = Tables.documents(spark, dir)
-    val out = java.nio.file.Files.createTempDirectory("packed").toString
+    val out = tempDir("packed").toString
     // tiny shards so the corpus spans several
     Packing.writePacked(docs, out, seqLen = 64L, shardSeqs = 4L)
     val shards = new java.io.File(graft.ops.Publish.liveDir(spark, out)).listFiles()
@@ -124,7 +124,7 @@ class PackingSpec extends SparkSuite {
 
   test("packStream maintains the manifest across files, checkpoints, and replays") {
     val docs = Tables.documents(spark, dir)
-    val root = java.nio.file.Files.createTempDirectory("packstream")
+    val root = tempDir("packstream")
     val in = root.resolve("in"); val mv = root.resolve("mv").toString
     val ckpt = root.resolve("ckpt").toString
     docs.filter(col("doc_id") < 20).write.parquet(in.resolve("b1").toString)

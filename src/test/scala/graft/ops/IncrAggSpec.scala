@@ -21,7 +21,7 @@ class IncrAggSpec extends SparkSuite {
   test("sequential batch merges equal the full-history aggregate") {
     val (s1, s2) = daySplits
     val ev = eventsWithDay
-    val mv = java.nio.file.Files.createTempDirectory("incr_mv_seq").toString
+    val mv = tempDir("incr_mv_seq").toString
     IncrAgg.init(ev.filter(col("d") < s1).drop("d"), mv)
     IncrAgg.merge(spark, mv, ev.filter(col("d") >= s1 && col("d") < s2).drop("d"))
     IncrAgg.merge(spark, mv, ev.filter(col("d") >= s2).drop("d"))
@@ -38,7 +38,7 @@ class IncrAggSpec extends SparkSuite {
   test("a merge rewrites ONLY the day partitions the batch touches") {
     val (s1, _) = daySplits
     val ev = eventsWithDay
-    val mv = java.nio.file.Files.createTempDirectory("incr_mv_scope").toString
+    val mv = tempDir("incr_mv_scope").toString
     IncrAgg.init(ev.filter(col("d") < s1).drop("d"), mv)
 
     def partitionFiles(): Map[String, Set[(String, Long)]] =
@@ -61,7 +61,7 @@ class IncrAggSpec extends SparkSuite {
   }
 
   test("streaming maintenance equals the full aggregate and survives redelivery") {
-    val streamDir = java.nio.file.Files.createTempDirectory("incr_mv_stream")
+    val streamDir = tempDir("incr_mv_stream")
     val raw = spark.read.schema(graft.streaming.Streaming.eventsRawSchema)
       .parquet(s"$dir/events.parquet")
     val mid = raw.stat.approxQuantile("ts", Array(0.5), 0.0)(0).toLong
@@ -106,7 +106,7 @@ class IncrAggSpec extends SparkSuite {
   test("the read-only merged view equals the post-merge table") {
     val (s1, s2) = daySplits
     val ev = eventsWithDay
-    val mv = java.nio.file.Files.createTempDirectory("incr_mv_view").toString
+    val mv = tempDir("incr_mv_view").toString
     IncrAgg.init(ev.filter(col("d") < s1).drop("d"), mv)
     val batch = ev.filter(col("d") >= s1 && col("d") < s2).drop("d")
 
@@ -126,7 +126,7 @@ class IncrAggSpec extends SparkSuite {
     val days = ev.select(col("d").cast("string")).distinct()
       .collect().map(_.getString(0)).sorted
     val (d1, d2) = (days(days.length / 3), days(days.length * 2 / 3))
-    val mv = java.nio.file.Files.createTempDirectory("hllmv_spec").toString
+    val mv = tempDir("hllmv_spec").toString
     IncrAgg.sketchInit(ev.filter(col("d").cast("string") < d1), mv)
     // two successive merged views, the second stacked on a published first
     val afterB1 = IncrAgg.sketchMergedView(spark, mv,
@@ -152,7 +152,7 @@ class IncrAggSpec extends SparkSuite {
 
   test("q_incr_agg and q_hll_view stage their views under the fixture root, not directly in java.io.tmpdir") {
     // a corpus dir of its own, so neither view is already cached
-    val corpus = java.nio.file.Files.createTempDirectory("incr_agg_corpus")
+    val corpus = tempDir("incr_agg_corpus")
     java.nio.file.Files.createSymbolicLink(corpus.resolve("events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))

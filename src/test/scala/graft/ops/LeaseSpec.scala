@@ -18,7 +18,7 @@ class LeaseSpec extends SparkSuite {
     spark.sparkContext.hadoopConfiguration)
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).resolve("store").toString
+    tempDir(prefix).resolve("store").toString
 
   private def claims(path: String): Seq[Path] = {
     val d = new Path(Lease.leaseDirOf(path))
@@ -188,7 +188,7 @@ class LeaseSpec extends SparkSuite {
     import org.apache.spark.sql.functions.md5
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
       .localCheckpoint()
-    val root = java.nio.file.Files.createTempDirectory("lease_repair")
+    val root = tempDir("lease_repair")
     val (hP, mP, pP) = (root.resolve("hashes").toString,
       root.resolve("manifest").toString, root.resolve("pairs").toString)
     val healthyH = docs.select(md5(col("text").cast("binary")).as("h"),

@@ -18,7 +18,7 @@ class PointerStoreSpec extends SparkSuite {
 
   private def freshRoot(): (String, DataFrame, DataFrame) = {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("ptr")
+    val root = tempDir("ptr")
       .resolve("store").toString
     val oldF = (1L to 10L).map(i => (i, s"old $i")).toDF("id", "v")
     val newF = (1L to 12L).map(i => (i, s"new $i")).toDF("id", "v")
@@ -90,7 +90,7 @@ class PointerStoreSpec extends SparkSuite {
 
   test("hive partitioning survives the version swap; only the newest committed version is retained") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("ptr_hist")
+    val root = tempDir("ptr_hist")
       .resolve("store").toString
     val f1 = (1L to 9L).map(i => (i, i % 3)).toDF("id", "batch")
     val f2 = (1L to 9L).map(i => (i, i % 2)).toDF("id", "batch")
@@ -108,7 +108,7 @@ class PointerStoreSpec extends SparkSuite {
   test("StoreIO on the pointer commit: append/fold/replay discipline is exactly-once row for row") {
     import spark.implicits._
     val Ddl = "id BIGINT, v STRING"
-    val root = java.nio.file.Files.createTempDirectory("ptr_storeio")
+    val root = tempDir("ptr_storeio")
       .resolve("store").toString
     val live = (1L to 6L).map(i => (i, s"live $i")).toDF("id", "v")
     val b1 = (100L to 104L).map(i => (i, s"b1 $i")).toDF("id", "v")
@@ -141,7 +141,7 @@ class PointerStoreSpec extends SparkSuite {
     val healthyH = docs.select(md5(col("text").cast("binary")).as("h"),
       col("doc_id"), (col("doc_id") % 3).as("batch")).localCheckpoint()
     val docR = docs.orderBy("doc_id").head().getLong(0) // rotten hash
-    val root = java.nio.file.Files.createTempDirectory("ptr_maint")
+    val root = tempDir("ptr_maint")
     val (hP, mP, pP) = (root.resolve("hashes").toString,
       root.resolve("manifest").toString, root.resolve("pairs").toString)
     val (lP, cP) = (root.resolve("layout").toString,

@@ -19,7 +19,7 @@ class PublishSpec extends SparkSuite {
     spark.sparkContext.hadoopConfiguration)
 
   private def tmpRoot(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).resolve("store").toString
+    tempDir(prefix).resolve("store").toString
 
   private def frame(ids: Seq[Long], tag: String): DataFrame = {
     import spark.implicits._

@@ -79,14 +79,14 @@ class ScaleSpec extends SparkSuite {
       (s.map(_._1).sum / s.length, s.map(_._2).sum / s.length)
     }
 
-    val zPath = java.nio.file.Files.createTempDirectory("zorder").toString + "/z"
+    val zPath = tempDir("zorder").toString + "/z"
     Scale.writeZOrdered(ev, zPath, "user_id", "value", 16)
     // layout-only: every row survives
     assert(spark.read.parquet(zPath).count() === ev.count())
     val (zx, zy) = spans(zPath)
 
     // baseline: linear sort on user_id alone
-    val linPath = java.nio.file.Files.createTempDirectory("zorder").toString + "/lin"
+    val linPath = tempDir("zorder").toString + "/lin"
     ev.repartitionByRange(16, col("user_id")).sortWithinPartitions(col("user_id"))
       .write.mode("overwrite").parquet(linPath)
     val (lx, ly) = spans(linPath)
@@ -125,11 +125,11 @@ class ScaleSpec extends SparkSuite {
       spans.sum / spans.length
     }
 
-    val qPath = java.nio.file.Files.createTempDirectory("zq").toString + "/q"
+    val qPath = tempDir("zq").toString + "/q"
     Scale.writeZOrderedQuantile(df, qPath, "x", "y", 16)
     assert(spark.read.parquet(qPath).count() === n)
 
-    val linPath = java.nio.file.Files.createTempDirectory("zq").toString + "/lin"
+    val linPath = tempDir("zq").toString + "/lin"
     Scale.writeZOrdered(df, linPath, "x", "y", 16)
 
     val (qs, ls) = (meanRankSpan(qPath), meanRankSpan(linPath))
@@ -141,7 +141,7 @@ class ScaleSpec extends SparkSuite {
 
   test("training shard export: complete, balanced, deterministic, shards independently ordered") {
     val docs = Tables.documents(spark, dir).select("doc_id", "n_chars")
-    val p1 = java.nio.file.Files.createTempDirectory("shards").toString + "/a"
+    val p1 = tempDir("shards").toString + "/a"
     Scale.writeTrainingShards(docs, p1, "doc_id", 8)
     val dirs = new java.io.File(p1).listFiles().map(_.getName).filter(_.startsWith("__shard="))
     assert(dirs.sorted.toSeq === (0 until 8).map(s => s"__shard=$s"))
@@ -153,7 +153,7 @@ class ScaleSpec extends SparkSuite {
     val sizes = back.groupBy(col("__shard")).count().collect().map(_.getLong(1))
     assert(sizes.max < 2 * sizes.min, s"shard sizes ${sizes.toSeq}")
     // deterministic: a second export produces identical per-shard content
-    val p2 = java.nio.file.Files.createTempDirectory("shards").toString + "/b"
+    val p2 = tempDir("shards").toString + "/b"
     Scale.writeTrainingShards(docs, p2, "doc_id", 8)
     def shardRows(p: String, s: Int) =
       spark.read.parquet(s"$p/__shard=$s").collect().map(_.toString).toSeq
@@ -166,7 +166,7 @@ class ScaleSpec extends SparkSuite {
 
   test("compaction merges many small files into few, preserving every row") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("compact_tbl").toString
+    val path = tempDir("compact_tbl").toString
     // 64 tiny files
     Publish.publish(spark, path, (1L to 6400L).toDF("v").repartition(64))
     def parquetFiles = new java.io.File(Publish.liveDir(spark, path)).listFiles()

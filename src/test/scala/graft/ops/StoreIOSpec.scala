@@ -20,7 +20,7 @@ class StoreIOSpec extends SparkSuite {
 
   private def freshStore(): (String, DataFrame) = {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("storeio")
+    val path = tempDir("storeio")
       .resolve("store").toString
     val live = (1L to 6L).map(i => (i, s"live $i")).toDF("id", "v")
     Publish.publish(spark, path, live)
@@ -109,7 +109,7 @@ class StoreIOSpec extends SparkSuite {
 
   test("fragmentCount counts leaf files recursively: hive-partitioned live stores meter their real listing cost") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("storeio_hive")
+    val path = tempDir("storeio_hive")
       .resolve("store").toString
     Publish.publish(spark, path, (1L to 9L).map(i => (i, i % 3))
       .toDF("id", "batch").repartition(3), Seq("batch"))

@@ -7,7 +7,7 @@ class UpsertSpec extends SparkSuite {
 
   test("upsert rewrites only touched partitions: update, insert, new partition") {
     import spark.implicits._
-    val table = java.nio.file.Files.createTempDirectory("upsert_tbl").toString
+    val table = tempDir("upsert_tbl").toString
     Seq(
       (1L, "a-v1", "d1"), (2L, "b-v1", "d1"),
       (3L, "c-v1", "d2"), (4L, "d-v1", "d2"),
@@ -45,7 +45,7 @@ class UpsertSpec extends SparkSuite {
 
   test("upsert read of current data is pruned to touched partitions") {
     import spark.implicits._
-    val table = java.nio.file.Files.createTempDirectory("upsert_prune").toString
+    val table = tempDir("upsert_prune").toString
     Seq((1L, "x", "d1"), (2L, "y", "d2")).toDF("k", "v", "day")
       .write.partitionBy("day").mode("overwrite").parquet(table)
     // same pruned-read shape upsertPartitioned builds internally

@@ -38,7 +38,7 @@ class QcSpec extends SparkSuite {
   test("error report contains only failures, written via Spark writer") {
     registerViews()
     val results = Checks.run(spark, Checks.referenceChecks)
-    val out = java.nio.file.Files.createTempDirectory("qc_report").toString
+    val out = tempDir("qc_report").toString
     Checks.writeErrorReport(spark, results, s"$out/data_quality")
     val report = spark.read.json(s"$out/data_quality")
     assert(report.count() === results.count(!_.passed))

@@ -12,7 +12,7 @@ class FormatsSpec extends SparkSuite {
   val sfDir = "/root/testdata/sf0.001"
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString
+    tempDir(name).toString
 
   private def assertSameRows(a: org.apache.spark.sql.DataFrame,
                              b: org.apache.spark.sql.DataFrame): Unit = {

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class SourcesSpec extends SparkSuite {
 
   private def stageContainers(): (String, Map[String, Seq[Array[Byte]]]) = {
-    val dir = java.nio.file.Files.createTempDirectory("gvid_src").toString
+    val dir = tempDir("gvid_src").toString
     val byFile = (0 until 3).map { f =>
       val frames = Seq.tabulate(4 + f) { i =>
         val rgb = Array.tabulate(8 * 8 * 3)(p => ((p * 3 + f * 17 + i * 11) % 256).toByte)

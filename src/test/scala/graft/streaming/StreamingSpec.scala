@@ -11,7 +11,7 @@ class StreamingSpec extends SparkSuite {
 
   test("file stream with AvailableNow equals the batch aggregation") {
     // FileStreamSource wants a directory; stage the events file into one
-    val streamDir = java.nio.file.Files.createTempDirectory("events_stream")
+    val streamDir = tempDir("events_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       streamDir.resolve("events.parquet"))
@@ -27,7 +27,7 @@ class StreamingSpec extends SparkSuite {
     import org.apache.spark.sql.functions._
     // stage a feed that redelivers part of the events (exact copies), the
     // way an at-least-once source does
-    val streamDir = java.nio.file.Files.createTempDirectory("events_dedup_stream")
+    val streamDir = tempDir("events_dedup_stream")
     val raw = spark.read.schema(Streaming.eventsRawSchema).parquet(s"$dir/events.parquet")
     raw.write.parquet(streamDir.resolve("b1").toString)
     raw.filter(pmod(col("event_id"), lit(20)) === 7)
@@ -47,7 +47,7 @@ class StreamingSpec extends SparkSuite {
 
   test("streaming as-of enrichment through the custom exec equals the full-batch run") {
     import org.apache.spark.sql.functions._
-    val streamDir = java.nio.file.Files.createTempDirectory("asof_stream")
+    val streamDir = tempDir("asof_stream")
     val raw = spark.read.schema(Streaming.eventsRawSchema).parquet(s"$dir/events.parquet")
     // two files -> two micro-batches
     raw.filter(pmod(col("event_id"), lit(2)) === 0).write.parquet(streamDir.resolve("b1").toString)
@@ -55,7 +55,7 @@ class StreamingSpec extends SparkSuite {
     val dim = graft.Tables.events(spark, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts"), col("value").as("last_purchase"))
-    val outDir = java.nio.file.Files.createTempDirectory("asof_out").toString + "/enriched"
+    val outDir = tempDir("asof_out").toString + "/enriched"
     Streaming.runAsofEnrichStream(spark, s"$streamDir/*", dim, outDir)
     val streamed = spark.read.parquet(outDir)
       .collect().map(_.toString).sorted.toSeq
@@ -68,7 +68,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("sliding-window stream equals the batch sliding aggregation") {
-    val streamDir = java.nio.file.Files.createTempDirectory("events_sliding_stream")
+    val streamDir = tempDir("events_sliding_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       streamDir.resolve("events.parquet"))
@@ -81,7 +81,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("stream-stream join equals the batch join") {
-    val streamDir = java.nio.file.Files.createTempDirectory("events_join_stream")
+    val streamDir = tempDir("events_join_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       streamDir.resolve("events.parquet"))
@@ -95,7 +95,7 @@ class StreamingSpec extends SparkSuite {
 
   test("stream-stream LEFT OUTER join + heartbeat flush equals the batch left join") {
     import spark.implicits._
-    val streamDir = java.nio.file.Files.createTempDirectory("events_leftjoin_stream")
+    val streamDir = tempDir("events_leftjoin_stream")
     val raw = spark.read.schema(Streaming.eventsRawSchema).parquet(s"$dir/events.parquet")
     raw.write.parquet(streamDir.resolve("b1").toString)
     // heartbeats 2h past the end of the feed, one per join side on
@@ -129,7 +129,7 @@ class StreamingSpec extends SparkSuite {
 
   test("transformWithState milestones across time-split batches equal the batch window form") {
     import spark.implicits._
-    val streamDir = java.nio.file.Files.createTempDirectory("events_milestone_stream")
+    val streamDir = tempDir("events_milestone_stream")
     val raw = spark.read.schema(Streaming.eventsRawSchema).parquet(s"$dir/events.parquet")
     // split the feed by TIME into two files: batch 2 must pick up each
     // user's running total from batch 1's state, not restart it
@@ -155,7 +155,7 @@ class StreamingSpec extends SparkSuite {
 
   test("event-time timers: internal gaps match batch, every user gets one trailing silence") {
     import spark.implicits._
-    val streamDir = java.nio.file.Files.createTempDirectory("events_inact_stream")
+    val streamDir = tempDir("events_inact_stream")
     val raw = spark.read.schema(Streaming.eventsRawSchema).parquet(s"$dir/events.parquet")
     val midTs = raw.stat.approxQuantile("ts", Array(0.5), 0.0)(0).toLong
     raw.filter(col("ts") <= midTs).coalesce(1)
@@ -190,7 +190,7 @@ class StreamingSpec extends SparkSuite {
 
   test("ListState burst detection across time-split batches equals the batch RANGE frame") {
     import spark.implicits._
-    val streamDir = java.nio.file.Files.createTempDirectory("events_burst_stream")
+    val streamDir = tempDir("events_burst_stream")
     val raw = spark.read.schema(Streaming.eventsRawSchema).parquet(s"$dir/events.parquet")
     val midTs = raw.stat.approxQuantile("ts", Array(0.5), 0.0)(0).toLong
     raw.filter(col("ts") <= midTs).coalesce(1)
@@ -220,7 +220,7 @@ class StreamingSpec extends SparkSuite {
       (4L, t0 + h / 6, 99L, "error", 0.0, "{}"), // +10 min: window now holds 4
       (5L, t0 + 3 * h, 99L, "error", 0.0, "{}")) // beyond the window: alone, no burst
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val streamDir = java.nio.file.Files.createTempDirectory("events_burst_ties")
+    val streamDir = tempDir("events_burst_ties")
     raw.coalesce(1).write.parquet(streamDir.resolve("b1").toString)
 
     Streaming.runBurstStream(spark, s"$streamDir/*", "burst_ties_out")
@@ -237,7 +237,7 @@ class StreamingSpec extends SparkSuite {
 
   test("watermark dedup in front of the stateful processor survives redelivery") {
     import spark.implicits._
-    val streamDir = java.nio.file.Files.createTempDirectory("events_redeliver_state")
+    val streamDir = tempDir("events_redeliver_state")
     val raw = spark.read.schema(Streaming.eventsRawSchema).parquet(s"$dir/events.parquet")
     val midTs = raw.stat.approxQuantile("ts", Array(0.5), 0.0)(0).toLong
     raw.filter(col("ts") <= midTs).coalesce(1)
@@ -259,7 +259,7 @@ class StreamingSpec extends SparkSuite {
 
   test("MapState first-touch across time-split batches equals the batch arg-min") {
     import spark.implicits._
-    val streamDir = java.nio.file.Files.createTempDirectory("events_ft_stream")
+    val streamDir = tempDir("events_ft_stream")
     val raw = spark.read.schema(Streaming.eventsRawSchema).parquet(s"$dir/events.parquet")
     val midTs = raw.stat.approxQuantile("ts", Array(0.5), 0.0)(0).toLong
     raw.filter(col("ts") <= midTs).coalesce(1)
@@ -278,13 +278,13 @@ class StreamingSpec extends SparkSuite {
 
   test("stateful stream restarts from its checkpoint: resumed state, no reprocessing") {
     import spark.implicits._
-    val streamDir = java.nio.file.Files.createTempDirectory("events_ckpt_stream")
-    val ckpt = java.nio.file.Files.createTempDirectory("events_ckpt_loc").toString
+    val streamDir = tempDir("events_ckpt_stream")
+    val ckpt = tempDir("events_ckpt_loc").toString
     val raw = spark.read.schema(Streaming.eventsRawSchema).parquet(s"$dir/events.parquet")
     val midTs = raw.stat.approxQuantile("ts", Array(0.5), 0.0)(0).toLong
     raw.filter(col("ts") <= midTs).coalesce(1)
       .write.parquet(streamDir.resolve("b1").toString)
-    val outPath = java.nio.file.Files.createTempDirectory("events_ckpt_out").toString
+    val outPath = tempDir("events_ckpt_out").toString
     // run 1: first half only, then the query STOPS (AvailableNow drains)
     Streaming.runMilestoneStreamToFiles(spark, s"$streamDir/*", outPath, ckpt)
     val out1 = spark.read.parquet(outPath).collect().map(_.toString)
@@ -306,7 +306,7 @@ class StreamingSpec extends SparkSuite {
 
   test("built-in session_window stream equals the batch run and the custom sessionizer") {
     import spark.implicits._
-    val streamDir = java.nio.file.Files.createTempDirectory("events_sesswin_stream")
+    val streamDir = tempDir("events_sesswin_stream")
     val raw = spark.read.schema(Streaming.eventsRawSchema).parquet(s"$dir/events.parquet")
     raw.write.parquet(streamDir.resolve("b1").toString)
     // heartbeat on a sentinel user 2h past the end closes every real
@@ -329,7 +329,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("stream-static broadcast enrichment equals the batch rollup") {
-    val streamDir = java.nio.file.Files.createTempDirectory("events_enrich_stream")
+    val streamDir = tempDir("events_enrich_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       streamDir.resolve("events.parquet"))
@@ -362,7 +362,7 @@ class StreamingSpec extends SparkSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
-    val stageDir = java.nio.file.Files.createTempDirectory("docs_stream")
+    val stageDir = tempDir("docs_stream")
     // two files -> two micro-batches, duplicates within and across
     Seq((1L, "h1"), (2L, "h2"), (3L, "h1")).toDF("doc_id", "content_hash")
       .coalesce(1).write.parquet(stageDir.resolve("b1").toString)
@@ -392,7 +392,7 @@ class StreamingSpec extends SparkSuite {
 
   test("streaming CDC apply merges micro-batches into only the touched partitions") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("cdc")
+    val root = tempDir("cdc")
     val tablePath = root.resolve("table").toString
     val changesDir = root.resolve("changes")
     java.nio.file.Files.createDirectory(changesDir)
@@ -436,7 +436,7 @@ class StreamingSpec extends SparkSuite {
   test("streaming HLL distinct-user windows equal the batch sketch exactly") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val streamDir = java.nio.file.Files.createTempDirectory("events_distinct_stream")
+    val streamDir = tempDir("events_distinct_stream")
     val raw = spark.read.schema(Streaming.eventsRawSchema).parquet(s"$dir/events.parquet")
     val midTs = raw.stat.approxQuantile("ts", Array(0.5), 0.0)(0).toLong
     raw.filter(col("ts") <= midTs).coalesce(1)
@@ -475,7 +475,7 @@ class StreamingSpec extends SparkSuite {
   test("streaming value histograms equal the batch sketch; medians follow") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val streamDir = java.nio.file.Files.createTempDirectory("events_hist_stream")
+    val streamDir = tempDir("events_hist_stream")
     val raw = spark.read.schema(Streaming.eventsRawSchema).parquet(s"$dir/events.parquet")
     val midTs = raw.stat.approxQuantile("ts", Array(0.5), 0.0)(0).toLong
     raw.filter(col("ts") <= midTs).coalesce(1)
@@ -517,7 +517,7 @@ class StreamingSpec extends SparkSuite {
 
   test("streaming Misra-Gries summary confirms to the same heavy hitters as batch") {
     import graft.functions.TextFns
-    val streamDir = java.nio.file.Files.createTempDirectory("docs_mg_stream")
+    val streamDir = tempDir("docs_mg_stream")
     val docs = Tables.documents(spark, dir)
     // three arrival batches split by doc_id — batch boundaries are the
     // thing the merge path must be invariant to
@@ -556,14 +556,14 @@ class StreamingSpec extends SparkSuite {
 
   test("streaming quarantine: union over micro-batches equals the batch decontamination") {
     val docs = Tables.documents(spark, dir)
-    val inDir = java.nio.file.Files.createTempDirectory("docs_qstream").toString
+    val inDir = tempDir("docs_qstream").toString
     Seq(0L -> 125L, 125L -> 250L, 250L -> 375L, 375L -> 10000L).foreach {
       case (lo, hi) =>
         docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
           .coalesce(1).write.mode("append").parquet(inDir)
     }
-    val outDir = java.nio.file.Files.createTempDirectory("quar_out").toString + "/q"
-    val ckpt = java.nio.file.Files.createTempDirectory("quar_ckpt").toString
+    val outDir = tempDir("quar_out").toString + "/q"
+    val ckpt = tempDir("quar_ckpt").toString
 
     Streaming.runQuarantineStream(spark, s"$inDir/*.parquet", dir, outDir, ckpt)
 
@@ -583,7 +583,7 @@ class StreamingSpec extends SparkSuite {
     import graft.functions.HllSketch
     val docs = Tables.documents(spark, dir)
     val slices = Seq(0L -> 125L, 125L -> 250L, 250L -> 375L, 375L -> 10000L)
-    val inDir = java.nio.file.Files.createTempDirectory("docs_nvstream").toString
+    val inDir = tempDir("docs_nvstream").toString
     slices.foreach { case (lo, hi) =>
       docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
         .coalesce(1).write.mode("append").parquet(inDir)
@@ -597,8 +597,8 @@ class StreamingSpec extends SparkSuite {
       .zipWithIndex.foreach { case (f, i) =>
         f.setLastModified((i + 1) * 60000L)
       }
-    val regsPath = java.nio.file.Files.createTempDirectory("nv_regs").toString
-    val outDir = java.nio.file.Files.createTempDirectory("nv_out").toString + "/rows"
+    val regsPath = tempDir("nv_regs").toString
+    val outDir = tempDir("nv_out").toString + "/rows"
 
     Streaming.runNoveltyStream(spark, s"$inDir/*.parquet", regsPath, outDir)
 
@@ -652,7 +652,7 @@ class StreamingSpec extends SparkSuite {
   test("streaming mix monitor: per-batch rows equal batch prefix mixes; replay is a no-op") {
     val docs = Tables.documents(spark, dir)
     val slices = Seq(0L -> 125L, 125L -> 250L, 250L -> 375L, 375L -> 10000L)
-    val inDir = java.nio.file.Files.createTempDirectory("docs_mixstream").toString
+    val inDir = tempDir("docs_mixstream").toString
     slices.foreach { case (lo, hi) =>
       docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
         .coalesce(1).write.mode("append").parquet(inDir)
@@ -660,8 +660,8 @@ class StreamingSpec extends SparkSuite {
     new java.io.File(inDir).listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.lastModified())
       .zipWithIndex.foreach { case (f, i) => f.setLastModified((i + 1) * 60000L) }
-    val statePath = java.nio.file.Files.createTempDirectory("mix_state").toString
-    val outDir = java.nio.file.Files.createTempDirectory("mix_out").toString + "/rows"
+    val statePath = tempDir("mix_state").toString
+    val outDir = tempDir("mix_out").toString + "/rows"
 
     Streaming.runMixStream(spark, s"$inDir/*.parquet", dir, statePath, outDir)
 
@@ -737,7 +737,7 @@ class StreamingSpec extends SparkSuite {
     // after batch k the stream's cumulative funnel must equal the batch
     // monitor's bucket-k row set exactly
     val bucketed = graft.ext.Text.docBuckets(docs).localCheckpoint()
-    val inDir = java.nio.file.Files.createTempDirectory("docs_cbstream").toString
+    val inDir = tempDir("docs_cbstream").toString
     (0 until 10).foreach { k =>
       bucketed.filter(col("bucket") === k).drop("bucket")
         .coalesce(1).write.mode("append").parquet(inDir)
@@ -747,10 +747,10 @@ class StreamingSpec extends SparkSuite {
     val files = new java.io.File(inDir).listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.lastModified())
     files.zipWithIndex.foreach { case (f, i) => f.setLastModified((i + 1) * 60000L) }
-    val idx = java.nio.file.Files.createTempDirectory("cb_stream_idx").toString
+    val idx = tempDir("cb_stream_idx").toString
     graft.ext.Dedup.indexInit(docs.limit(0), idx)
-    val statePath = java.nio.file.Files.createTempDirectory("cb_state").toString
-    val outDir = java.nio.file.Files.createTempDirectory("cb_out").toString + "/rows"
+    val statePath = tempDir("cb_state").toString
+    val outDir = tempDir("cb_out").toString + "/rows"
 
     Streaming.runCorpusBuildStream(spark, s"$inDir/*.parquet", dir, idx, statePath, outDir)
 
@@ -796,7 +796,7 @@ class StreamingSpec extends SparkSuite {
     val bucketed = emb.crossJoin(broadcast(mm))
       .withColumn("bucket", expr("(vec_id - lo) * 10 div (hi - lo + 1)").cast("int"))
       .localCheckpoint()
-    val inDir = java.nio.file.Files.createTempDirectory("emb_driftstream").toString
+    val inDir = tempDir("emb_driftstream").toString
     (0 until 10).foreach { k =>
       bucketed.filter(col("bucket") === k).select("vec_id", "embedding", "label")
         .coalesce(1).write.mode("append").parquet(inDir)
@@ -804,8 +804,8 @@ class StreamingSpec extends SparkSuite {
     val files = new java.io.File(inDir).listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.lastModified())
     files.zipWithIndex.foreach { case (f, i) => f.setLastModified((i + 1) * 60000L) }
-    val statePath = java.nio.file.Files.createTempDirectory("drift_state").toString
-    val outDir = java.nio.file.Files.createTempDirectory("drift_out").toString + "/rows"
+    val statePath = tempDir("drift_state").toString
+    val outDir = tempDir("drift_out").toString + "/rows"
 
     Streaming.runIvfDriftStream(spark, s"$inDir/*.parquet", dir, statePath, outDir)
 
@@ -837,16 +837,16 @@ class StreamingSpec extends SparkSuite {
     import graft.ext.Dedup
     val docs = Tables.documents(spark, dir)
     // four arrival files (one micro-batch each under maxFilesPerTrigger=1)
-    val inDir = java.nio.file.Files.createTempDirectory("docs_stream").toString
+    val inDir = tempDir("docs_stream").toString
     Seq(0L -> 125L, 125L -> 250L, 250L -> 375L, 375L -> 10000L).foreach {
       case (lo, hi) =>
         docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
           .coalesce(1).write.mode("append").parquet(inDir)
     }
     // empty persistent index: the stream builds it up batch by batch
-    val idx = java.nio.file.Files.createTempDirectory("stream_minhash_idx").toString
+    val idx = tempDir("stream_minhash_idx").toString
     Dedup.indexInit(docs.limit(0), idx)
-    val outDir = java.nio.file.Files.createTempDirectory("neardup_out").toString + "/pairs"
+    val outDir = tempDir("neardup_out").toString + "/pairs"
 
     Streaming.runNearDupStream(spark, s"$inDir/*.parquet", idx, outDir)
 
@@ -875,8 +875,8 @@ class StreamingSpec extends SparkSuite {
     // ingest replay: decile batches through the incremental index, the
     // pair ARTIFACT maintained by appending each batch's probe delta —
     // exactly the state a production ingest pipeline carries
-    val idx = java.nio.file.Files.createTempDirectory("reconcile_idx").toString
-    val art = java.nio.file.Files.createTempDirectory("reconcile_art")
+    val idx = tempDir("reconcile_idx").toString
+    val art = tempDir("reconcile_art")
       .resolve("pairs").toString
     Dedup.indexInit(docs.limit(0), idx)
     Dedup.pairsArtifactInit(docs.limit(0), art)
@@ -921,7 +921,7 @@ class StreamingSpec extends SparkSuite {
     import spark.implicits._
     val docs = Tables.documents(spark, dir).localCheckpoint()
     // live state as the ingest pipeline maintains it
-    val root = java.nio.file.Files.createTempDirectory("delapply")
+    val root = tempDir("delapply")
     val idx = root.resolve("index").toString
     val pairs = root.resolve("pairs").toString
     val hashes = root.resolve("hashes").toString
@@ -949,17 +949,17 @@ class StreamingSpec extends SparkSuite {
     }.min
     val ids = (srcIds :+ canonical).sorted
     val (h1, h2) = ids.splitAt(ids.length / 2)
-    val inDir = java.nio.file.Files.createTempDirectory("del_feed").toString
+    val inDir = tempDir("del_feed").toString
     h1.toSeq.toDF("doc_id").coalesce(1).write.mode("append").parquet(inDir)
     h2.toSeq.toDF("doc_id").coalesce(1).write.mode("append").parquet(inDir)
     val delIds = ids.toSeq.toDF("doc_id")
-    val outDir = java.nio.file.Files.createTempDirectory("del_out").toString + "/delta"
-    val ckpt = java.nio.file.Files.createTempDirectory("del_ckpt").toString
+    val outDir = tempDir("del_out").toString + "/delta"
+    val ckpt = tempDir("del_ckpt").toString
     Streaming.runDeleteApply(spark, s"$inDir/*.parquet", idx, pairs,
       Some(hashes), outDir, ckpt, Some(manifest))
     // from-scratch rebuild on the survivors
     val survivors = docs.join(delIds, Seq("doc_id"), "left_anti").localCheckpoint()
-    val r2 = java.nio.file.Files.createTempDirectory("delapply_rebuild")
+    val r2 = tempDir("delapply_rebuild")
     val idx2 = r2.resolve("index").toString
     val pairs2 = r2.resolve("pairs").toString
     Dedup.indexInit(survivors, idx2)
@@ -1004,7 +1004,7 @@ class StreamingSpec extends SparkSuite {
     import graft.ops.StoreIO
     import spark.implicits._
     val docs = Tables.documents(spark, dir).localCheckpoint()
-    val root = java.nio.file.Files.createTempDirectory("tomb_stream")
+    val root = tempDir("tomb_stream")
     val idx = root.resolve("index").toString
     val pairs = root.resolve("pairs").toString
     val hashes = root.resolve("hashes").toString
@@ -1021,10 +1021,10 @@ class StreamingSpec extends SparkSuite {
       .collect().map(_.getLong(0)).sorted
     assert(ids.nonEmpty)
     val (h1, h2) = ids.splitAt(ids.length / 2)
-    val inDir = java.nio.file.Files.createTempDirectory("tomb_feed").toString
+    val inDir = tempDir("tomb_feed").toString
     h1.toSeq.toDF("doc_id").coalesce(1).write.mode("append").parquet(inDir)
     h2.toSeq.toDF("doc_id").coalesce(1).write.mode("append").parquet(inDir)
-    val ckpt = java.nio.file.Files.createTempDirectory("tomb_ckpt").toString
+    val ckpt = tempDir("tomb_ckpt").toString
     Streaming.runTombstoneStream(spark, s"$inDir/*.parquet", tombs, ckpt)
     // every fed id is a live tombstone, exactly once
     val tset = Dedup.tombstonesRead(spark, tombs).collect()
@@ -1045,7 +1045,7 @@ class StreamingSpec extends SparkSuite {
         col("doc_id"))))
     // a REPLAYED feed (fresh checkpoint, same files) re-appends under
     // the same batch tokens: tombstone state unchanged
-    val ckpt2 = java.nio.file.Files.createTempDirectory("tomb_ckpt2").toString
+    val ckpt2 = tempDir("tomb_ckpt2").toString
     Streaming.runTombstoneStream(spark, s"$inDir/*.parquet", tombs, ckpt2)
     assert(Dedup.tombstonesRead(spark, tombs).collect()
       .map(_.getLong(0)).sorted.toSeq === ids.toSeq)
@@ -1066,7 +1066,7 @@ class StreamingSpec extends SparkSuite {
     import spark.implicits._
     val docs = Tables.documents(spark, dir).localCheckpoint()
     def stage(): (String, String, String, String) = {
-      val root = java.nio.file.Files.createTempDirectory("race")
+      val root = tempDir("race")
       val idx = root.resolve("index").toString
       val pairs = root.resolve("pairs").toString
       val hashes = root.resolve("hashes").toString

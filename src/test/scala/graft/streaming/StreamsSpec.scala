@@ -16,7 +16,7 @@ class StreamsSpec extends SparkSuite {
 
   private val made = scala.collection.mutable.Buffer.empty[java.nio.file.Path]
   private def tmp(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
+    val d = tempDir(prefix)
     made += d
     d.toString
   }
