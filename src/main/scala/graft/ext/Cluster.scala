@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,6 +10,23 @@ import org.apache.spark.sql.functions._
   * document (the minimum id) survives per cluster. Pair emission alone
   * over-deletes (a~b, b~c without a~c must still collapse to ONE
   * survivor, not two).
+  *
+  * One graph layer serves every entry here:
+  *   - [[symmetric]] is the one undirected edge frame: both orientations
+  *     of each edge from ONE scan of the input (an explode, not a union
+  *     that reads it twice), deduplicated and materialized once.
+  *     Components, PageRank and coreness all start from it;
+  *     [[triangleStats]] alone keeps duplicate edges (its counts are
+  *     defined over the input multiset).
+  *   - [[converge]] is the one fixpoint loop: each round is ONE
+  *     checkpoint job, and the round's changed count rides along in
+  *     that job through `Dataset.observe` — no separate count job.
+  *   - [[clusters]] is the one pair-graph entry: (`doc_id`,
+  *     `cluster_id`) from a (`doc_a`, `doc_b`) pair table, and
+  *     [[nonCanonical]] is the one "dropped members" rule.
+  *   - [[closures]] closes a takedown's before and after pair tables
+  *     concurrently; the re-election delta and the delete-impact report
+  *     both read it.
   *
   * Components are computed by hash-min label propagation: every node
   * starts labeled with the min of itself and its neighbors, and each
@@ -24,50 +41,92 @@ import org.apache.spark.sql.functions._
   */
 object Cluster {
 
+  /** The undirected edge set of an edge list (`u`, `v`): every edge in
+    * both orientations, distinct, materialized once. The input is read
+    * by one scan — when it is the verified near-dup pairs, a second read
+    * would replay their whole pipeline.
+    */
+  def symmetric(edges: DataFrame): DataFrame =
+    edges
+      .select(explode(array(struct(col("u"), col("v")),
+        struct(col("v").as("u"), col("u").as("v")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
+      .distinct()
+      .localCheckpoint()
+
+  /** Iterates `step` from `init` until a round changes nothing or
+    * `maxIter` steps ran (a round advances `per` steps). `step` returns
+    * the next state plus a boolean `changed` column; the changed rows
+    * are counted through `Dataset.observe` inside the round's own
+    * checkpoint job, so convergence costs no job of its own.
+    */
+  private def converge(init: DataFrame, maxIter: Int, per: Int)(
+      step: DataFrame => DataFrame): DataFrame = {
+    var state = init
+    var changed = 1L
+    var iter = 0
+    while (changed > 0 && iter < maxIter) {
+      val obs = Observation()
+      state = step(state).observe(obs, count_if(col("changed")).as("n"))
+        .drop("changed").localCheckpoint()
+      changed = obs.get("n").asInstanceOf[Long]
+      iter += per
+    }
+    state
+  }
+
   /** Connected components of an undirected edge list (`u`, `v` columns).
     * Returns (`id`, `label`) where `label` is the smallest node id
     * reachable from `id`. Only nodes with at least one edge appear
     * (isolated docs are not in any duplicate cluster).
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    // checkpoint BEFORE symmetrizing (the pageRank lesson): the union
-    // references the edge pipeline twice, and when the edges are the
-    // verified near-dup pairs that re-execution doubles the whole
-    // MinHash pipeline — measured 2x the x100 rehearsal cost of
-    // split_cluster_safe before this fix
-    val e = edges.select(col("u"), col("v")).localCheckpoint()
-    val sym = e
-      .unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint()
-
-    var labels = sym.groupBy(col("u").as("id"))
+    val sym = symmetric(edges)
+    // the first labels are not materialized on their own: round 1
+    // reads them straight from the checkpointed edge frame
+    val init = sym.groupBy(col("u").as("id"))
       .agg(min(col("v")).as("nbr_min"))
       .select(col("id"), least(col("id"), col("nbr_min")).as("label"))
-      .localCheckpoint()
-
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
+    converge(init, maxIter, 1) { labels =>
       // min over neighbors' labels; every node has >=1 neighbor, so the
       // inner joins lose nothing
       val nbrMin = sym
         .join(labels.select(col("id").as("v"), col("label")), "v")
         .groupBy(col("u").as("id"))
         .agg(min(col("label")).as("nbr_min"))
-      // carry the previous label through the same join so convergence
-      // detection is a filter over the (already materialized) checkpoint
-      // instead of a second join+shuffle job per round
-      val next = labels
-        .join(nbrMin, "id")
-        .select(col("id"), col("label").as("prev"),
-          least(col("label"), col("nbr_min")).as("label"))
-        .localCheckpoint()
-      changed = next.filter(col("label") < col("prev")).count()
-      labels = next.select(col("id"), col("label"))
-      iter += 1
+      labels.join(nbrMin, "id")
+        .select(col("id"), least(col("label"), col("nbr_min")).as("label"),
+          (col("nbr_min") < col("label")).as("changed"))
     }
-    labels
+  }
+
+  private def pairEdges(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
+
+  /** The duplicate clusters of a pair table (`doc_a`, `doc_b`): one row
+    * (`doc_id`, `cluster_id`) per paired document, `cluster_id` its
+    * component's minimum member.
+    */
+  def clusters(pairs: DataFrame): DataFrame =
+    connectedComponents(pairEdges(pairs))
+      .select(col("id").as("doc_id"), col("label").as("cluster_id"))
+
+  /** The members a batch rebuild drops: every clustered document that is
+    * not its cluster's canonical (minimum) member.
+    */
+  def nonCanonical(clusters: DataFrame): DataFrame =
+    clusters.filter(col("doc_id") =!= col("cluster_id"))
+
+  /** The closures of one takedown: [[clusters]] over the pair table
+    * before the delete and over the surviving pairs after it. The two
+    * are independent iterative jobs over checkpointed pair tables, so
+    * they run concurrently.
+    */
+  def closures(before: DataFrame, after: DataFrame): (DataFrame, DataFrame) = {
+    val Seq(lb, la) = graft.ops.Par.all(Seq(
+      () => graft.ops.Timing.step("cc:before")(clusters(before)),
+      () => graft.ops.Timing.step("cc:after")(clusters(after))))
+    (lb, la)
   }
 
   /** Driver-contract query: duplicate clusters over the MinHash near-dup
@@ -77,11 +136,8 @@ object Cluster {
     * closure over the exact all-pairs jaccard truth.
     */
   def dedupCluster(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.verifiedPairs(spark, dir)
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
     val w = Window.partitionBy(col("cluster_id"))
-    connectedComponents(pairs)
-      .select(col("id").as("doc_id"), col("label").as("cluster_id"))
+    clusters(Dedup.verifiedPairs(spark, dir))
       .withColumn("cluster_size", count(lit(1)).over(w).cast("int"))
       .withColumn("is_canonical", col("doc_id") === col("cluster_id"))
       .orderBy("cluster_id", "doc_id")
@@ -96,11 +152,8 @@ object Cluster {
     * the correct shuffle-on-id anti join.
     */
   def dedupSurvivors(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.verifiedPairs(spark, dir)
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-    val dropped = connectedComponents(pairs)
-      .filter(col("id") =!= col("label"))
-      .select(col("id").as("doc_id"))
+    val dropped = nonCanonical(clusters(Dedup.verifiedPairs(spark, dir)))
+      .select(col("doc_id"))
     graft.Tables.documents(spark, dir)
       .join(dropped, Seq("doc_id"), "left_anti")
       .select("doc_id", "lang", "n_chars")
@@ -127,14 +180,7 @@ object Cluster {
     */
   def pageRank(edges: DataFrame, iterations: Int = 3): DataFrame = {
     val d12 = org.apache.spark.sql.types.DataTypes.createDecimalType(18, 12)
-    // checkpoint BEFORE symmetrizing: the union references the edge
-    // pipeline twice, and when that pipeline is itself expensive (the
-    // verified near-dup pairs) re-execution doubles its cost
-    val e = edges.select(col("u"), col("v")).localCheckpoint()
-    val sym = e
-      .unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint()
+    val sym = symmetric(edges)
     val deg = sym.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
     // bounded driver scalar (one long), like the ntile partition counts
@@ -157,8 +203,7 @@ object Cluster {
   }
 
   def qPageRank(spark: SparkSession, dir: String): DataFrame =
-    pageRank(Dedup.verifiedPairs(spark, dir)
-      .select(col("doc_a").as("u"), col("doc_b").as("v")))
+    pageRank(pairEdges(Dedup.verifiedPairs(spark, dir)))
 
   /** Cluster-safe train/val/test split — the constructive counterpart to
     * the `q_split_leakage` AUDIT: instead of measuring how many near-dup
@@ -174,19 +219,14 @@ object Cluster {
     * corpora and degrades to a shuffle-on-id join on heavily duplicated
     * ones; the split itself is a pure map over the group key.
     */
-  def splitClusterSafe(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.verifiedPairs(spark, dir)
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-    val labels = connectedComponents(pairs)
-      .select(col("id").as("doc_id"), col("label").as("cluster_id"))
+  def splitClusterSafe(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.documents(spark, dir)
       .select(col("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
+      .join(clusters(Dedup.verifiedPairs(spark, dir)), Seq("doc_id"), "left")
       .withColumn("group_id", coalesce(col("cluster_id"), col("doc_id")))
       .withColumn("split", Curation.splitAssign(col("group_id")))
       .select("doc_id", "group_id", "split")
       .orderBy("doc_id")
-  }
 
   /** Per-node triangle census over an undirected edge list (one row per
     * edge, u < v): degree and the number of triangles each node closes —
@@ -238,9 +278,7 @@ object Cluster {
     // orientation, both wedge legs, the closing join), and without the
     // checkpoint each reference replays the whole MinHash candidate
     // pipeline (measured: 41 Generate nodes in the final plan)
-    triangleStats(Dedup.verifiedPairs(spark, dir)
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .localCheckpoint())
+    triangleStats(pairEdges(Dedup.verifiedPairs(spark, dir)).localCheckpoint())
 
   /** Per-node CORENESS (the largest k such that the node survives in the
     * k-core) via iterative h-index refinement (Montresor et al., the
@@ -260,57 +298,59 @@ object Cluster {
     * cycle and a tree have identical degree profiles but coreness 2 vs 1.
     */
   def coreness(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val sym = edges.select(col("u"), col("v"))
-      .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint()
+    val sym = symmetric(edges)
     // h-index of a desc-sorted array: values non-increasing and ranks
     // increasing, so "value >= rank" holds on a prefix — its size is h
-    def hIndex(arr: org.apache.spark.sql.Column) =
+    def hIndex(arr: Column) =
       size(filter(
         zip_with(sort_array(arr, asc = false),
           sequence(lit(1L), size(arr).cast("long")), (x, i) => x >= i),
         b => b))
-    var est = sym.groupBy(col("u").as("id"))
-      .agg(count(lit(1)).cast("long").as("c"))
-      .localCheckpoint()
-    def refine(cur: org.apache.spark.sql.DataFrame) = sym
+    def refine(cur: DataFrame) = sym
       .join(cur.select(col("id").as("v"), col("c")), "v")
       .groupBy(col("u").as("id"))
       .agg(collect_list(col("c")).as("nbr"))
       .join(cur, "id")
-      .select(col("id"), col("c").as("prev"),
-        least(col("c"), hIndex(col("nbr")).cast("long")).as("c"))
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      // TWO refinement steps per materialization/convergence check: the
-      // fixpoint is reached identically (estimates only decrease, an
-      // extra step past convergence is a no-op), and each checkpoint +
-      // count is a fixed per-round job cost that dominates wall time on
-      // small diameters — halving the rounds halves it.
-      val next = refine(refine(est).select(col("id"), col("c")))
-        .localCheckpoint()
-      changed = next.filter(col("c") < col("prev")).count()
-      est = next.select(col("id"), col("c"))
-      iter += 2
-    }
-    est.select(col("id"), col("c").as("coreness"))
+      .withColumn("h", hIndex(col("nbr")).cast("long"))
+      .select(col("id"), col("deg"), least(col("c"), col("h")).as("c"),
+        (col("h") < col("c")).as("changed"))
+    val init = sym.groupBy(col("u").as("id"))
+      .agg(count(lit(1)).cast("long").as("deg"))
+      .select(col("id"), col("deg"), col("deg").as("c"))
+    // TWO refinement steps per materialization/convergence check: the
+    // fixpoint is reached identically (estimates only decrease, an
+    // extra step past convergence is a no-op), and each checkpoint is a
+    // fixed per-round job cost that dominates wall time on small
+    // diameters — halving the rounds halves it.
+    converge(init, maxIter, 2)(est => refine(refine(est)))
+      .select(col("id"), col("c").as("coreness"), col("deg"))
   }
 
-  def qKcore(spark: SparkSession, dir: String): DataFrame = {
-    // one materialization of the bounded pair table serves both the
-    // degree view and the coreness iteration's symmetric edge set
-    val edges = Dedup.verifiedPairs(spark, dir)
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .localCheckpoint()
-    val deg = edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
-      .groupBy(col("u").as("doc_id")).agg(count(lit(1)).as("deg"))
-    coreness(edges)
-      .select(col("id").as("doc_id"), col("coreness"))
-      .join(deg, "doc_id")
-      .select(col("doc_id"), col("deg"), col("coreness"))
+  def qKcore(spark: SparkSession, dir: String): DataFrame =
+    coreness(pairEdges(Dedup.verifiedPairs(spark, dir)))
+      .select(col("id").as("doc_id"), col("deg"), col("coreness"))
       .orderBy("doc_id")
+
+  /** The two drop rules over one canonical pair table, shared by
+    * [[policyGapDf]] and [[reconcileDf]]: ingest-dropped (`doc_id`, the
+    * distinct later endpoints) and batch-dropped (`doc_id`,
+    * `cluster_id`, the [[nonCanonical]] members). The orientation is
+    * canonicalized HERE (least/greatest + distinct, the probeFrom rule):
+    * the later-endpoint rule and the ingest ⊆ CC theorem both require
+    * doc_a < doc_b, and while every internal producer complies, these
+    * are public df-level APIs — a reversed or symmetric pair frame would
+    * otherwise yield silently wrong gaps. The canonical table is
+    * pair-sized and checkpointed, so the ingest rule does not replay the
+    * pair pipeline the closure has already read.
+    */
+  private def dropRules(pairs: DataFrame): (DataFrame, DataFrame) = {
+    val p = pairs.select(
+        least(col("doc_a"), col("doc_b")).as("doc_a"),
+        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
+      .filter(col("doc_a") =!= col("doc_b"))
+      .distinct()
+      .localCheckpoint()
+    (p.select(col("doc_b").as("doc_id")).distinct(), nonCanonical(clusters(p)))
   }
 
   /** Near-dup POLICY-GAP report — the measured cost of the divergence
@@ -335,27 +375,9 @@ object Cluster {
     * shuffles when not ([[dedupSurvivors]]'s reasoning).
     */
   def policyGapDf(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    // pair-table-sized checkpoint: both drop rules read it, and without
-    // it the ingest leg re-executes the whole MinHash pipeline the CC
-    // leg already checkpoints (the connectedComponents lesson above).
-    // Canonicalize the orientation HERE (least/greatest + distinct, the
-    // probeFrom rule): the later-endpoint drop rule and the ingest ⊆ CC
-    // theorem both require doc_a < doc_b, and while every internal
-    // producer complies, this is a public df-level API — a reversed or
-    // symmetric pair frame would otherwise yield silently wrong gaps.
-    val p = pairs.select(
-        least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .distinct()
-      .localCheckpoint()
-    val ingestDropped = p.select(col("doc_b").as("doc_id")).distinct()
-      .withColumn("ing", lit(1))
-    val ccDropped = connectedComponents(
-        p.select(col("doc_a").as("u"), col("doc_b").as("v")))
-      .filter(col("id") =!= col("label"))
-      .select(col("id").as("doc_id"))
-      .withColumn("cc", lit(1))
+    val (ingest, batch) = dropRules(pairs)
+    val ingestDropped = ingest.withColumn("ing", lit(1))
+    val ccDropped = batch.select(col("doc_id")).withColumn("cc", lit(1))
     Text.docBuckets(docs).select(col("doc_id"), col("n_chars"), col("bucket"))
       .join(ingestDropped, Seq("doc_id"), "left")
       .join(ccDropped, Seq("doc_id"), "left")
@@ -394,20 +416,8 @@ object Cluster {
     * — AQE broadcasts the gap side when small and shuffles when not.
     */
   def reconcileDf(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    // same orientation canonicalization + checkpoint as [[policyGapDf]]
-    // — both drop rules must read one pair table with doc_a < doc_b
-    val p = pairs.select(
-        least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .distinct()
-      .localCheckpoint()
-    val ingestDropped = p.select(col("doc_b").as("doc_id")).distinct()
-    val gap = connectedComponents(
-        p.select(col("doc_a").as("u"), col("doc_b").as("v")))
-      .filter(col("id") =!= col("label"))
-      .select(col("id").as("doc_id"), col("label").as("cluster_id"))
-      .join(ingestDropped, Seq("doc_id"), "left_anti")
+    val (ingest, batch) = dropRules(pairs)
+    val gap = batch.join(ingest, Seq("doc_id"), "left_anti")
     gap.join(docs.select(col("doc_id"), col("n_chars")), Seq("doc_id"))
       .select(col("doc_id"), col("cluster_id"), col("n_chars"))
       .orderBy("doc_id")
@@ -420,7 +430,8 @@ object Cluster {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_reconcile" -> (qReconcile _),
     // the apply lives with the state it mutates (Dedup); registered
-    // here because its oracle composes this file's closure fragments
+    // here (and only here) because its oracle composes this file's
+    // closure fragments
     "q_delete_apply" -> (Dedup.qDeleteApply _),
     // the tombstone twin: same delete set, same delta, same oracle —
     // computed from merged-on-read views with NO store rewrite

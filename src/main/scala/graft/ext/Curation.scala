@@ -106,7 +106,7 @@ object Curation {
     *   0_raw            the training corpus (benchmark docs held out)
     *   1_exact_dedup    min-id representative per content hash
     *   2_near_dedup     minus non-canonical members of MinHash near-dup
-    *                    clusters ([[Cluster.connectedComponents]] over
+    *                    clusters ([[Cluster.clusters]] over
     *                    the verified jaccard >= 0.8 pairs)
     *   3_decontaminated minus documents sharing a word-5-gram with the
     *                    benchmark suite ([[Retrieval.quarantine]])
@@ -130,10 +130,8 @@ object Curation {
     val flagged = curateSignals(corpus)
       .select(col("doc_id"), col("n_chars"),
         (col("rn") === 1).as("e_ok"), curateGate.as("q_ok"))
-    val nearDropped = Cluster.connectedComponents(
-        Dedup.verifiedPairs(spark, dir).select(col("doc_a").as("u"), col("doc_b").as("v")))
-      .filter(col("id") =!= col("label"))
-      .select(col("id").as("doc_id"), lit(true).as("near_dup"))
+    val nearDropped = Cluster.nonCanonical(Cluster.clusters(Dedup.verifiedPairs(spark, dir)))
+      .select(col("doc_id"), lit(true).as("near_dup"))
     val contaminated = Retrieval.quarantine(docs, Retrieval.benchGramSet(docs))
       .select(col("doc_id"), lit(true).as("contam"))
     // both flag sets scale with dup/contamination density, not the
@@ -939,13 +937,13 @@ object Curation {
     * maintained store exists to amortize) and its deleted-row slice is
     * delete-sized, checkpointed before the two manifest metrics read
     * it; the pair table is computed once, checkpointed (pair-sized),
-    * and feeds all four graph metrics — the closure runs on pair-sized
-    * data twice (before/after), never on the corpus. Every output leg
-    * is a 1-row aggregate; the report is 8 rows.
+    * and feeds all four graph metrics through one takedown closure pair
+    * ([[Cluster.closures]]: before/after, run concurrently, never on the
+    * corpus). Every output leg is a 1-row aggregate; the report is 8 rows.
     */
   def deleteImpactDf(docs: DataFrame, manifest: DataFrame,
       deletedIds: DataFrame, pairs: DataFrame): DataFrame = {
-    val del = deletedIds.select(col("doc_id")).distinct().localCheckpoint()
+    val del = Dedup.deleteSet(deletedIds)
     def metric(artifact: String, name: String, v: DataFrame): DataFrame =
       v.select(lit(artifact).as("artifact"), lit(name).as("metric"),
         col(v.columns.head).cast("long").as("value"))
@@ -962,30 +960,23 @@ object Curation {
         col("seq_id") + col("n_seqs") - 1)).as("sq"))
       .agg(countDistinct(col("sq")).as("v"))
     val tokensDropped = man.agg(coalesce(sum(col("n_tok")), lit(0L)).as("v"))
-    // dup graph: the pair table computed once, read by all four metrics
+    // dup graph: the pair table computed once, closed before and after
+    // the delete (the surviving pairs are its served view), and every
+    // graph metric read from that closure pair
     val p = pairs.select(col("doc_a"), col("doc_b")).localCheckpoint()
-    val marked = p
-      .join(del.select(col("doc_id").as("doc_a")).withColumn("da", lit(1)),
-        Seq("doc_a"), "left")
-      .join(del.select(col("doc_id").as("doc_b")).withColumn("db", lit(1)),
-        Seq("doc_b"), "left")
-      .select(col("doc_a"), col("doc_b"),
-        (col("da").isNotNull || col("db").isNotNull).as("touched"))
-    val pairsRemoved = marked.filter(col("touched")).agg(count(lit(1)).as("v"))
-    val lb = Cluster.connectedComponents(
-      p.select(col("doc_a").as("u"), col("doc_b").as("v"))).localCheckpoint()
-    val componentsBefore = lb.agg(countDistinct(col("label")).as("v"))
-    val componentsAfter = Cluster.connectedComponents(
-        marked.filter(!col("touched"))
-          .select(col("doc_a").as("u"), col("doc_b").as("v")))
-      .agg(countDistinct(col("label")).as("v"))
+    val after = Dedup.pairsServed(p, del)
+    val (lb, la) = Cluster.closures(p, after)
+    // rows before minus rows after, as one signed count
+    val pairsRemoved = p.select(lit(1L).as("w"))
+      .unionByName(after.select(lit(-1L).as("w")))
+      .agg(coalesce(sum(col("w")), lit(0L)).as("v"))
+    val componentsBefore = lb.agg(countDistinct(col("cluster_id")).as("v"))
+    val componentsAfter = la.agg(countDistinct(col("cluster_id")).as("v"))
+    // a canonical is re-elected when it is deleted while a member survives
     val reelected = lb
-      .join(del.select(col("doc_id").as("label")).withColumn("cd", lit(1)),
-        Seq("label"), "left")
-      .join(del.select(col("doc_id").as("id")).withColumn("md", lit(1)),
-        Seq("id"), "left")
-      .filter(col("cd").isNotNull && col("md").isNull)
-      .agg(countDistinct(col("label")).as("v"))
+      .join(del.select(col("doc_id").as("cluster_id")), Seq("cluster_id"), "left_semi")
+      .join(del, Seq("doc_id"), "left_anti")
+      .agg(countDistinct(col("cluster_id")).as("v"))
     metric("documents", "chars_deleted", dStats.select(col("c")))
       .unionByName(metric("documents", "docs_deleted", dStats.select(col("n"))))
       .unionByName(metric("dup_graph", "canonicals_reelected", reelected))
@@ -997,9 +988,8 @@ object Curation {
       .orderBy("artifact", "metric")
   }
 
-  /** Driver entry: the registered delete set is one full source
-    * (`source = 'src7'`) — the realistic shape of a takedown (a
-    * provider, a domain, a license pool withdraws). The manifest leg
+  /** Driver entry: the registered delete set is the standing takedown
+    * ([[Dedup.standingTakedown]], one full source). The manifest leg
     * reads the MAINTAINED pack manifest ([[graft.ext.Packing.ensureManifest]],
     * the same staged artifact `q_manifest_audit`/`q_manifest_served`
     * read) — the report never repacks the corpus.
@@ -1008,7 +998,7 @@ object Curation {
     val docs = Tables.documents(spark, dir)
     deleteImpactDf(docs,
       graft.ops.Publish.readLive(spark, Packing.ensureManifest(spark, dir)),
-      docs.filter(col("source") === "src7").select("doc_id"),
+      Dedup.standingTakedown(docs),
       Dedup.verifiedPairs(spark, dir).select("doc_a", "doc_b"))
   }
 

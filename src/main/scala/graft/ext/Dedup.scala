@@ -1140,10 +1140,10 @@ object Dedup {
       hashesRoot.toSeq ++ manifestPath.toSeq
     graft.ops.Lease.withLeases(spark, leased) {
     import graft.ops.Timing.step
-    val del = step("da:del")(
-      deletedIds.select(col("doc_id")).distinct().localCheckpoint())
-    def survivors(df: DataFrame): DataFrame =
-      df.join(broadcast(del), Seq("doc_id"), "left_anti")
+    // the rewrite publishes exactly the merge-on-read views
+    // (docStoreServed, pairsServed) of the same delete set
+    val del = step("da:del")(deleteSet(deletedIds))
+    def survivors(df: DataFrame): DataFrame = docStoreServed(df, del)
     // pin every store's snapshot (live + the delta children present
     // NOW) before any store mutates: appends that arrive from here on
     // land in delta children these snapshots never listed, so every
@@ -1192,13 +1192,7 @@ object Dedup {
         Packing.repackManifest(survivors(snap.frame)).localCheckpoint())) ++
       hashSnap.map(snap => () => step("da:cHashes")(survivors(snap.frame)
         .select(col("h"), col("doc_id"), col("batch")).localCheckpoint())) :+
-      (() => step("da:after")(before
-        .join(broadcast(del.select(col("doc_id").as("doc_a"))),
-          Seq("doc_a"), "left_anti")
-        .join(broadcast(del.select(col("doc_id").as("doc_b"))),
-          Seq("doc_b"), "left_anti")
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        .localCheckpoint()))
+      (() => step("da:after")(pairsServed(before, del).localCheckpoint()))
     val frames = graft.ops.Par.all(thunks)
     val after = frames.last
     // the re-election delta reads only the checkpointed before/after
@@ -1237,18 +1231,10 @@ object Dedup {
     */
   private[graft] def reElectionDelta(before: DataFrame, after: DataFrame,
       del: DataFrame): DataFrame = {
-    def labels(pairs: DataFrame): DataFrame = Cluster.connectedComponents(
-      pairs.select(col("doc_a").as("u"), col("doc_b").as("v")))
-    // the before/after closures are independent iterative jobs over
-    // checkpointed pair tables — run them concurrently (guide §2.6)
-    val Seq(lb, la) = graft.ops.Par.all(Seq(
-      () => graft.ops.Timing.step("da:ccBefore")(labels(before)),
-      () => graft.ops.Timing.step("da:ccAfter")(labels(after))))
-    lb
-      .select(col("id").as("doc_id"), col("label").as("old_cluster_id"))
+    val (lb, la) = Cluster.closures(before, after)
+    lb.select(col("doc_id"), col("cluster_id").as("old_cluster_id"))
       .join(broadcast(del), Seq("doc_id"), "left_anti")
-      .join(la
-          .select(col("id").as("doc_id"), col("label").as("nl")),
+      .join(la.select(col("doc_id"), col("cluster_id").as("nl")),
         Seq("doc_id"), "left")
       .select(col("doc_id"), col("old_cluster_id"),
         coalesce(col("nl"), col("doc_id")).as("new_cluster_id"))
@@ -1294,9 +1280,8 @@ object Dedup {
     val docs = Tables.documents(spark, dir)
     graft.ops.Scratch.withFixtureCopy(spark,
         ensureDeleteFixture(spark, dir), "delete_apply") { root =>
-      deleteApply(docs.filter(col("source") === "src7").select("doc_id"),
-        s"$root/index", s"$root/pairs", Some(s"$root/hashes"),
-        Some(s"$root/manifest"))
+      deleteApply(standingTakedown(docs), s"$root/index", s"$root/pairs",
+        Some(s"$root/hashes"), Some(s"$root/manifest"))
     }
   }
 
@@ -1334,6 +1319,19 @@ object Dedup {
 
   private[graft] val TombstonesDdl = "doc_id BIGINT"
 
+  /** The standing takedown every delete-family entry applies: one full
+    * source (`source = 'src7'`) — the realistic shape of a takedown (a
+    * provider, a domain, a license pool withdraws).
+    */
+  def standingTakedown(docs: DataFrame): DataFrame =
+    docs.filter(col("source") === "src7").select(col("doc_id"))
+
+  /** A delete set normalised once: its distinct doc_ids, checkpointed
+    * (delete-sized) before the store scans that broadcast it.
+    */
+  def deleteSet(ids: DataFrame): DataFrame =
+    ids.select(col("doc_id")).distinct().localCheckpoint()
+
   /** Records a takedown as a tombstone append — O(delete set), no store
     * rewrite. `token` is the replay idempotence key (a redelivered
     * takedown batch overwrites its own delta child).
@@ -1369,7 +1367,7 @@ object Dedup {
         Seq("doc_a"), "left_anti")
       .join(broadcast(tombs.select(col("doc_id").as("doc_b"))),
         Seq("doc_b"), "left_anti")
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+      .select(pairs.columns.map(col).toIndexedSeq: _*)
 
   /** Folds the accumulated tombstones into the physical stores (ONE
     * [[deleteApply]] rewrite amortizing every takedown since the last
@@ -1389,7 +1387,7 @@ object Dedup {
     // the fold stays lock-free — the snapshot contract protects it
     graft.ops.Lease.withLeases(spark, Seq(tombsPath)) {
       val snap = StoreIO.snapshot(spark, tombsPath, Some(TombstonesDdl))
-      val ids = snap.frame.select(col("doc_id")).distinct().localCheckpoint()
+      val ids = deleteSet(snap.frame)
       // NOTHING PENDING → NOTHING REWRITTEN: a compaction cron firing
       // between takedowns must cost a tombstone-store listing, not a
       // corpus rewrite (deleteApply with an empty set would dutifully
@@ -1428,8 +1426,7 @@ object Dedup {
     graft.ops.Scratch.fixture("tombstones", dir) { fixtureDir =>
       val docs = Tables.documents(spark, dir)
       val p = fixtureDir.resolve("tombs").toString
-      tombstoneAppend(docs.filter(col("source") === "src7").select("doc_id"), p,
-        token = "src7")
+      tombstoneAppend(standingTakedown(docs), p, token = "src7")
       p
     }
 
@@ -1453,26 +1450,20 @@ object Dedup {
     */
   def qDeleteEconomics(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val del = docs.filter(col("source") === "src7").select(col("doc_id"))
-      .localCheckpoint()
+    val del = standingTakedown(docs).localCheckpoint()
     val pairs = verifiedPairs(spark, dir)
     val corpusLeg = docs.agg(count(lit(1)).as("n_corpus"))
     val delLeg = del.agg(count(lit(1)).as("n_deleted"))
-    val dropped = pairs
-      .join(broadcast(del.select(col("doc_id").as("doc_a"))), Seq("doc_a"), "left_semi")
-      .select(col("doc_a"), col("doc_b"))
-      .unionByName(pairs
-        .join(broadcast(del.select(col("doc_id").as("doc_b"))), Seq("doc_b"), "left_semi")
-        .select(col("doc_a"), col("doc_b")))
-      .distinct()
-      .agg(count(lit(1)).as("n_pairs_dropped"))
     val pairLeg = pairs.agg(count(lit(1)).as("n_pairs"))
-    corpusLeg.crossJoin(delLeg).crossJoin(pairLeg).crossJoin(dropped)
+    // the pairs a takedown drops are the ones its served view omits
+    val servedLeg = pairsServed(pairs, del).agg(count(lit(1)).as("n_served"))
+    corpusLeg.crossJoin(delLeg).crossJoin(pairLeg).crossJoin(servedLeg)
       .select(col("n_corpus"), col("n_deleted"), col("n_pairs"),
-        col("n_pairs_dropped"),
-        // bands(32) + shingles(1) + hashes(1) + manifest(1) per survivor
-        (lit(35L) * (col("n_corpus") - col("n_deleted")) +
-          (col("n_pairs") - col("n_pairs_dropped"))).as("rewrite_rows"),
+        (col("n_pairs") - col("n_served")).as("n_pairs_dropped"),
+        // bands(32) + shingles(1) + hashes(1) + manifest(1) per survivor,
+        // plus the surviving pairs
+        (lit(35L) * (col("n_corpus") - col("n_deleted")) + col("n_served"))
+          .as("rewrite_rows"),
         col("n_deleted").as("tombstone_rows"))
       .select(col("*"),
         // greatest(n, 1): an empty delete set (a corpus without src7
@@ -2388,7 +2379,6 @@ object Dedup {
     "dedup_novelty" -> (dedupNovelty _),
     "dedup_exact" -> (dedupExact _),
     "dedup_minhash" -> ((s: SparkSession, d: String) => dedupMinhash(s, d)),
-    "q_delete_apply" -> (qDeleteApply _),
     "q_delete_economics" -> (qDeleteEconomics _),
     "dedup_artifact_audit" -> (dedupArtifactAudit _),
     "dedup_hashstore_audit" -> (qHashStoreAudit _),

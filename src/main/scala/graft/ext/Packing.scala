@@ -162,7 +162,7 @@ object Packing {
   def repackDeltaDf(docs: DataFrame, deletedIds: DataFrame,
       seqLen: Long = 512L): DataFrame = {
     val spark = docs.sparkSession
-    val del = deletedIds.select(col("doc_id")).distinct().localCheckpoint()
+    val del = Dedup.deleteSet(deletedIds)
     val t = docs.select(col("doc_id"), nTok.as("n_tok"))
     val dd = t.join(broadcast(del), Seq("doc_id"))
       .agg(min(col("doc_id")).as("min_del_id"),
@@ -197,7 +197,7 @@ object Packing {
   /** Driver entry: the standing src7 takedown (the delete-family rule). */
   def qRepackDelta(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    repackDeltaDf(docs, docs.filter(col("source") === "src7").select("doc_id"))
+    repackDeltaDf(docs, Dedup.standingTakedown(docs))
   }
 
   /** TOMBSTONE-SERVED manifest — the merge-on-read form for the one
@@ -227,7 +227,7 @@ object Packing {
   def manifestServed(manifest: DataFrame, tombs: DataFrame,
       seqLen: Long = 512L, buckets: Int = 64): DataFrame = {
     val cols = Seq("doc_id", "n_tok", "t_off", "seq_id", "n_seqs").map(col)
-    val t = tombs.select(col("doc_id")).distinct().localCheckpoint()
+    val t = Dedup.deleteSet(tombs)
     val hit = manifest.join(broadcast(t), Seq("doc_id"))
       .agg(min(struct(col("doc_id"), col("t_off"))).as("m"))
       .head().getAs[org.apache.spark.sql.Row]("m")
@@ -252,9 +252,7 @@ object Packing {
   def qManifestServed(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val cutoff = (docs.agg(max(col("doc_id"))).head().getLong(0) + 1L) * 9L / 10L
-    val tombs = docs
-      .filter(col("source") === "src7" && col("doc_id") >= cutoff)
-      .select(col("doc_id"))
+    val tombs = Dedup.standingTakedown(docs).filter(col("doc_id") >= cutoff)
     manifestServed(graft.ops.Publish.readLive(spark, ensureManifest(spark, dir)), tombs)
       .orderBy("doc_id")
   }

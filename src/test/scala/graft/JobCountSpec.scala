@@ -51,22 +51,39 @@ class JobCountSpec extends SparkSuite {
     }
   }
 
+  private val sf0001 = "/root/testdata/sf0.001"
+
+  /** (construct jobs, exec jobs) of one warm run of a driver query: a
+    * first run stages the fixtures and warms the code paths; construct
+    * runs the eager checkpoints, copies and publishes. */
+  private def warmJobs(q: String): (Int, Int) = {
+    def sink(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    val fn = SparkEntry.queries(q)
+    sink(fn(spark, sf0001))
+    var df: DataFrame = null
+    val construct = jobs { df = fn(spark, sf0001) }
+    (construct, jobs(sink(df)))
+  }
+
   test("warm at sf0.001, the daily_batch store ops run pinned construct and exec job counts") {
-    val dir = "/root/testdata/sf0.001"
-    // (construct jobs, exec jobs) of one warm run, identical over three
-    // reps; construct runs the eager checkpoints, copies and publishes
+    // identical over three reps
     val pinned = Seq(
-      "q_delete_apply" -> ((55, 5)),
+      "q_delete_apply" -> ((45, 5)),
       "ann_retrain_apply" -> ((10, 1)),
       "dedup_incremental" -> ((3, 6)))
-    def sink(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
-    val counts = pinned.map { case (q, _) =>
-      val fn = SparkEntry.queries(q)
-      sink(fn(spark, dir)) // stages the fixtures and warms the code paths
-      var df: DataFrame = null
-      val construct = jobs { df = fn(spark, dir) }
-      q -> ((construct, jobs(sink(df))))
-    }
-    assert(counts === pinned)
+    assert(pinned.map { case (q, _) => q -> warmJobs(q) } === pinned)
+  }
+
+  test("warm at sf0.001, q_delete_impact closes its pair graph before and after in pinned jobs") {
+    assert(warmJobs("q_delete_impact") === ((23, 15)))
+  }
+
+  test("one connectedComponents call on the checkpointed sf0.001 verified pairs runs 6 Spark jobs") {
+    // the pairs as deleteApply passes them: checkpointed; the graph
+    // converges in one round, which observes its own changed count
+    val edges = ext.Dedup.verifiedPairs(spark, sf0001).localCheckpoint()
+      .selectExpr("doc_a AS u", "doc_b AS v")
+    ext.Cluster.connectedComponents(edges).count()
+    assert(jobs(ext.Cluster.connectedComponents(edges)) === 6)
   }
 }

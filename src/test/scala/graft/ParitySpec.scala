@@ -16,6 +16,16 @@ class ParitySpec extends SparkSuite {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  test("no query or oracle name is registered by two query groups") {
+    // the groups merge with ++, so a second registration would silently
+    // shadow the first instead of failing
+    def repeated(names: Seq[String]) =
+      names.groupBy(identity).collect { case (n, hits) if hits.size > 1 => n }.toSet
+    val groups = SparkEntry.queryGroups
+    assert(repeated(groups.flatMap(_._1.keys)).isEmpty, "query registered twice")
+    assert(repeated(groups.flatMap(_._2.keys)).isEmpty, "oracle registered twice")
+  }
+
   // Queries whose result is LEGITIMATELY empty on the shared sf0.001
   // corpus: its planted near-dups form complete cliques, so the
   // ingest-vs-batch reconciliation gap is empty, and the registered

@@ -35,6 +35,28 @@ class ClusterSpec extends SparkSuite {
     assert(labels === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 
+  test("connectedComponents and coreness return no rows for an empty edge frame") {
+    // each round's changed count is observed inside its checkpoint job;
+    // over an empty plan that observation must still complete
+    val edges = Seq.empty[(Long, Long)].toDF("u", "v")
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val counts = Future(
+      (Cluster.connectedComponents(edges).count(), Cluster.coreness(edges).count()))
+    assert(Await.result(counts, 5.minutes) === ((0L, 0L)))
+  }
+
+  test("connectedComponents with maxIter = 1 stops after one propagation round") {
+    // first labels min(self, neighbours), then one round of neighbour
+    // minima: the chain 1-..-8 moves each label two hops, no further
+    val edges = (1L until 8L).map(i => (i, i + 1)).toDF("u", "v")
+    val labels = Cluster.connectedComponents(edges, maxIter = 1)
+      .as[(Long, Long)].collect().toMap
+    assert(labels === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 2L, 5L -> 3L,
+      6L -> 4L, 7L -> 5L, 8L -> 6L))
+  }
+
   test("connectedComponents matches a union-find reference on random graphs") {
     val rnd = new scala.util.Random(20260812L)
     for (_ <- 1 to 3) {
